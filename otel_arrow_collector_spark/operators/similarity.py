@@ -1788,6 +1788,16 @@ ORDER BY cid, rk
 # exact-integer PCA substrate (whitening / decorrelation of the store)
 # ---------------------------------------------------------------------------
 
+
+def _checked_long(c, name: str):
+    """``c`` cast to BIGINT, failing the query where the value leaves
+    the BIGINT range (the non-ANSI cast would wrap it silently, where
+    DuckDB raises)."""
+    return (F.when((c < F.lit(-(1 << 63))) | (c > F.lit((1 << 63) - 1)),
+                   F.raise_error(F.lit(f"{name} leaves the BIGINT range")))
+            .otherwise(c.cast("long")))
+
+
 #: leading MRL block the PCA runs on (embedding_mrl_energy's ppm_16 is
 #: the read that says how much energy this block carries)
 PCA_DIMS = 16
@@ -1858,13 +1868,16 @@ def embedding_pca_covariance(spark, sf_dir):
                     # hash identically (decimal(38,0) vs HUGEINT broke
                     # the r15 driver hash the same way q34 broke in
                     # r01).  100 TB caveat: n*s_ij ~ 4e27 at n = 1e12
-                    # exceeds int64 — at that scale consumers must read
-                    # the decimal STAGING value (or a hi/lo long split)
-                    # instead of this published column; pca_components
-                    # divides by n^2*Q^2 first, so its doubles survive
-                    (F.col("n").cast(dec) * F.col("s_ij").cast(dec)
-                     - F.col("s_i").cast(dec) * F.col("s_j").cast(dec))
-                    .cast("long").alias("cov_num"))
+                    # exceeds int64 — the cast then fails the query
+                    # (as DuckDB's does) instead of wrapping, and
+                    # consumers at that scale must read the decimal
+                    # STAGING value (or a hi/lo long split) instead of
+                    # this published column; pca_components divides by
+                    # n^2*Q^2 first, so its doubles survive
+                    _checked_long(
+                        F.col("n").cast(dec) * F.col("s_ij").cast(dec)
+                        - F.col("s_i").cast(dec) * F.col("s_j").cast(dec),
+                        "cov_num").alias("cov_num"))
             .orderBy("i", "j"))
 
 

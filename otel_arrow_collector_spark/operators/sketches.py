@@ -209,13 +209,18 @@ def _hll_bucket_rho(df: DataFrame, key_col, keep: tuple = ()) -> DataFrame:
                      *[F.col(c) for c in keep])
 
 
+def _hll_register_agg(df: DataFrame, key_col: str) -> DataFrame:
+    """MAX(rho) per touched register, unordered: the aggregate the
+    streaming twin runs in update mode."""
+    return (_hll_bucket_rho(df, key_col)
+            .groupBy("bucket").agg(F.max("rho").alias("max_rho")))
+
+
 def hll_registers(df: DataFrame, key_col: str) -> DataFrame:
     """The sketch state itself: MAX(rho) per touched register.  This is
     the thing a pipeline persists and merges across shards/days; merging
     two sketches is a UNION ALL + the same MAX."""
-    return (_hll_bucket_rho(df, key_col)
-            .groupBy("bucket").agg(F.max("rho").alias("max_rho"))
-            .orderBy("bucket"))
+    return _hll_register_agg(df, key_col).orderBy("bucket")
 
 
 def sketch_hll_registers(spark, sf_dir):

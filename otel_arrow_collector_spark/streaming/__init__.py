@@ -14,6 +14,12 @@ Reference parity map:
   (dropDuplicates within watermark)
 - memory-limiter refusal -> source admission: ``rate_limited_reader``
   (maxFilesPerTrigger-style rate caps — backpressure, not data loss)
+- incrementally merged aggregate state (Structured Streaming's stateful
+  aggregation) -> ``keyed_merge.keyed_merge_stream``: one vectorised
+  keyed commutative merge (sum / min / max / distinct, optional bottom-k)
+  behind the hhi, quantiles, changepoint, seasonal, streaks, theta and
+  reservoir twins; the hll, cms and funnel twins are plain update-mode
+  ``groupBy().agg()`` streams
 """
 
 from .batching import size_capped_chunks, stream_in_batches

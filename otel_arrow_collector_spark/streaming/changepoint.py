@@ -3,9 +3,10 @@
 q96's CUSUM argmax is retrospective: the deviation of every day is
 measured against the FULL-series mean, so no prefix of the stream can
 finalize it.  The honest streaming form is therefore a live monitor:
-per series key the state holds the per-day count dictionary (calendar-
+per series key the state holds the per-day count vector, a ``sum``
+merge by day on the keyed-merge operator (``keyed_merge``), calendar-
 bounded — |days| entries regardless of event volume, the q92/q96 spine
-adjudication), and every micro-batch that touches a key re-emits the
+adjudication — and every micro-batch that touches a key re-emits the
 key's CURRENT retrospective changepoint estimate in update mode.  Once
 the feed drains, the last emission per key IS the batch q96 row.
 
@@ -14,22 +15,21 @@ c_i - S cross-multiplies the mean away, the running sum telescopes to 0
 at the series end, and the argmax tie-breaks on the earliest day — so
 the twin needs no float tolerance to pin equivalence.
 
-State updates are commutative over arrival order (a day->count dict
-merge), so the monitor converges to the batch answer under ANY
+State updates are commutative over arrival order (a day -> count
+sum), so the monitor converges to the batch answer under ANY
 shuffling of events across micro-batches, including restart from a
 checkpoint mid-feed (pinned in tests/test_changepoint_stream.py).
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import pandas as pd
 
 from pyspark.sql import DataFrame
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from pyspark.sql.types import (ArrayType, LongType, StringType,
-                               StructField, StructType)
+from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StringType, StructField, StructType
+
+from .keyed_merge import keyed_merge_stream
 
 OUT_SCHEMA = StructType([
     StructField("event_type", StringType()),
@@ -38,27 +38,21 @@ OUT_SCHEMA = StructType([
     StructField("n_days", LongType()),
 ])
 
-_STATE_SCHEMA = StructType([
-    StructField("days", ArrayType(LongType())),
-    StructField("counts", ArrayType(LongType())),
-])
+
+def _argmax_cusum(by_day) -> tuple[int, int, int]:
+    """q96's exact-integer retrospective CUSUM argmax over a day ->
+    count mapping: returns (change_day, max_abs_cusum, n_days) with the
+    ABS(cusum) DESC, day ASC tie-break."""
+    c = pd.Series(by_day, dtype=object).sort_index()   # Python ints
+    dev = (len(c) * c - c.sum()).cumsum().abs().to_numpy()
+    i = dev.argmax()          # first maximum: the earliest day wins ties
+    return int(c.index[i]), int(dev[i]), len(c)
 
 
-def _argmax_cusum(by_day: dict[int, int]) -> tuple[int, int, int]:
-    """q96's exact-integer retrospective CUSUM argmax: returns
-    (change_day, max_abs_cusum, n_days) with the ABS(cusum) DESC,
-    day ASC tie-break."""
-    days = sorted(by_day)
-    n = len(days)
-    s = sum(by_day.values())
-    cs = 0
-    best = None
-    for d in days:
-        cs += n * by_day[d] - s
-        cand = (abs(cs), -d)
-        if best is None or cand > best:
-            best = cand
-    return -best[1], best[0], n
+def _emit(key, by_day: pd.DataFrame) -> pd.DataFrame:
+    return pd.DataFrame(
+        [(str(key[0]), *_argmax_cusum(by_day.set_index("day")["n"]))],
+        columns=["event_type", "change_day", "max_abs_cusum", "n_days"])
 
 
 def changepoint_stream(events: DataFrame) -> DataFrame:
@@ -66,30 +60,6 @@ def changepoint_stream(events: DataFrame) -> DataFrame:
     epoch-day ``day`` column (pre-derived, e.g. ``ts_ns div 1000 div
     86400000000``); emits the current q96 row per touched key each
     micro-batch in update mode."""
-
-    def update(key, pdfs: Iterator[pd.DataFrame],
-               state: GroupState) -> Iterator[pd.DataFrame]:
-        event_type = str(key[0])
-        if state.exists:
-            days, counts = state.get
-            by_day = dict(zip((int(d) for d in days),
-                              (int(c) for c in counts)))
-        else:
-            by_day = {}
-        changed = False
-        for pdf in pdfs:
-            for r in pdf.itertuples(index=False):
-                d = int(r.day)
-                by_day[d] = by_day.get(d, 0) + 1
-                changed = True
-        if not changed:
-            return
-        state.update((list(by_day.keys()), list(by_day.values())))
-        change_day, max_abs, n_days = _argmax_cusum(by_day)
-        yield pd.DataFrame([{
-            "event_type": event_type, "change_day": int(change_day),
-            "max_abs_cusum": int(max_abs), "n_days": int(n_days)}])
-
-    return (events.groupBy("event_type")
-            .applyInPandasWithState(update, OUT_SCHEMA, _STATE_SCHEMA,
-                                    "update", GroupStateTimeout.NoTimeout))
+    return keyed_merge_stream(
+        events.withColumn("n", F.lit(1).cast("long")), ["event_type"],
+        ["day"], {"n": "sum"}, _emit, OUT_SCHEMA)

@@ -1,78 +1,25 @@
 """Streaming count-min sketch — the stateful twin of the batch CMS in
 ``operators/sketches.py``.
 
-Cells are sharded on (row_id, col); each shard's state is its slice of
-the d x w counter matrix, merged across micro-batches by ADDITION
-(CMS counters are linear — the property that also makes the sketch
-mergeable across days/tenants).  The emitted counters after batch k
-are exactly the batch operator's counters over batches 1..k, which the
+The d x w counter matrix is Spark's own update-mode streaming
+aggregation: the batch operator ``cms_counters`` run on the stream,
+with the non-empty cells kept in the state store and merged across
+micro-batches by ADDITION (CMS counters are linear — the property that
+also makes the sketch mergeable across days/tenants).  Each batch
+emits the cells it changed (update mode); the last emission per cell is
+exactly the batch operator's counter over batches 1..k, which the
 batch-equivalence test pins.  State is bounded by d*w cells total no
-matter how much data flows through.
+matter how much data flows through.  Counts are additive, so the
+stream sits behind a checkpointed exactly-once source.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
-
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from pyspark.sql.types import (ArrayType, LongType, StructField, StructType)
 
-from ..operators.sketches import CMS_DEPTH, _cms_col_expr
-
-CMS_SHARDS = 8
-
-CELL_SCHEMA = StructType([
-    StructField("row_id", LongType()),
-    StructField("col", LongType()),
-    StructField("cnt", LongType()),
-])
-
-_STATE_SCHEMA = StructType([
-    StructField("rows", ArrayType(LongType())),
-    StructField("cols", ArrayType(LongType())),
-    StructField("cnts", ArrayType(LongType())),
-])
+from ..operators.sketches import cms_counters
 
 
-def cms_stream(events: DataFrame, key_col: str,
-               shards: int = CMS_SHARDS) -> DataFrame:
-    """Streaming CMS counters: explode each key into its d cells,
-    shard on the cell, fold into per-shard additive state; each batch
-    emits the shard's current cells (update-mode snapshot)."""
-    keyed = events.select(F.col(key_col).cast("string").alias("key"))
-    cells = keyed.select(F.explode(F.array(*[
-        F.struct(F.lit(i).alias("row_id"),
-                 F.expr(_cms_col_expr(i, "key")).alias("col"))
-        for i in range(CMS_DEPTH)])).alias("cell")) \
-        .select(F.col("cell.row_id").alias("row_id"),
-                F.col("cell.col").cast("long").alias("col")) \
-        .withColumn("shard",
-                    F.pmod(F.col("row_id") * 1000003 + F.col("col"),
-                           shards))
-
-    def update(shard_key, pdfs: Iterator[pd.DataFrame],
-               state: GroupState) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            rows, cols, cnts = state.get
-            counters = {(r, c): n for r, c, n in zip(rows, cols, cnts)}
-        else:
-            counters = {}
-        for pdf in pdfs:
-            for r, c in zip(pdf["row_id"], pdf["col"]):
-                k = (int(r), int(c))
-                counters[k] = counters.get(k, 0) + 1
-        state.update(([r for r, _ in counters],
-                      [c for _, c in counters],
-                      list(counters.values())))
-        out = sorted(counters.items())
-        yield pd.DataFrame({"row_id": [r for (r, _), _ in out],
-                            "col": [c for (_, c), _ in out],
-                            "cnt": [n for _, n in out]})
-
-    return cells.groupBy("shard").applyInPandasWithState(
-        update, CELL_SCHEMA, _STATE_SCHEMA, "update",
-        GroupStateTimeout.NoTimeout)
+def cms_stream(events: DataFrame, key_col: str) -> DataFrame:
+    """Streaming CMS counters: update-mode (row_id, col, cnt) cells."""
+    return cms_counters(events, key_col)

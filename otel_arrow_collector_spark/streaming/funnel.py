@@ -1,11 +1,13 @@
 """Streaming conversion-funnel state — the stateful twin of q71.
 
-Per-user first-timestamp-per-stage state persists across micro-batches
-via ``applyInPandasWithState``; each batch emits the user's updated
-stage timestamps (update-mode snapshot).  Because the per-stage
-aggregate is MIN (order-independent), the final streaming state equals
-the batch ``groupBy(user).agg(min when stage)`` exactly, for ANY
-arrival order — the equivalence the tests pin.
+The per-user first timestamp per stage is Spark's own update-mode
+streaming aggregation, ``groupBy(user).agg(min(when(stage)))`` — the
+batch query's conditional aggregation run on the stream, with the
+per-user minimums kept in the state store.  Each batch emits the users
+it touched with their current stage timestamps.  Because the per-stage
+aggregate is MIN (order-independent and idempotent), the final
+streaming state equals the batch aggregation exactly, for ANY arrival
+order — the equivalence the tests pin.
 
 The funnel predicate itself (signup < first view < first purchase) is a
 stateless projection over the emitted state, shared with the batch
@@ -19,50 +21,20 @@ reference's stream-lifetime state (arrow/stream.go:34-69).
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 #: Funnel stages in order (event_type values).
 STAGES = ("signup", "view", "purchase")
 
-STATE_SCHEMA = StructType(
-    [StructField(f"t_{s}", LongType()) for s in STAGES])
-
-OUT_SCHEMA = StructType(
-    [StructField("user_id", LongType())]
-    + [StructField(f"t_{s}", LongType()) for s in STAGES])
-
 
 def funnel_stream(events: DataFrame) -> DataFrame:
-    """events(user_id, event_type, ts_ns) -> per-user min timestamp per
-    stage, maintained across micro-batches."""
-
-    def update(key, pdfs: Iterator[pd.DataFrame],
-               state: GroupState) -> Iterator[pd.DataFrame]:
-        mins = list(state.get) if state.exists else [None] * len(STAGES)
-        for pdf in pdfs:
-            for stage_i, stage in enumerate(STAGES):
-                hits = pdf.loc[pdf["event_type"] == stage, "ts_ns"]
-                if len(hits):
-                    m = int(hits.min())
-                    if mins[stage_i] is None or m < mins[stage_i]:
-                        mins[stage_i] = m
-        state.update(tuple(mins))
-        yield pd.DataFrame([{"user_id": key[0],
-                             **{f"t_{s}": mins[i]
-                                for i, s in enumerate(STAGES)}}])
-
-    keyed = events.select(
-        "user_id", "event_type", F.col("ts").cast("long").alias("ts_ns"))
-    return keyed.groupBy("user_id").applyInPandasWithState(
-        update, OUT_SCHEMA, STATE_SCHEMA, "update",
-        GroupStateTimeout.NoTimeout)
+    """events(user_id, event_type, ts) -> update-mode per-user min
+    timestamp per stage (user_id, t_signup, t_view, t_purchase)."""
+    ts_ns = F.col("ts").cast("long")
+    return (events.groupBy(F.col("user_id").cast("long").alias("user_id"))
+            .agg(*[F.min(F.when(F.col("event_type") == s, ts_ns))
+                   .alias(f"t_{s}") for s in STAGES]))
 
 
 def funnel_flags(firsts: DataFrame) -> DataFrame:

@@ -2,7 +2,8 @@
 twin of ``operators/relational.q114_herfindahl`` (micro-batch = revenue
 deltas, per-nation supplier revenue vector = keyed state).
 
-State per nation is the dict {suppkey: cents-sum} — DIMENSION-bounded
+State per nation is the (suppkey, cents-sum) vector, a ``sum`` merge
+on the keyed-merge operator (``keyed_merge``).  It is DIMENSION-bounded
 (suppliers are a dimension table; the state never grows with fact
 volume, the q114 docstring's own magnitude argument), the
 changepoint/seasonal state class one step up (bounded by a dimension
@@ -23,14 +24,12 @@ restart-from-checkpoint test rather than a duplication test.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import pandas as pd
 
 from pyspark.sql import DataFrame
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from pyspark.sql.types import (ArrayType, LongType, StructField,
-                               StructType)
+from pyspark.sql.types import LongType, StructField, StructType
+
+from .keyed_merge import keyed_merge_stream
 
 OUT_SCHEMA = StructType([
     StructField("nation", LongType()),
@@ -39,42 +38,23 @@ OUT_SCHEMA = StructType([
     StructField("hhi_bp", LongType()),
 ])
 
-_STATE_SCHEMA = StructType([
-    StructField("suppkeys", ArrayType(LongType())),
-    StructField("cents", ArrayType(LongType())),
-])
 
-
-def _emit_hhi(key, pdfs: Iterator[pd.DataFrame],
-              state: GroupState) -> Iterator[pd.DataFrame]:
-    vec = (dict(zip(state.get[0], state.get[1]))
-           if state.exists else {})
-    touched = False
-    for pdf in pdfs:
-        for sk, c in zip(pdf["suppkey"], pdf["cents"]):
-            vec[int(sk)] = vec.get(int(sk), 0) + int(c)
-            touched = True
-    if touched:
-        ks = sorted(vec)
-        state.update((ks, [vec[k] for k in ks]))
-    total = sum(vec.values())
+def _hhi(key, vec: pd.DataFrame) -> pd.DataFrame:
+    """The nation's current row from its (suppkey, cents) vector."""
+    cents = vec["cents"].astype(object)     # Python ints: no wrap
+    total = cents.sum()
     # identical integer arithmetic to the batch query: floor bp shares,
-    # floored sum-of-squares (exact decimal headroom is not needed in
-    # Python — ints are unbounded)
-    hhi = (sum((10000 * c // total) ** 2 for c in vec.values()) // 10000
-           if total else 0)
-    yield pd.DataFrame({"nation": [key[0]],
-                        "n_suppliers": [len(vec)],
-                        "total_cents": [total],
-                        "hhi_bp": [hhi]})
+    # floored sum-of-squares
+    hhi = ((10000 * cents // total) ** 2).sum() // 10000 if total else 0
+    return pd.DataFrame({"nation": [key[0]],
+                         "n_suppliers": [len(vec)],
+                         "total_cents": [total],
+                         "hhi_bp": [hhi]})
 
 
 def hhi_stream(revenue: DataFrame) -> DataFrame:
     """Streaming HHI: ``revenue`` (nation, suppkey, cents deltas) ->
     update-mode (nation, n_suppliers, total_cents, hhi_bp), the running
     concentration index per nation."""
-    return (revenue.select("nation", "suppkey", "cents")
-            .groupBy("nation")
-            .applyInPandasWithState(
-                _emit_hhi, OUT_SCHEMA, _STATE_SCHEMA,
-                "update", GroupStateTimeout.NoTimeout))
+    return keyed_merge_stream(revenue, ["nation"], ["suppkey"],
+                              {"cents": "sum"}, _hhi, OUT_SCHEMA)

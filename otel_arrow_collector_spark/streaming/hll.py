@@ -1,15 +1,17 @@
 """Streaming HyperLogLog — the stateful twin of the batch sketch in
 ``operators/sketches.py``.
 
-The 256-register HLL state persists across micro-batches via
-``applyInPandasWithState``: registers are grouped into shards (a
-register's updates always land in one shard's state), each shard's
-state is a fixed-size register slice, and the merge rule is elementwise
-MAX — so the emitted registers after batch k are EXACTLY the batch
-operator's registers over the concatenation of batches 1..k
-(mergeability; pinned by the batch-equivalence test).  State size is
-constant (m registers total) no matter how many rows or batches flow
-through — the whole point of running HLL on an unbounded stream.
+The 256-register HLL state is Spark's own update-mode streaming
+aggregation: the batch operator's register aggregate (``MAX(rho)`` per
+bucket) run on the stream, with the register vector kept in the state
+store.  The merge rule is elementwise MAX, so after batch k the
+registers are EXACTLY the batch operator's registers over the
+concatenation of batches 1..k (mergeability; pinned by the
+batch-equivalence test).  Each batch emits the registers it changed
+(update mode); the per-bucket MAX over every emission is the sketch.
+State size is constant (m registers total) no matter how many rows or
+batches flow through — the whole point of running HLL on an unbounded
+stream.  Register MAX is idempotent, so re-delivery cannot skew it.
 
 Reference analogue: arrival-order stateful processing (SURVEY §2.9);
 the distinct-count itself is an engine-added scale operator.
@@ -17,60 +19,15 @@ the distinct-count itself is an engine-added scale operator.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
-
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from pyspark.sql.types import (ArrayType, LongType, StructField, StructType)
 
-from ..operators.sketches import HLL_M, _hll_bucket_rho
-
-#: registers are sharded by bucket % HLL_SHARDS
-HLL_SHARDS = 8
-
-REG_SCHEMA = StructType([
-    StructField("bucket", LongType()),
-    StructField("max_rho", LongType()),
-])
-
-_STATE_SCHEMA = StructType([
-    StructField("buckets", ArrayType(LongType())),
-    StructField("rhos", ArrayType(LongType())),
-])
+from ..operators.sketches import HLL_M, _hll_register_agg
 
 
-def hll_stream(events: DataFrame, key_col: str,
-               shards: int = HLL_SHARDS) -> DataFrame:
-    """Streaming HLL registers: (bucket, rho) rows are derived exactly
-    as in the batch operator, sharded on bucket, and folded into
-    per-shard MAX state; each batch emits the shard's current non-zero
-    registers (update-mode snapshot)."""
-    rows = (_hll_bucket_rho(events, key_col)
-            .withColumn("shard", F.pmod(F.col("bucket"), shards)))
-
-    def update(shard_key, pdfs: Iterator[pd.DataFrame],
-               state: GroupState) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            buckets, rhos = state.get
-            regs = dict(zip(buckets, rhos))
-        else:
-            regs = {}
-        for pdf in pdfs:
-            for b, r in zip(pdf["bucket"], pdf["rho"]):
-                b, r = int(b), int(r)
-                if r > regs.get(b, 0):
-                    regs[b] = r
-        state.update((list(regs.keys()), list(regs.values())))
-        out = sorted(regs.items())
-        yield pd.DataFrame({"bucket": [b for b, _ in out],
-                            "max_rho": [r for _, r in out]})
-
-    return rows.groupBy("shard").applyInPandasWithState(
-        update, REG_SCHEMA, _STATE_SCHEMA, "update",
-        GroupStateTimeout.NoTimeout)
+def hll_stream(events: DataFrame, key_col: str) -> DataFrame:
+    """Streaming HLL registers: update-mode (bucket, max_rho) rows,
+    derived exactly as in the batch operator."""
+    return _hll_register_agg(events, key_col)
 
 
 def hll_estimate_from_registers(regs: dict[int, int],

@@ -1,40 +1,35 @@
 """Streaming weighted sample — the stateful twin of
 ``operators/sampling.sample_weighted``.
 
-Per-stratum state is the k smallest (priority, doc_id) pairs seen so
-far (priority = md5_28bit // weight, the same integer A-ES-style key
-as the batch operator).  Keeping the k-minimum of a pure function of
-each row is order-independent, so after any number of micro-batches
-the state equals the batch window top-k over the same rows — the
-batch-equivalence test pins exact equality.  State is k pairs per
-stratum, constant no matter how much data flows through: the streaming
-form of weighted sampling WITHOUT replacement.
+Per-stratum state is the k smallest distinct (priority, doc_id) pairs
+seen so far (priority = md5_28bit // weight, the same integer
+A-ES-style key as the batch operator): a distinct merge on the
+keyed-merge operator (``keyed_merge``) cut to ``keep=k``.  Keeping the
+k-minimum of a pure function of each row is order-independent, so
+after any number of micro-batches the state equals the batch window
+top-k over the same rows — the batch-equivalence test pins exact
+equality — and a re-delivered row is a set-semantics no-op.  State is
+k pairs per stratum, constant no matter how much data flows through:
+the streaming form of weighted sampling WITHOUT replacement.
 """
 
 from __future__ import annotations
 
 import hashlib
-from collections.abc import Iterator
 
 import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from pyspark.sql.types import (ArrayType, LongType, StringType,
-                               StructField, StructType)
+from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from ..operators.sampling import WEIGHTED_K, _hexint_sql
+from .keyed_merge import keyed_merge_stream
 
 OUT_SCHEMA = StructType([
     StructField("lang", StringType()),
     StructField("doc_id", LongType()),
     StructField("priority", LongType()),
-])
-
-_STATE_SCHEMA = StructType([
-    StructField("prios", ArrayType(LongType())),
-    StructField("docs", ArrayType(LongType())),
 ])
 
 
@@ -55,23 +50,8 @@ def weighted_sample_stream(docs: DataFrame,
         F.expr(f"CAST({hv} DIV greatest(n_chars, 1) AS BIGINT)")
         .alias("priority"))
 
-    def update(key, pdfs: Iterator[pd.DataFrame],
-               state: GroupState) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            prios, ids = state.get
-            best = list(zip(prios, ids))
-        else:
-            best = []
-        for pdf in pdfs:
-            for p, d in zip(pdf["priority"], pdf["doc_id"]):
-                best.append((int(p), int(d)))
-        best.sort()
-        best = best[:k]
-        state.update(([p for p, _ in best], [d for _, d in best]))
-        yield pd.DataFrame({"lang": key[0],
-                            "doc_id": [d for _, d in best],
-                            "priority": [p for p, _ in best]})
+    def emit(key, best: pd.DataFrame) -> pd.DataFrame:
+        return best.assign(lang=key[0])[["lang", "doc_id", "priority"]]
 
-    return keyed.groupBy("lang").applyInPandasWithState(
-        update, OUT_SCHEMA, _STATE_SCHEMA, "update",
-        GroupStateTimeout.NoTimeout)
+    return keyed_merge_stream(keyed, ["lang"], ["priority", "doc_id"],
+                              None, emit, OUT_SCHEMA, keep=k)

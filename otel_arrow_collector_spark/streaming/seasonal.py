@@ -6,14 +6,15 @@ hour-of-day) cell, so — like q96's CUSUM — no prefix of the stream can
 finalize a verdict: a day-hour that spikes against an early baseline
 may fall under it once more history accumulates.  The honest streaming
 form is a live monitor: per (event_type, hod) key the state holds the
-day -> count dictionary (calendar-bounded — |days| entries per cell no
+day -> count vector, a ``sum`` merge by day on the keyed-merge operator
+(``keyed_merge``; calendar-bounded — |days| entries per cell no
 matter the event volume), and every micro-batch that touches a cell
 re-emits ALL of that cell's day rows with their CURRENT verdict in
 update mode (is_spike carries the q97 predicate c * n_cells > 2 * s in
 exact integers).  Once the feed drains, the last emission per
 (event_type, day, hod) filtered to is_spike IS the batch q97 result.
 
-Dict-merge state updates are commutative over arrival order, so the
+Summed state updates are commutative over arrival order, so the
 monitor converges under ANY shuffling of events across micro-batches,
 including restart from a checkpoint mid-feed (pinned in
 tests/test_seasonal_stream.py, incl. against the real q97 on testdata).
@@ -21,14 +22,14 @@ tests/test_seasonal_stream.py, incl. against the real q97 on testdata).
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import pandas as pd
 
 from pyspark.sql import DataFrame
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from pyspark.sql.types import (ArrayType, BooleanType, LongType,
-                               StringType, StructField, StructType)
+from pyspark.sql import functions as F
+from pyspark.sql.types import (BooleanType, LongType, StringType,
+                               StructField, StructType)
+
+from .keyed_merge import keyed_merge_stream
 
 OUT_SCHEMA = StructType([
     StructField("event_type", StringType()),
@@ -40,10 +41,15 @@ OUT_SCHEMA = StructType([
     StructField("is_spike", BooleanType()),
 ])
 
-_STATE_SCHEMA = StructType([
-    StructField("days", ArrayType(LongType())),
-    StructField("counts", ArrayType(LongType())),
-])
+
+def _emit(key, by_day: pd.DataFrame) -> pd.DataFrame:
+    """Every day row of the (event_type, hod) cell with its verdict."""
+    c = by_day["c"].astype(object)       # Python ints: exact predicate
+    n_cells, s = len(by_day), c.sum()
+    return pd.DataFrame({
+        "event_type": str(key[0]), "day": by_day["day"], "hod": key[1],
+        "c": by_day["c"], "hod_total": s, "n_cells": n_cells,
+        "is_spike": (c * n_cells > 2 * s).astype(bool)})
 
 
 def seasonal_spike_stream(events: DataFrame) -> DataFrame:
@@ -51,33 +57,6 @@ def seasonal_spike_stream(events: DataFrame) -> DataFrame:
     plus pre-derived epoch-day ``day`` and hour-of-day ``hod`` columns;
     emits every touched cell's day rows with current verdicts each
     micro-batch in update mode."""
-
-    def update(key, pdfs: Iterator[pd.DataFrame],
-               state: GroupState) -> Iterator[pd.DataFrame]:
-        event_type, hod = str(key[0]), int(key[1])
-        if state.exists:
-            days, counts = state.get
-            by_day = dict(zip((int(d) for d in days),
-                              (int(c) for c in counts)))
-        else:
-            by_day = {}
-        changed = False
-        for pdf in pdfs:
-            for r in pdf.itertuples(index=False):
-                d = int(r.day)
-                by_day[d] = by_day.get(d, 0) + 1
-                changed = True
-        if not changed:
-            return
-        state.update((list(by_day.keys()), list(by_day.values())))
-        n_cells = len(by_day)
-        s = sum(by_day.values())
-        yield pd.DataFrame([{
-            "event_type": event_type, "day": int(d), "hod": hod,
-            "c": int(c), "hod_total": int(s), "n_cells": int(n_cells),
-            "is_spike": c * n_cells > 2 * s}
-            for d, c in sorted(by_day.items())])
-
-    return (events.groupBy("event_type", "hod")
-            .applyInPandasWithState(update, OUT_SCHEMA, _STATE_SCHEMA,
-                                    "update", GroupStateTimeout.NoTimeout))
+    return keyed_merge_stream(
+        events.withColumn("c", F.lit(1).cast("long")),
+        ["event_type", "hod"], ["day"], {"c": "sum"}, _emit, OUT_SCHEMA)

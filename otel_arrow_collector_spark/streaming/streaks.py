@@ -4,19 +4,20 @@ arrivals, per-user active-day set = keyed state).
 
 The batch query's gaps-and-islands rewrite needs the FULL ordered day
 relation; the stream instead keeps each user's DISTINCT active-day set
-as state and re-emits the user's CURRENT (longest_streak,
+as state (a distinct merge on the keyed-merge operator,
+``keyed_merge``) and re-emits the user's CURRENT (longest_streak,
 n_active_days) whenever a batch touches them — update mode, latest row
 per key wins, exactly re-running the batch aggregate over everything
 seen so far.  Out-of-order days are free: the state is a SET, so a
 late day lands in its calendar position and the recomputed runs are
 identical to in-order delivery (the same commutative-state argument as
-the changepoint twin's day->count dict).  Re-delivery of a seen day is
+the changepoint twin's day -> count vector).  Re-delivery of a seen day is
 a set-semantics no-op.
 
 State bound: days are CALENDAR-bounded — a user active every single
 day for 30 years holds ~11k longs — the changepoint/seasonal twins'
 state class (bounded by time, not by traffic).  The recompute per
-touched user is O(|days| log |days|) on a bounded set.
+touched user is a sort and one vectorised run scan of a bounded set.
 
 Equivalence (pytest-pinned): after any batch split / shuffled arrival /
 duplication, the final per-user emission equals the shared batch
@@ -26,14 +27,13 @@ the pin recomputes the expected side with the batch code itself.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
+import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from pyspark.sql.types import (ArrayType, LongType, StructField,
-                               StructType)
+from pyspark.sql.types import LongType, StructField, StructType
+
+from .keyed_merge import keyed_merge_stream
 
 OUT_SCHEMA = StructType([
     StructField("user_id", LongType()),
@@ -41,43 +41,25 @@ OUT_SCHEMA = StructType([
     StructField("n_active_days", LongType()),
 ])
 
-_STATE_SCHEMA = StructType([
-    StructField("days", ArrayType(LongType())),
-])
 
-
-def _longest_run(days: list[int]) -> int:
+def _longest_run(days) -> int:
     """Longest consecutive run in a sorted distinct day list."""
-    best = run = 0
-    prev = None
-    for d in days:
-        run = run + 1 if prev is not None and d == prev + 1 else 1
-        best = max(best, run)
-        prev = d
-    return best
+    d = np.asarray(days, dtype=np.int64)
+    if not len(d):
+        return 0
+    ends = np.flatnonzero(np.diff(d) != 1)       # last index of each run
+    return int(np.diff(np.concatenate(([-1], ends, [len(d) - 1]))).max())
 
 
-def _emit_streaks(key, pdfs: Iterator[pd.DataFrame],
-                  state: GroupState) -> Iterator[pd.DataFrame]:
-    days = set(state.get[0]) if state.exists else set()
-    before = len(days)
-    for pdf in pdfs:
-        days.update(int(d) for d in pdf["day"])
-    ordered = sorted(days)
-    if len(days) != before:
-        state.update((ordered,))
-    yield pd.DataFrame({
-        "user_id": [key[0]],
-        "longest_streak": [_longest_run(ordered)],
-        "n_active_days": [len(ordered)]})
+def _emit_streaks(key, days: pd.DataFrame) -> pd.DataFrame:
+    return pd.DataFrame({"user_id": [key[0]],
+                         "longest_streak": [_longest_run(days["day"])],
+                         "n_active_days": [len(days)]})
 
 
 def user_streaks_stream(events: DataFrame) -> DataFrame:
     """Streaming streaks: ``events`` (user_id, day) -> update-mode
     (user_id, longest_streak, n_active_days), the running
     gaps-and-islands aggregate per user."""
-    return (events.select("user_id", "day")
-            .groupBy("user_id")
-            .applyInPandasWithState(
-                _emit_streaks, OUT_SCHEMA, _STATE_SCHEMA,
-                "update", GroupStateTimeout.NoTimeout))
+    return keyed_merge_stream(events, ["user_id"], ["day"], None,
+                              _emit_streaks, OUT_SCHEMA)

@@ -3,8 +3,9 @@ queries in ``operators/sketches.py``.
 
 KMV is mergeable by construction: the bottom-K set of a union is the
 bottom-K of the merged bottom-K sets, so a per-set state holding the
-sorted bottom-THETA_K distinct 48-bit hashes folds micro-batches with
-plain sorted-set insertion + truncation, and after batch k the state is
+sorted bottom-THETA_K distinct 48-bit hashes (a distinct merge on the
+keyed-merge operator, ``keyed_merge``, cut to ``keep=THETA_K``) folds
+micro-batches by set union + truncation, and after batch k the state is
 EXACTLY the batch operator's ``kept`` relation over the concatenation
 of batches 1..k (pinned by the batch-equivalence test).  Duplicate
 arrivals of a user hash to the same value, so re-delivery cannot skew
@@ -23,17 +24,14 @@ the sketch itself is an engine-added scale operator.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from pyspark.sql.types import (ArrayType, LongType, StringType,
-                               StructField, StructType)
+from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from ..operators.sketches import (THETA_K, THETA_RANGE, _theta_hash_sql)
+from .keyed_merge import keyed_merge_stream
 
 OUT_SCHEMA = StructType([
     StructField("event_type", StringType()),
@@ -42,9 +40,16 @@ OUT_SCHEMA = StructType([
     StructField("est", LongType()),
 ])
 
-_STATE_SCHEMA = StructType([
-    StructField("hashes", ArrayType(LongType())),
-])
+
+def _emit(key, kept: pd.DataFrame) -> pd.DataFrame:
+    n = len(kept)
+    if n >= THETA_K:
+        th = int(kept["hv"].iloc[THETA_K - 1])
+        est = (THETA_K - 1) * THETA_RANGE // th
+    else:
+        th, est = THETA_RANGE, n
+    return pd.DataFrame({"event_type": [key[0]],
+                         "n_kept": [n], "th": [th], "est": [est]})
 
 
 def theta_stream(events: DataFrame, key_col: str = "user_id",
@@ -58,27 +63,5 @@ def theta_stream(events: DataFrame, key_col: str = "user_id",
         F.col(set_col).alias("skey"),
         F.expr(_theta_hash_sql(key_col, "STRING")).cast("long")
          .alias("hv"))
-
-    def update(key, pdfs: Iterator[pd.DataFrame],
-               state: GroupState) -> Iterator[pd.DataFrame]:
-        kept: list[int] = list(state.get[0]) if state.exists else []
-        ks = set(kept)
-        for pdf in pdfs:
-            for hv in pdf["hv"]:
-                hv = int(hv)
-                if hv not in ks:
-                    ks.add(hv)
-        kept = sorted(ks)[:THETA_K]
-        state.update((kept,))
-        n = len(kept)
-        if n >= THETA_K:
-            th = kept[THETA_K - 1]
-            est = (THETA_K - 1) * THETA_RANGE // th
-        else:
-            th, est = THETA_RANGE, n
-        yield pd.DataFrame({"event_type": [key[0]],
-                            "n_kept": [n], "th": [th], "est": [est]})
-
-    return rows.groupBy("skey").applyInPandasWithState(
-        update, OUT_SCHEMA, _STATE_SCHEMA, "update",
-        GroupStateTimeout.NoTimeout)
+    return keyed_merge_stream(rows, ["skey"], ["hv"], None, _emit,
+                              OUT_SCHEMA, keep=THETA_K)

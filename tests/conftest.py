@@ -37,111 +37,11 @@ def duck():
 # killed at ~61% with zero failures).  Every test measured >5 s on a quiet
 # 32-core box (the r16 --durations=0 sweep) is skipped by DEFAULT and runs
 # with --runslow; `python -m pytest tests/ -q --runslow` remains the full
-# gate and is recorded per round in OPTIMIZATION_r{N}.md.
+# gate and is recorded per round in OPTIMIZATION_r{N}.md.  Each slow test
+# carries ``@pytest.mark.slow`` (parity cases: ``SLOW`` in
+# test_declared_parity.py), so the gating does not depend on the
+# directory pytest runs from.
 # ---------------------------------------------------------------------------
-
-_SLOW_NODEIDS = frozenset(
-    "tests/" + n for n in (
-    "test_advice_r14.py::test_cc_loop_frees_superseded_checkpoints",
-    "test_advice_r14.py::test_incremental_pairs_precomputed_store_counts",
-    "test_advice_r15.py::test_append_dedupes_within_batch",
-    "test_advice_r15.py::test_pairs_for_intra_batch_duplicate_is_exact",
-    "test_advice_r15.py::test_pairs_for_redelivered_doc_is_exact",
-    "test_bloom_novelty_stream.py::test_one_sided_error_and_bounded_state",
-    "test_bloom_novelty_stream.py::test_redelivery_is_idempotent",
-    "test_bootstrap_stream.py::test_restart_from_checkpoint_resumes_sums",
-    "test_bootstrap_stream.py::test_streaming_bootstrap_matches_batch",
-    "test_cc_checkpoint.py::test_cc_honors_preexisting_sc_checkpoint_dir",
-    "test_cc_checkpoint.py::test_cc_reliable_checkpoint_mode_identical_labels",
-    "test_cdc_stream.py::test_cdc_state_survives_restart",
-    "test_cdc_stream.py::test_streaming_view_converges_to_batch_q95",
-    "test_changepoint_stream.py::test_restart_from_checkpoint_resumes_exactly",
-    "test_changepoint_stream.py::test_stream_converges_to_batch_q96",
-    "test_cli.py::test_run_end_to_end",
-    "test_cli.py::test_run_watch_reloads_on_edit",
-    "test_cli.py::test_run_watch_without_file_uri_is_clean_error",
-    "test_client_info.py::test_pipeline_shards_on_client_addr",
-    "test_codec_properties.py::test_logs_roundtrip_property",
-    "test_codec_properties.py::test_metrics_roundtrip_property",
-    "test_codec_properties.py::test_traces_roundtrip_property",
-    "test_declared_parity.py::test_query_matches_oracle[ann_ivf_pq]",
-    "test_declared_parity.py::test_query_matches_oracle[curation_ingest_funnel]",
-    "test_declared_parity.py::test_query_matches_oracle[curation_pipeline]",
-    "test_declared_parity.py::test_query_matches_oracle[dedup_band_sensitivity]",
-    "test_declared_parity.py::test_query_matches_oracle[dedup_incremental_epoch2]",
-    "test_declared_parity.py::test_query_matches_oracle[dedup_incremental_prefix]",
-    "test_declared_parity.py::test_query_matches_oracle[dedup_semantic_keep]",
-    "test_declared_parity.py::test_query_matches_oracle[dedup_simhash]",
-    "test_declared_parity.py::test_query_matches_oracle[dedup_source_overlap]",
-    "test_declared_parity.py::test_query_matches_oracle[dedup_substring]",
-    "test_declared_parity.py::test_query_matches_oracle[embedding_drift]",
-    "test_declared_parity.py::test_query_matches_oracle[embedding_pca_covariance]",
-    "test_declared_parity.py::test_query_matches_oracle[graph_assortativity]",
-    "test_declared_parity.py::test_query_matches_oracle[graph_clustering_coefficient]",
-    "test_declared_parity.py::test_query_matches_oracle[graph_k_core]",
-    "test_declared_parity.py::test_query_matches_oracle[graph_label_propagation]",
-    "test_declared_parity.py::test_query_matches_oracle[graph_link_prediction]",
-    "test_declared_parity.py::test_query_matches_oracle[graph_modularity]",
-    "test_declared_parity.py::test_query_matches_oracle[graph_pagerank]",
-    "test_declared_parity.py::test_query_matches_oracle[heavy_hitter_events]",
-    "test_declared_parity.py::test_query_matches_oracle[q113_autocorrelation]",
-    "test_ewma_stream.py::test_restart_from_checkpoint_resumes_exactly",
-    "test_ewma_stream.py::test_streaming_ewma_matches_batch_kernel",
-    "test_examples_e2e.py::test_curation_example_gates_quality",
-    "test_examples_e2e.py::test_errors_example_runs_and_lands_parquet",
-    "test_examples_e2e.py::test_relay_example_runs_against_a_real_spool",
-    "test_examples_e2e.py::test_router_example_splits_disjoint_and_complete",
-    "test_heavy_hitters.py::test_heavy_hitters_exact_recount",
-    "test_heavy_hitters.py::test_streaming_mg_matches_batch_sketch",
-    "test_hhi_stream.py::test_restart_from_checkpoint_resumes_vector",
-    "test_hhi_stream.py::test_stream_equals_batch_exactly",
-    "test_hll_cms.py::test_streaming_cms_matches_batch",
-    "test_hll_cms.py::test_streaming_hll_matches_batch",
-    "test_http_receiver.py::test_stream_spool_continuous_ingest",
-    "test_incr_cc_stream.py::test_cc_incremental_query_matches_full_closure",
-    "test_incr_cc_stream.py::test_cc_stream_twin_deltas_compose_to_batch_labels",
-    "test_incr_cc_stream.py::test_incremental_cc_delta_is_changed_rows_only",
-    "test_incr_cc_stream.py::test_incremental_cc_equals_batch_across_random_splits",
-    "test_incr_dedup_stream.py::test_incremental_equals_batch_restricted",
-    "test_incr_dedup_stream.py::test_restart_from_checkpoint_resumes_store",
-    "test_incr_dedup_stream.py::test_streaming_candidates_equal_batch_lsh",
-    "test_incr_dedup_stream.py::test_streaming_ingest_composition_end_to_end",
-    "test_incr_epoch2.py::test_epoch2_equals_fullbatch_over_survivors",
-    "test_incr_prefix_stream.py::test_incremental_prefix_equals_batch_restricted",
-    "test_incr_prefix_stream.py::test_prefix_incremental_exact_on_random_corpora",
-    "test_incr_prefix_stream.py::test_prefix_store_append_is_idempotent",
-    "test_incr_prefix_stream.py::test_streaming_prefix_twin_equals_batch",
-    "test_interval_union_stream.py::test_batch_split_invariant",
-    "test_interval_union_stream.py::test_stream_equals_batch_sweep",
-    "test_mv_merge_stream.py::test_mv_stream_is_bit_equal_per_batch_and_idempotent",
-    "test_ottl_parser.py::test_create_gauge_from_read_gauge",
-    "test_plan_memo.py::test_exclusion_list_is_complete_zero_jobs_at_construction",
-    "test_quantiles_stream.py::test_streaming_snapshot_equals_batch",
-    "test_r12_ops.py::test_diversity_sample_per_cell_budget",
-    "test_rank_select.py::test_rank_values_at_property",
-    "test_ratelimit_stream.py::test_streaming_quota_matches_batch_rank",
-    "test_ratelimit_stream.py::test_streaming_weighted_sample_matches_batch",
-    "test_scraper_and_arrow_egress.py::test_chunked_sink_crash_between_chunks_resumes_exactly_once",
-    "test_scraper_and_arrow_egress.py::test_dispatched_unacked_chunk_replays_exactly_once",
-    "test_seasonal_stream.py::test_restart_from_checkpoint_resumes_exactly",
-    "test_seasonal_stream.py::test_stream_converges_to_batch_q97",
-    "test_session_stream.py::test_streaming_sessions_match_batch_q80_shape",
-    "test_slo_stream.py::test_restart_from_checkpoint_resumes_exactly",
-    "test_slo_stream.py::test_streaming_burn_matches_q92_shape",
-    "test_span_ops.py::test_span_red_metrics_histogram_points",
-    "test_streaks_stream.py::test_stream_equals_batch_runs",
-    "test_streaming.py::test_sharded_batcher_guard_never_collects_batches",
-    "test_streaming.py::test_sharded_batcher_size_trigger",
-    "test_streaming.py::test_sharded_batcher_timeout_flush",
-    "test_streaming_temporality.py::test_exp_histogram_merge_stream_matches_batch_operator",
-    "test_streaming_temporality.py::test_histogram_merge_stream_matches_batch_operator",
-    "test_streaming_temporality.py::test_streaming_spanmetrics_composition",
-    "test_tail_sampling_stream.py::test_late_span_follows_cached_decision_exactly_once",
-    "test_tail_sampling_stream.py::test_streaming_verdicts_match_batch_q90",
-    "test_theta_stream.py::test_restart_from_checkpoint_resumes_sketch",
-    "test_theta_stream.py::test_streaming_theta_matches_batch",
-    )
-)
 
 
 def pytest_addoption(parser):
@@ -162,6 +62,5 @@ def pytest_collection_modifyitems(config, items):
         return
     skip = pytest.mark.skip(reason="slow (>5s); run with --runslow")
     for item in items:
-        if item.nodeid in _SLOW_NODEIDS \
-                or item.get_closest_marker("slow") is not None:
+        if item.get_closest_marker("slow") is not None:
             item.add_marker(skip)

@@ -89,6 +89,7 @@ def test_decode_features_none_payload(spark):
     assert rows[1].n_bytes == 0 and rows[2].n_bytes == 3
 
 
+@pytest.mark.slow
 def test_cc_loop_frees_superseded_checkpoints(spark):
     """The distributed label-propagation loop must end with at most ONE
     outstanding materialized relation (the returned labels) — superseded
@@ -110,6 +111,7 @@ def test_cc_loop_frees_superseded_checkpoints(spark):
         f"by the CC loop (expected <= 1: the returned labels)")
 
 
+@pytest.mark.slow
 def test_incremental_pairs_precomputed_store_counts(spark):
     """incremental_pairs accepts a per-store-version count relation in
     place of its own per-batch store scan — results must be identical

@@ -21,6 +21,7 @@ from __future__ import annotations
 
 import inspect
 
+import pytest
 from pyspark.sql import functions as F
 
 from otel_arrow_collector_spark.operators import dedup
@@ -37,6 +38,7 @@ def _pairs(store, batch):
     return rows
 
 
+@pytest.mark.slow
 def test_pairs_for_redelivered_doc_is_exact(spark):
     """A re-delivered doc_id in the batch must appear ONCE in the
     verify relation: pre-fix, store.docs ∪ batch held doc 2 twice, so
@@ -55,6 +57,7 @@ def test_pairs_for_redelivered_doc_is_exact(spark):
     store.release()
 
 
+@pytest.mark.slow
 def test_pairs_for_intra_batch_duplicate_is_exact(spark):
     """Two copies of the SAME doc inside one batch must also verify
     exactly (dropDuplicates before the union and the candidate side)."""
@@ -69,6 +72,7 @@ def test_pairs_for_intra_batch_duplicate_is_exact(spark):
     store.release()
 
 
+@pytest.mark.slow
 def test_append_dedupes_within_batch(spark):
     """Pre-fix, a NEW doc_id delivered twice in one micro-batch passed
     the store anti-join twice: store.shd permanently doubled its

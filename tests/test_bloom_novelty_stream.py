@@ -4,6 +4,7 @@ distinct-trigram count, fixed state size, idempotent re-delivery."""
 from __future__ import annotations
 
 
+import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructField, StructType
 
@@ -60,6 +61,7 @@ def _run(spark, d, ckpt):
     return latest
 
 
+@pytest.mark.slow
 def test_one_sided_error_and_bounded_state(spark, tmp_path):
     """Across 4 micro-batches: per lang, n_novel_est <= exact distinct
     trigrams (false positives only SUPPRESS novelty), the suppression
@@ -83,6 +85,7 @@ def test_one_sided_error_and_bounded_state(spark, tmp_path):
         assert fill < BLOOM_NOV_BITS // 4
 
 
+@pytest.mark.slow
 def test_redelivery_is_idempotent(spark, tmp_path):
     """Delivering the whole corpus TWICE leaves the cumulative novelty
     count and the fill exactly where one delivery left them."""

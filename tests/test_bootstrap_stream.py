@@ -7,6 +7,7 @@ from __future__ import annotations
 import random
 import tempfile
 
+import pytest
 from pyspark.sql.types import LongType, StructField, StructType
 
 from otel_arrow_collector_spark.streaming.bootstrap import bootstrap_stream
@@ -80,6 +81,7 @@ def _run_foreach(spark, d, ckpt):
     return sorted(snap.values())
 
 
+@pytest.mark.slow
 def test_streaming_bootstrap_matches_batch(spark, tmp_path):
     rows = _mk_rows()
     want = _batch_truth(spark, rows)
@@ -89,6 +91,7 @@ def test_streaming_bootstrap_matches_batch(spark, tmp_path):
     assert got == want
 
 
+@pytest.mark.slow
 def test_restart_from_checkpoint_resumes_sums(spark, tmp_path):
     rows = _mk_rows()
     want = _batch_truth(spark, rows)

@@ -24,6 +24,7 @@ def _restore_no_checkpoint_dir(spark):
         spark._jvm.scala.Option.empty())
 
 
+@pytest.mark.slow
 def test_cc_reliable_checkpoint_mode_identical_labels(
         spark, tmp_path, monkeypatch):
     # a path graph forces several pointer-jumping rounds; plus one
@@ -54,6 +55,7 @@ def test_cc_reliable_checkpoint_mode_identical_labels(
     assert sum(1 for p in ckpt.rglob("*") if p.is_file()) == before
 
 
+@pytest.mark.slow
 def test_cc_honors_preexisting_sc_checkpoint_dir(spark, tmp_path):
     """An explicit sc.setCheckpointDir (no env var) is honored the same
     way — the reliable path is not tied to the env spelling."""

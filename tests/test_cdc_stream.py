@@ -7,6 +7,7 @@ from __future__ import annotations
 import random
 import tempfile
 
+import pytest
 from pyspark.sql.types import (DoubleType, LongType, StringType,
                                StructField, StructType)
 
@@ -64,6 +65,7 @@ def _run(spark, d, ckpt, results):
     q.awaitTermination(180)
 
 
+@pytest.mark.slow
 def test_streaming_view_converges_to_batch_q95(spark, tmp_path):
     rows = _mk_rows()
     want = _batch_truth(rows)
@@ -86,6 +88,7 @@ def test_streaming_view_converges_to_batch_q95(spark, tmp_path):
     assert got[21] == (2, "view", 3.0)           # stale arrival lost LWW
 
 
+@pytest.mark.slow
 def test_cdc_state_survives_restart(spark, tmp_path):
     """A second run from the same checkpoint resumes the version
     counters and LWW winners instead of restarting from zero."""

@@ -6,6 +6,7 @@ from __future__ import annotations
 import random
 import tempfile
 
+import pytest
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from otel_arrow_collector_spark.streaming.changepoint import (
@@ -79,6 +80,7 @@ def _final(rows):
     return sorted(last.values())
 
 
+@pytest.mark.slow
 def test_stream_converges_to_batch_q96(spark, tmp_path):
     rows = _mk_rows()
     d = tempfile.mkdtemp(prefix="cp_stream_")
@@ -91,6 +93,7 @@ def test_stream_converges_to_batch_q96(spark, tmp_path):
     assert byk["shift"][3] == 60
 
 
+@pytest.mark.slow
 def test_restart_from_checkpoint_resumes_exactly(spark, tmp_path):
     rows = _mk_rows()
     half = len(rows) // 2

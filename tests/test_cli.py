@@ -10,6 +10,7 @@ import os
 import subprocess
 import sys
 
+import pytest
 import yaml
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -111,6 +112,7 @@ def test_feature_gates_flag(tmp_path):
     assert "no.such.gate" in r.stderr
 
 
+@pytest.mark.slow
 def test_run_end_to_end(tmp_path):
     """The root command: resolve -> compile -> materialize exporters,
     results on stdout, exit 0 (subprocess spins a real SparkSession)."""
@@ -227,6 +229,7 @@ pipelines:
     assert r.returncode == 1 and "needs a mapping with a `where:`" in r.stderr
 
 
+@pytest.mark.slow
 def test_run_watch_reloads_on_edit(tmp_path):
     """--watch: the root command stays alive, picks up a config edit
     (filter dropped -> more rows), prints the reloaded results, and
@@ -272,6 +275,7 @@ def test_run_watch_reloads_on_edit(tmp_path):
     assert p.returncode == 0
 
 
+@pytest.mark.slow
 def test_run_watch_without_file_uri_is_clean_error():
     """--watch with only non-file config URIs (nothing to poll) exits
     with a flag-validation error (rc 2, message on stderr), not a raw

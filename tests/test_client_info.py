@@ -83,6 +83,7 @@ def test_http_client_info_columns(spark, tmp_path):
         r.stop()
 
 
+@pytest.mark.slow
 def test_pipeline_shards_on_client_addr(spark, tmp_path):
     """The done-criterion from VERDICT r5: client.addr flows from the
     live receiver through ingest into the metadata-keyed batcher — one

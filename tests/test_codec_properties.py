@@ -138,6 +138,7 @@ def log_record(draw):
 
 @settings(max_examples=8, deadline=None,
           suppress_health_check=[HealthCheck.function_scoped_fixture])
+@pytest.mark.slow
 @given(st.lists(metric_point(), min_size=1, max_size=6))
 def test_metrics_roundtrip_property(points):
     spark = _SPARK[0]
@@ -149,6 +150,7 @@ def test_metrics_roundtrip_property(points):
 
 @settings(max_examples=8, deadline=None,
           suppress_health_check=[HealthCheck.function_scoped_fixture])
+@pytest.mark.slow
 @given(st.lists(log_record(), min_size=1, max_size=6))
 def test_logs_roundtrip_property(records):
     spark = _SPARK[0]
@@ -182,6 +184,7 @@ def span_row(draw):
 
 @settings(max_examples=8, deadline=None,
           suppress_health_check=[HealthCheck.function_scoped_fixture])
+@pytest.mark.slow
 @given(st.lists(span_row(), min_size=1, max_size=6))
 def test_traces_roundtrip_property(rows):
     from otel_arrow_collector_spark.model.telemetry import SPAN_SCHEMA

@@ -12,8 +12,35 @@ from tests.conftest import SF_SMALL
 
 QUERIES, ORACLES = collect_registry()
 
+#: queries whose parity check measured >5 s (run with --runslow)
+SLOW = frozenset((
+    "ann_ivf_pq",
+    "curation_ingest_funnel",
+    "curation_pipeline",
+    "dedup_band_sensitivity",
+    "dedup_incremental_epoch2",
+    "dedup_incremental_prefix",
+    "dedup_semantic_keep",
+    "dedup_simhash",
+    "dedup_source_overlap",
+    "dedup_substring",
+    "embedding_drift",
+    "embedding_pca_covariance",
+    "graph_assortativity",
+    "graph_clustering_coefficient",
+    "graph_k_core",
+    "graph_label_propagation",
+    "graph_link_prediction",
+    "graph_modularity",
+    "graph_pagerank",
+    "heavy_hitter_events",
+    "q113_autocorrelation",
+))
 
-@pytest.mark.parametrize("name", sorted(ORACLES))
+
+@pytest.mark.parametrize("name", [
+    pytest.param(n, marks=pytest.mark.slow) if n in SLOW else n
+    for n in sorted(ORACLES)])
 def test_query_matches_oracle(spark, duck, name):
     r = compare(QUERIES[name](spark, SF_SMALL), duck, ORACLES[name])
     assert r["cols_match"], f"{name} cols: {r['spark_cols']} vs {r['duck_cols']}"

@@ -89,6 +89,7 @@ def _run_foreach(spark, d, ckpt):
                   for r in rows if _day_index(r) < 300)
 
 
+@pytest.mark.slow
 def test_streaming_ewma_matches_batch_kernel(spark, tmp_path):
     rows = _mk_rows()
     want = _batch_truth(rows)
@@ -109,6 +110,7 @@ def test_streaming_ewma_matches_batch_kernel(spark, tmp_path):
     # errors) — guaranteed by equality with _batch_truth above
 
 
+@pytest.mark.slow
 def test_restart_from_checkpoint_resumes_exactly(spark, tmp_path):
     rows = _mk_rows()
     want = _batch_truth(rows)

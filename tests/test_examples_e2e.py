@@ -32,6 +32,7 @@ def test_example_validates(cfg):
     assert r.returncode == 0, r.stderr
 
 
+@pytest.mark.slow
 def test_errors_example_runs_and_lands_parquet(tmp_path):
     out = str(tmp_path / "errors_out")
     r = _cli("--config", "examples/errors_to_parquet.yaml",
@@ -45,6 +46,7 @@ def test_errors_example_runs_and_lands_parquet(tmp_path):
     assert got == want > 0
 
 
+@pytest.mark.slow
 def test_curation_example_gates_quality(tmp_path):
     out = str(tmp_path / "curated_out")
     r = _cli("--config", "examples/curation_to_parquet.yaml",
@@ -63,6 +65,7 @@ def test_curation_example_gates_quality(tmp_path):
     assert "doc_id" in r.stdout
 
 
+@pytest.mark.slow
 def test_relay_example_runs_against_a_real_spool(spark, tmp_path):
     """examples/otlp_relay.yaml runs end to end: a recorded pb spool of
     generated traces flows through the OTTL transform + memory limiter
@@ -78,6 +81,7 @@ def test_relay_example_runs_against_a_real_spool(spark, tmp_path):
     assert "env" in r.stdout            # set(attributes["env"], "prod")
 
 
+@pytest.mark.slow
 def test_router_example_splits_disjoint_and_complete(tmp_path):
     """examples/router_split.yaml: the routed stores partition the
     input — errors land in one sink, everything else in the default,

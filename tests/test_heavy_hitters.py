@@ -54,6 +54,7 @@ def test_partial_summaries_cover_true_heavies(spark):
         assert seen.setdefault(r.key, r.shard) == r.shard
 
 
+@pytest.mark.slow
 def test_heavy_hitters_exact_recount(spark):
     """Sketch + recount == plain groupBy + threshold, exactly."""
     rows = [(f"u{i % 7}",) for i in range(700)] \
@@ -71,6 +72,7 @@ def test_heavy_hitters_exact_recount(spark):
         heavy_hitters(df, "u", phi_denom=100, capacity=64)
 
 
+@pytest.mark.slow
 def test_streaming_mg_matches_batch_sketch(spark, tmp_path):
     """The streaming sketch over 3 micro-batches ends in EXACTLY the
     state the batch mg_update reaches on the concatenated stream (same

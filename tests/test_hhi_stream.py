@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import random
 
+import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructField, StructType
 
@@ -59,6 +60,7 @@ def _run(spark, d, ckpt):
     return latest
 
 
+@pytest.mark.slow
 def test_stream_equals_batch_exactly(spark, tmp_path):
     """5 shuffled micro-batches: the final per-nation emission equals
     batch q114 EXACTLY — commutative sums make arrival order and batch
@@ -73,6 +75,7 @@ def test_stream_equals_batch_exactly(spark, tmp_path):
     assert _run(spark, d, str(tmp_path / "ck1")) == _expected(spark)
 
 
+@pytest.mark.slow
 def test_restart_from_checkpoint_resumes_vector(spark, tmp_path):
     """Half the feed, stop, append the rest, restart on the SAME
     checkpoint: exactly-once delivery makes the resumed totals equal

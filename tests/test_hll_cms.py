@@ -7,6 +7,7 @@ from __future__ import annotations
 import hashlib
 from collections import Counter
 
+import pytest
 from pyspark.sql import functions as F
 
 from otel_arrow_collector_spark.operators.sketches import (
@@ -85,6 +86,7 @@ def test_cms_one_sided_and_mergeable(spark):
     assert dict(summed) == counters
 
 
+@pytest.mark.slow
 def test_streaming_hll_matches_batch(spark, tmp_path):
     """The streaming HLL over 3 micro-batches converges to EXACTLY the
     batch operator's registers on the full data (merge rule is MAX, so
@@ -125,6 +127,7 @@ def test_streaming_hll_matches_batch(spark, tmp_path):
     assert 250 <= est <= 1000   # true distinct = 500, raw HLL ~6.5% err
 
 
+@pytest.mark.slow
 def test_streaming_cms_matches_batch(spark, tmp_path):
     """The streaming CMS over 3 micro-batches converges to EXACTLY the
     batch counters on the full data (counters are linear, so the final

@@ -301,6 +301,7 @@ def test_http_pipeline_exporter_kind(spark, rcv):
     assert rcv.read_spool(spark, "traces").count() == 3
 
 
+@pytest.mark.slow
 def test_stream_spool_continuous_ingest(spark, rcv, tmp_path):
     """Live POSTs land in the spool; a streaming query (file source +
     checkpoint) ingests them incrementally — only NEW files on resume."""

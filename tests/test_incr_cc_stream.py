@@ -9,6 +9,7 @@ from __future__ import annotations
 import random
 import tempfile
 
+import pytest
 from pyspark.sql import functions as F  # noqa: F401  (parity with peers)
 
 from otel_arrow_collector_spark.operators import dedup
@@ -38,6 +39,7 @@ def _store_labels(store):
     return {(r.node, r.cluster_id) for r in store.labels().collect()}
 
 
+@pytest.mark.slow
 def test_incremental_cc_equals_batch_across_random_splits(spark):
     """8 seeded trials: random multigraphs applied in 1-4 shuffled
     batches with ~30% re-delivered and duplicated edges — the store's
@@ -79,6 +81,7 @@ def test_incremental_cc_equals_batch_across_random_splits(spark):
         store.release()
 
 
+@pytest.mark.slow
 def test_incremental_cc_delta_is_changed_rows_only(spark):
     """The emitted delta: new nodes + relabelled nodes, nothing else;
     a pure-redelivery batch emits an EMPTY delta (idempotence)."""
@@ -109,6 +112,7 @@ def test_incremental_cc_delta_is_changed_rows_only(spark):
     store.release()
 
 
+@pytest.mark.slow
 def test_cc_stream_twin_deltas_compose_to_batch_labels(spark, tmp_path):
     """foreachBatch twin over 4 shuffled micro-batches with
     re-delivery: replaying the per-batch deltas in order (last write
@@ -150,6 +154,7 @@ def test_cc_stream_twin_deltas_compose_to_batch_labels(spark, tmp_path):
     store.release()
 
 
+@pytest.mark.slow
 def test_cc_incremental_query_matches_full_closure(spark):
     """The registered batch query: store(corpus edges) + one shard
     batch == full-closure labels restricted to changed/new rows."""

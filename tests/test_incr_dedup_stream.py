@@ -7,6 +7,7 @@ from __future__ import annotations
 import random
 import tempfile
 
+import pytest
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from otel_arrow_collector_spark.operators import dedup
@@ -46,6 +47,7 @@ def _run_foreach(spark, d, ckpt):
     return got
 
 
+@pytest.mark.slow
 def test_streaming_candidates_equal_batch_lsh(spark, tmp_path):
     """5 shuffled micro-batches with ~30% of docs re-delivered: emitted
     pairs (across batches) == the batch operator's candidate set —
@@ -66,6 +68,7 @@ def test_streaming_candidates_equal_batch_lsh(spark, tmp_path):
     assert got == _batch_pairs(spark)
 
 
+@pytest.mark.slow
 def test_restart_from_checkpoint_resumes_store(spark, tmp_path):
     """The band-keyed signature store survives a restart: first half of
     the corpus in run 1, second half in run 2 on the same checkpoint —
@@ -85,6 +88,7 @@ def test_restart_from_checkpoint_resumes_store(spark, tmp_path):
     assert got == _batch_pairs(spark)
 
 
+@pytest.mark.slow
 def test_incremental_equals_batch_restricted(spark):
     """Batch-side contract (round-11 flagship): store-based incremental
     verified pairs == full-batch LSH verified pairs restricted to
@@ -156,6 +160,7 @@ def test_ingest_funnel_reconciles(spark):
     assert sum(r.n_arrived for r in rows) == n_shard
 
 
+@pytest.mark.slow
 def test_streaming_ingest_composition_end_to_end(spark, tmp_path):
     """The full streaming ingest shape the twin's docstring promises:
     candidates emitted by the band-keyed state op, verified by the

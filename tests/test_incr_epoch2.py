@@ -6,6 +6,7 @@ bit-identical to a rebuild over the kept documents."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from otel_arrow_collector_spark.operators import dedup
@@ -51,6 +52,7 @@ def _pairset(df):
             df.filter(F.col("j") >= JACCARD_THRESHOLD).collect()}
 
 
+@pytest.mark.slow
 def test_epoch2_equals_fullbatch_over_survivors(spark):
     """Epoch-B incremental pairs == full-batch LSH over
     (corpus ∪ kept-A ∪ B), restricted to B-touching pairs.  This is the

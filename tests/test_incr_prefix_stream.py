@@ -9,6 +9,7 @@ from __future__ import annotations
 import random
 import tempfile
 
+import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
@@ -28,6 +29,7 @@ def _allpairs(spark):
     return {(r.d1, r.d2, r.n_common, r.jaccard) for r in rows}
 
 
+@pytest.mark.slow
 def test_incremental_prefix_equals_batch_restricted(spark):
     """Store-based exact incremental pairs == the from-scratch exact
     all-pairs join restricted to shard-touching pairs.  The candidate
@@ -41,6 +43,7 @@ def test_incremental_prefix_equals_batch_restricted(spark):
     assert incr == expected and incr
 
 
+@pytest.mark.slow
 def test_streaming_prefix_twin_equals_batch(spark, tmp_path):
     """The foreachBatch streaming twin over the shard split in 4
     shuffled micro-batches with ~30% re-delivered docs: the union of
@@ -86,6 +89,7 @@ def test_streaming_prefix_twin_equals_batch(spark, tmp_path):
     assert got == expected and got
 
 
+@pytest.mark.slow
 def test_prefix_store_append_is_idempotent(spark):
     """Appending the same docs twice leaves the store relations at
     their first-append cardinalities (anti-join on known ids)."""
@@ -142,6 +146,7 @@ def _py_exact_pairs(docs: dict, touching: set) -> set:
 @settings(max_examples=8, deadline=None)
 @given(texts=st.lists(_DOC, min_size=4, max_size=14),
        mask=st.integers(min_value=1, max_value=(1 << 14) - 1))
+@pytest.mark.slow
 def test_prefix_incremental_exact_on_random_corpora(spark, texts, mask):
     """Frozen-order PPJoin exactness, property-swept: on ANY corpus and
     ANY store/shard split, prefix_incremental_pairs finds EXACTLY the

@@ -70,6 +70,7 @@ def _run(spark, d, ckpt):
     return latest
 
 
+@pytest.mark.slow
 def test_stream_equals_batch_sweep(spark, tmp_path):
     """4 shuffled micro-batches with ~25% of events re-delivered: the
     final per-key (n_islands, covered_us) equals the batch sweep —
@@ -87,6 +88,7 @@ def test_stream_equals_batch_sweep(spark, tmp_path):
     assert got == _expected(spark)
 
 
+@pytest.mark.slow
 def test_batch_split_invariant(spark, tmp_path):
     """1 batch vs 7 batches: identical final state."""
     rows = _events(spark)

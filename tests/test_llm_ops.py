@@ -1119,3 +1119,22 @@ def test_pca_components_match_numpy_direct(spark):
     proj = q @ np.array(comps[0])
     assert abs(proj.var() - vals[0]) < 1e-9
     assert vals[0] >= vals[1] >= vals[2] > 0
+
+
+def test_cov_num_guard_fails_past_bigint(spark):
+    """embedding_pca_covariance publishes its decimal(38,0) cov_num AS
+    BIGINT through ``_checked_long``: a value past the BIGINT range
+    fails the query (as DuckDB's cast does) instead of wrapping, and
+    the range ends themselves pass through exactly."""
+    from pyspark.sql import functions as F
+
+    def run(v):
+        df = spark.createDataFrame([(str(v),)], "v string")
+        return df.select(similarity._checked_long(
+            F.col("v").cast("decimal(38,0)"), "cov_num")).first()[0]
+
+    assert run((1 << 63) - 1) == (1 << 63) - 1
+    assert run(-(1 << 63)) == -(1 << 63)
+    for v in ((1 << 63), -(1 << 63) - 1, 4 * 10 ** 27):
+        with pytest.raises(Exception, match="cov_num leaves the BIGINT"):
+            run(v)

@@ -38,6 +38,7 @@ def _write_feed(spark, feed_dir):
     return li
 
 
+@pytest.mark.slow
 def test_mv_stream_is_bit_equal_per_batch_and_idempotent(spark, tmp_path):
     feed = str(tmp_path / "feed")
     li = _write_feed(spark, feed)

@@ -210,6 +210,7 @@ def test_group_by_trace_id(td):
     assert s.args[1] == ("dur", 30_000)
 
 
+@pytest.mark.slow
 def test_create_gauge_from_read_gauge(spark):
     """docs/processing.md:232-239 — create_gauge unions a derived gauge:
     per-timestamp sums of each operand metric, combined by the operator.

@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import tempfile
 
+import pytest
 from pyspark.sql.types import LongType, StructField, StructType
 
 from otel_arrow_collector_spark.streaming.quantiles import (
@@ -47,6 +48,7 @@ def test_quantiles_from_counts_edges():
     assert q == [(50, ub, 10), (99, ub, 10)]
 
 
+@pytest.mark.slow
 def test_streaming_snapshot_equals_batch(spark, tmp_path):
     rows = _rows()
     df = spark.createDataFrame(rows, SCHEMA)
@@ -76,3 +78,29 @@ def test_streaming_snapshot_equals_batch(spark, tmp_path):
             got[k] = (r.value_ub, r.n)
     assert got == want
     assert len(want) == 9          # 3 groups x 3 quantiles
+
+
+def test_out_of_domain_value_fails_both_paths(spark, tmp_path):
+    """[LO, HI] is the documented domain: a value just outside it fails
+    the pure bin helper, the batch twin and the stream alike, instead
+    of landing in an edge bin (width_bucket's -1 / n_bins, or numpy's
+    negative index)."""
+    from pyspark.errors import StreamingQueryException
+
+    for v in (LO - 1, HI + 1):
+        with pytest.raises(ValueError):
+            _bin_index(v, LO, HI, BINS)
+        df = spark.createDataFrame([(0, 5), (0, v)], SCHEMA)
+        with pytest.raises(Exception, match="outside the histogram domain"):
+            bin_quantiles_batch(df, LO, HI, BINS).collect()
+        d = str(tmp_path / f"in_{v}")
+        df.coalesce(1).write.parquet(d)
+        q = (bin_quantiles_stream(
+                spark.readStream.schema(SCHEMA).parquet(d), LO, HI, BINS)
+             .writeStream.format("memory").queryName(f"q_oob_{v + 1}")
+             .outputMode("update")
+             .option("checkpointLocation", str(tmp_path / f"ck_{v}"))
+             .trigger(availableNow=True).start())
+        with pytest.raises(StreamingQueryException,
+                           match="outside the histogram domain"):
+            q.awaitTermination(120)

@@ -6,6 +6,7 @@ shear, ACF bounds, HHI bounds, novelty monotonicity)."""
 from __future__ import annotations
 
 import numpy as np
+import pytest
 
 from tests.conftest import SF_SMALL
 
@@ -180,6 +181,7 @@ def test_bmp_query_lossless_column(spark):
 # curation_diversity_sample
 # ---------------------------------------------------------------------------
 
+@pytest.mark.slow
 def test_diversity_sample_per_cell_budget(spark):
     from otel_arrow_collector_spark.operators.similarity import (
         DIVERSITY_M, QUERIES)

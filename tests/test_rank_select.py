@@ -91,6 +91,7 @@ def test_rank_values_at_unit(spark, gate):
     assert got == [(1, 1), (4, 3), (8, 9)]
 
 
+@pytest.mark.slow
 def test_rank_values_at_property(spark):
     """Property: for random multisets and random rank sets, the
     distributed selector returns exactly the sorted-order elements at

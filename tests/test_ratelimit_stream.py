@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import tempfile
 
+import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.types import (LongType, StringType, StructField,
                                StructType)
@@ -15,6 +16,7 @@ QUOTA = 2
 WINDOW_US = 1_000_000          # 1-second windows for the test
 
 
+@pytest.mark.slow
 def test_streaming_quota_matches_batch_rank(spark, tmp_path):
     schema = StructType([StructField("user_id", LongType()),
                          StructField("event_id", LongType()),
@@ -53,6 +55,7 @@ def test_streaming_quota_matches_batch_rank(spark, tmp_path):
     assert 0 in got.values() and 1 in got.values()
 
 
+@pytest.mark.slow
 def test_streaming_weighted_sample_matches_batch(spark, tmp_path):
     """The streaming k-minimum state after all batches equals the batch
     sample_weighted top-k over the same rows (pure-function priority ->

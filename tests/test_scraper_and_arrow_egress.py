@@ -154,6 +154,7 @@ def test_checkpoint_resume_no_loss_no_dup(spark, tmp_path):
         events.select("event_id").distinct().count()
 
 
+@pytest.mark.slow
 def test_chunked_sink_crash_between_chunks_resumes_exactly_once(
         spark, tmp_path):
     """Exactly-once at CHUNK granularity (size_capped_chunks + retry x
@@ -220,6 +221,7 @@ def test_chunked_sink_crash_between_chunks_resumes_exactly_once(
             == {r.event_id for r in events.collect()})   # no dup, no gap
 
 
+@pytest.mark.slow
 def test_dispatched_unacked_chunk_replays_exactly_once(spark, tmp_path):
     """The reference re-enqueues CURRENTLY-DISPATCHED items on restart
     (persistent_storage.go:278-345: the dispatched-but-unacked index is

@@ -6,6 +6,7 @@ from __future__ import annotations
 import random
 import tempfile
 
+import pytest
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from otel_arrow_collector_spark.streaming.seasonal import (
@@ -86,6 +87,7 @@ def _final_spikes(rows):
                   for r in last.values() if r.is_spike)
 
 
+@pytest.mark.slow
 def test_stream_converges_to_batch_q97(spark, tmp_path):
     rows = _mk_rows()
     d = tempfile.mkdtemp(prefix="season_stream_")
@@ -98,6 +100,7 @@ def test_stream_converges_to_batch_q97(spark, tmp_path):
     assert not any(r[1] == 0 and r[2] == 1 for r in _final_spikes(got))
 
 
+@pytest.mark.slow
 def test_restart_from_checkpoint_resumes_exactly(spark, tmp_path):
     rows = _mk_rows()
     half = len(rows) // 2

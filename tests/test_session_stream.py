@@ -7,6 +7,7 @@ from __future__ import annotations
 import random
 import tempfile
 
+import pytest
 from pyspark.sql.types import LongType, StructField, StructType
 
 from otel_arrow_collector_spark.streaming.sessions import (
@@ -60,6 +61,7 @@ def _batch_truth(rows):
     return sorted(out)
 
 
+@pytest.mark.slow
 def test_streaming_sessions_match_batch_q80_shape(spark, tmp_path):
     rows = _mk_rows()
     want = _batch_truth(rows)

@@ -86,6 +86,7 @@ def _run(spark, d, ckpt, name):
                   if r.hour < 300)              # drop the flush sentinel
 
 
+@pytest.mark.slow
 def test_streaming_burn_matches_q92_shape(spark, tmp_path):
     rows = _mk_rows()
     want = _batch_truth(rows)
@@ -127,6 +128,7 @@ def _run_foreach(spark, d, ckpt):
                   for r in rows if r.hour < 300)
 
 
+@pytest.mark.slow
 def test_restart_from_checkpoint_resumes_exactly(spark, tmp_path):
     rows = _mk_rows()
     want = _batch_truth(rows)

@@ -58,6 +58,7 @@ def test_parent_child_and_roots_partition_spans(spark):
 # spanmetrics (traces -> RED metrics connector)
 # ---------------------------------------------------------------------------
 
+@pytest.mark.slow
 def test_span_red_metrics_histogram_points(spark):
     """Counts, error dimension, duration buckets and schema conformance:
     the output is METRIC_POINT_SCHEMA and feeds merge/quantile as-is."""

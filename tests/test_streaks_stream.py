@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import random
 
+import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructField, StructType
 
@@ -61,6 +62,7 @@ def _run(spark, d, ckpt):
     return latest
 
 
+@pytest.mark.slow
 def test_stream_equals_batch_runs(spark, tmp_path):
     """5 shuffled micro-batches (out-of-order days, ~30% re-delivered):
     final per-user state == the batch gaps-and-islands aggregate."""

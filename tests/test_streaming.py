@@ -187,6 +187,7 @@ def test_stream_in_batches_size_cap(spark, stream_dir, tmp_path):
     assert max(delivered) <= 400
 
 
+@pytest.mark.slow
 def test_sharded_batcher_size_trigger(spark, stream_dir, tmp_path):
     """Per-shard (event_type) batchers emit complete batches of exactly
     send_batch_size; remainders stay pending (flushed by timeout in a live
@@ -212,6 +213,7 @@ def test_sharded_batcher_size_trigger(spark, stream_dir, tmp_path):
         assert full.complete.all()
 
 
+@pytest.mark.slow
 def test_sharded_batcher_timeout_flush(spark, stream_dir, tmp_path):
     """With a short flush timeout, partial batches (complete=False) may be
     flushed between micro-batches — the shard-timer semantics.  Invariants:
@@ -248,6 +250,7 @@ def test_sharded_batcher_cardinality_cap(spark, stream_dir, tmp_path):
         q.awaitTermination(120)
 
 
+@pytest.mark.slow
 def test_sharded_batcher_guard_never_collects_batches(
         spark, stream_dir, tmp_path, monkeypatch):
     """The cardinality guard must count distinct keys distributively —

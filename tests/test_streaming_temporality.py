@@ -196,6 +196,7 @@ def hist_points(spark):
     shutil.rmtree(d, ignore_errors=True)
 
 
+@pytest.mark.slow
 def test_histogram_merge_stream_matches_batch_operator(spark, hist_points,
                                                        tmp_path):
     """The LAST streamed snapshot per series == batch merge_histograms on
@@ -287,6 +288,7 @@ def test_histogram_merge_stream_rejects_mixed_bounds(spark, tmp_path):
         shutil.rmtree(d, ignore_errors=True)
 
 
+@pytest.mark.slow
 def test_exp_histogram_merge_stream_matches_batch_operator(spark, tmp_path):
     """Cross-batch scale renegotiation: a COARSER point arriving in a
     LATER micro-batch must downscale the accumulated state (the hard
@@ -367,6 +369,7 @@ def test_exp_histogram_merge_stream_matches_batch_operator(spark, tmp_path):
         shutil.rmtree(src, ignore_errors=True)
 
 
+@pytest.mark.slow
 def test_streaming_spanmetrics_composition(spark, tmp_path):
     """Traces stream -> per-micro-batch span_red_metrics (delta
     histograms) -> histogram_merge_stream (cumulative) == batch

@@ -8,6 +8,7 @@ import hashlib
 import random
 import tempfile
 
+import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.types import (LongType, StringType, StructField,
                                StructType)
@@ -70,6 +71,7 @@ def test_decide_policy_matches_q90_expression():
     assert decide_policy(5, 0, 0, LATENCY_THRESHOLD_US) == "latency"
 
 
+@pytest.mark.slow
 def test_streaming_verdicts_match_batch_q90(spark, tmp_path):
     rows = _mk_rows()
     want = _batch_truth(rows)
@@ -109,6 +111,7 @@ def test_streaming_verdicts_match_batch_q90(spark, tmp_path):
         {"error", "latency", "probabilistic", "drop"}
 
 
+@pytest.mark.slow
 def test_late_span_follows_cached_decision_exactly_once(spark, tmp_path):
     """groupbytrace decision cache: a span arriving after its trace's
     verdict neither re-opens the trace nor duplicates the verdict."""

@@ -7,6 +7,7 @@ import hashlib
 import random
 import tempfile
 
+import pytest
 from pyspark.sql.types import StringType, StructField, StructType
 
 from otel_arrow_collector_spark.operators.sketches import (THETA_K,
@@ -107,6 +108,7 @@ def _write_batches(spark, d, rows, n_batches, seed):
              .coalesce(1).write.mode("append").parquet(d))
 
 
+@pytest.mark.slow
 def test_streaming_theta_matches_batch(spark, tmp_path):
     rows = _mk_rows()
     want = _batch_truth(rows)
@@ -119,6 +121,7 @@ def test_streaming_theta_matches_batch(spark, tmp_path):
     assert got["big"][0] == THETA_K and got["big"][1] < THETA_RANGE
 
 
+@pytest.mark.slow
 def test_restart_from_checkpoint_resumes_sketch(spark, tmp_path):
     """The bottom-K state survives a restart: first half of the corpus
     in run 1, second half in run 2 on the same checkpoint — the final
