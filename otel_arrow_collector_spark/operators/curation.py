@@ -20,9 +20,10 @@ Scale stance — each op avoids the global-coordination trap:
   packs independently in its own task tree — exactly how production
   packers shard work across writers.  No single-partition window exists
   in this module.
-- Contamination broadcasts the benchmark shingle set (eval suites are
-  tiny relative to the corpus) and the corpus-side explode feeds a
-  map-side-combinable hash aggregation — one shuffle, no n^2.
+- Contamination hash-joins the corpus against the materialized
+  benchmark shingle set (broadcast while its measured size is under the
+  session threshold, shuffled past it) and the corpus-side explode feeds
+  a map-side-combinable hash aggregation — no n^2.
 - Shuffle-shard is a codegen map (md5) + per-shard window; the output
   layout (shard, pos) is the write-partitioning a 1000-executor job
   would use directly.
@@ -116,15 +117,16 @@ def _src_shingles(spark, sf_dir):
     """(doc_id, sh, source): the dedup battery's MATERIALIZED per-doc
     distinct-shingle relation (dedup._doc_shingle_sets — one explode per
     session, parallel by construction) with each document's source
-    attached via a broadcast join (documents is dim-sized next to its
-    own shingles).  Shared by the contamination screens and the bloom
-    pair, which previously each re-ran the full documents scan + split
-    + shingle explode per BRANCH per invocation (r16 stage profile:
-    sketch_bloom_fpr alone ran five serial explode passes)."""
+    attached by a doc_id join (the documents table grows with the
+    corpus, so size statistics pick its strategy).  Shared by the
+    contamination screens and the bloom pair, which previously each
+    re-ran the full documents scan + split + shingle explode per BRANCH
+    per invocation (r16 stage profile: sketch_bloom_fpr alone ran five
+    serial explode passes)."""
     from .dedup import _doc_shingle_sets
     shd = _doc_shingle_sets(spark, sf_dir)
     src = load_table(spark, sf_dir, "documents").select("doc_id", "source")
-    return shd.join(F.broadcast(src), "doc_id")
+    return shd.join(src, "doc_id")
 
 
 def _bench_shingles(spark, sf_dir):
@@ -159,17 +161,17 @@ def contamination_screen(spark, sf_dir):
     as the held-out benchmark, flag corpus documents whose distinct 3-gram
     shingles overlap the benchmark shingle set above CONTAM_THRESHOLD.
 
-    Plan: the benchmark's distinct shingle set is broadcast (eval suites
-    are tiny vs the corpus); the corpus side reads the shared shingle
-    substrate once and hash-aggregates matches per doc — one shuffle on
-    doc_id, candidate work bounded by corpus size x shingle count, never
-    pairwise.
+    Plan: the benchmark's distinct shingle set is materialized, so its
+    real size decides the join (broadcast at bench scale); the corpus
+    side reads the shared shingle substrate once and hash-aggregates
+    matches per doc — one shuffle on doc_id, candidate work bounded by
+    corpus size x shingle count, never pairwise.
     """
     sh = _src_shingles(spark, sf_dir)
     bench = _bench_shingles(spark, sf_dir)
     corpus = sh.filter(F.col("source") != "src0")
     sizes = corpus.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
-    hits = (corpus.join(F.broadcast(bench), "sh")
+    hits = (corpus.join(bench, "sh")
                   .groupBy("doc_id")
                   .agg(F.count(F.lit(1)).alias("n_hit")))
     ratio = F.col("n_hit").cast("double") / F.col("n_sh")
@@ -244,46 +246,35 @@ FROM t QUALIFY pos <= 10 ORDER BY shard, pos
 # composite curation pipeline (the end-to-end funnel)
 # ---------------------------------------------------------------------------
 
-def _contaminated_ids(spark, sf_dir):
-    """doc_ids failing the benchmark-overlap screen (integer-compare form
-    of contamination_screen's threshold: 2*n_hit >= n_sh <=> ratio >=
-    CONTAM_THRESHOLD=0.5 — no float boundary anywhere)."""
-    sh = _src_shingles(spark, sf_dir)
-    bench = _bench_shingles(spark, sf_dir)
-    corpus = sh.filter(F.col("source") != "src0")
-    sizes = corpus.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
-    hits = (corpus.join(F.broadcast(bench), "sh")
-                  .groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_hit")))
-    return (sizes.join(hits, "doc_id")
-                 .filter(2 * F.col("n_hit") >= F.col("n_sh"))
-                 .select("doc_id"))
-
-
 def curation_pipeline(spark, sf_dir):
     """The end-to-end curation funnel, per language: total documents, and
     how many pass each gate — quality score, repetition, benchmark
     contamination, greedy near-dup removal — plus the intersection
     (n_kept) and its token budget.  This is the whole training-data
-    pipeline as ONE declarative plan: scan-side stats, two broadcast
-    screens, one aggregation.
+    pipeline as ONE declarative plan: scan-side stats, per-doc screen
+    relations left-joined onto the document scan, one aggregation.
 
     Every threshold is an exact integer inequality (quality >= 0.5 <=>
     2*num >= 250*n on the integer numerator of text_quality_score;
-    repetition <= 0.5 <=> n <= 2*n_distinct; contamination as in
-    _contaminated_ids), so no gate sits on a float boundary.
+    repetition <= 0.5 <=> n <= 2*n_distinct; contamination as
+    2*n_hit >= n_sh <=> ratio >= CONTAM_THRESHOLD=0.5 on non-benchmark
+    docs), so no gate sits on a float boundary.
 
-    Scale: per-doc stats run inside the scan; the contamination and
-    dedup drop sets are tiny (flagged docs, not corpus) and broadcast
-    into left-anti-style null checks; one final hash aggregation on lang.
+    Scale: per-doc stats run inside the scan; the benchmark-hit counts,
+    the shingle-set sizes and the dedup drop set each join the document
+    scan directly, so each is sized on its own (joining hits to sizes
+    first is estimated as the product of the two and would shuffle);
+    one final hash aggregation on lang.
     """
-    from .dedup import JACCARD_THRESHOLD, _jaccard_verified
+    from .dedup import (JACCARD_THRESHOLD, _doc_shingle_arrays,
+                        _doc_shingle_sets, _jaccard_verified)
     from .text import _STOPWORDS
 
     assert JACCARD_THRESHOLD == 0.5  # funnel doc contract
     d = load_table(spark, sf_dir, "documents")
     ws = F.split("text", " ")
     per = d.select(
-        "doc_id", "lang",
+        "doc_id", "lang", "source",
         F.size(ws).alias("n"),
         F.size(F.array_distinct(ws)).alias("nd"),
         F.size(F.filter(ws, lambda w: w.isin(*_STOPWORDS))).alias("stop"),
@@ -292,16 +283,22 @@ def curation_pipeline(spark, sf_dir):
            + F.least(F.col("n"), F.lit(50)) * F.col("n"))
     q_ok = (2 * num >= 250 * F.col("n")).cast("int")
     rep_ok = (F.col("n") <= 2 * F.col("nd")).cast("int")
-    contam = _contaminated_ids(spark, sf_dir).withColumn("c_hit", F.lit(1))
+    hits = (_doc_shingle_sets(spark, sf_dir)
+            .join(_bench_shingles(spark, sf_dir), "sh", "left_semi")
+            .groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_hit")))
+    sizes = _doc_shingle_arrays(spark, sf_dir).select("doc_id", "n_sh")
+    contam = ((F.col("source") != "src0")
+              & (2 * F.col("n_hit") >= F.col("n_sh")))
     drops = (_jaccard_verified(spark, sf_dir)
              .filter(F.col("j") >= JACCARD_THRESHOLD)
              .select(F.col("d2").alias("doc_id")).distinct()
              .withColumn("d_hit", F.lit(1)))
-    flags = (per.join(F.broadcast(contam), "doc_id", "left")
-                .join(F.broadcast(drops), "doc_id", "left")
+    flags = (per.join(hits, "doc_id", "left")
+                .join(sizes, "doc_id", "left")
+                .join(drops, "doc_id", "left")
                 .select("lang", "n", q_ok.alias("q_ok"),
                         rep_ok.alias("rep_ok"),
-                        F.isnull("c_hit").cast("int").alias("clean"),
+                        F.when(contam, 0).otherwise(1).alias("clean"),
                         F.isnull("d_hit").cast("int").alias("uniq")))
     kept = (F.col("q_ok") * F.col("rep_ok") * F.col("clean") * F.col("uniq"))
     return (flags
@@ -529,7 +526,7 @@ def temperature_mix(spark, sf_dir):
                  .agg(F.sum(toks).alias("tokens"),
                       F.count(F.lit(1)).alias("docs")))
     tot = per_lang.agg(F.sum("tokens").alias("total"))
-    j = per_lang.crossJoin(F.broadcast(tot))
+    j = per_lang.crossJoin(tot)
     # per-row pow() is deterministic; the cross-row normalization uses
     # INTEGER nano-scaled weights so the sum is order-independent (the
     # engine's standard dodge for order-sensitive double folds)
@@ -626,8 +623,9 @@ def bloom_screen(spark, sf_dir):
     maybe-hits next to exact hits, so the Bloom false-positive rate is
     observable (n_maybe >= n_exact always — one-sided, like the CMS).
 
-    Why at 100 TB: the exact screen broadcasts the full benchmark
-    shingle SET; the Bloom variant broadcasts a fixed 8 KiB bitset no
+    Why at 100 TB: the exact screen joins the full benchmark shingle
+    SET, which stops fitting a broadcast as benchmarks pile up; the
+    Bloom variant broadcasts a fixed 8 KiB bitset no
     matter how many benchmarks pile up — the filter is the thing you
     ship to every executor (and every other team).  Construction is one
     distinct-aggregation over benchmark shingles; the probe is a
@@ -662,10 +660,10 @@ def bloom_screen(spark, sf_dir):
         p = (f"CAST(conv(substring(h, {i * BLOOM_HEXCHARS + 1}, "
              f"{BLOOM_HEXCHARS}), 16, 10) AS BIGINT)")
         b = bits.alias(f"bb{i}")
-        cand = cand.join(F.broadcast(b),
+        cand = cand.join(b,
                          F.expr(p) == F.col(f"bb{i}.bit"), "semi")
     cand = cand.select("doc_id", "sh")
-    return (cand.join(F.broadcast(bench.withColumn("inb", F.lit(1))),
+    return (cand.join(bench.withColumn("inb", F.lit(1)),
                       "sh", "left")
             .groupBy("doc_id")
             .agg(F.count(F.lit(1)).cast("long").alias("n_maybe"),
@@ -977,7 +975,7 @@ def budget_waterfill(spark, sf_dir):
            .select(F.coalesce("k", F.lit(0)).alias("k"),
                    F.coalesce("cum_k", F.lit(0)).alias("cum_k"),
                    "n", "b"))
-    out = (t.crossJoin(F.broadcast(cut))
+    out = (t.crossJoin(cut)
            .withColumn(
                "cap",
                F.when(F.col("k") < F.col("n"),
@@ -1073,7 +1071,7 @@ def sketch_bloom_fpr(spark, sf_dir):
              f"{BLOOM_HEXCHARS}), 16, 10) AS BIGINT)")
         b = bits.select(F.col("bit").alias(f"b{i}"),
                         F.lit(1).alias(f"hit{i}"))
-        fp = (fp.join(F.broadcast(b), F.expr(p) == F.col(f"b{i}"), "left")
+        fp = (fp.join(b, F.expr(p) == F.col(f"b{i}"), "left")
                 .drop(f"b{i}"))
         hitcols.append(f"hit{i}")
     all_hit = F.when(

@@ -1187,8 +1187,8 @@ def dedup_cross_corpus(spark, sf_dir):
     zb = arrs.select(F.col("doc_id").alias("b_doc"),
                      F.col("shs").alias("sb"), F.col("n_sh").alias("nb"))
     c = F.size(F.array_intersect("sa", "sb")).cast("long")
-    j = (pairs.join(F.broadcast(za), "a_doc")
-         .join(F.broadcast(zb), "b_doc")
+    j = (pairs.join(za, "a_doc")
+         .join(zb, "b_doc")
          .select("a_doc", "b_doc", c.alias("n_common"), "na", "nb")
          .select("a_doc", "b_doc", "n_common",
                  F.expr("n_common * 1000 div (na + nb - n_common)")
@@ -1279,7 +1279,7 @@ def dedup_source_overlap(spark, sf_dir):
     seeds = spark.range(SRC_OVERLAP_HASHES).select(
         F.col("id").cast("int").alias("seed"))
     # |docs| x 16 digest-mix rows -> |sources| x 16 cells
-    sig = (d.crossJoin(F.broadcast(seeds))
+    sig = (d.crossJoin(seeds)
            .select("source", "seed",
                    F.md5(F.concat(F.col("seed").cast("string"),
                                   F.lit(":"), F.col("h0"))).alias("h"))
@@ -1378,10 +1378,11 @@ def dedup_contamination(spark, sf_dir):
 
     Scale shape: both sides shingle with a constant-factor explode +
     per-doc distinct; the benchmark shingle relation is benchmark-sized
-    (broadcast — eval sets are MBs while the corpus is TBs), so the
-    probe is a broadcast hash join against the corpus shingle stream
-    with NO shuffle of the big side; the (train, bench) count is the
-    only exchange, and it is overlap-sized.
+    (1/97 of the docs here), so at bench scale the probe is a broadcast
+    hash join against the corpus shingle stream with NO shuffle of the
+    big side, and the (train, bench) count is the only exchange; the
+    size threshold, not a hint, switches it to a shuffle join once the
+    benchmark outgrows a broadcast.
     """
     d = load_table(spark, sf_dir, "documents")
     W = CONTAM_SHINGLE_W
@@ -1400,7 +1401,7 @@ def dedup_contamination(spark, sf_dir):
              .select(F.col("doc_id").alias("bench_doc"), "h"))
     train = (sh.filter(F.col("doc_id") % 97 != 0)
              .select(F.col("doc_id").alias("train_doc"), "h"))
-    return (train.join(F.broadcast(bench), "h")
+    return (train.join(bench, "h")
             .groupBy("train_doc", "bench_doc")
             .agg(F.count(F.lit(1)).cast("long").alias("n_shared"))
             .select("train_doc", "bench_doc", "n_shared",
@@ -2666,7 +2667,9 @@ def dedup_containment(spark, sf_dir):
     trivially BIGINT; no products of aggregates.
 
     Scale shape: reuses the memoized candidate pairs + shingle sets
-    (bounded by candidates, never n^2); two broadcastable size joins.
+    (bounded by candidates, never n^2); two doc-keyed joins against the
+    shingle-array relation, which grows with the corpus, so size
+    statistics pick their strategy.
     """
     pairs = _lsh_candidate_pairs(spark, sf_dir)
     # verify on the materialized ARRAY relation (n_sh precomputed, one
@@ -2685,7 +2688,7 @@ def dedup_containment(spark, sf_dir):
                      F.col("shs").alias("s2"), F.col("n_sh").alias("n2"))
     c = F.size(F.array_intersect("s1", "s2")).cast("long")
     return (pairs
-            .join(F.broadcast(z1), "d1").join(F.broadcast(z2), "d2")
+            .join(z1, "d1").join(z2, "d2")
             .select("d1", "d2", c.alias("n_common"),
                     "n1", "n2")
             .select("d1", "d2", "n_common",
@@ -2856,7 +2859,7 @@ def curation_store_stats(spark, sf_dir):
         F.max("bs").cast("long").alias("max_bucket"),
         F.sum(F.when(F.col("bs") > 1, 1).otherwise(0)).cast("long")
          .alias("n_collision_buckets"))
-        .crossJoin(F.broadcast(totals))
+        .crossJoin(totals)
         .select(F.col("n_docs").cast("long").alias("n_docs"),
                 "n_rows", "n_buckets", "max_bucket",
                 "n_collision_buckets"))
@@ -2927,7 +2930,7 @@ def dedup_minhash_estimate_error(spark, sf_dir):
     side = pairs.select(
         "d1", "d2",
         F.explode(F.array(F.col("d1"), F.col("d2"))).alias("doc_id"))
-    both = (side.join(F.broadcast(sig), "doc_id")
+    both = (side.join(sig, "doc_id")
             .groupBy("d1", "d2")
             .agg(F.max(F.when(F.col("doc_id") == F.col("d1"),
                               F.col("sig"))).alias("sig1"),

@@ -211,8 +211,7 @@ def pagerank_fixed_point(edges: DataFrame, iters: int = PR_ITERS,
     ew = edges.join(outw, "src")
     ranks = nodes.withColumn("rank", F.lit(base).cast("long"))
     for _ in range(iters):
-        contrib = (ew.join(F.broadcast(ranks),
-                           ew["src"] == ranks["node"])
+        contrib = (ew.join(F.broadcast(ranks), ew["src"] == ranks["node"])
                    .select(
                        "dst",
                        F.floor(F.col("rank").cast("decimal(38,0)")
@@ -350,17 +349,14 @@ def _lpa_labels(spark, sf_dir):
 
 def _build_lpa_labels(edges):
     """Raw (pre-materialization) LPA label plan — split out so the
-    plan-quality pin (broadcast label joins, per-node rank windows)
+    plan-quality pin (label joins, per-node rank windows)
     stays assertable after the memo truncation."""
     labels = (edges.select(F.col("src").alias("node")).distinct()
               .select("node", F.col("node").alias("label")))
     w = Window.partitionBy("node").orderBy(
         F.col("cnt").desc(), F.col("label").asc())
     for _ in range(LPA_ITERS):
-        neigh = (edges.join(
-                    F.broadcast(labels.withColumnRenamed("node",
-                                                         "dst")),
-                    "dst")
+        neigh = (edges.join(labels.withColumnRenamed("node", "dst"), "dst")
                  .groupBy(F.col("src").alias("node"), "label")
                  .agg(F.count(F.lit(1)).alias("cnt")))
         labels = (neigh.withColumn("rk", F.row_number().over(w))
@@ -380,8 +376,8 @@ def graph_label_propagation(spark, sf_dir):
     dense communities; CC only finds reachability.)
 
     Scale shape: per iteration ONE join of the edge list against the
-    |nodes|-row label relation (ranks-side broadcast, the PageRank
-    adjudication), one (node, label) count, one per-node rank window
+    |nodes|-row label relation (its strategy picked by size, the
+    PageRank adjudication), one (node, label) count, one per-node rank window
     — iteration state is |nodes| rows, never edge-sized.
     """
     _, _, labels = _lpa_labels(spark, sf_dir)
@@ -463,7 +459,7 @@ def graph_k_core(spark, sf_dir):
     forced per round so the lazy plan stays linear (without
     materialization the alive set appears twice per round and the
     plan grows 2^rounds subtrees — the GraphX checkpoint discipline).
-    Per round: two broadcast semi-joins + one |nodes|-row hash agg;
+    Per round: two semi-joins + one |nodes|-row hash agg;
     nothing edge-sized is ever re-materialized.
     """
     from .cache_registry import cached, materialized
@@ -475,10 +471,9 @@ def graph_k_core(spark, sf_dir):
     def induced_deg(alive):
         sub = edges
         if alive is not None:
-            sub = (sub.join(F.broadcast(alive), "src", "left_semi")
-                   .join(F.broadcast(
-                       alive.withColumnRenamed("src", "dst")),
-                       "dst", "left_semi"))
+            sub = (sub.join(alive, "src", "left_semi")
+                   .join(alive.withColumnRenamed("src", "dst"),
+                         "dst", "left_semi"))
         return sub.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
 
     def build():
@@ -710,16 +705,15 @@ def graph_modularity(spark, sf_dir):
 
     Scale shape: the label relation (|nodes| rows, memoized — shared
     with graph_label_propagation so assignment and evaluation can
-    never desynchronize) joins broadcast onto the edge list twice
-    (both endpoints); intra-edge and degree sums are two hash aggs;
+    never desynchronize) joins onto the edge list twice (both
+    endpoints); intra-edge and degree sums are two hash aggs;
     the 1-row (m) frame broadcasts onto the |communities|-row result.
     """
     e, edges, labels = _lpa_labels(spark, sf_dir)
-    la = F.broadcast(labels)
-    both = (e.join(la.select(F.col("node").alias("u"),
-                             F.col("label").alias("lu")), "u")
-            .join(la.select(F.col("node").alias("v"),
-                            F.col("label").alias("lv")), "v"))
+    both = (e.join(labels.select(F.col("node").alias("u"),
+                                 F.col("label").alias("lu")), "u")
+            .join(labels.select(F.col("node").alias("v"),
+                                F.col("label").alias("lv")), "v"))
     # ONE endpoint-exploded pass serves BOTH per-community sums (the
     # separate deg branch re-ran an edges⋈labels pass per invocation —
     # cached subtrees never stage-reuse, the r16 finding): every
@@ -738,7 +732,7 @@ def graph_modularity(spark, sf_dir):
     nn = labels.groupBy("label").agg(F.count(F.lit(1)).alias("n_nodes"))
     m_tot = e.agg(F.count(F.lit(1)).alias("m"))
     return (nn.join(sums, "label", "left")
-            .crossJoin(F.broadcast(m_tot))
+            .crossJoin(m_tot)
             .select(
                 F.col("label").cast("long").alias("label"),
                 F.col("n_nodes").cast("long").alias("n_nodes"),

@@ -6,9 +6,14 @@ Each query maps to a concrete reference mechanism (citations inline, into
 (hash-identical Spark-vs-DuckDB on sf0.001 and sf0.01, 2026-08-13).
 
 Scale notes (100 TB stance):
-- Dimension joins (nation/region/customer at bench SF) are broadcast —
-  Catalyst picks this under ``autoBroadcastJoinThreshold``; dims stay tiny
-  while facts scale.
+- Join strategy is Catalyst's, under ``autoBroadcastJoinThreshold``:
+  dimension joins broadcast at bench SF, and customer/supplier/part/
+  orders, which grow with the fact scale, switch to a shuffle join once
+  they outgrow the threshold.  A dim chain is joined to the fact one dim
+  at a time (a pre-joined chain is estimated as the product of its
+  inputs).  Broadcast hints sit only on relations bounded by
+  construction: per-type, per-nation, per-brand or per-flag aggregates
+  and the single-user query series.
 - Aggregations are partial (map-side combine) automatically; no
   ``collect()`` in any operator.
 - All filters/projections are plain Column expressions so they push into
@@ -140,7 +145,7 @@ def ntile_approx(df: DataFrame, value_col, n: int, *, ascending: bool = True,
         "__ntile_bounds", F.lit(0),
         lambda acc, b: acc + F.when(key.cast("double") > b, 1)
                              .otherwise(0))).alias(out)
-    return (df.crossJoin(F.broadcast(bounds))
+    return (df.crossJoin(bounds)
               .withColumn(out, tile)
               .drop("__ntile_bounds"))
 
@@ -335,11 +340,11 @@ FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
 GROUP BY c.c_mktsegment ORDER BY c.c_mktsegment
 """)
 def q12(spark, sf_dir):
-    """Equi inner join (enrichment join). Customer is the broadcast side at
-    fact >> dim scale."""
+    """Equi inner join (enrichment join). Customer is the build side; the
+    size threshold broadcasts it at bench scale."""
     o = _t(spark, sf_dir, "orders")
     c = _t(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
-    return (o.join(F.broadcast(c), o.o_custkey == c.c_custkey)
+    return (o.join(c, o.o_custkey == c.c_custkey)
              .groupBy("c_mktsegment")
              .agg(F.count(F.lit(1)).alias("n"),
                   F.round(F.sum("o_totalprice"), 2).alias("rev"))
@@ -357,8 +362,8 @@ def q13(spark, sf_dir):
     s = _t(spark, sf_dir, "supplier").select("s_nationkey")
     n = _t(spark, sf_dir, "nation")
     r = _t(spark, sf_dir, "region")
-    return (s.join(F.broadcast(n), s.s_nationkey == n.n_nationkey)
-             .join(F.broadcast(r), n.n_regionkey == r.r_regionkey)
+    return (s.join(n, s.s_nationkey == n.n_nationkey)
+             .join(r, n.n_regionkey == r.r_regionkey)
              .groupBy("r_name", "n_name")
              .agg(F.count(F.lit(1)).alias("suppliers"))
              .orderBy("r_name", "n_name"))
@@ -1196,7 +1201,7 @@ def q43(spark, sf_dir):
     cents = _half_up(F.col("l_extendedprice")
                     * (F.lit(1) - F.col("l_discount")) * 100)
     return (li.join(orders, li.l_orderkey == orders.o_orderkey)
-              .join(F.broadcast(cust), orders.o_custkey == cust.c_custkey)
+              .join(cust, orders.o_custkey == cust.c_custkey)
               .groupBy("l_orderkey", "o_orderdate", "o_orderpriority")
               .agg(F.sum(cents).alias("revenue_cents"))
               .select("l_orderkey", "revenue_cents", "o_orderdate",
@@ -1225,9 +1230,11 @@ def q44(spark, sf_dir):
     """TPC-H Q5 shape (local supplier volume): a six-table star —
     region/nation/customer/supplier dims around the orders+lineitem
     facts, with the local-supplier correlation (s_nationkey =
-    c_nationkey) joined AFTER the fact-fact join.  At 100 TB every dim
-    side broadcasts and the single shuffle is the orders-lineitem key;
-    integer-cent revenue keeps the agg bit-exact cross-engine.
+    c_nationkey) joined AFTER the fact-fact join.  Each dim joins the
+    fact stream directly, so each is sized by its own scan (a pre-joined
+    customer-nation-region chain is estimated as the PRODUCT of its
+    inputs and would shuffle); integer-cent revenue keeps the agg
+    bit-exact cross-engine.
     """
     region = _t(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
     nation = _t(spark, sf_dir, "nation")
@@ -1237,18 +1244,15 @@ def q44(spark, sf_dir):
         (F.col("o_orderdate") >= F.lit("1997-01-01").cast("timestamp"))
         & (F.col("o_orderdate") < F.lit("1998-01-01").cast("timestamp")))
     li = _t(spark, sf_dir, "lineitem")
-    dims = (cust.join(F.broadcast(nation),
-                      cust.c_nationkey == nation.n_nationkey)
-                .join(F.broadcast(region),
-                      nation.n_regionkey == region.r_regionkey)
-                .select("c_custkey", "c_nationkey", "n_name"))
     cents = _half_up(F.col("l_extendedprice")
                     * (F.lit(1) - F.col("l_discount")) * 100)
     return (li.join(orders, li.l_orderkey == orders.o_orderkey)
-              .join(F.broadcast(dims), orders.o_custkey == dims.c_custkey)
-              .join(F.broadcast(sup),
+              .join(cust, orders.o_custkey == cust.c_custkey)
+              .join(nation, cust.c_nationkey == nation.n_nationkey)
+              .join(region, nation.n_regionkey == region.r_regionkey)
+              .join(sup,
                     (li.l_suppkey == sup.s_suppkey)
-                    & (dims.c_nationkey == sup.s_nationkey))
+                    & (cust.c_nationkey == sup.s_nationkey))
               .groupBy("n_name")
               .agg(F.sum(cents).alias("revenue_cents"),
                    F.count(F.lit(1)).alias("n_items"))
@@ -1534,7 +1538,8 @@ def q50(spark, sf_dir):
     nation's (NATION_7 — the synthetic corpus has no real country names)
     revenue share per year.  Exercises dim-role aliasing — the
     join planner must keep the two nation scans distinct — with every dim
-    broadcast and one fact-fact shuffle.  Integer-cent revenue keeps the
+    joined to the fact stream directly (sized by its own scan) and one
+    fact-fact join.  Integer-cent revenue keeps the
     share numerator/denominator bit-exact; the final ratio divides two
     exact BIGINTs identically in both engines.
     """
@@ -1549,17 +1554,12 @@ def q50(spark, sf_dir):
     li = _t(spark, sf_dir, "lineitem")
     cents = _half_up(F.col("l_extendedprice")
                     * (F.lit(1) - F.col("l_discount")) * 100)
-    market = (cust.join(F.broadcast(n1),
-                        cust.c_nationkey == F.col("n1.n_nationkey"))
-                  .join(F.broadcast(region),
-                        F.col("n1.n_regionkey") == region.r_regionkey)
-                  .select("c_custkey"))
-    sellers = sup.join(F.broadcast(n2), sup.s_nationkey == F.col("s_nkey")) \
-                 .select("s_suppkey", "supp_nation")
     rev = (li.join(orders, li.l_orderkey == orders.o_orderkey)
-             .join(F.broadcast(market),
-                   orders.o_custkey == market.c_custkey)
-             .join(F.broadcast(sellers), li.l_suppkey == sellers.s_suppkey)
+             .join(cust, orders.o_custkey == cust.c_custkey)
+             .join(n1, cust.c_nationkey == F.col("n1.n_nationkey"))
+             .join(region, F.col("n1.n_regionkey") == region.r_regionkey)
+             .join(sup, li.l_suppkey == sup.s_suppkey)
+             .join(n2, sup.s_nationkey == F.col("s_nkey"))
              .select(F.year("o_orderdate").alias("yr"), "supp_nation",
                      cents.alias("cents")))
     focal = F.sum(F.when(F.col("supp_nation") == "NATION_7",
@@ -1657,7 +1657,7 @@ def q52(spark, sf_dir):
                     * (F.lit(1) - F.col("l_discount")) * 100)
     return (li.join(orders, li.l_orderkey == orders.o_orderkey)
               .join(cust, orders.o_custkey == cust.c_custkey)
-              .join(F.broadcast(nation),
+              .join(nation,
                     cust.c_nationkey == nation.n_nationkey)
               .groupBy("c_custkey", "c_name", "n_name")
               .agg(F.sum(cents).alias("revenue_c"))
@@ -1958,7 +1958,7 @@ def q61(spark, sf_dir):
               .agg(F.avg(cents).alias("ab_cents")))
     return (cust.join(orders, cust.c_custkey == orders.o_custkey,
                       "left_anti")
-                .crossJoin(F.broadcast(ab))
+                .crossJoin(ab)
                 .filter(cents > F.col("ab_cents"))
                 .groupBy("c_nationkey")
                 .agg(F.count(F.lit(1)).alias("numcust"),
@@ -2015,11 +2015,11 @@ def q63(spark, sf_dir):
             & (F.col("cust_nation") == "NATION_10")) | \
            ((F.col("supp_nation") == "NATION_10")
             & (F.col("cust_nation") == "NATION_12"))
-    return (li.join(F.broadcast(sup), li.l_suppkey == sup.s_suppkey)
-              .join(F.broadcast(n1), F.col("s_nationkey") == F.col("sn_key"))
+    return (li.join(sup, li.l_suppkey == sup.s_suppkey)
+              .join(n1, F.col("s_nationkey") == F.col("sn_key"))
               .join(orders, li.l_orderkey == orders.o_orderkey)
-              .join(F.broadcast(cust), orders.o_custkey == cust.c_custkey)
-              .join(F.broadcast(n2), F.col("c_nationkey") == F.col("cn_key"))
+              .join(cust, orders.o_custkey == cust.c_custkey)
+              .join(n2, F.col("c_nationkey") == F.col("cn_key"))
               .filter(pair)
               .groupBy("supp_nation", "cust_nation",
                        F.year("l_shipdate").cast("long").alias("l_year"))
@@ -2059,9 +2059,9 @@ def q64(spark, sf_dir):
     orders = _t(spark, sf_dir, "orders")
     cents = _half_up(F.col("l_extendedprice")
                     * (F.lit(1) - F.col("l_discount")) * 100)
-    return (li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
-              .join(F.broadcast(sup), li.l_suppkey == sup.s_suppkey)
-              .join(F.broadcast(nat), F.col("s_nationkey") == F.col("n_nationkey"))
+    return (li.join(part, li.l_partkey == part.p_partkey)
+              .join(sup, li.l_suppkey == sup.s_suppkey)
+              .join(nat, F.col("s_nationkey") == F.col("n_nationkey"))
               .join(orders, li.l_orderkey == orders.o_orderkey)
               .groupBy(F.col("n_name").alias("nation"),
                        F.year("o_orderdate").cast("long").alias("o_year"))
@@ -2097,8 +2097,8 @@ def q65(spark, sf_dir):
     part = _t(spark, sf_dir, "part").select("p_partkey", "p_type")
     sup = _t(spark, sf_dir, "supplier").select(
         "s_suppkey", "s_name", "s_acctbal")
-    pairs = (li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
-               .join(F.broadcast(sup), li.l_suppkey == sup.s_suppkey)
+    pairs = (li.join(part, li.l_partkey == part.p_partkey)
+               .join(sup, li.l_suppkey == sup.s_suppkey)
                .select("p_type", "s_suppkey", "s_name", "s_acctbal")
                .distinct())
     # argmin via a per-type window MIN over the distinct pair set
@@ -2164,8 +2164,8 @@ def q66(spark, sf_dir):
              .agg(F.sum(cents).cast("long").alias("val_c")))
     tot = val.agg(F.sum("val_c").cast("long").alias("total_c"),
                   F.count(F.lit(1)).alias("n_parts"))
-    return (val.join(F.broadcast(part), val.l_partkey == part.p_partkey)
-               .crossJoin(F.broadcast(tot))
+    return (val.join(part, val.l_partkey == part.p_partkey)
+               .crossJoin(tot)
                .filter(F.col("val_c") * F.col("n_parts") * 10
                        > F.col("total_c") * 13)
                .select("p_partkey", "p_name", "val_c")
@@ -2216,14 +2216,14 @@ def q67(spark, sf_dir):
     # de-canonicalizing sp's two branches — the filtered fact agg ran
     # twice (once for the probe, once inside tot)
     sp = (li.filter(F.col("l_suppkey").isNotNull())
-            .join(F.broadcast(part), li.l_partkey == part.p_partkey)
+            .join(part, li.l_partkey == part.p_partkey)
             .groupBy("l_suppkey", "l_partkey")
             .agg(F.sum(qc).cast("long").alias("qty_c")))
     tot = (sp.groupBy(F.col("l_partkey").alias("t_partkey"))
              .agg(F.sum("qty_c").cast("long").alias("tot_c")))
     return (sp.join(tot, sp.l_partkey == tot.t_partkey)
               .filter(F.col("qty_c") * 10 > F.col("tot_c") * 3)
-              .join(F.broadcast(sup), sp.l_suppkey == sup.s_suppkey)
+              .join(sup, sp.l_suppkey == sup.s_suppkey)
               .select("s_suppkey", "s_name").distinct()
               .orderBy("s_suppkey"))
 
@@ -2296,7 +2296,7 @@ def q68(spark, sf_dir):
                       F.max(F.when(F.col("late") == 1, F.col("l_suppkey")))
                        .alias("late_supp")))
     return (per_order.filter((F.col("n_supp") >= 2) & (F.col("n_late") == 1))
-                     .join(F.broadcast(sup),
+                     .join(sup,
                            per_order.late_supp == sup.s_suppkey)
                      .groupBy("s_suppkey", "s_name")
                      .agg(F.count(F.lit(1)).alias("numwait"))
@@ -2339,7 +2339,7 @@ def q62(spark, sf_dir):
              .agg(F.sum(cents).cast("long").alias("total_c")))
     mx = rev.agg(F.max("total_c").alias("mx"))
     return (sup.join(rev, sup.s_suppkey == rev.l_suppkey)
-               .crossJoin(F.broadcast(mx))
+               .crossJoin(mx)
                .filter(F.col("total_c") == F.col("mx"))
                .select("s_suppkey", "s_name", "total_c")
                .orderBy("s_suppkey"))
@@ -2786,7 +2786,7 @@ def q77(spark, sf_dir):
                   F.count(F.lit(1)).alias("frequency"),
                   F.sum(_half_up(F.col("value") * 100)).cast("long")
                    .alias("monetary_cents"))
-             .crossJoin(F.broadcast(tmax))
+             .crossJoin(tmax)
              .select("user_id",
                      F.datediff("tmax", "last_ts").cast("long")
                       .alias("recency_days"),
@@ -3150,7 +3150,7 @@ def q84(spark, sf_dir):
     """
     li = _t(spark, sf_dir, "lineitem")
     pt = _t(spark, sf_dir, "part").select("p_partkey", "p_brand")
-    rev = (li.join(F.broadcast(pt), li.l_partkey == pt.p_partkey)
+    rev = (li.join(pt, li.l_partkey == pt.p_partkey)
              .groupBy("p_brand",
                       (F.year("l_shipdate") * 100
                        + F.month("l_shipdate")).cast("int").alias("ym"))
@@ -3346,10 +3346,10 @@ def q88(spark, sf_dir):
     null-rate checks over the warehouse published as ONE small table —
     the gate a 100 TB ingest runs before promoting a partition.
 
-    Each check is a scan-side conditional aggregate; the FK check is a
-    broadcast anti-join (dimension side small).  No check materializes
-    violating ROWS — counts only — so the report costs one pass per
-    fact table at any scale.
+    Each check is a scan-side conditional aggregate; the FK check is an
+    anti-join whose strategy the customer table's size picks.  No check
+    materializes violating ROWS — counts only — so the report costs one
+    pass per fact table at any scale.
     """
     li = _t(spark, sf_dir, "lineitem")
     ev = _t(spark, sf_dir, "events")
@@ -3368,7 +3368,7 @@ def q88(spark, sf_dir):
                      | (F.col("l_discount") > 0.5), 1)
                .otherwise(0)).cast("long").alias("n_violations"),
         F.count(F.lit(1)).alias("n_total"))
-    orphans = (od.join(F.broadcast(cu),
+    orphans = (od.join(cu,
                        od["o_custkey"] == cu["c_custkey"], "left_anti")
                .agg(F.count(F.lit(1)).alias("v"))
                .crossJoin(od.agg(F.count(F.lit(1)).alias("t")))
@@ -4049,7 +4049,7 @@ def q99(spark, sf_dir):
     """
     o = _t(spark, sf_dir, "orders")
     cu = _t(spark, sf_dir, "customer")
-    cust = (o.join(F.broadcast(cu),
+    cust = (o.join(cu,
                    F.col("c_custkey") == F.col("o_custkey"))
             .groupBy(F.col("c_nationkey").alias("nation"),
                      "o_custkey")
@@ -4354,7 +4354,7 @@ def q103(spark, sf_dir):
            .select(F.concat_ws(">", "a", "b", "c").alias("path"))
            .groupBy("path").agg(F.count(F.lit(1)).alias("n")))
     tot = cnt.agg(F.sum("n").alias("t"))
-    return (cnt.crossJoin(F.broadcast(tot))
+    return (cnt.crossJoin(tot)
             .select("path", F.col("n").cast("long").alias("n"),
                     F.expr("1000 * n div t").cast("long")
                     .alias("share_permille"))
@@ -4470,7 +4470,7 @@ def q105(spark, sf_dir):
     # which de-canonicalized the four subtrees — Spark was running the
     # lineitem⋈part scan and the o-repartition FOUR times (r16 finding,
     # 4 scans -> 1 with all branches filtered alike, guide §2.4)
-    ob = (li.join(F.broadcast(pt),
+    ob = (li.join(pt,
                   li.l_partkey == pt.p_partkey)
           .select(F.col("l_orderkey").alias("o"),
                   F.col("p_brand").alias("b"))
@@ -4506,7 +4506,7 @@ def q105(spark, sf_dir):
             .join(F.broadcast(na.select(F.col("b").alias("brand_b"),
                                         F.col("n_b").alias("nb"))),
                   "brand_b")
-            .crossJoin(F.broadcast(n_tot))
+            .crossJoin(n_tot)
             .select("brand_a", "brand_b",
                     F.col("n_ab").cast("long").alias("support"),
                     F.expr("1000 * n_ab div n_a").cast("long")
@@ -4590,8 +4590,8 @@ def q106(spark, sf_dir):
     # two subtrees (r16 finding — the r15 shared exchange was being
     # scanned twice); output-invariant because a null n_name row could
     # never survive the dev join that produces the published rows
-    x = (o.join(F.broadcast(c), o.o_custkey == c.c_custkey)
-         .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
+    x = (o.join(c, o.o_custkey == c.c_custkey)
+         .join(n, c.c_nationkey == n.n_nationkey)
          .select("n_name", "cents")
          .filter(F.col("n_name").isNotNull())
          .repartition("n_name"))
@@ -4670,7 +4670,7 @@ def q107(spark, sf_dir):
                "BIGINT) AS STRING), 1, 1) AS BIGINT)").alias("digit"))
     cnt = d.groupBy("digit").agg(F.count(F.lit(1)).alias("n"))
     tot = cnt.agg(F.sum("n").alias("t"))
-    return (cnt.crossJoin(F.broadcast(tot))
+    return (cnt.crossJoin(tot)
             .select("digit",
                     F.col("n").cast("long").alias("n"),
                     F.expr("1000000 * n div t").cast("long")
@@ -5137,7 +5137,7 @@ def q113(spark, sf_dir):
              .agg(F.count(F.lit(1)).cast(dec).alias("x")))
     lags = spark.range(1, 8).select(F.col("id").cast("long")
                                     .alias("lag"))
-    a = daily.crossJoin(F.broadcast(lags))
+    a = daily.crossJoin(lags)
     b = daily.select(F.col("day").alias("bday"), F.col("x").alias("y"))
     p = a.join(b, F.col("bday") == F.col("day") + F.col("lag"))
     m = (p.groupBy("lag")
@@ -5206,7 +5206,7 @@ def q114(spark, sf_dir):
     li = _t(spark, sf_dir, "lineitem")
     su = _t(spark, sf_dir, "supplier")
     dec = "decimal(38,0)"
-    sup = (li.join(F.broadcast(su),
+    sup = (li.join(su,
                    F.col("s_suppkey") == F.col("l_suppkey"))
            .groupBy(F.col("s_nationkey").alias("nation"), "l_suppkey")
            .agg(F.sum(_half_up(F.col("l_extendedprice") * 100)
@@ -5393,7 +5393,7 @@ def q116(spark, sf_dir):
                 F.min("l_suppkey").alias("ymin"),
                 F.max("l_suppkey").alias("ymax"))
     base = (li.select("l_orderkey", "l_partkey", "l_suppkey")
-            .crossJoin(F.broadcast(mm))
+            .crossJoin(mm)
             .select("l_orderkey",
                     F.expr("(l_partkey - xmin) * 65535"
                            " div greatest(xmax - xmin, 1)").alias("x16"),
@@ -5453,7 +5453,8 @@ def q117(spark, sf_dir):
     per part pair (~8M — measured 4x slower even with the banded
     threshold form, because Spark's per-call DP cost dwarfs the
     equi-join machinery).  The distance-qualified name-pair relation
-    broadcasts (tiny by construction), and part-level matches fall out
+    grows with the part vocabulary, so its size picks the join (broadcast
+    at bench scale), and part-level matches fall out
     of two EQUI-joins (brand + name membership) — zero DPs on the fact
     path.  On a corpus where strings are near-unique the collapse
     degenerates gracefully to all names, and the next step is PassJoin
@@ -5476,7 +5477,7 @@ def q117(spark, sf_dir):
                   .alias("dist"))
           .filter((F.col("dist") > 0) & (F.col("dist") <= 3)))
     a, b = p.alias("a"), p.alias("b")
-    return (a.join(F.broadcast(nd), F.col("a.p_name") == F.col("n1"))
+    return (a.join(nd, F.col("a.p_name") == F.col("n1"))
             .join(b, (F.col("b.p_brand") == F.col("a.p_brand"))
                   & (F.col("b.p_name") == F.col("n2"))
                   & (F.col("a.p_partkey") < F.col("b.p_partkey")))

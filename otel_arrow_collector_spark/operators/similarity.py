@@ -1121,9 +1121,9 @@ def ann_pq_adc_topk(spark, sf_dir):
         f"transform(array_sort(collect_list("
         f"struct(s * {PQ_M} + code AS k, d))), x -> x.d)").alias("lutd"))
     codes = load_pq_codes(spark, sf_dir)
-    folded = (codes.join(F.broadcast(qv.select("q_id")),
+    folded = (codes.join(qv.select("q_id"),
                          F.col("vec_id") != F.col("q_id"))
-              .crossJoin(F.broadcast(lut)))
+              .crossJoin(lut))
     # s-ascending left-assoc + chain, the literal-fold order exactly
     total = " + ".join(f"lutd[{s} * {PQ_M} + c{s}]" for s in range(PQ_M))
     scored = folded.select(
@@ -1469,7 +1469,7 @@ def ann_pq_recall(spark, sf_dir):
     qv = (ve.orderBy("vec_id").limit(1)
             .select(F.col("vec_id").alias("q_id"),
                     F.col("ve").alias("qe")))
-    db = ve.join(F.broadcast(qv), F.col("vec_id") != F.col("q_id"))
+    db = ve.join(qv, F.col("vec_id") != F.col("q_id"))
     dist = ("aggregate(sequence(1, 64), CAST(0 AS DOUBLE), "
             "(a, i) -> a + (qe[i - 1] - ve[i - 1]) "
             "* (qe[i - 1] - ve[i - 1]))")

@@ -116,7 +116,7 @@ def heavy_hitters(df: DataFrame, key_col: str, phi_denom: int,
     cands = (misra_gries_partial(df, key_col, capacity)
              .select("key").distinct())
     keyed = df.select(F.col(key_col).cast("string").alias("key"))
-    exact = (keyed.join(F.broadcast(cands), "key", "left_semi")
+    exact = (keyed.join(cands, "key", "left_semi")
                   .groupBy("key")
                   .agg(F.count(F.lit(1)).alias("cnt")))
     n = keyed.count() if n_total is None else n_total

@@ -443,7 +443,7 @@ def text_perplexity_gate(spark, sf_dir):
     vocab = (bi.filter(F.col("doc_id") % LM_TRAIN_MOD == 0)
                .select("w1", "w2").distinct()
                .withColumn("seen", F.lit(1)))
-    per_doc = (bi.join(F.broadcast(vocab), ["w1", "w2"], "left")
+    per_doc = (bi.join(vocab, ["w1", "w2"], "left")
                  .groupBy("doc_id", "lang")
                  .agg(F.count(F.lit(1)).alias("n"),
                       F.sum(F.isnull("seen").cast("int")).alias("o")))
@@ -1217,7 +1217,7 @@ def text_cooccur_lift(spark, sf_dir):
           .filter(F.col("word") != ""))
     dfc = dw.groupBy("word").agg(F.count(F.lit(1)).alias("df"))
     vocab = dfc.orderBy(F.col("df").desc(), "word").limit(COOC_TOP_W)
-    dv = dw.join(F.broadcast(vocab), "word")
+    dv = dw.join(vocab, "word")
     # the self-join references dv via ALIASES with the renames applied
     # ABOVE the join: the word_a/word_b rename-projections used to sit
     # below each side's doc_id exchange, de-canonicalizing two
@@ -1232,7 +1232,7 @@ def text_cooccur_lift(spark, sf_dir):
                       F.col("b.df").alias("df_b"))
              .agg(F.count(F.lit(1)).cast("long").alias("c_ab")))
     n_docs = d.select(F.count(F.lit(1)).alias("n_docs"))
-    return (pairs.crossJoin(F.broadcast(n_docs))
+    return (pairs.crossJoin(n_docs)
             .select("word_a", "word_b", "c_ab",
                     F.col("df_a").cast("long").alias("df_a"),
                     F.col("df_b").cast("long").alias("df_b"),
@@ -1306,7 +1306,7 @@ def text_keywords(spark, sf_dir):
                 .alias("df")))
     n_docs = d.select(F.count(F.lit(1)).alias("n_docs"))
     scored = (tf.join(dfc, "word")
-              .crossJoin(F.broadcast(n_docs))
+              .crossJoin(n_docs)
               .select("doc_id", "word",
                       F.expr("tf * (1000 * n_docs div df)")
                        .cast("long").alias("salience")))
@@ -2075,9 +2075,9 @@ def text_source_drift(spark, sf_dir):
     src_tot = src_cnt.groupBy("source").agg(
         F.sum("n_st").alias("n_s"))
     dec = "decimal(38,0)"
-    frame = (src_tot.crossJoin(F.broadcast(top))
+    frame = (src_tot.crossJoin(top)
              .join(src_cnt, ["source", "token"], "left")
-             .crossJoin(F.broadcast(n_total))
+             .crossJoin(n_total)
              .select("source",
                      F.expr(f"CAST(1000000 AS {dec}) * "
                             f"coalesce(n_st, 0) div n_s")

@@ -30,7 +30,11 @@ _STARTUP_CONFS: dict[str, str] = {
     "spark.sql.adaptive.skewJoin.enabled": "true",
     # Arrow for any pandas-UDF exchange (the engine's slow-path escape hatch).
     "spark.sql.execution.arrow.pyspark.enabled": "true",
-    # Dimension tables (region/nation/customer at bench scale) broadcast.
+    # Join strategy: this threshold and AQE's runtime statistics choose
+    # broadcast vs shuffle for every join.  Operators hint a broadcast
+    # only on relations bounded by construction (k centroids, query
+    # sets, per-type/per-nation aggregates, constant offset frames) whose
+    # static estimate would otherwise grow with the input.
     "spark.sql.autoBroadcastJoinThreshold": "64m",
     "spark.sql.shuffle.partitions": "32",
     # ANSI off matches DuckDB's permissive casts for the declared queries.

@@ -11,13 +11,22 @@ sys.path.insert(0, str(REPO))
 
 SF_SMALL = "/root/testdata/sf0.001"
 SF_GATE = "/root/testdata/sf0.01"
+SF_BENCH = str(Path(SF_GATE).with_name("sf0.1"))
 
 
 @pytest.fixture(scope="session")
 def spark():
     from otel_arrow_collector_spark.session import get_spark
+    # Stage/job pins read the status store.  At the default retention
+    # (1000 stages) each eviction pass drops >= 100 stages, SKIPPED ones
+    # (no completion time) first, so it can drop the skipped stages of
+    # the job a pin is measuring; retain every stage and job for the
+    # suite, but no per-task records (no test reads them).
     s = get_spark("pytest", master="local[4]",
-                  extra_conf={"spark.sql.shuffle.partitions": "4"})
+                  extra_conf={"spark.sql.shuffle.partitions": "4",
+                              "spark.ui.retainedStages": "100000",
+                              "spark.ui.retainedJobs": "100000",
+                              "spark.ui.retainedTasks": "1"})
     s.sparkContext.setLogLevel("ERROR")
     yield s
 

@@ -16,7 +16,6 @@ QUERIES, ORACLES = collect_registry()
 SLOW = frozenset((
     "ann_ivf_pq",
     "curation_ingest_funnel",
-    "curation_pipeline",
     "dedup_band_sensitivity",
     "dedup_incremental_epoch2",
     "dedup_incremental_prefix",

@@ -10,7 +10,7 @@ import pytest
 
 from pyspark.sql import functions as F
 
-from tests.conftest import SF_GATE, SF_SMALL
+from tests.conftest import SF_BENCH, SF_GATE, SF_SMALL
 
 
 def _mismatches(df, exprs: dict) -> dict:
@@ -19,7 +19,7 @@ def _mismatches(df, exprs: dict) -> dict:
     return df.agg(*aggs).collect()[0].asDict()
 
 
-@pytest.mark.parametrize("sf_dir", [SF_SMALL, SF_GATE])
+@pytest.mark.parametrize("sf_dir", [SF_SMALL, SF_GATE, SF_BENCH])
 def test_half_up_equals_round_everywhere(spark, sf_dir):
     from otel_arrow_collector_spark.sources.tables import load_table
     li = load_table(spark, sf_dir, "lineitem")

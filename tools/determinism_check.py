@@ -33,7 +33,8 @@ def _rows(df):
 
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
-    from otel_arrow_collector_spark.operators import collect_registry
+    from otel_arrow_collector_spark.operators import (clear_plan_memo,
+                                                     collect_registry)
     from otel_arrow_collector_spark.operators.cache_registry import \
         clear_caches
     from otel_arrow_collector_spark.session import get_spark
@@ -50,6 +51,7 @@ def main() -> int:
         for parts in PARTITION_SETTINGS:
             spark.conf.set("spark.sql.shuffle.partitions", parts)
             clear_caches()          # memoized substrates rebuild per setting
+            clear_plan_memo()       # memoized plans would read released ones
             try:
                 got = _rows(queries[name](spark, sf_dir))
             except Exception as e:
