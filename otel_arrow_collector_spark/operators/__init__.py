@@ -26,12 +26,11 @@ DataFrame) and ``ORACLES`` (name -> DuckDB SQL) consumed by
 
 from __future__ import annotations
 
-import os
-import threading
-from collections import OrderedDict
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
+
+from . import cache_registry
 
 #: Queries whose BUILDER runs Spark jobs / driver-side model fits at
 #: construction time even when every session memo is hot (verified by
@@ -55,20 +54,16 @@ PLAN_MEMO_EXCLUDED = frozenset({
     "dedup_semantic_keep", "graph_pagerank",
 })
 
-#: bound on memoized plan objects (per-process; keys include the Spark
-#: applicationId so a fresh session never sees a stale plan).
-_PLAN_MEMO_MAX = 1024
-_PLAN_MEMO: OrderedDict = OrderedDict()
-_PLAN_MEMO_LOCK = threading.Lock()
-
 
 def _plan_memoized(
     name: str, fn: Callable[[SparkSession, str], DataFrame]
 ) -> Callable[[SparkSession, str], DataFrame]:
     """Memoize the built DataFrame's ANALYZED PLAN (lazy logical plan,
     NOT data) per (query, application, sf_dir) — the ``load_table``
-    plan-cache discipline lifted to whole queries.  Never applied to
-    :data:`PLAN_MEMO_EXCLUDED` builders (see above).
+    plan-cache discipline lifted to whole queries.  The plan is an entry
+    of ``cache_registry``, released together with the substrates of its
+    (application, dir).  Never applied to :data:`PLAN_MEMO_EXCLUDED`
+    builders (see above).
 
     Every call — hit or miss — returns a FRESH ``select("*")`` wrapper
     over the memoized plan, never the memoized DataFrame object itself.
@@ -82,20 +77,8 @@ def _plan_memoized(
         return fn
 
     def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
-        key = (name, spark.sparkContext.applicationId,
-               os.path.abspath(sf_dir))
-        with _PLAN_MEMO_LOCK:
-            df = _PLAN_MEMO.get(key)
-            if df is not None:
-                _PLAN_MEMO.move_to_end(key)
-        if df is None:
-            df = fn(spark, sf_dir)        # build outside the lock
-            with _PLAN_MEMO_LOCK:
-                df = _PLAN_MEMO.setdefault(key, df)
-                _PLAN_MEMO.move_to_end(key)
-                while len(_PLAN_MEMO) > _PLAN_MEMO_MAX:
-                    _PLAN_MEMO.popitem(last=False)
-        return df.select("*")
+        return cache_registry._plan(
+            name, spark, sf_dir, lambda: fn(spark, sf_dir)).select("*")
 
     wrapped.__name__ = fn.__name__
     wrapped.__doc__ = fn.__doc__
@@ -104,10 +87,9 @@ def _plan_memoized(
 
 
 def clear_plan_memo() -> None:
-    """Drop every memoized plan object (lifecycle twin of
-    ``cache_registry.clear_caches``)."""
-    with _PLAN_MEMO_LOCK:
-        _PLAN_MEMO.clear()
+    """Drop every memoized plan; substrates stay
+    (``cache_registry.clear_caches`` releases both)."""
+    cache_registry._clear_plans()
 
 
 def collect_registry() -> tuple[

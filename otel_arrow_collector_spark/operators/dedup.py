@@ -44,7 +44,8 @@ from pyspark.sql import functions as F
 
 from ..sources.tables import load_table, parallel_table
 from .cache_registry import CHECKPOINT_DIR_ENV as cache_registry_checkpoint_env
-from .cache_registry import cached, materialized, plan_checkpoint
+from .cache_registry import (_free_checkpoint, cached, materialized,
+                             plan_checkpoint)
 
 QUERIES: dict = {}
 ORACLES: dict = {}
@@ -581,22 +582,6 @@ def _loop_checkpoint(df):
     return plan_checkpoint(df)
 
 
-def _free_local_checkpoint(df) -> None:
-    """Eagerly release the storage blocks behind a localCheckpoint'd
-    DataFrame.  ``localCheckpoint`` stores its partitions through the
-    block manager and only the ContextCleaner's GC hook ever drops them,
-    so an iterative loop accumulates one materialized relation per round
-    unless superseded rounds are freed by hand.  The checkpointed RDD is
-    the one wrapped by the plan's LogicalRDD node; the DataFrame must
-    never be evaluated again afterwards (the truncated lineage cannot
-    recompute).  Best-effort: internal-API shape changes degrade to the
-    old ContextCleaner behavior, never to a failure."""
-    try:
-        df._jdf.queryExecution().analyzed().rdd().unpersist(False)
-    except Exception:
-        pass
-
-
 def connected_components(edges, src: str = "d1", dst: str = "d2",
                          force_distributed: bool = False):
     """Deterministic connected components over an undirected edge set:
@@ -653,7 +638,7 @@ def connected_components(edges, src: str = "d1", dst: str = "d2",
     # lineage each round: every iteration's plan is two joins over a
     # materialized relation, constant-sized regardless of round count.
     # Each superseded round's checkpoint blocks are freed EAGERLY below
-    # (_free_local_checkpoint) — relying on the ContextCleaner would let
+    # (_free_checkpoint) — relying on the ContextCleaner would let
     # up to CC_MAX_ITERS materialized label relations pile up in executor
     # storage.  100 TB stance: localCheckpoint is non-reliable (executor
     # loss mid-loop fails the job — Spark reports it with an explicit
@@ -686,7 +671,7 @@ def connected_components(edges, src: str = "d1", dst: str = "d2",
             # `new` is materialized, so the previous round's relation is
             # dead — free its blocks now (NEVER the live one: a freed
             # localCheckpoint cannot be recomputed).
-            _free_local_checkpoint(labels)
+            _free_checkpoint(labels)
             labels = new
             if new_sum == prev_sum:
                 return labels.select("node", F.col("lbl").alias("cluster_id"))

@@ -31,7 +31,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from ..sources.tables import load_table
-from .cache_registry import cached, materialized
+from .cache_registry import _StoreDir, cached, materialized
 
 QUERIES: dict = {}
 ORACLES: dict = {}
@@ -62,10 +62,6 @@ def _s_dot(a: str, b: str) -> str:
     return (f"aggregate(zip_with({a}, {b}, "
             f"(x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), "
             f"CAST(0 AS DOUBLE), (acc, v) -> acc + v)")
-
-
-def _s_cos(a: str, b: str) -> str:
-    return f"({_s_dot(a, b)} / (sqrt({_s_dot(a, a)}) * sqrt({_s_dot(b, b)})))"
 
 
 def _d_dot(a: str, b: str) -> str:
@@ -300,29 +296,32 @@ def _duck_kmeans_ctes() -> str:
 _DUCK_ASSIGN_CTE = _duck_kmeans_ctes()
 
 
-def ivf_cell_store(spark, sf_dir) -> str:
-    """Materialize the assigned corpus hive-partitioned by cell id, once
-    per (application, sf_dir); returns the store path.
+def _cid_store(df, tag: str):
+    """Write ``df`` hive-partitioned by ``cid`` into a fresh store
+    directory and read it back: the ``(reader, directory)`` value of a
+    file-store entry, whose release deletes the directory.
+
+    Repartitioning by cell first writes one task/file per cell directory
+    instead of (tasks x cells) fragments — faster commit, faster probe
+    scans.  The reader handle lives in the entry too: a fresh
+    ``spark.read.parquet`` per invocation would re-run hive-partition
+    discovery + footer schema reads — one Spark job of pure plan-build
+    overhead per probe query (~0.5 s/call on the ADC serving paths)."""
+    path = _StoreDir(tag)
+    (df.repartition("cid")
+       .write.mode("overwrite").partitionBy("cid").parquet(path))
+    return df.sparkSession.read.parquet(path), path
+
+
+def load_cell_store(spark, sf_dir):
+    """The assigned corpus hive-partitioned by cell id, as a DataFrame;
+    built once per (application, sf_dir).
 
     This is the IVF index build: at 100 TB the probe must read only the
     probed cells' directories (PartitionFilters), never the whole corpus.
     """
-    import os as _os
-    import tempfile
-
-    def build():
-        path = _os.path.join(
-            tempfile.gettempdir(),
-            f"spark_graft_ivf_{spark.sparkContext.applicationId}_"
-            f"{_os.path.basename(_os.path.abspath(sf_dir))}")
-        # repartition by cell first: one task/file per cell directory
-        # instead of (tasks x cells) fragments — faster commit, faster
-        # probe scans
-        (_assignments(spark, sf_dir)
-            .repartition("cid")
-            .write.mode("overwrite").partitionBy("cid").parquet(path))
-        return path
-    return cached("sim.cell_store", spark, sf_dir, build)
+    return cached("sim.cell_store", spark, sf_dir,
+                  lambda: _cid_store(_assignments(spark, sf_dir), "ivf"))[0]
 
 
 def ann_ivf_assign(spark, sf_dir):
@@ -370,18 +369,6 @@ def ann_ivf_probe(spark, sf_dir):
             .select("q_id", "vec_id", F.round("cos_raw", 6).alias("cos"),
                     F.col("rk").cast("long").alias("rk"))
             .orderBy("q_id", "rk"))
-
-
-def load_cell_store(spark, sf_dir):
-    """The cell-partitioned assigned corpus as a DataFrame.
-
-    The reader handle is memoized (load_pq_codes' discipline): a fresh
-    ``spark.read.parquet`` per invocation re-runs hive-partition
-    discovery + footer schema reads — one Spark job of pure plan-build
-    overhead per probe query."""
-    def build():
-        return spark.read.parquet(ivf_cell_store(spark, sf_dir))
-    return cached("sim.cell_store_df", spark, sf_dir, build)
 
 
 QUERIES["ann_ivf_probe"] = ann_ivf_probe
@@ -918,7 +905,7 @@ def _pq_best_struct(C, s: int) -> str:
             f"ELSE acc END)")
 
 
-def pq_code_store(spark, sf_dir) -> str:
+def load_pq_codes(spark, sf_dir):
     """Materialize the corpus's PQ codes hive-partitioned by IVF cell —
     the FAISS IndexIVFPQ inverted-list shape (Jegou et al. 2011 §V:
     codes are computed ONCE at index-build time and SERVED, never
@@ -931,17 +918,11 @@ def pq_code_store(spark, sf_dir) -> str:
     over its own input: the ADC searches scan 8 ints/row instead of a
     64-float array + a 2·K·DSUB-flop argmin per row (ann_ivf_pq
     previously re-encoded per (query, candidate) PAIR), and the store
-    build is paid once per (application, sf_dir).  Returns the path.
+    build is paid once per (application, sf_dir).  Returns the store as a
+    DataFrame.
     """
-    import os as _os
-    import tempfile
-
     def build():
         C = _pq_codebook(spark, sf_dir)
-        path = _os.path.join(
-            tempfile.gettempdir(),
-            f"spark_graft_pq_{spark.sparkContext.applicationId}_"
-            f"{_os.path.basename(_os.path.abspath(sf_dir))}")
         ve = (load_cell_store(spark, sf_dir)
               .select("cid", "vec_id", F.expr(
                   "transform(embedding, x -> CAST(x AS DOUBLE))")
@@ -954,22 +935,8 @@ def pq_code_store(spark, sf_dir) -> str:
             *[F.col(f"b{s}.c").alias(f"c{s}") for s in range(PQ_M)],
             *[F.expr(f"CAST(floor(b{s}.d * 1e9) AS BIGINT)")
               .alias(f"e{s}") for s in range(PQ_M)])
-        (flat.repartition("cid")
-             .write.mode("overwrite").partitionBy("cid").parquet(path))
-        return path
-    return cached("sim.pq_code_store", spark, sf_dir, build)
-
-
-def load_pq_codes(spark, sf_dir):
-    """The cell-partitioned PQ code store as a DataFrame.
-
-    The reader handle is memoized (load_table's discipline): a fresh
-    ``spark.read.parquet`` per invocation re-runs hive-partition
-    discovery + footer schema reads — pure plan-build overhead measured
-    at ~0.5 s/call on the ADC serving paths."""
-    def build():
-        return spark.read.parquet(pq_code_store(spark, sf_dir))
-    return cached("sim.pq_codes_df", spark, sf_dir, build)
+        return _cid_store(flat, "pq")
+    return cached("sim.pq_code_store", spark, sf_dir, build)[0]
 
 
 def ann_pq_codes(spark, sf_dir):
@@ -983,7 +950,7 @@ def ann_pq_codes(spark, sf_dir):
 
     Scale shape: the codebook is 8x8x8 doubles inlined as literals and
     the encoding fold (whole-stage-codegen, no Python) runs once per
-    corpus vector inside the pq_code_store build; this query is then a
+    corpus vector inside the load_pq_codes build; this query is then a
     scan of the stored (code, err) ints — no shuffle, no join; the only
     exchange is the 64-row final histogram.  The distance folds are
     sequential (i = 1..8) so the DuckDB twin — which recomputes the
@@ -1552,7 +1519,7 @@ def ann_ivf_pq(spark, sf_dir):
     rank; the candidate scan partition-prunes via Dynamic Partition
     Pruning off the broadcast (q, cell) join — JVM-side, no driver
     collect (verdict r14 ask #3) — over the PQ code STORE
-    (pq_code_store: codes precomputed at index-build time, the FAISS
+    (load_pq_codes: codes precomputed at index-build time, the FAISS
     invlist shape), so the probe reads 8 ints per candidate and the
     ADC is a whole-stage-codegen fold (codebook inlined as literals) —
     no per-(query, candidate) re-encode (r15: previously the encoder

@@ -235,7 +235,6 @@ class Collector:
                       resource=self.telemetry.resource)
 
     def shutdown(self) -> None:
-        from ..operators import clear_plan_memo
         from ..operators.cache_registry import clear_caches
         self.state = State.CLOSED
         self.plan = None
@@ -250,5 +249,4 @@ class Collector:
         if getattr(self, "_prom_server", None) is not None:
             self._prom_server.close()
             self._prom_server = None
-        clear_caches()      # release memoized persisted DataFrames
-        clear_plan_memo()   # drop memoized query-plan objects
+        clear_caches()      # release memoized substrates, stores and plans

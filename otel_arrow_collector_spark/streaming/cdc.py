@@ -1,18 +1,18 @@
 """Streaming CDC apply — the stateful twin of q95_cdc_apply.
 
 A keyed change feed (upserts + tombstone deletes) maintained as a live
-materialized view with ``applyInPandasWithState``: per key the state
-holds only the WINNING version under last-writer-wins order
-(commit time, then event id) — O(1) per key regardless of how many
-versions flow through — plus the version counter.  Every micro-batch
-that changes a key's winning row (or its version count) re-emits the
-key's CURRENT view row in update mode; a key whose winner is a
-tombstone emits ``deleted=true`` (the retraction a downstream sink
+materialized view by a plain update-mode streaming aggregation: per key
+the state holds the version count and the WINNING version under
+last-writer-wins order (commit time, then event id) — ``max`` over the
+``(us, event_id, event_type, value)`` struct, O(1) per key regardless of
+how many versions flow through.  Every micro-batch that touches a key
+re-emits the key's CURRENT view row in update mode; a key whose winner
+is a tombstone emits ``deleted=true`` (the retraction a downstream sink
 needs to drop the key).
 
 Out-of-order tolerant by construction: LWW compares (us, event_id), so
-an older version arriving AFTER a newer one cannot win — the state
-update is commutative over arrival order, which is what makes the view
+an older version arriving AFTER a newer one cannot win — count and max
+are commutative over arrival order, which is what makes the view
 eventually equal to the batch q95 result under ANY shuffling of the
 feed across micro-batches (pinned in tests/test_cdc_stream.py,
 including restart-from-checkpoint).
@@ -20,13 +20,8 @@ including restart-from-checkpoint).
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (BooleanType, DoubleType, LongType,
                                StringType, StructField, StructType)
 
@@ -38,46 +33,19 @@ OUT_SCHEMA = StructType([
     StructField("deleted", BooleanType()),
 ])
 
-_STATE_SCHEMA = StructType([
-    StructField("n_versions", LongType()),
-    StructField("best_us", LongType()),
-    StructField("best_eid", LongType()),
-    StructField("best_type", StringType()),
-    StructField("best_value", DoubleType()),
-])
-
 
 def cdc_apply_stream(changes: DataFrame) -> DataFrame:
     """Live LWW view over a change feed.  ``changes`` needs user_id,
     event_type, value, an epoch-microsecond ``us`` and event_id."""
-
-    def update(key, pdfs: Iterator[pd.DataFrame],
-               state: GroupState) -> Iterator[pd.DataFrame]:
-        user_id = int(key[0])
-        if state.exists:
-            n, bus, beid, btype, bval = state.get
-        else:
-            n, bus, beid, btype, bval = 0, None, None, None, None
-        changed = False
-        for pdf in pdfs:
-            for r in pdf.itertuples(index=False):
-                n += 1
-                changed = True
-                cand = (int(r.us), int(r.event_id))
-                if bus is None or cand > (bus, beid):
-                    bus, beid = cand
-                    btype, bval = str(r.event_type), float(r.value)
-        if not changed:
-            return
-        state.update((int(n), int(bus), int(beid), btype, float(bval)))
-        yield pd.DataFrame([{
-            "user_id": user_id, "n_versions": int(n),
-            "last_type": btype, "last_value": float(bval),
-            "deleted": btype == "error"}])
-
-    return (changes.groupBy("user_id")
-            .applyInPandasWithState(update, OUT_SCHEMA, _STATE_SCHEMA,
-                                    "update", GroupStateTimeout.NoTimeout))
+    win = F.max(F.struct("us", "event_id",
+                         F.col("event_type").cast("string").alias("t"),
+                         F.col("value").cast("double").alias("v")))
+    return (changes.groupBy(F.col("user_id").cast("long").alias("user_id"))
+            .agg(F.count(F.lit(1)).alias("n_versions"), win.alias("w"))
+            .select("user_id", "n_versions",
+                    F.col("w.t").alias("last_type"),
+                    F.col("w.v").alias("last_value"),
+                    (F.col("w.t") == "error").alias("deleted")))
 
 
 def latest_view(rows) -> dict:

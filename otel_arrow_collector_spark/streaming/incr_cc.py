@@ -43,15 +43,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.dedup import (_free_local_checkpoint, _loop_checkpoint,
-                               connected_components)
+from ..operators.cache_registry import _free_checkpoint
+from ..operators.dedup import _loop_checkpoint, connected_components
 
 
 def free_labels(df: DataFrame) -> None:
     """Eagerly release a delta/labels relation returned by
     ``IncrementalCCStore`` (they are checkpoint-materialized; the
     relation must not be evaluated again afterwards)."""
-    _free_local_checkpoint(df)
+    _free_checkpoint(df)
 
 
 class IncrementalCCStore:
@@ -92,6 +92,9 @@ class IncrementalCCStore:
         relabel = (connected_components(contracted, src="ca", dst="cb")
                    .select(F.col("node").alias("old"),
                            F.col("cluster_id").alias("new")))
+        # the hint stays: the relabel map is batch-bounded by
+        # construction, but Spark cannot size it (both CC paths return a
+        # relation it estimates at >= Long.MaxValue bytes)
         upd = (self.lbl.join(F.broadcast(relabel),
                              self.lbl["lbl"] == relabel["old"], "left")
                .select("node", F.coalesce("new", "lbl").alias("lbl")))
@@ -109,11 +112,11 @@ class IncrementalCCStore:
             new.join(self.lbl, ["node", "lbl"], "left_anti")
                .select("node", F.col("lbl").alias("cluster_id")))
         old, self.lbl = self.lbl, new
-        _free_local_checkpoint(old)
+        _free_checkpoint(old)
         return delta
 
     def release(self) -> None:
-        _free_local_checkpoint(self.lbl)
+        _free_checkpoint(self.lbl)
 
 
 def run_cc_stream(spark: SparkSession, edge_stream: DataFrame,

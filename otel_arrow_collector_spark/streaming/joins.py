@@ -53,13 +53,14 @@ def enrich_stream(stream: DataFrame, dim: DataFrame, key: str,
     (docs/processing.md:210-214 ``set(attributes[...],
     resource.attributes[...])``; Q12's enrichment join).
 
-    The static side is broadcast to every task of every micro-batch: no
-    stream state at all, and the dimension may be refreshed between
-    batches (Spark re-resolves the static plan per micro-batch).  Default
-    LEFT join: an unknown key must not drop telemetry
-    (missing-dimension tolerance, Q14).
+    No stream state at all: the static side is a scan the optimizer
+    sizes, so a dimension under ``autoBroadcastJoinThreshold`` is
+    broadcast to every task of every micro-batch, and the dimension may
+    be refreshed between batches (Spark re-resolves the static plan per
+    micro-batch).  Default LEFT join: an unknown key must not drop
+    telemetry (missing-dimension tolerance, Q14).
     """
-    return stream.join(F.broadcast(dim), key, how)
+    return stream.join(dim, key, how)
 
 
 # ---------------------------------------------------------------------------

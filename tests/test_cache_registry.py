@@ -1,12 +1,15 @@
 """Bounded cache registry: LRU eviction unpersists DataFrames (no
 unbounded executor-storage growth across sf_dirs) and Collector.shutdown
-clears everything."""
+clears everything.  Releasing an entry that holds storage or files
+releases its whole (application, dir) group, memoized plans included,
+and deletes its file store."""
 
 from __future__ import annotations
 
+import os
 import shutil
 
-from tests.conftest import SF_SMALL
+from tests.conftest import SF_GATE, SF_SMALL
 
 
 def test_cache_registry_bounded_eviction(spark, tmp_path, monkeypatch):
@@ -48,3 +51,65 @@ def test_collector_shutdown_clears_caches(spark, tmp_path):
     c.shutdown()
     assert cache_registry.cache_len() == 0
     assert not df.storageLevel.useMemory
+
+
+def _group_dirs():
+    from otel_arrow_collector_spark.operators import cache_registry
+    return {k[2] for k in cache_registry._ENTRIES}
+
+
+def test_registry_call_after_clear_caches_rebuilds(spark):
+    """A memoized plan never outlives the substrates it reads: after
+    clear_caches() the next registry call rebuilds them instead of
+    reading a released checkpoint (CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND)."""
+    from otel_arrow_collector_spark.operators import (cache_registry,
+                                                      collect_registry)
+    q = collect_registry()[0]["graph_triangle_count"]
+    first = q(spark, SF_SMALL).collect()
+    cache_registry.clear_caches()
+    assert q(spark, SF_SMALL).collect() == first
+
+
+def test_eviction_releases_the_whole_group(spark, tmp_path, monkeypatch):
+    """Past MAX_ENTRIES, building a second dir's substrates releases the
+    first dir's group — its substrates AND its memoized plan — so the
+    first dir's next registry call rebuilds and returns the same rows."""
+    from otel_arrow_collector_spark.operators import (cache_registry,
+                                                      collect_registry)
+    monkeypatch.setattr(cache_registry, "MAX_ENTRIES", 2)
+    cache_registry.clear_caches()
+    q = collect_registry()[0]["graph_triangle_count"]
+    dirs = []
+    for name in ("a", "b"):
+        d = tmp_path / name
+        d.mkdir()
+        shutil.copy(f"{SF_SMALL}/lineitem.parquet", d / "lineitem.parquet")
+        dirs.append(str(d))
+    first = q(spark, dirs[0]).collect()
+    assert _group_dirs() == {os.path.abspath(dirs[0])}
+    q(spark, dirs[1]).collect()
+    assert _group_dirs() == {os.path.abspath(dirs[1])}
+    assert q(spark, dirs[0]).collect() == first
+
+
+def test_file_stores_are_per_dir_and_deleted_on_release(spark, tmp_path):
+    """Two dirs with the same basename get separate IVF stores, each
+    matching a run on its source dir; clear_caches() deletes both."""
+    from otel_arrow_collector_spark.operators import (cache_registry,
+                                                      collect_registry)
+    q = collect_registry()[0]["ann_ivf_probe"]
+    src = {str(tmp_path / "a" / "sf"): SF_SMALL,
+           str(tmp_path / "b" / "sf"): SF_GATE}
+    for d, s in src.items():
+        os.makedirs(d)
+        shutil.copy(f"{s}/embeddings.parquet", d)
+    want = {d: q(spark, s).collect() for d, s in src.items()}
+    assert len({tuple(rows) for rows in want.values()}) == 2
+    for _ in range(2):          # pass 2 rereads a's store after b's build
+        assert {d: q(spark, d).collect() for d in src} == want
+    app = spark.sparkContext.applicationId
+    stores = [cache_registry._ENTRIES[
+        ("sim.cell_store", app, os.path.abspath(d))][1] for d in src]
+    assert len(set(stores)) == 2 and all(map(os.path.isdir, stores))
+    cache_registry.clear_caches()
+    assert not any(map(os.path.exists, stores))

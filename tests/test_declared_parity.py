@@ -24,7 +24,6 @@ SLOW = frozenset((
     "dedup_source_overlap",
     "dedup_substring",
     "embedding_drift",
-    "embedding_pca_covariance",
     "graph_assortativity",
     "graph_clustering_coefficient",
     "graph_k_core",

@@ -25,23 +25,28 @@ import time
 import pytest
 
 from otel_arrow_collector_spark.operators import (PLAN_MEMO_EXCLUDED,
-                                                  _PLAN_MEMO,
+                                                  cache_registry,
                                                   clear_plan_memo,
                                                   collect_registry)
 from tests.conftest import SF_SMALL
+
+
+def _plans() -> int:
+    """Live plan entries in the cache registry."""
+    return sum(k[0] == cache_registry._PLAN for k in cache_registry._ENTRIES)
 
 
 def test_pure_builders_reuse_the_memoized_plan(spark):
     queries, _ = collect_registry()
     clear_plan_memo()
     df1 = queries["q01_scan_project"](spark, SF_SMALL)
-    assert len(_PLAN_MEMO) == 1
+    assert _plans() == 1
     df2 = queries["q01_scan_project"](spark, SF_SMALL)
-    assert len(_PLAN_MEMO) == 1          # hit, not a second build
+    assert _plans() == 1                 # hit, not a second build
     assert df1 is not df2                # ...but never the same object
     # keyed by sf_dir
     queries["q01_scan_project"](spark, "/root/testdata/sf0.01")
-    assert len(_PLAN_MEMO) == 2
+    assert _plans() == 2
 
 
 def test_excluded_builders_are_never_memoized(spark):
@@ -50,7 +55,7 @@ def test_excluded_builders_are_never_memoized(spark):
     name = "graph_pagerank"     # driver-computed rank table at build
     assert name in PLAN_MEMO_EXCLUDED
     queries[name](spark, SF_SMALL)
-    assert len(_PLAN_MEMO) == 0
+    assert _plans() == 0
 
 
 def test_every_invocation_reexecutes_all_stages(spark):
