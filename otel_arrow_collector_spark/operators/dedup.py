@@ -38,12 +38,9 @@ handles residual imbalance.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import functions as F
 
 from ..sources.tables import load_table, parallel_table
-from .cache_registry import CHECKPOINT_DIR_ENV as cache_registry_checkpoint_env
 from .cache_registry import (_free_checkpoint, cached, materialized,
                              plan_checkpoint)
 
@@ -556,32 +553,6 @@ CC_MAX_ITERS = 20
 CC_DRIVER_MAX_EDGES = 1_000_000
 
 
-#: Env knob: set to a (cluster-visible) directory to switch the CC
-#: loop's per-round lineage truncation from ``localCheckpoint`` (block-
-#: manager storage — an executor loss mid-loop fails the job with
-#: CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND) to RELIABLE ``.checkpoint()``
-#: (files survive executor loss — the 100 TB long-loop stance).  A
-#: checkpoint dir already set on the SparkContext is honored the same
-#: way.  (Shared implementation: cache_registry.plan_checkpoint — the
-#: same knob also hardens every memoized-store materialization.)
-CHECKPOINT_DIR_ENV = cache_registry_checkpoint_env
-
-
-def _loop_checkpoint(df):
-    """Materialize one loop round with truncated lineage.
-
-    Reliable ``.checkpoint(eager=True)`` when a checkpoint dir is
-    configured (via $SPARK_GRAFT_CHECKPOINT_DIR or an explicit
-    ``sc.setCheckpointDir``), else ``localCheckpoint(eager=True)``.
-    Both yield a constant-size plan per round and identical labels; the
-    reliable path additionally survives executor loss, at the cost of
-    writing each round to the checkpoint FS (superseded rounds' files
-    are retired by the ContextCleaner when
-    ``spark.cleaner.referenceTracking.cleanCheckpoints=true``, else
-    bounded by CC_MAX_ITERS x |labels| until app end)."""
-    return plan_checkpoint(df)
-
-
 def connected_components(edges, src: str = "d1", dst: str = "d2",
                          force_distributed: bool = False):
     """Deterministic connected components over an undirected edge set:
@@ -644,9 +615,9 @@ def connected_components(edges, src: str = "d1", dst: str = "d2",
     # loss mid-loop fails the job — Spark reports it with an explicit
     # CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND error); on a real cluster set
     # $SPARK_GRAFT_CHECKPOINT_DIR (or sc.setCheckpointDir) and
-    # _loop_checkpoint switches every round to reliable .checkpoint()
+    # plan_checkpoint switches every round to reliable .checkpoint()
     # — identical labels, loss-tolerant (test_cc_reliable_checkpoint).
-    labels = _loop_checkpoint(
+    labels = plan_checkpoint(
         bidir.select(F.col("a").alias("node")).distinct()
              .withColumn("lbl", F.col("node")))
     prev_sum = labels.agg(F.sum("lbl")).first()[0]
@@ -662,7 +633,7 @@ def connected_components(edges, src: str = "d1", dst: str = "d2",
             # pointer jump: follow lbl -> label(lbl) to halve chain depth
             hop = labels.select(F.col("node").alias("hn"),
                                 F.col("lbl").alias("hl"))
-            new = _loop_checkpoint(
+            new = plan_checkpoint(
                 stepped.join(hop, stepped["lbl"] == hop["hn"], "left")
                        .select("node",
                                F.least("lbl", F.coalesce("hl", "lbl"))

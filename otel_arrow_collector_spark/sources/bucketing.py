@@ -40,12 +40,3 @@ def read_bucketed(spark: SparkSession, table: str) -> DataFrame:
     a plain ``spark.read.parquet`` of the same path would lose it)."""
     return spark.table(table)
 
-
-def plan_has_shuffle(df: DataFrame) -> bool:
-    """True if the physical plan contains a shuffle Exchange node
-    (hash/range/single-partition repartitioning) — the assertion hook for
-    co-location tests.  BroadcastExchange is NOT a shuffle (it ships the
-    small side, not the data)."""
-    import re
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    return re.search(r"\bExchange (hash|range|Single)", plan) is not None

@@ -35,14 +35,3 @@ def write_time_partitioned(df: DataFrame, path: str, ts_col: str = "ts",
 def read_time_partitioned(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.parquet(path)
 
-
-def scan_partition_filters(df: DataFrame) -> str:
-    """The non-empty PartitionFilters clauses of the plan's file scans
-    (joined with ``;``) — assertion hook: a partition-bounded query must
-    show its bound here, not in a post-scan Filter.  A plan may contain
-    several scans (e.g. an unpartitioned dimension side with an empty
-    clause); only populated clauses are reported."""
-    import re
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    return "; ".join(
-        m for m in re.findall(r"PartitionFilters: \[([^\]]*)\]", plan) if m)

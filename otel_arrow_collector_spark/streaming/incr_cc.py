@@ -32,8 +32,8 @@ at-least-once + idempotent-sink contract as the other twins and the
 reference's redelivery path
 (exporter/internal/persistent_storage.go:278-345).
 
-Per-round store relations go through ``_loop_checkpoint`` (constant
-plan depth; inherits the $SPARK_GRAFT_CHECKPOINT_DIR reliable-
+Per-round store relations go through ``cache_registry.plan_checkpoint``
+(constant plan depth; inherits the $SPARK_GRAFT_CHECKPOINT_DIR reliable-
 checkpoint knob, so the long-running ingest form survives executor
 loss on a real cluster).
 """
@@ -43,8 +43,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators import cache_registry
 from ..operators.cache_registry import _free_checkpoint
-from ..operators.dedup import _loop_checkpoint, connected_components
+from ..operators.dedup import connected_components
 
 
 def free_labels(df: DataFrame) -> None:
@@ -66,7 +67,7 @@ class IncrementalCCStore:
         else:
             base = (connected_components(edges, src=src, dst=dst)
                     .withColumnRenamed("cluster_id", "lbl"))
-        self.lbl = _loop_checkpoint(base)
+        self.lbl = cache_registry.plan_checkpoint(base)
 
     def labels(self) -> DataFrame:
         """Current labels as (node, cluster_id)."""
@@ -105,10 +106,10 @@ class IncrementalCCStore:
                               "left_anti")
                  .select(F.col("old").alias("node"),
                          F.col("new").alias("lbl")))
-        new = _loop_checkpoint(upd.unionByName(fresh))
+        new = cache_registry.plan_checkpoint(upd.unionByName(fresh))
         # delta BEFORE the old store is freed; checkpointed so its
         # lineage cannot dangle on the freed relation
-        delta = _loop_checkpoint(
+        delta = cache_registry.plan_checkpoint(
             new.join(self.lbl, ["node", "lbl"], "left_anti")
                .select("node", F.col("lbl").alias("cluster_id")))
         old, self.lbl = self.lbl, new

@@ -8,11 +8,9 @@ import tempfile
 
 import pytest
 
-from pyspark.sql import functions as F
-
+from otel_arrow_collector_spark import plan_tree
 from otel_arrow_collector_spark.sources import load_table
-from otel_arrow_collector_spark.sources.bucketing import (plan_has_shuffle,
-                                                          read_bucketed,
+from otel_arrow_collector_spark.sources.bucketing import (read_bucketed,
                                                           write_bucketed)
 from tests.conftest import SF_SMALL
 
@@ -37,7 +35,7 @@ def test_bucketed_self_join_is_shuffle_free(spark, bucketed_lineitem):
     try:
         j = (lb.alias("a").join(lb.alias("b"), "l_orderkey")
                .groupBy("l_orderkey").count())
-        assert not plan_has_shuffle(j)
+        assert not plan_tree.read(j).exchanges()
         assert j.count() > 0   # and it actually runs
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "64m")
@@ -51,9 +49,18 @@ def test_unbucketed_same_join_shuffles(spark):
     # force a non-broadcast plan the way the 100 TB case would resolve
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        assert plan_has_shuffle(j)
+        assert plan_tree.read(j).exchanges()
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "64m")
+
+
+def test_round_robin_repartition_is_a_shuffle(spark):
+    """``repartition(n)`` plans a round-robin exchange, which moves every
+    row like a hash exchange does (a text match on hash/range/single
+    partitioning used to miss it)."""
+    assert not plan_tree.read(spark.range(1000)).exchanges()
+    [e] = plan_tree.read(spark.range(1000).repartition(4)).exchanges()
+    assert e.partitioning == "roundrobin"
 
 
 def test_bucketed_join_matches_unbucketed_results(spark, bucketed_lineitem):

@@ -9,7 +9,7 @@ from __future__ import annotations
 
 import pytest
 
-from otel_arrow_collector_spark.operators import dedup
+from otel_arrow_collector_spark.operators import cache_registry, dedup
 
 
 def _labels(df):
@@ -37,7 +37,7 @@ def test_cc_reliable_checkpoint_mode_identical_labels(
     assert {c for _, c in base} == {0, 100}
 
     ckpt = tmp_path / "reliable_ckpt"
-    monkeypatch.setenv(dedup.CHECKPOINT_DIR_ENV, str(ckpt))
+    monkeypatch.setenv(cache_registry.CHECKPOINT_DIR_ENV, str(ckpt))
     try:
         rel = _labels(dedup.connected_components(e, force_distributed=True))
         # identical labels AND the loop really went through the
@@ -48,7 +48,7 @@ def test_cc_reliable_checkpoint_mode_identical_labels(
         _restore_no_checkpoint_dir(spark)
 
     # knob unset + dir restored -> local mode again, no new FS traffic
-    monkeypatch.delenv(dedup.CHECKPOINT_DIR_ENV)
+    monkeypatch.delenv(cache_registry.CHECKPOINT_DIR_ENV)
     before = sum(1 for p in ckpt.rglob("*") if p.is_file())
     again = _labels(dedup.connected_components(e, force_distributed=True))
     assert again == base
@@ -72,9 +72,9 @@ def test_cc_honors_preexisting_sc_checkpoint_dir(spark, tmp_path):
 
 
 def test_loop_checkpoint_local_default(spark):
-    """With no knob and no sc dir, _loop_checkpoint stays a
-    localCheckpoint (the single-box default — zero FS dependency)."""
+    """With no knob and no sc dir, the CC loop's plan_checkpoint stays
+    a localCheckpoint (the single-box default — zero FS dependency)."""
     assert spark.sparkContext.getCheckpointDir() is None
-    df = dedup._loop_checkpoint(spark.range(5))
+    df = cache_registry.plan_checkpoint(spark.range(5))
     assert df.count() == 5
     assert spark.sparkContext.getCheckpointDir() is None

@@ -13,6 +13,7 @@ import struct
 
 import pytest
 
+from otel_arrow_collector_spark import plan_tree
 from otel_arrow_collector_spark.exporters.grpc_exporter import (
     _PATHS, GrpcCallError, export_grpc_now, grpc_call)
 from otel_arrow_collector_spark.exporters.retry import RetryConfig
@@ -692,9 +693,8 @@ def test_otap_reassembly_plan_joins_on_ids(spark, rcv):
     c.close()
     got = otap.assemble_spans_df(
         spark, receiver.read_arrow_payloads(spark))
-    plan = got._jdf.queryExecution().executedPlan().toString()
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
+    assert not plan_tree.read(got).find("CartesianProduct",
+                                        "BroadcastNestedLoopJoin")
 
 
 def test_full_system_grpc_to_arrow_pipeline(spark, tmp_path):

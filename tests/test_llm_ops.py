@@ -136,12 +136,13 @@ def test_shared_caches_keyed_by_application_id(spark):
 def test_ivf_probe_scan_is_partition_pruned(spark):
     """The probe's candidate scan reads only the probed cells' directories:
     PartitionFilters on cid (the IVF 100 TB contract — cell-local I/O)."""
+    from otel_arrow_collector_spark import plan_tree
     from otel_arrow_collector_spark.operators import similarity
-    from otel_arrow_collector_spark.sources.partitioned import \
-        scan_partition_filters
     probe = similarity.ann_ivf_probe(spark, SF_SMALL)
-    pf = scan_partition_filters(probe)
-    assert "cid" in pf and " IN " in pf.upper()
+    pf = [f for s in plan_tree.read(probe).scans()
+          for f in s.partition_filters]
+    assert any("cid" in f and ("insubquery(" in f or " IN (" in f)
+               for f in pf)
 
 
 def test_ivf_kmeans_centroids_deterministic(spark):

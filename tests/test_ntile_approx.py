@@ -11,6 +11,7 @@ within boundary tolerance on distinct-valued data.
 
 import pytest
 
+from otel_arrow_collector_spark import plan_tree
 from otel_arrow_collector_spark.operators import relational as R
 from otel_arrow_collector_spark.plans.featuregate import global_registry
 
@@ -26,10 +27,6 @@ def approx_gate():
         yield reg
     finally:
         reg.set(R.NTILE_APPROX_GATE, False)
-
-
-def _plan(df) -> str:
-    return df._jdf.queryExecution().executedPlan().toString()
 
 
 def test_ntile_approx_unit_counts_and_order(spark):
@@ -55,19 +52,19 @@ def test_ntile_approx_unit_counts_and_order(spark):
 
 
 def test_q49_approx_plan_has_no_window(spark, approx_gate):
-    plan = _plan(R.QUERIES["q49_ntile_deciles"](spark, SF001))
-    assert "Window" not in plan
-    assert "BroadcastNestedLoopJoin" in plan or "BroadcastExchange" in plan
+    plan = plan_tree.read(R.QUERIES["q49_ntile_deciles"](spark, SF001))
+    assert not plan.find("Window", "WindowGroupLimit")
+    assert plan.find("BroadcastNestedLoopJoin", "BroadcastExchange")
 
 
 def test_q77_approx_plan_has_no_window(spark, approx_gate):
-    plan = _plan(R.QUERIES["q77_rfm_segments"](spark, SF001))
-    assert "Window" not in plan
+    plan = plan_tree.read(R.QUERIES["q77_rfm_segments"](spark, SF001))
+    assert not plan.find("Window", "WindowGroupLimit")
 
 
 def test_q49_exact_plan_keeps_window_by_default(spark):
-    plan = _plan(R.QUERIES["q49_ntile_deciles"](spark, SF001))
-    assert "Window" in plan            # the oracle-exact default path
+    plan = plan_tree.read(R.QUERIES["q49_ntile_deciles"](spark, SF001))
+    assert plan.windows()              # the oracle-exact default path
 
 
 def test_q49_approx_matches_exact_within_boundary_tolerance(

@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import pytest
 
+from otel_arrow_collector_spark import plan_tree
 from otel_arrow_collector_spark.functions.ottl_parser import (
     OttlSyntaxError, apply_statement, apply_statements, compile_condition,
     parse_statement)
@@ -204,8 +205,8 @@ def test_group_by_trace_id(td):
     key (+ in-partition sort): rows preserved, plan co-locates traces."""
     out = apply_statement(td, 'group_by(trace_id, 2m)')
     assert out.count() == td.count()
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "hashpartitioning(trace_id" in plan
+    assert any(e.partitioning == "hash" and e.keys[:1] == ("trace_id",)
+               for e in plan_tree.read(out).exchanges())
     s = parse_statement('group_by(trace_id, 30s)')
     assert s.args[1] == ("dur", 30_000)
 

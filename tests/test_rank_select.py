@@ -13,6 +13,7 @@ from __future__ import annotations
 
 import pytest
 
+from otel_arrow_collector_spark import plan_tree
 from otel_arrow_collector_spark.operators import sketches as S
 from otel_arrow_collector_spark.plans.featuregate import global_registry
 
@@ -28,36 +29,28 @@ def gate():
     reg.set(S.RANK_SELECT_GATE, True)  # restore the default
 
 
-def _plan(df) -> str:
-    return df._jdf.queryExecution().executedPlan().toString()
-
-
 def test_default_on_and_beta(gate):
     assert S._rank_select_enabled() is True
 
 
-def _single_partition_sorts(plan: str) -> int:
-    """Count fact-serializing stages: a Sort (or Window) whose input is
-    an Exchange SinglePartition.  The tree prints parent-above-child, so
-    the Sort appears on the line immediately ABOVE the exchange.  The
-    tiny 1-row percentile_approx partial-merge exchanges (final agg
-    above the exchange, partials below) do NOT count — those move 32
-    sketch objects, not rows."""
-    lines = plan.splitlines()
-    hits = 0
-    for i, line in enumerate(lines):
-        if "Exchange SinglePartition" in line and i > 0:
-            if "Sort " in lines[i - 1] or "Window" in lines[i - 1]:
-                hits += 1
-    return hits
+def _single_partition_sorts(plan: plan_tree.Node) -> int:
+    """Count fact-serializing stages: a Sort (or Window) whose child is
+    a single-partition exchange.  The tiny 1-row percentile_approx
+    partial-merge exchanges (a final aggregate above the exchange) do
+    NOT count — those move 32 sketch objects, not rows."""
+    return sum(1 for n in plan.find("Sort", "Window")
+               for c in n.children
+               if c.is_shuffle and c.partitioning == "single")
 
 
 def test_scale_plan_has_no_single_partition_sort(spark, gate):
     gate.set(S.RANK_SELECT_GATE, True)
-    plan = _plan(S.QUERIES["sketch_quantile_sampled"](spark, SF_SMALL))
+    plan = plan_tree.read(
+        S.QUERIES["sketch_quantile_sampled"](spark, SF_SMALL))
     assert _single_partition_sorts(plan) == 0
     # every window partitions by the bucket column — parallel
-    assert "windowspecdefinition(__bkt" in plan
+    windows = plan.windows()
+    assert windows and all(w.keys[:1] == ("__bkt",) for w in windows)
 
 
 def test_legacy_plan_is_single_partition(spark, gate):
@@ -65,7 +58,8 @@ def test_legacy_plan_is_single_partition(spark, gate):
     window serializes the whole table through one partition — the plan
     the gate exists to avoid."""
     gate.set(S.RANK_SELECT_GATE, False)
-    plan = _plan(S.QUERIES["sketch_quantile_sampled"](spark, SF_SMALL))
+    plan = plan_tree.read(
+        S.QUERIES["sketch_quantile_sampled"](spark, SF_SMALL))
     assert _single_partition_sorts(plan) > 0
 
 

@@ -10,6 +10,7 @@ import pytest
 
 from pyspark.sql import functions as F
 
+from otel_arrow_collector_spark import plan_tree
 from otel_arrow_collector_spark.sources import load_table
 from otel_arrow_collector_spark.streaming.joins import interval_join_stream
 from tests.conftest import SF_SMALL
@@ -67,7 +68,7 @@ def test_operator_always_bounds_state_with_watermarks(spark,
         ev.filter("event_type = 'signup'"),
         ev.filter("event_type = 'purchase'"),
         key="user_id", interval="1 hour", watermark="2 hours")
-    plan = joined._jdf.queryExecution().analyzed().toString()
+    plan = plan_tree.read(joined._jdf.queryExecution().analyzed())
     assert plan.count("EventTimeWatermark") == 2   # both sides bounded
     assert joined.isStreaming
 

@@ -5,6 +5,9 @@ the comparable steady-state figure (bench.py's own min-of-2 only spans
 one invocation).
 
     python tools/bench_battery.py <out.json> <n_runs> [cpus]
+
+``cpus`` defaults to $SPARK_GRAFT_CPUS, else this host's CPU count; the
+corpus is bench.py's $SPARK_GRAFT_SF_DIR (default sf0.1).
 """
 
 from __future__ import annotations
@@ -19,12 +22,11 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 def main() -> None:
     out_path, n_runs = sys.argv[1], int(sys.argv[2])
-    cpus = sys.argv[3] if len(sys.argv) > 3 else "32"
+    cpus = sys.argv[3] if len(sys.argv) > 3 else os.environ.get(
+        "SPARK_GRAFT_CPUS", str(os.cpu_count()))
     runs = []
     for i in range(n_runs):
-        env = dict(os.environ,
-                   SPARK_GRAFT_SF_DIR="/root/testdata/sf0.1",
-                   SPARK_GRAFT_CPUS=cpus)
+        env = dict(os.environ, SPARK_GRAFT_CPUS=cpus)
         p = subprocess.run([sys.executable, os.path.join(REPO, "bench.py")],
                            env=env, capture_output=True, text=True)
         line = p.stdout.strip().splitlines()[-1]

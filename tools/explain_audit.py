@@ -1,82 +1,33 @@
-"""Plan audit: print the physical-plan quality indicators for
-representative queries — pushed filters, read schemas, join strategies,
-shuffle counts.
+"""Plan audit: print the physical-plan quality indicators of registered
+queries — pushed filters, read schemas, join strategies, shuffle counts.
 
     python tools/explain_audit.py [sf_dir] [query ...]
 
-Defaults to /root/testdata/sf0.1 and a representative set.  This is the
-reproducible form of README's "Design for 100 TB" audit.
+With no sf_dir it reads the sf0.1 corpus; with no query names, every
+registered query, sorted.
+This is the reproducible form of README's "Design for 100 TB" audit.
 """
 
 from __future__ import annotations
 
 import os
-import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-DEFAULT = ["q02_filter", "q12_inner_join", "q13_star_join",
-           "q18_interval_join", "q23_topk", "q37_asof_join",
-           "q43_shipping_priority", "q44_local_supplier_volume",
-           "q45_salted_hot_key_join", "q47_hopping_window",
-           "q50_market_share",
-           "q69_forecast_revenue", "q70_tail_latency_outliers",
-           "q71_conversion_funnel", "q72_scd2_intervals",
-           "q74_range_frame_moving_sum",
-           "dedup_minhash_lsh", "dedup_substring", "ann_cosine_topk",
-           "embedding_quantize_int8", "pack_sequences",
-           "curation_pipeline", "text_bm25_search", "heavy_hitter_events",
-           "sketch_hll_registers", "sketch_cms_counters",
-           "graph_link_prediction", "dedup_allpairs_prefix",
-           "q101_ewma_smoothing", "sample_bootstrap",
-           "graph_triangle_count", "graph_pagerank", "bloom_screen",
-           "sample_weighted", "ann_pq_codes", "dedup_cross_corpus",
-           # round-7 scale claims
-           "sketch_quantile_sampled", "sketch_quantile_binned",
-           "sketch_hll_union", "cc_pipeline_warc",
-           "multimodal_decode_quarantine",
-           # round-8 scale claims
-           "q92_slo_burn", "q93_scd2_merge", "q94_attribution",
-           "q95_cdc_apply", "dedup_source_overlap", "text_cooccur_lift",
-           "ann_loo_accuracy", "multimodal_resample", "embedding_drift",
-           "multimodal_phash_dedup", "q96_changepoint", "multimodal_data_uri",
-           "text_keywords", "ann_ivf_cell_quality",
-           # round-11 scale claims
-           "dedup_incremental", "dedup_incremental_delta",
-           "q104_skyline", "q105_market_basket", "ann_range_search",
-           "graph_clustering_coefficient", "graph_assortativity",
-           "text_source_drift", "sample_reservoir",
-           "curation_ingest_funnel", "q106_mad_dispersion",
-           "q107_benford_screen", "sketch_theta_jaccard",
-           "dedup_containment",
-           # round-12 scale claims
-           "dedup_incremental_epoch2", "q108_bitmap_distinct",
-           "q109_user_streaks", "q110_corr_screen",
-           "q111_time_weighted_avg", "q112_interval_coverage",
-           "q113_autocorrelation", "q114_herfindahl",
-           "sample_systematic", "text_ngram_novelty",
-           "text_vocab_overlap", "graph_two_hop_reach",
-           "sketch_bloom_fpr", "dedup_minhash_estimate_error",
-           "curation_diversity_sample", "dedup_band_sensitivity",
-           "q115_winsorize", "q116_zorder_pruning", "q117_fuzzy_name_match"]
-
 
 def audit(spark, fn, sf_dir: str) -> dict:
-    df = fn(spark, sf_dir)
-    jpe = df._jdf.queryExecution()
-    plan = jpe.explainString(
-        spark._jvm.org.apache.spark.sql.execution.ExplainMode
-        .fromString("formatted"))
+    from otel_arrow_collector_spark import plan_tree
+    p = plan_tree.read(fn(spark, sf_dir))
+    scans = p.scans()
     return {
-        "broadcast_joins": plan.count("BroadcastHashJoin"),
-        "sortmerge_joins": plan.count("SortMergeJoin"),
-        "shuffles": len(re.findall(r"\bExchange\b(?! *Broadcast)", plan)),
-        "top_k": "TakeOrderedAndProject" in plan,
-        "pushed_filters": [p for p in
-                           re.findall(r"PushedFilters: \[([^\]]*)\]", plan)
-                           if p],
-        "read_schemas": re.findall(r"ReadSchema: (\S+)", plan),
+        "broadcast_joins": p.count("BroadcastHashJoin"),
+        "sortmerge_joins": p.count("SortMergeJoin"),
+        "shuffles": len(p.exchanges()),
+        "top_k": bool(p.find("TakeOrderedAndProject")),
+        "pushed_filters": [s.pushed_filters for s in scans
+                           if s.pushed_filters],
+        "read_schemas": [s.read_schema for s in scans],
     }
 
 
@@ -84,13 +35,13 @@ def main() -> None:
     args = sys.argv[1:]
     sf_dir = args[0] if args and os.path.isdir(args[0]) \
         else "/root/testdata/sf0.1"
-    names = [a for a in args if not os.path.isdir(a)] or DEFAULT
 
     from otel_arrow_collector_spark.operators import collect_registry
     from otel_arrow_collector_spark.session import get_spark
     spark = get_spark("explain-audit")
     spark.sparkContext.setLogLevel("ERROR")
     queries, _ = collect_registry()
+    names = [a for a in args if not os.path.isdir(a)] or sorted(queries)
 
     for name in names:
         if name not in queries:
@@ -103,9 +54,9 @@ def main() -> None:
               f"shuffles: {a['shuffles']}; "
               f"top-k op: {a['top_k']}")
         for p in a["pushed_filters"][:4]:
-            print(f"   pushed: [{p}]")
+            print(f"   pushed: [{', '.join(p)}]")
         for r in a["read_schemas"][:4]:
-            print(f"   reads:  {r[:100]}")
+            print(f"   reads:  {', '.join(c for c, _ in r)[:100]}")
 
 
 if __name__ == "__main__":

@@ -32,7 +32,6 @@ import argparse
 import json
 import math
 import os
-import re
 import sys
 import time
 from collections import Counter
@@ -254,8 +253,6 @@ KEY_OFFSETS = {
 #: codebooks and cell lists are far smaller)
 INTERNAL_COLLECT_MAX_ROWS = 4096
 
-_NUMS = re.compile(r"#\d+|\b\d+\b|\[[^\]]*\]|\([^()]*\)")
-
 
 def build_scaled_dir(spark, src_dir: str, work_dir: str, k: int) -> str:
     """Materialize the k-times working set under work_dir/x{k} (skipped
@@ -286,77 +283,52 @@ def build_scaled_dir(spark, src_dir: str, work_dir: str, k: int) -> str:
     return out
 
 
-#: node types AQE inserts/varies at RUNTIME as a function of data volume
-#: (partition coalescing, local reads) — their count changing with scale
-#: is adaptive execution working as designed, not a strategy flip
-AQE_RUNTIME_NODES = {"AQEShuffleRead", "ShuffleQueryStage",
-                     "BroadcastQueryStage", "TableCacheQueryStage"}
+#: the node type AQE inserts/varies at RUNTIME as a function of data
+#: volume (partition coalescing, local reads) — its count changing with
+#: scale is adaptive execution working as designed, not a strategy flip
+#: (query stages are transparent in the plan tree)
+AQE_RUNTIME_NODES = {"AQEShuffleRead"}
 
 #: the three size-gated EQUI-join strategies are one semantic plan: AQE
 #: choosing sort-merge once a build side outgrows the broadcast
 #: threshold is the design working (README: "broadcast at bench scale,
 #: sort-merge with skew splitting at cluster scale — the same declared
 #: plan serves both"), so they normalize to one label; their mechanical
-#: companions (Exchange/BroadcastExchange/Sort) are dropped with them.
+#: companions (exchanges and Sort) are dropped with them.
 #: What still MUST NOT change with scale: any CartesianProduct or
 #: BroadcastNestedLoopJoin appearing, the number of joins, aggregates
 #: flipping hash->sort, new Window/Generate/Expand, or a Python stage
 #: appearing.
 EQUI_JOINS = {"BroadcastHashJoin", "SortMergeJoin", "ShuffledHashJoin"}
-STRATEGY_COMPANIONS = {"Exchange", "BroadcastExchange", "Sort"}
+STRATEGY_COMPANIONS = {"ShuffleExchange", "BroadcastExchange", "Sort"}
 
 
 _AGG_NODES = {"HashAggregate", "ObjectHashAggregate", "SortAggregate"}
 
 
 def plan_shape(df) -> Counter:
-    """Multiset of SEMANTIC physical node types from the formatted plan.
-    Each node is counted ONCE by its unique ``(n)`` id from the detail
-    section (the tree re-prints subtrees under AQE stage reuse, so raw
-    line counting drifts with runtime re-planning).  AQE's
-    volume-dependent runtime nodes are excluded and the size-gated
-    equi-join strategies normalize to one label; hash-aggregate
-    partial/merge/final stages of the SAME logical aggregate collapse
-    to one entry keyed by their grouping keys — AQE re-planning around
-    a normalized join flip legitimately inserts/removes a partial
-    stage.  A hash->sort aggregate flip still fails (different node
-    name), as do cartesian/nested-loop appearances, extra joins, new
+    """Multiset of SEMANTIC physical node types of the executed plan,
+    each operator counted once.  AQE's volume-dependent runtime nodes
+    are excluded and the size-gated equi-join strategies normalize to
+    one label; hash-aggregate partial/merge/final stages of the SAME
+    logical aggregate collapse to one entry keyed by their grouping
+    keys — AQE re-planning around a normalized join flip legitimately
+    inserts/removes a partial stage.  Key-less (global) aggregates are
+    keyed by their functions instead, so a NEW global aggregate
+    appearing at scale still counts (ADVICE r11).  A hash->sort
+    aggregate flip still fails (different node name), as do
+    cartesian/nested-loop appearances, extra joins, new
     windows/generates, and Python stages."""
-    txt = df._sc._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), "formatted")
-    nodes = []
-    agg_sigs: dict[str, set] = {}
-    details = list(re.finditer(
-        r"^\((\d+)\)\s+([A-Za-z][A-Za-z0-9_]+)", txt, re.M))
-    for i, m in enumerate(details):
-        name = m.group(2)
-        if name in AQE_RUNTIME_NODES or name in STRATEGY_COMPANIONS:
-            continue
-        if name in _AGG_NODES:
-            end = details[i + 1].start() if i + 1 < len(details) else len(txt)
-            keys = re.search(r"Keys(?: \[\d+\])?: \[([^\]]*)\]",
-                             txt[m.start():end])
-            sig = re.sub(r"#\d+L?", "", keys.group(1)) if keys else ""
-            if not sig:
-                # key-less (global) aggregates would otherwise ALL share
-                # the empty signature, so any number of distinct global
-                # aggregates per node type count as one and a NEW one
-                # appearing at scale would slip through (ADVICE r11) —
-                # discriminate by the normalized function list, with the
-                # partial/merge stage prefixes stripped so the stage
-                # collapse still works.
-                fns = re.search(r"Functions(?: \[\d+\])?: \[([^\]]*)\]",
-                                txt[m.start():end])
-                if fns:
-                    sig = "()" + re.sub(
-                        r"\b(?:partial_|merge_|finalmerge_)", "",
-                        re.sub(r"#\d+L?", "", fns.group(1)))
-            agg_sigs.setdefault(name, set()).add(sig)
-            continue
-        nodes.append("EquiJoin" if name in EQUI_JOINS else name)
-    for name, sigs in agg_sigs.items():
-        nodes.extend([name] * len(sigs))
-    return Counter(nodes)
+    from otel_arrow_collector_spark import plan_tree
+    shape, aggs = Counter(), set()
+    for n in plan_tree.read(df).walk():
+        if n.name in _AGG_NODES:
+            aggs.add((n.name,
+                      n.keys or ("()", *sorted(a for _, a in n.aggs))))
+        elif n.name not in AQE_RUNTIME_NODES | STRATEGY_COMPANIONS:
+            shape["EquiJoin" if n.name in EQUI_JOINS else n.name] += 1
+    shape.update(name for name, _ in aggs)
+    return shape
 
 
 class CollectRecorder:
