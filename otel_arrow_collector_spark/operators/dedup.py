@@ -837,30 +837,35 @@ def _semantic_pairs(spark, sf_dir):
     candidate relation of the SemDeDup family (funnel accounting +
     keep-first canonicalization), session-memoized so the two queries
     cannot desynchronize and the n²/k-per-cell join runs once."""
-    from .similarity import _assignments, _s_dot
-
     def build():
-        a = _assignments(spark, sf_dir)
-        counts = a.groupBy("cid").agg(F.count(F.lit(1)).alias("__cc"))
-        oversized = [r.cid for r in
-                     counts.filter(F.col("__cc") > SEM_CELL_CAP).collect()]
-        if oversized:
-            a = a.filter(~F.col("cid").isin(*oversized))
-        left = a.select(F.col("vec_id").alias("v1"),
-                        F.col("embedding").alias("e1"),
-                        F.col("v_nrm").alias("n1"), "cid")
-        right = a.select(F.col("vec_id").alias("v2"),
-                         F.col("embedding").alias("e2"),
-                         F.col("v_nrm").alias("n2"),
-                         F.col("cid").alias("cid2"))
-        cos = F.expr(_s_dot("e1", "e2")) / (F.col("n1") * F.col("n2"))
-        pairs = (left.join(right, (F.col("cid") == F.col("cid2"))
-                           & (F.col("v1") < F.col("v2")))
-                     .withColumn("cos_raw", cos)
-                     .filter(F.col("cos_raw") >= SEMANTIC_COS)
-                     .select("cid", "v1", "v2"))
-        return materialized(pairs)
+        return materialized(_build_semantic_pairs(spark, sf_dir))
     return cached("dedup.semantic_pairs", spark, sf_dir, build)
+
+
+def _build_semantic_pairs(spark, sf_dir):
+    """Raw (pre-materialization) semantic pair plan — split out so the
+    plan-quality pin (cid-keyed pair join, no cartesian) stays
+    assertable after the memo truncation."""
+    from .similarity import _assignments, _s_dot
+    a = _assignments(spark, sf_dir)
+    counts = a.groupBy("cid").agg(F.count(F.lit(1)).alias("__cc"))
+    oversized = [r.cid for r in
+                 counts.filter(F.col("__cc") > SEM_CELL_CAP).collect()]
+    if oversized:
+        a = a.filter(~F.col("cid").isin(*oversized))
+    left = a.select(F.col("vec_id").alias("v1"),
+                    F.col("embedding").alias("e1"),
+                    F.col("v_nrm").alias("n1"), "cid")
+    right = a.select(F.col("vec_id").alias("v2"),
+                     F.col("embedding").alias("e2"),
+                     F.col("v_nrm").alias("n2"),
+                     F.col("cid").alias("cid2"))
+    cos = F.expr(_s_dot("e1", "e2")) / (F.col("n1") * F.col("n2"))
+    return (left.join(right, (F.col("cid") == F.col("cid2"))
+                      & (F.col("v1") < F.col("v2")))
+                .withColumn("cos_raw", cos)
+                .filter(F.col("cos_raw") >= SEMANTIC_COS)
+                .select("cid", "v1", "v2"))
 
 
 #: oracle mirror of the SEM_CELL_CAP exclusion + threshold pair join

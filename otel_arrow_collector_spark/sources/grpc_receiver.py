@@ -13,6 +13,11 @@ so this server speaks the gRPC wire protocol directly over sockets:
   (``sources/otlp_pb.py``), then the fsync+rename spool the HTTP receiver
   uses — so ``read_spool`` / ``stream_spool`` consume both receivers'
   output interchangeably.
+- every socket comes from the ``h2`` helpers, and each accepted one has
+  ``TCP_NODELAY`` set, matching Go's ``net`` default under grpc-go: an
+  ack is small, and Nagle's algorithm holds a small write while an
+  earlier one is unacknowledged, so each ack would wait for the
+  client's delayed ACK, about 40 ms.
 
 Status mapping mirrors the reference (receiver/otlpreceiver/otlp.go +
 internal/errors): bad wire bytes -> INVALID_ARGUMENT(3), unknown method
@@ -129,7 +134,7 @@ class OtlpGrpcReceiver:
 
     def start(self) -> tuple[str, int]:
         self._closing = False
-        srv = socket.create_server((self.host, self._port))
+        srv = h2.listen(self.host, self._port)
         srv.settimeout(0.25)
         self._srv_sock = srv
         self._port = srv.getsockname()[1]
@@ -167,7 +172,7 @@ class OtlpGrpcReceiver:
     def _accept_loop(self) -> None:
         while not self._closing:
             try:
-                conn, _ = self._srv_sock.accept()
+                conn = h2.accept(self._srv_sock)
             except socket.timeout:
                 continue
             except OSError:
@@ -191,9 +196,9 @@ class OtlpGrpcReceiver:
             sock.sendall(h2.pack_frame(
                 h2.SETTINGS, 0, 0, h2.settings_payload(
                     {h2.SETTINGS_INITIAL_WINDOW_SIZE: 1 << 24,
-                     h2.SETTINGS_MAX_FRAME_SIZE: h2.DEFAULT_MAX_FRAME})))
-            sock.sendall(h2.pack_frame(
-                h2.WINDOW_UPDATE, 0, 0, struct.pack(">I", 1 << 24)))
+                     h2.SETTINGS_MAX_FRAME_SIZE: h2.DEFAULT_MAX_FRAME}))
+                + h2.pack_frame(
+                    h2.WINDOW_UPDATE, 0, 0, struct.pack(">I", 1 << 24)))
             dec, enc = HpackDecoder(), HpackEncoder()
             streams: dict[int, _Stream] = {}
             while True:
@@ -416,15 +421,16 @@ class OtlpGrpcReceiver:
             except Exception as e:     # bad pb/IPC bytes: data error
                 self._count("refused_bad_arrow")
                 code, text = asvc.STATUS_INVALID_ARGUMENT, str(e)[:256]
+            out = []
             if not st.resp_started:
                 hdr = enc.encode([(":status", "200"),
                                   ("content-type", "application/grpc")])
-                sock.sendall(h2.pack_frame(
+                out.append(h2.pack_frame(
                     h2.HEADERS, h2.FLAG_END_HEADERS, sid, hdr))
                 st.resp_started = True
             status = asvc.encode_status(batch_id, code, text)
-            sock.sendall(b"".join(h2.chunk_data_frames(
-                sid, h2.grpc_frame(status), False)))
+            out += h2.chunk_data_frames(sid, h2.grpc_frame(status), False)
+            sock.sendall(b"".join(out))
 
     def _arrow_finish(self, sock, enc, sid, st: _Stream) -> None:
         """Client half-close: end the response with OK trailers."""

@@ -198,6 +198,42 @@ def test_grpc_frame_layout_is_spec_exact():
         h2.parse_grpc_frames(f[:-1])       # truncated body is loud
 
 
+def test_every_grpc_socket_has_nodelay(rcv, monkeypatch):
+    """TCP_NODELAY is set on the receiver's accepted sockets, on
+    grpc_call's socket and on ArrowStreamClient.sock, as Go's net does
+    for every TCPConn.  With Nagle on, each small reply waits for the
+    peer's delayed ACK, about 40 ms."""
+    import socket as _socket
+
+    from otel_arrow_collector_spark.exporters.grpc_exporter import \
+        ArrowStreamClient
+
+    def nodelay(sock):
+        return sock.getsockopt(_socket.IPPROTO_TCP, _socket.TCP_NODELAY)
+
+    accepted, connected = [], []
+    serve, connect = rcv._serve_conn, h2.connect
+
+    def spy_serve(sock):
+        accepted.append(nodelay(sock))
+        serve(sock)
+
+    def spy_connect(*a, **kw):
+        sock = connect(*a, **kw)
+        connected.append(nodelay(sock))
+        return sock
+
+    monkeypatch.setattr(rcv, "_serve_conn", spy_serve)
+    monkeypatch.setattr(h2, "connect", spy_connect)
+    with pytest.raises(GrpcCallError):
+        grpc_call(rcv.host, rcv._port, "/foo.Bar/Baz", b"")
+    c = ArrowStreamClient(rcv.host, rcv._port)
+    assert nodelay(c.sock)
+    assert c.close()["grpc-status"] == "0"
+    assert len(connected) == 2 and all(connected)
+    assert len(accepted) == 2 and all(accepted)
+
+
 def test_grpc_receiver_rejects_two_messages_on_unary(spark, rcv):
     """Two length-prefixed messages on a unary call -> INVALID_ARGUMENT
     (hand-built DATA body; the client API can't express this)."""

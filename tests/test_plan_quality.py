@@ -293,11 +293,22 @@ def test_perplexity_gate_vocab_is_broadcast_no_window(spark):
 
 
 def test_dedup_semantic_blocks_by_cell_no_all_pairs(spark):
-    """dedup_semantic: the pair join keys on the k-means cell id — never
-    an unconstrained cross join of the corpus."""
+    """dedup_semantic: the query joins per-cell counts on the k-means cell
+    id (the LEFT OUTER funnel join) and never cross-joins the corpus.
+    The memoized pair relation is plan-truncated here; its pair join is
+    pinned by test_semantic_pair_join_is_cell_keyed."""
     p = _tree(spark, "dedup_semantic")
     assert not p.find("CartesianProduct")
     assert any(_keyed(j, "cid") for j in p.joins())
+
+
+def test_semantic_pair_join_is_cell_keyed(spark):
+    """The within-cell pair join of the semantic dedup family keys on the
+    k-means cell id first — n²/k per cell, never all pairs — read on the
+    raw builder plan, before the memo truncates it."""
+    bp = plan_tree.read(dd._build_semantic_pairs(spark, SF_SMALL))
+    assert any(j.keys[:1] == ("cid",) for j in bp.joins())
+    assert not bp.find("CartesianProduct")
 
 
 def test_dedup_semantic_keep_is_pair_bounded(spark):
