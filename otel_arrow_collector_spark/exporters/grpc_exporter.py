@@ -3,11 +3,12 @@
 unary Export per request batch, gRPC status -> retry mapping,
 RetryInfo/pushback honoring).
 
-Like the HTTP exporter, POSTs happen ON EXECUTORS inside ``mapInArrow``:
-each task slices its partition into ``max_rows_per_request`` requests,
-encodes them with the dependency-free pb codec, and drives a
-throttle-aware :class:`RetrySender` per request over a stdlib HTTP/2
-connection (``sources/h2.py`` + the RFC 7541 codec).  No grpcio anywhere.
+Like the HTTP exporter, pushes happen ON EXECUTORS inside ``mapInArrow``
+(the stage ``http_exporter._push_stage`` both exporters share): each task
+slices its partition into ``max_rows_per_request`` requests, encodes
+them with the dependency-free pb codec, and drives a throttle-aware
+:class:`RetrySender` per request over a stdlib HTTP/2 connection
+(``sources/h2.py`` + the RFC 7541 codec).  No grpcio anywhere.
 
 Retryable status codes follow otlpexporter's shouldRetry: CANCELLED(1),
 DEADLINE_EXCEEDED(4), ABORTED(10), OUT_OF_RANGE(11), UNAVAILABLE(14),
@@ -16,8 +17,11 @@ throttle when the server supplies ``grpc-retry-pushback-ms`` (otherwise
 permanent — the reference's RetryInfo rule); everything else is
 permanent.
 
-Every connection, the unary :func:`grpc_call`'s and the
-:class:`ArrowStreamClient`'s, comes from ``h2.connect`` with
+The unary :func:`grpc_call` and the :class:`ArrowStreamClient` are two
+uses of one :class:`ClientStream`: a gRPC call on stream 1 of a fresh
+connection, read through ``h2.ConnectionReader``.  ``grpc_call`` sends
+one message with END_STREAM and reads to the trailers; the Arrow client
+keeps the stream open.  Every connection comes from ``h2.connect`` with
 ``TCP_NODELAY`` set, matching Go's ``net`` default under grpc-go: a
 request is a few small writes, and Nagle's algorithm holds a small
 write while an earlier one is unacknowledged, so each call would wait
@@ -27,14 +31,13 @@ for the server's delayed ACK, about 40 ms.
 from __future__ import annotations
 
 import socket
-import struct
 import urllib.parse
 
 from pyspark.sql import DataFrame
 
 from ..sources import h2
-from ..sources.hpack import HpackDecoder, HpackEncoder
-from .retry import (PermanentError, RetryConfig, RetrySender, ThrottleError,
+from ..sources.hpack import HpackEncoder
+from .retry import (PermanentError, RetryConfig, ThrottleError,
                     TransientError)
 
 _RETRY_BACKOFF = {1, 4, 10, 11, 14, 15}
@@ -55,6 +58,80 @@ class GrpcCallError(Exception):
             status, message, pushback_ms)
 
 
+class ClientStream:
+    """One gRPC call on stream 1 of a fresh HTTP/2 connection.
+
+    The constructor sends the preface, an empty SETTINGS and the request
+    HEADERS in one write; ``extra`` headers (e.g. ``grpc-encoding``,
+    call metadata) follow the standard ones.  :meth:`send` ships
+    already length-prefixed gRPC bytes; :meth:`recv_message` and
+    :meth:`finish` read the response through one
+    ``h2.ConnectionReader``, sorting header blocks into
+    ``resp_headers`` and ``trailers``.
+    """
+
+    def __init__(self, host: str, port: int, path: str, timeout_s: float,
+                 token: str | None = None, extra=()):
+        self.sock = h2.connect(host, port, timeout_s)
+        self.reader = h2.ConnectionReader(self.sock)
+        self.resp = bytearray()
+        self.resp_headers: dict[str, str] = {}
+        self.trailers: dict[str, str] = {}
+        self.ended = False
+        headers = [(":method", "POST"), (":scheme", "http"),
+                   (":path", path), (":authority", f"{host}:{port}"),
+                   ("content-type", "application/grpc"),
+                   ("te", "trailers")]
+        if token is not None:
+            headers.append(("authorization", f"Bearer {token}"))
+        headers.extend(extra)
+        try:
+            self.sock.sendall(
+                h2.PREFACE + h2.pack_frame(h2.SETTINGS, 0, 0)
+                + h2.pack_frame(h2.HEADERS, h2.FLAG_END_HEADERS, 1,
+                                HpackEncoder().encode(headers)))
+        except OSError:
+            self.sock.close()
+            raise
+
+    def send(self, framed: bytes, end: bool = False) -> None:
+        self.sock.sendall(b"".join(h2.chunk_data_frames(1, framed, end)))
+
+    def recv_message(self) -> bytes | None:
+        """The next response message; None once the stream has ended
+        without one."""
+        while (msg := h2.pop_grpc_message(self.resp)) is None:
+            if self.ended:
+                return None
+            self._pump()
+        return msg[1]
+
+    def finish(self) -> dict[str, str]:
+        """Read to the end of the response stream; -> the trailers."""
+        while not self.ended:
+            self._pump()
+        return self.trailers
+
+    def raise_for_status(self) -> None:
+        status = int(self.trailers.get("grpc-status", "2"))
+        if status != 0:
+            pb = self.trailers.get("grpc-retry-pushback-ms")
+            raise GrpcCallError(status, self.trailers.get("grpc-message", ""),
+                                int(pb) if pb is not None else None)
+
+    def _pump(self) -> None:
+        kind, _sid, val, end = self.reader.next_event()
+        if kind == h2.HEADERS:
+            (self.trailers if end or "grpc-status" in val
+             else self.resp_headers).update(val)
+        elif kind == h2.DATA:
+            self.resp += val
+        else:
+            name = "RST_STREAM" if kind == h2.RST_STREAM else "GOAWAY"
+            raise h2.H2Error(f"server sent {name}, error code {val}")
+        self.ended = end
+
+
 def grpc_call(host: str, port: int, path: str, message: bytes, *,
               token: str | None = None, compress: bool | str = False,
               metadata: dict[str, str] | None = None,
@@ -62,7 +139,7 @@ def grpc_call(host: str, port: int, path: str, message: bytes, *,
     """One unary gRPC call over a fresh HTTP/2 connection; returns the
     response message bytes or raises :class:`GrpcCallError`."""
     body = message
-    coding = None
+    extra = []
     if compress:
         from ..sources.compression import GRPC_CODINGS, encode_body
         try:
@@ -70,69 +147,17 @@ def grpc_call(host: str, port: int, path: str, message: bytes, *,
         except ValueError as e:
             raise ValueError(f"unsupported grpc compression: "
                              f"{compress}") from e
-    frame = h2.grpc_frame(body, compressed=bool(compress))
-    with h2.connect(host, port, timeout_s) as sock:
-        sock.sendall(h2.PREFACE + h2.pack_frame(h2.SETTINGS, 0, 0))
-        enc, dec = HpackEncoder(), HpackDecoder()
-        headers = [(":method", "POST"), (":scheme", "http"),
-                   (":path", path), (":authority", f"{host}:{port}"),
-                   ("content-type", "application/grpc"),
-                   ("te", "trailers")]
-        if coding is not None:
-            headers.append(("grpc-encoding", coding))
-        if token is not None:
-            headers.append(("authorization", f"Bearer {token}"))
-        if metadata:
-            # custom call metadata (lower-cased per HTTP/2), e.g. the
-            # identity headers a pluggable authenticator consumes
-            headers.extend((k.lower(), v) for k, v in metadata.items())
-        out = [h2.pack_frame(h2.HEADERS, h2.FLAG_END_HEADERS, 1,
-                             enc.encode(headers))]
-        out += h2.chunk_data_frames(1, frame, end_stream=True)
-        sock.sendall(b"".join(out))
-        resp_headers: dict[str, str] = {}
-        resp_data = bytearray()
-        frag = bytearray()
-        while True:
-            ftype, flags, sid, payload = h2.recv_frame(sock)
-            if ftype == h2.SETTINGS:
-                if not flags & h2.FLAG_ACK:
-                    sock.sendall(h2.pack_frame(h2.SETTINGS, h2.FLAG_ACK, 0))
-            elif ftype == h2.PING:
-                if not flags & h2.FLAG_ACK:
-                    sock.sendall(h2.pack_frame(
-                        h2.PING, h2.FLAG_ACK, 0, payload))
-            elif ftype == h2.GOAWAY:
-                raise h2.H2Error("server sent GOAWAY before trailers")
-            elif ftype == h2.RST_STREAM:
-                code = struct.unpack(">I", payload)[0]
-                raise h2.H2Error(f"stream reset, error code {code}")
-            elif ftype in (h2.WINDOW_UPDATE, h2.PRIORITY):
-                pass
-            elif ftype in (h2.HEADERS, h2.CONTINUATION):
-                body_ = payload
-                if ftype == h2.HEADERS:
-                    body_ = h2.strip_padding(flags, payload)
-                    if flags & h2.FLAG_PRIORITY:
-                        body_ = body_[5:]
-                frag += body_
-                if flags & h2.FLAG_END_HEADERS:
-                    resp_headers.update(dict(dec.decode(bytes(frag))))
-                    frag.clear()
-                if flags & h2.FLAG_END_STREAM:
-                    break
-            elif ftype == h2.DATA:
-                resp_data += h2.strip_padding(flags, payload)
-                if flags & h2.FLAG_END_STREAM:     # no trailers (non-gRPC)
-                    break
-            else:
-                raise h2.H2Error(f"unexpected frame type {ftype}")
-        status = int(resp_headers.get("grpc-status", "2"))
-        if status != 0:
-            pb = resp_headers.get("grpc-retry-pushback-ms")
-            raise GrpcCallError(status, resp_headers.get("grpc-message", ""),
-                                int(pb) if pb is not None else None)
-        msgs = h2.parse_grpc_frames(bytes(resp_data))
+        extra.append(("grpc-encoding", coding))
+    if metadata:
+        # custom call metadata (lower-cased per HTTP/2), e.g. the
+        # identity headers a pluggable authenticator consumes
+        extra.extend((k.lower(), v) for k, v in metadata.items())
+    call = ClientStream(host, port, path, timeout_s, token, extra)
+    with call.sock:
+        call.send(h2.grpc_frame(body, compressed=bool(compress)), end=True)
+        call.finish()
+        call.raise_for_status()
+        msgs = h2.parse_grpc_frames(call.resp)
         return msgs[0][1] if msgs else b""
 
 
@@ -170,8 +195,8 @@ def export_grpc(df: DataFrame, endpoint: str, signal: str = "traces", *,
     """Build the gRPC export stage (lazy; see the HTTP exporter's shape).
     Egress parallelism = partition count; the per-task result rows make
     the export auditable with ordinary SQL."""
-    from ..sources.otlp_pb import _SCHEMAS, _plainify, encode_request
-    from .http_exporter import RESULT_SCHEMA
+    from ..sources.otlp_pb import _SCHEMAS
+    from .http_exporter import _push_stage
     if signal not in _SCHEMAS:
         raise NotImplementedError(
             f"OTLP/gRPC export for signal {signal!r} "
@@ -182,61 +207,27 @@ def export_grpc(df: DataFrame, endpoint: str, signal: str = "traces", *,
             f"endpoint must be grpc://host:port, got {endpoint!r}")
     host, port = u.hostname, u.port or 4317
     path = _PATHS[signal]
-    schema = _SCHEMAS[signal]
     cfg = retry_config or RetryConfig()
     from ..sources.auth import resolve_client_authenticator
     auth = resolve_client_authenticator(authenticator)
 
-    def send_partition(batches):
-        import pyarrow as pa
-        rows: list[dict] = []
-        for batch in batches:
-            for rec in batch.to_pylist():
-                rows.append({f.name: _plainify(rec.get(f.name), f.dataType)
-                             for f in schema.fields})
-        n_requests = 0
-        attempts = 0
+    def make_push():
+        return lambda body: _call_with_retry_mapping(
+            host, port, path, body, token, compress, cfg.attempt_timeout_s,
+            auth)
 
-        def push(body: bytes):
-            nonlocal attempts
-            attempts += 1
-            _call_with_retry_mapping(host, port, path, body, token,
-                                     compress, cfg.attempt_timeout_s,
-                                     auth)
-
-        sender = RetrySender(push, cfg, signal=signal)
-        for i in range(0, len(rows), max_rows_per_request):
-            chunk = rows[i:i + max_rows_per_request]
-            sender.send(encode_request(chunk, signal), count=len(chunk))
-            n_requests += 1
-        if rows:
-            yield pa.RecordBatch.from_pylist(
-                [{"endpoint": endpoint, "rows_sent": len(rows),
-                  "n_requests": n_requests, "n_attempts": attempts}],
-                schema=pa.schema([
-                    pa.field("endpoint", pa.string()),
-                    pa.field("rows_sent", pa.int64()),
-                    pa.field("n_requests", pa.int32()),
-                    pa.field("n_attempts", pa.int32())]))
-
-    return df.mapInArrow(send_partition, RESULT_SCHEMA)
+    return _push_stage(df, endpoint, signal, max_rows_per_request, cfg,
+                       make_push)
 
 
 def export_grpc_now(df: DataFrame, endpoint: str, signal: str = "traces",
                     **kw) -> dict:
     """Run the export eagerly; returns audit totals."""
-    from pyspark.sql import functions as F
-    res = (export_grpc(df, endpoint, signal, **kw)
-           .agg(F.sum("rows_sent").alias("rows_sent"),
-                F.sum("n_requests").alias("n_requests"),
-                F.sum("n_attempts").alias("n_attempts"),
-                F.count(F.lit(1)).alias("n_tasks"))
-           .first())
-    return {k: (0 if res[k] is None else int(res[k]))
-            for k in ("rows_sent", "n_requests", "n_attempts", "n_tasks")}
+    from .http_exporter import _audit_totals
+    return _audit_totals(export_grpc(df, endpoint, signal, **kw))
 
 
-class ArrowStreamClient:
+class ArrowStreamClient(ClientStream):
     """Bidi OTel-Arrow stream client over the stdlib HTTP/2 stack — the
     exporter half of the fork's signature RPC in SendAndWait mode: each
     ``send_batch`` ships one BatchArrowRecords and blocks on its
@@ -257,106 +248,27 @@ class ArrowStreamClient:
 
     def __init__(self, host: str, port: int, *, path: str | None = None,
                  token: str | None = None, timeout_s: float = 10.0):
-        self.sock = h2.connect(host, port, timeout_s)
-        self.enc, self.dec = HpackEncoder(), HpackDecoder()
-        self._resp = bytearray()
-        self._frag = bytearray()
-        self.resp_headers: dict[str, str] = {}
-        self.trailers: dict[str, str] = {}
-        self.ended = False
-        self.sock.sendall(h2.PREFACE + h2.pack_frame(h2.SETTINGS, 0, 0))
-        headers = [(":method", "POST"), (":scheme", "http"),
-                   (":path", path or self.MIXED_PATH),
-                   (":authority", f"{host}:{port}"),
-                   ("content-type", "application/grpc"),
-                   ("te", "trailers")]
-        if token is not None:
-            headers.append(("authorization", f"Bearer {token}"))
-        self.sock.sendall(h2.pack_frame(
-            h2.HEADERS, h2.FLAG_END_HEADERS, 1, self.enc.encode(headers)))
+        super().__init__(host, port, path or self.MIXED_PATH, timeout_s,
+                         token)
 
     def send_batch(self, batch_id: int,
                    payloads: list[tuple[str, int, bytes]],
                    headers: bytes = b"") -> dict:
         from ..sources.arrow_service import decode_status, encode_batch
-        msg = h2.grpc_frame(encode_batch(batch_id, payloads, headers))
-        self.sock.sendall(b"".join(h2.chunk_data_frames(1, msg, False)))
-        status_msg = self._recv_message()
+        self.send(h2.grpc_frame(encode_batch(batch_id, payloads, headers)))
+        status_msg = self.recv_message()
+        if status_msg is None:
+            raise GrpcCallError(
+                int(self.trailers.get("grpc-status", "2")),
+                self.trailers.get("grpc-message", "stream ended before ack"))
         return decode_status(status_msg)
 
     def close(self) -> dict[str, str]:
         """Half-close the request direction; drain until trailers."""
-        self.sock.sendall(h2.pack_frame(
-            h2.DATA, h2.FLAG_END_STREAM, 1))
-        while not self.ended:
-            self._pump_one()
+        self.send(b"", end=True)
+        self.finish()
         self.sock.close()
         return self.trailers
-
-    # -- frame pump --------------------------------------------------------
-
-    def _recv_message(self) -> bytes:
-        while True:
-            msg = self._pop_message()
-            if msg is not None:
-                return msg
-            if self.ended:
-                raise GrpcCallError(
-                    int(self.trailers.get("grpc-status", "2")),
-                    self.trailers.get("grpc-message",
-                                      "stream ended before ack"))
-            self._pump_one()
-
-    def _pop_message(self) -> bytes | None:
-        if len(self._resp) < 5:
-            return None
-        ln = struct.unpack_from(">I", self._resp, 1)[0]
-        if len(self._resp) < 5 + ln:
-            return None
-        msg = bytes(self._resp[5:5 + ln])
-        del self._resp[:5 + ln]
-        return msg
-
-    def _pump_one(self) -> None:
-        ftype, flags, sid, payload = h2.recv_frame(self.sock)
-        if ftype == h2.SETTINGS:
-            if not flags & h2.FLAG_ACK:
-                self.sock.sendall(
-                    h2.pack_frame(h2.SETTINGS, h2.FLAG_ACK, 0))
-        elif ftype == h2.PING:
-            if not flags & h2.FLAG_ACK:
-                self.sock.sendall(
-                    h2.pack_frame(h2.PING, h2.FLAG_ACK, 0, payload))
-        elif ftype in (h2.WINDOW_UPDATE, h2.PRIORITY):
-            pass
-        elif ftype == h2.RST_STREAM:
-            code = struct.unpack(">I", payload)[0]
-            raise h2.H2Error(f"stream reset, error code {code}")
-        elif ftype == h2.GOAWAY:
-            raise h2.H2Error("server sent GOAWAY")
-        elif ftype in (h2.HEADERS, h2.CONTINUATION):
-            body = payload
-            if ftype == h2.HEADERS:
-                body = h2.strip_padding(flags, payload)
-                if flags & h2.FLAG_PRIORITY:
-                    body = body[5:]
-            self._frag += body
-            if flags & h2.FLAG_END_HEADERS:
-                block = dict(self.dec.decode(bytes(self._frag)))
-                self._frag.clear()
-                if "grpc-status" in block or flags & h2.FLAG_END_STREAM:
-                    self.trailers.update(block)
-                else:
-                    self.resp_headers.update(block)
-            if flags & h2.FLAG_END_STREAM:
-                self.ended = True
-        elif ftype == h2.DATA:
-            self._resp += h2.strip_padding(flags, payload)
-            if flags & h2.FLAG_END_STREAM:
-                self.ended = True
-        else:
-            raise h2.H2Error(f"unexpected frame type {ftype}")
-
 
 
 def export_arrow_stream(df: DataFrame, endpoint: str, *,
@@ -377,13 +289,18 @@ def export_arrow_stream(df: DataFrame, endpoint: str, *,
 
     import pyarrow as pa
 
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import (BooleanType, IntegerType, LongType,
+                                   StringType, StructField, StructType)
+
     u = urllib.parse.urlparse(endpoint)
     host, port = u.hostname, u.port
-    result_schema = pa.schema([
-        pa.field("endpoint", pa.string()),
-        pa.field("rows_sent", pa.int64()),
-        pa.field("n_batches", pa.int32()),
-        pa.field("all_acked", pa.bool_())])
+    out_schema = StructType([
+        StructField("endpoint", StringType()),
+        StructField("rows_sent", LongType()),
+        StructField("n_batches", IntegerType()),
+        StructField("all_acked", BooleanType())])
+    result_schema = to_arrow_schema(out_schema)
 
     def send_partition(batches):
         client = None
@@ -416,11 +333,4 @@ def export_arrow_stream(df: DataFrame, endpoint: str, *,
                   "n_batches": n, "all_acked": ok}],
                 schema=result_schema)
 
-    from pyspark.sql.types import (BooleanType, IntegerType, LongType,
-                                   StringType, StructField, StructType)
-    out_schema = StructType([
-        StructField("endpoint", StringType()),
-        StructField("rows_sent", LongType()),
-        StructField("n_batches", IntegerType()),
-        StructField("all_acked", BooleanType())])
     return df.mapInArrow(send_partition, out_schema)

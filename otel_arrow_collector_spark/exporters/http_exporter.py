@@ -60,6 +60,58 @@ RESULT_SCHEMA = StructType([
 ])
 
 
+def _push_stage(df: DataFrame, endpoint: str, signal: str,
+                max_rows_per_request: int, cfg: RetryConfig,
+                make_push) -> DataFrame:
+    """The executor stage both unary exporters run.  Each task builds
+    its per-request ``push(body)`` with ``make_push()`` (task-side, so
+    unpicklable state such as an SSLContext never ships), sends its
+    partition's rows ``max_rows_per_request`` at a time, each request
+    through a :class:`RetrySender`, and yields one audit row."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    from ..sources.otlp_pb import _SCHEMAS, _plainify, encode_request
+    fields = _SCHEMAS[signal].fields
+    audit_schema = to_arrow_schema(RESULT_SCHEMA)
+
+    def send_partition(batches):
+        import pyarrow as pa
+        push, attempts = make_push(), 0
+        rows = [{f.name: _plainify(rec.get(f.name), f.dataType)
+                 for f in fields}
+                for batch in batches for rec in batch.to_pylist()]
+
+        def attempt(body: bytes):
+            nonlocal attempts
+            attempts += 1
+            push(body)
+
+        sender = RetrySender(attempt, cfg, signal=signal)
+        starts = range(0, len(rows), max_rows_per_request)
+        for i in starts:
+            chunk = rows[i:i + max_rows_per_request]
+            sender.send(encode_request(chunk, signal), count=len(chunk))
+        if rows:
+            yield pa.RecordBatch.from_pylist(
+                [{"endpoint": endpoint, "rows_sent": len(rows),
+                  "n_requests": len(starts), "n_attempts": attempts}],
+                schema=audit_schema)
+
+    return df.mapInArrow(send_partition, RESULT_SCHEMA)
+
+
+def _audit_totals(stage: DataFrame) -> dict:
+    """Run an export stage eagerly; returns audit totals
+    ``{rows_sent, n_requests, n_attempts, n_tasks}``."""
+    from pyspark.sql import functions as F
+    res = stage.agg(F.sum("rows_sent").alias("rows_sent"),
+                    F.sum("n_requests").alias("n_requests"),
+                    F.sum("n_attempts").alias("n_attempts"),
+                    F.count(F.lit(1)).alias("n_tasks")).first()
+    return {k: (0 if res[k] is None else int(res[k]))
+            for k in ("rows_sent", "n_requests", "n_attempts", "n_tasks")}
+
+
 def _post_once(host: str, port: int, path: str, body: bytes,
                token: str | None, compress: bool,
                timeout_s: float, ssl_ctx=None, auth=None) -> None:
@@ -127,7 +179,7 @@ def export_http(df: DataFrame, endpoint: str, signal: str = "traces",
     paths only, so it pickles into the executor closure; the SSLContext is
     built task-side).  Required for https:// endpoints.
     """
-    from ..sources.otlp_pb import _SCHEMAS, _plainify, encode_request
+    from ..sources.otlp_pb import _SCHEMAS
     if signal not in _SCHEMAS:
         raise NotImplementedError(
             f"OTLP/HTTP export for signal {signal!r} "
@@ -143,57 +195,22 @@ def export_http(df: DataFrame, endpoint: str, signal: str = "traces",
         tls = None                           # no TLS over plain http
     host, port = u.hostname, u.port or (443 if u.scheme == "https" else 80)
     path = (u.path.rstrip("/") or "") + f"/v1/{signal}"
-    schema = _SCHEMAS[signal]
     cfg = retry_config or RetryConfig()
     from ..sources.auth import resolve_client_authenticator
     auth = resolve_client_authenticator(authenticator)
 
-    def send_partition(batches):
-        import pyarrow as pa
+    def make_push():
         ssl_ctx = tls.client_context() if tls is not None else None
-        rows: list[dict] = []
-        for batch in batches:
-            for rec in batch.to_pylist():
-                rows.append({f.name: _plainify(rec.get(f.name), f.dataType)
-                             for f in schema.fields})
-        n_requests = n_attempts = 0
-        attempts = 0
+        return lambda body: _post_once(host, port, path, body, token,
+                                       compress, cfg.attempt_timeout_s,
+                                       ssl_ctx, auth)
 
-        def push(body: bytes):
-            nonlocal attempts
-            attempts += 1
-            _post_once(host, port, path, body, token, compress,
-                       cfg.attempt_timeout_s, ssl_ctx, auth)
-
-        sender = RetrySender(push, cfg, signal=signal)
-        for i in range(0, len(rows), max_rows_per_request):
-            chunk = rows[i:i + max_rows_per_request]
-            sender.send(encode_request(chunk, signal), count=len(chunk))
-            n_requests += 1
-        n_attempts = attempts
-        if rows:
-            yield pa.RecordBatch.from_pylist(
-                [{"endpoint": endpoint, "rows_sent": len(rows),
-                  "n_requests": n_requests, "n_attempts": n_attempts}],
-                schema=pa.schema([
-                    pa.field("endpoint", pa.string()),
-                    pa.field("rows_sent", pa.int64()),
-                    pa.field("n_requests", pa.int32()),
-                    pa.field("n_attempts", pa.int32())]))
-
-    return df.mapInArrow(send_partition, RESULT_SCHEMA)
+    return _push_stage(df, endpoint, signal, max_rows_per_request, cfg,
+                       make_push)
 
 
 def export_http_now(df: DataFrame, endpoint: str, signal: str = "traces",
                     **kw) -> dict:
     """Run the export eagerly; returns audit totals
     ``{rows_sent, n_requests, n_attempts, n_tasks}``."""
-    from pyspark.sql import functions as F
-    res = (export_http(df, endpoint, signal, **kw)
-           .agg(F.sum("rows_sent").alias("rows_sent"),
-                F.sum("n_requests").alias("n_requests"),
-                F.sum("n_attempts").alias("n_attempts"),
-                F.count(F.lit(1)).alias("n_tasks"))
-           .first())
-    return {k: (0 if res[k] is None else int(res[k]))
-            for k in ("rows_sent", "n_requests", "n_attempts", "n_tasks")}
+    return _audit_totals(export_http(df, endpoint, signal, **kw))

@@ -1,8 +1,10 @@
 """Request-body compression encoders shared by the push exporters —
 the client half of configcompression (config/configcompression/
 compressionType.go): a named coding or bool sugar (True = gzip, the
-reference's default).  The capped DECODERS live in http_receiver.py;
-this module is the encode direction only.
+reference's default), plus the server's response compression.  The
+capped decoders are ``http_receiver._BODY_DECODERS``: both receivers
+share them through ``http_receiver._decompress_body``, each admitting
+only its own set of codings below.
 """
 
 from __future__ import annotations
@@ -10,13 +12,15 @@ from __future__ import annotations
 import gzip
 import zlib
 
-#: what confighttp clients may send (compressor.go registry).  NOTE:
-#: upstream confighttp clients can also SEND snappy, but the reference
-#: SERVER's decoder map (compression.go:83-123) does not accept it —
-#: this engine keeps the same asymmetry on the HTTP side and supports
-#: snappy only where the reference does (the gRPC registry).
+#: what confighttp clients may send and the HTTP receiver accepts
+#: (compressor.go registry).  NOTE: upstream confighttp clients can also
+#: SEND snappy, but the reference SERVER's decoder map
+#: (compression.go:83-123) does not accept it — this engine keeps the
+#: same asymmetry on the HTTP side and supports snappy only where the
+#: reference does (the gRPC registry).
 HTTP_CODINGS = frozenset({"gzip", "zstd", "zlib", "deflate"})
-#: what configgrpc clients may send (configgrpc.go:384-392:
+#: what configgrpc clients may send and the gRPC receiver accepts
+#: (configgrpc.go:384-392:
 #: gzip/snappy/zstd; snappy is the FRAMED stream format —
 #: go-grpc-compression wraps golang/snappy's buffered writer)
 GRPC_CODINGS = frozenset({"gzip", "zstd", "snappy"})

@@ -5,10 +5,12 @@ The reference registers three unary Export services on a grpc-go server
 from the generated service descriptors).  grpcio is not available here,
 so this server speaks the gRPC wire protocol directly over sockets:
 
-- HTTP/2 connection preface + SETTINGS exchange (``sources/h2.py``)
-- header blocks via the repo's RFC 7541 HPACK codec (``sources/hpack.py``)
-- gRPC length-prefixed messages, ``grpc-encoding: gzip`` supported with
-  the same streaming-capped inflate as the HTTP receiver
+- frames are read through ``h2.ConnectionReader``, which answers the
+  connection-level frames and returns complete header blocks and DATA
+  per stream; this module keeps only the gRPC logic on top of it
+- gRPC length-prefixed messages, de-framed by ``h2.pop_grpc_message``;
+  ``grpc-encoding`` gzip/zstd/snappy decoded by the HTTP receiver's
+  capped decoder map, restricted to ``compression.GRPC_CODINGS``
 - per-message decode-before-ack with the dependency-free pb codec
   (``sources/otlp_pb.py``), then the fsync+rename spool the HTTP receiver
   uses — so ``read_spool`` / ``stream_spool`` consume both receivers'
@@ -36,8 +38,9 @@ import struct
 import threading
 
 from . import h2
-from .hpack import HpackDecoder, HpackEncoder
-from .http_receiver import _gunzip_capped, _zstd_capped
+from .compression import GRPC_CODINGS
+from .hpack import HpackEncoder
+from .http_receiver import _decompress_body
 
 _SIGNALS = ("traces", "logs", "metrics")
 
@@ -69,14 +72,11 @@ UNAUTHENTICATED = 16
 
 
 class _Stream:
-    __slots__ = ("headers", "data", "frag", "headers_done",
-                 "arrow", "resp_started", "closed")
+    __slots__ = ("headers", "data", "arrow", "resp_started", "closed")
 
     def __init__(self):
         self.headers: dict[str, str] = {}
         self.data = bytearray()
-        self.frag = bytearray()
-        self.headers_done = False
         self.arrow = None              # ArrowStreamState once recognized
         self.resp_started = False
         self.closed = False
@@ -199,52 +199,21 @@ class OtlpGrpcReceiver:
                      h2.SETTINGS_MAX_FRAME_SIZE: h2.DEFAULT_MAX_FRAME}))
                 + h2.pack_frame(
                     h2.WINDOW_UPDATE, 0, 0, struct.pack(">I", 1 << 24)))
-            dec, enc = HpackDecoder(), HpackEncoder()
+            reader, enc = h2.ConnectionReader(sock), HpackEncoder()
             streams: dict[int, _Stream] = {}
             while True:
-                ftype, flags, sid, payload = h2.recv_frame(sock)
-                if ftype == h2.SETTINGS:
-                    if not flags & h2.FLAG_ACK:
-                        h2.parse_settings(payload)     # validate
-                        sock.sendall(h2.pack_frame(
-                            h2.SETTINGS, h2.FLAG_ACK, 0))
-                elif ftype == h2.PING:
-                    if not flags & h2.FLAG_ACK:
-                        sock.sendall(h2.pack_frame(
-                            h2.PING, h2.FLAG_ACK, 0, payload))
-                elif ftype == h2.GOAWAY:
+                kind, sid, val, end = reader.next_event()
+                if kind == h2.GOAWAY:
                     return
-                elif ftype in (h2.WINDOW_UPDATE, h2.PRIORITY,
-                               h2.RST_STREAM):
-                    if ftype == h2.RST_STREAM:
-                        streams.pop(sid, None)
-                elif ftype == h2.HEADERS:
-                    st = streams.setdefault(sid, _Stream())
-                    body = h2.strip_padding(flags, payload)
-                    if flags & h2.FLAG_PRIORITY:
-                        body = body[5:]
-                    st.frag += body
-                    if flags & h2.FLAG_END_HEADERS:
-                        st.headers = dict(dec.decode(bytes(st.frag)))
-                        st.frag.clear()
-                        st.headers_done = True
-                    if flags & h2.FLAG_END_STREAM and st.headers_done:
-                        if st.headers.get(":path", "") in ARROW_ROUTES:
-                            self._arrow_finish(sock, enc, sid, st)
-                        else:
-                            self._respond(sock, enc, sid, st)
-                        streams.pop(sid, None)
-                elif ftype == h2.CONTINUATION:
-                    st = streams.setdefault(sid, _Stream())
-                    st.frag += payload
-                    if flags & h2.FLAG_END_HEADERS:
-                        st.headers = dict(dec.decode(bytes(st.frag)))
-                        st.frag.clear()
-                        st.headers_done = True
-                elif ftype == h2.DATA:
-                    st = streams.setdefault(sid, _Stream())
-                    body = h2.strip_padding(flags, payload)
-                    st.data += body
+                if kind == h2.RST_STREAM:
+                    streams.pop(sid, None)
+                    continue
+                st = streams.setdefault(sid, _Stream())
+                if kind == h2.HEADERS:
+                    st.headers = val
+                arrow = st.headers.get(":path", "") in ARROW_ROUTES
+                if kind == h2.DATA:
+                    st.data += val
                     if len(st.data) > self.max_msg_bytes + 5:
                         self._count("refused_too_large")
                         self._trailers_only(sock, enc, sid,
@@ -252,23 +221,19 @@ class OtlpGrpcReceiver:
                                             "message too large")
                         streams.pop(sid, None)
                         continue
-                    if body:      # replenish both flow-control windows
-                        inc = struct.pack(">I", len(body))
+                    if val:       # replenish both flow-control windows
+                        inc = struct.pack(">I", len(val))
                         sock.sendall(
                             h2.pack_frame(h2.WINDOW_UPDATE, 0, 0, inc)
                             + h2.pack_frame(h2.WINDOW_UPDATE, 0, sid, inc))
-                    is_arrow = (st.headers_done and
-                                st.headers.get(":path", "") in ARROW_ROUTES)
-                    if is_arrow:
+                    if arrow:
                         self._arrow_pump(sock, enc, sid, st)
-                        if flags & h2.FLAG_END_STREAM:
-                            self._arrow_finish(sock, enc, sid, st)
-                            streams.pop(sid, None)
-                    elif flags & h2.FLAG_END_STREAM:
+                if end:
+                    if arrow:
+                        self._arrow_finish(sock, enc, sid, st)
+                    else:
                         self._respond(sock, enc, sid, st, peer)
-                        streams.pop(sid, None)
-                else:
-                    raise h2.H2Error(f"unexpected frame type {ftype}")
+                    streams.pop(sid, None)
         except h2.H2Closed:
             pass                       # client hung up between requests
         except (h2.H2Error, OSError):
@@ -330,7 +295,7 @@ class OtlpGrpcReceiver:
             self._count(f"refused_backpressure_{signal}")
             return RESOURCE_EXHAUSTED, "spool full"
         try:
-            msgs = h2.parse_grpc_frames(bytes(st.data))
+            msgs = h2.parse_grpc_frames(st.data)
         except h2.H2Error as e:
             self._count(f"refused_bad_frame_{signal}")
             return INVALID_ARGUMENT, str(e)
@@ -340,21 +305,11 @@ class OtlpGrpcReceiver:
         compressed, body = msgs[0]
         try:
             if compressed:
-                # configgrpc's compressor registry (configgrpc.go:384-392:
-                # gzip/snappy/zstd); snappy is the FRAMED stream format
-                # (go-grpc-compression wraps golang/snappy's buffered
-                # writer) — chunk CRC32C verified, cap enforced per chunk
-                enc = st.headers.get("grpc-encoding")
-                if enc == "gzip":
-                    body = _gunzip_capped(body, self.max_msg_bytes)
-                elif enc == "zstd":
-                    body = _zstd_capped(body, self.max_msg_bytes)
-                elif enc == "snappy":
-                    from .snappy import frame_decompress
-                    body = frame_decompress(body, self.max_msg_bytes)
-                else:
-                    raise ValueError("compressed message with unsupported "
-                                     f"grpc-encoding: {enc!r}")
+                # configgrpc's compressor registry (configgrpc.go:384-392);
+                # a compressed message needs a grpc-encoding to decode it
+                body = _decompress_body(
+                    st.headers.get("grpc-encoding", "identity"), body,
+                    self.max_msg_bytes, GRPC_CODINGS)
             from .otlp_pb import decode_request
             decode_request(body, signal)        # decode-before-ack
         except Exception as e:
@@ -386,9 +341,12 @@ class OtlpGrpcReceiver:
                     return
             st.arrow = asvc.ArrowStreamState(self.max_stream_bytes)
         while True:
-            msg = self._pop_grpc_message(st)
-            if msg is None:
+            popped = h2.pop_grpc_message(st.data, self.max_msg_bytes)
+            if popped is None:
                 return
+            compressed, msg = popped
+            if compressed:     # Arrow payloads carry their own compression
+                raise h2.H2Error("compressed arrow stream message")
             code, text, batch_id = OK, "", 0
             try:
                 req = asvc.decode_batch(msg)
@@ -442,24 +400,6 @@ class OtlpGrpcReceiver:
         sock.sendall(h2.pack_frame(
             h2.HEADERS, h2.FLAG_END_HEADERS | h2.FLAG_END_STREAM, sid,
             enc.encode([("grpc-status", "0")])))
-
-    def _pop_grpc_message(self, st: _Stream) -> bytes | None:
-        """Remove one complete length-prefixed gRPC message from the
-        stream buffer (compressed flag rejected — Arrow payloads carry
-        their own compression)."""
-        if len(st.data) < 5:
-            return None
-        compressed = st.data[0]
-        ln = struct.unpack_from(">I", st.data, 1)[0]
-        if ln > self.max_msg_bytes:
-            raise h2.H2Error("arrow message exceeds size cap")
-        if len(st.data) < 5 + ln:
-            return None
-        if compressed:
-            raise h2.H2Error("compressed arrow stream message")
-        msg = bytes(st.data[5:5 + ln])
-        del st.data[:5 + ln]
-        return msg
 
     def _spool_arrow(self, batch, ptype: int) -> None:
         """Persist one decoded Arrow record batch as a parquet spool

@@ -3,14 +3,23 @@
 The reference's OTLP/gRPC receiver and exporter ride on grpc-go's HTTP/2
 stack (receiver/otlpreceiver/otlp.go:93-110 registers the three Export
 services).  This container has no grpcio, so the live gRPC pair is built
-on the standard library: this module speaks the wire format (connection
-preface, frame header, SETTINGS/PING/WINDOW_UPDATE bookkeeping), and the
+on the standard library: this module speaks the wire format, and the
 repo's RFC 7541 codec (``sources/hpack.py``) compresses the header
 blocks.  Only the server/client feature set gRPC unary + client-streaming
 calls need is implemented; everything else is rejected loudly.
 
 Frame layout (RFC 7540 §4.1): 24-bit length, 8-bit type, 8-bit flags,
 31-bit stream id, payload.
+
+:class:`ConnectionReader` is the one place frames are read and
+dispatched.  It answers the connection-level frames itself (SETTINGS
+and PING acks; WINDOW_UPDATE and PRIORITY ignored), assembles header
+blocks across CONTINUATION frames with one HPACK decoder per
+connection, and hands back stream events only.  The receiver
+(``sources/grpc_receiver.py``) and the client stream that ``grpc_call``
+and ``ArrowStreamClient`` share (``exporters/grpc_exporter.py``) keep
+only their gRPC logic on top of it; :func:`pop_grpc_message` is their
+one gRPC message de-framer.
 
 Every gRPC socket, client or server side, comes from :func:`connect`,
 :func:`listen` and :func:`accept` here, and every connected one has
@@ -23,6 +32,8 @@ from __future__ import annotations
 
 import socket
 import struct
+
+from .hpack import HpackDecoder, HpackError
 
 PREFACE = b"PRI * HTTP/2.0\r\n\r\nSM\r\n\r\n"
 
@@ -129,14 +140,79 @@ def recv_frame(sock) -> tuple[int, int, int, bytes]:
 
 
 def strip_padding(flags: int, payload: bytes) -> bytes:
-    """Remove DATA/HEADERS padding (and HEADERS priority block)."""
+    """Remove DATA/HEADERS padding (§6.1, §6.2)."""
     if flags & FLAG_PADDED:
-        pad = payload[0]
-        payload = payload[1:]
-        if pad > len(payload):
+        if not payload or payload[0] >= len(payload):
             raise H2Error("padding exceeds payload")
-        payload = payload[:len(payload) - pad]
+        payload = payload[1:len(payload) - payload[0]]
     return payload
+
+
+class ConnectionReader:
+    """Reads one connection's frames and returns its stream events.
+
+    :meth:`next_event` answers SETTINGS (validated, acked) and PING
+    (acked with its payload), skips WINDOW_UPDATE and PRIORITY, and
+    returns one of
+
+    - ``(HEADERS, sid, headers_dict, end_stream)`` once a header block
+      is complete: padding and priority fields stripped, CONTINUATION
+      fragments joined, the HEADERS frame's END_STREAM carried to the
+      END_HEADERS frame (§6.2);
+    - ``(DATA, sid, unpadded_bytes, end_stream)``;
+    - ``(RST_STREAM, sid, error_code, True)``;
+    - ``(GOAWAY, last_sid, error_code, True)``.
+
+    Any frame but the block's own CONTINUATION inside an open header
+    block (§6.10), and a block HPACK cannot decode (§4.3), are
+    connection errors, raised as :class:`H2Error`.
+    """
+
+    def __init__(self, sock: socket.socket):
+        self.sock = sock
+        self._dec = HpackDecoder()
+
+    def next_event(self) -> tuple[int, int, object, bool]:
+        block: bytes | None = None
+        block_sid, end = 0, False
+        while True:
+            ftype, flags, sid, payload = recv_frame(self.sock)
+            if block is not None and (ftype != CONTINUATION
+                                      or sid != block_sid):
+                raise H2Error(f"frame type {ftype} inside a header block")
+            if ftype == DATA:
+                return (DATA, sid, strip_padding(flags, payload),
+                        bool(flags & FLAG_END_STREAM))
+            if ftype == HEADERS:
+                frag = strip_padding(flags, payload)
+                block = frag[5:] if flags & FLAG_PRIORITY else frag
+                block_sid, end = sid, bool(flags & FLAG_END_STREAM)
+            elif ftype == CONTINUATION:
+                if block is None:
+                    raise H2Error("CONTINUATION outside a header block")
+                block += payload
+            elif ftype == SETTINGS:
+                if not flags & FLAG_ACK:
+                    parse_settings(payload)            # validate
+                    self.sock.sendall(pack_frame(SETTINGS, FLAG_ACK, 0))
+            elif ftype == PING:
+                if not flags & FLAG_ACK:
+                    self.sock.sendall(pack_frame(PING, FLAG_ACK, 0,
+                                                 payload))
+            elif ftype == RST_STREAM:
+                return RST_STREAM, sid, int.from_bytes(payload, "big"), True
+            elif ftype == GOAWAY:
+                return (GOAWAY, int.from_bytes(payload[:4], "big")
+                        & 0x7FFFFFFF, int.from_bytes(payload[4:8], "big"),
+                        True)
+            elif ftype not in (WINDOW_UPDATE, PRIORITY):
+                raise H2Error(f"unexpected frame type {ftype}")
+            if block is not None and flags & FLAG_END_HEADERS:
+                try:
+                    headers = dict(self._dec.decode(block))
+                except HpackError as e:   # COMPRESSION_ERROR (§4.3)
+                    raise H2Error(f"bad header block: {e}") from e
+                return HEADERS, block_sid, headers, end
 
 
 def grpc_frame(message: bytes, compressed: bool = False) -> bytes:
@@ -145,19 +221,30 @@ def grpc_frame(message: bytes, compressed: bool = False) -> bytes:
         ">I", len(message)) + message
 
 
+def pop_grpc_message(buf: bytearray, cap: int | None = None
+                     ) -> tuple[bool, bytes] | None:
+    """Remove one complete length-prefixed message from the front of
+    ``buf``: -> (compressed, message), or None while it is incomplete.
+    A declared length over ``cap`` raises before the body arrives."""
+    if len(buf) < 5:
+        return None
+    ln = int.from_bytes(buf[1:5], "big")
+    if cap is not None and ln > cap:
+        raise H2Error(f"gRPC message of {ln} bytes exceeds size cap")
+    if len(buf) < 5 + ln:
+        return None
+    msg = (buf[0] == 1, bytes(buf[5:5 + ln]))
+    del buf[:5 + ln]
+    return msg
+
+
 def parse_grpc_frames(buf: bytes) -> list[tuple[bool, bytes]]:
     """-> [(compressed, message)] — raises on truncation."""
-    out = []
-    pos = 0
-    while pos < len(buf):
-        if pos + 5 > len(buf):
-            raise H2Error("truncated gRPC frame header")
-        compressed = buf[pos] == 1
-        ln = int.from_bytes(buf[pos + 1:pos + 5], "big")
-        if pos + 5 + ln > len(buf):
-            raise H2Error("truncated gRPC message body")
-        out.append((compressed, buf[pos + 5:pos + 5 + ln]))
-        pos += 5 + ln
+    buf, out = bytearray(buf), []
+    while (msg := pop_grpc_message(buf)) is not None:
+        out.append(msg)
+    if buf:
+        raise H2Error("truncated gRPC message")
     return out
 
 

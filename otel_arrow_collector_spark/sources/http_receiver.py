@@ -42,6 +42,9 @@ import threading
 import time
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
+from .compression import HTTP_CODINGS
+from .snappy import frame_decompress
+
 _SIGNALS = ("traces", "logs", "metrics")
 
 #: URL path -> signal (otlp.go registers exactly these three).
@@ -131,24 +134,29 @@ def _zstd_capped(data: bytes, cap: int) -> bytes:
     return bytes(pa.Codec("zstd").decompress(data, size))
 
 
-#: Content-Encoding -> capped decoder — the reference decompressor's
-#: decoder map (confighttp/compression.go:83-123: "" none, gzip, zstd,
-#: zlib, deflate=zlib); anything else is 400 "unsupported".
+#: coding -> capped decoder, for both receivers: the reference
+#: decompressor's decoder map (confighttp/compression.go:83-123: gzip,
+#: zstd, zlib, deflate=zlib) plus configgrpc's framed snappy
+#: (configgrpc.go:384-392; chunk CRC32C verified, cap enforced per
+#: chunk).  Each receiver admits only its own set of codings.
 _BODY_DECODERS = {
     "gzip": _gunzip_capped,
     "zstd": _zstd_capped,
     "zlib": lambda b, cap: _inflate_capped(b, cap, wbits=15),
     "deflate": lambda b, cap: _inflate_capped(b, cap, wbits=15),
+    "snappy": frame_decompress,
 }
 
 
-def _decompress_body(encoding: str, body: bytes, cap: int) -> bytes:
+def _decompress_body(encoding: str, body: bytes, cap: int,
+                     allowed: frozenset) -> bytes:
+    """Decode ``body`` capped at ``cap`` bytes; an empty ``encoding``
+    is identity, one outside ``allowed`` is "unsupported"."""
     if not encoding:
         return body
-    dec = _BODY_DECODERS.get(encoding)
-    if dec is None:
-        raise ValueError(f"unsupported Content-Encoding: {encoding}")
-    return dec(body, cap)
+    if encoding not in allowed:
+        raise ValueError(f"unsupported encoding: {encoding}")
+    return _BODY_DECODERS[encoding](body, cap)
 
 
 class OtlpHttpReceiver:
@@ -323,7 +331,7 @@ class OtlpHttpReceiver:
             body = h.rfile.read(n)
             body = _decompress_body(
                 h.headers.get("Content-Encoding", "").lower(),
-                body, self.max_body_bytes)
+                body, self.max_body_bytes, HTTP_CODINGS)
             payload = self._validate(body, signal, wire)
         except Exception as e:                   # malformed -> 400, no spool
             self._count(f"refused_bad_payload_{signal}")

@@ -15,7 +15,8 @@ import pytest
 
 from otel_arrow_collector_spark import plan_tree
 from otel_arrow_collector_spark.exporters.grpc_exporter import (
-    _PATHS, GrpcCallError, export_grpc_now, grpc_call)
+    _PATHS, ArrowStreamClient, ClientStream, GrpcCallError, export_grpc_now,
+    grpc_call)
 from otel_arrow_collector_spark.exporters.retry import RetryConfig
 from otel_arrow_collector_spark.model import generate_traces
 from otel_arrow_collector_spark.sources import h2
@@ -236,33 +237,12 @@ def test_every_grpc_socket_has_nodelay(rcv, monkeypatch):
 
 def test_grpc_receiver_rejects_two_messages_on_unary(spark, rcv):
     """Two length-prefixed messages on a unary call -> INVALID_ARGUMENT
-    (hand-built DATA body; the client API can't express this)."""
-    import socket as _socket
-    from otel_arrow_collector_spark.sources.hpack import (HpackDecoder,
-                                                          HpackEncoder)
+    (pre-framed DATA body; grpc_call can't express this)."""
     body, _ = _pb_body(spark, 1)
-    double = h2.grpc_frame(body) + h2.grpc_frame(body)
-    with _socket.create_connection((rcv.host, rcv._port), timeout=10) as s:
-        s.sendall(h2.PREFACE + h2.pack_frame(h2.SETTINGS, 0, 0))
-        enc, dec = HpackEncoder(), HpackDecoder()
-        s.sendall(h2.pack_frame(
-            h2.HEADERS, h2.FLAG_END_HEADERS, 1,
-            enc.encode([(":method", "POST"), (":scheme", "http"),
-                        (":path", _PATHS["traces"]),
-                        (":authority", "t"),
-                        ("content-type", "application/grpc"),
-                        ("te", "trailers")])))
-        for fr in h2.chunk_data_frames(1, double, end_stream=True):
-            s.sendall(fr)
-        status = None
-        while status is None:
-            ftype, flags, sid, payload = h2.recv_frame(s)
-            if ftype == h2.SETTINGS and not flags & h2.FLAG_ACK:
-                s.sendall(h2.pack_frame(h2.SETTINGS, h2.FLAG_ACK, 0))
-            elif ftype == h2.HEADERS:
-                hdrs = dict(dec.decode(h2.strip_padding(flags, payload)))
-                status = hdrs.get("grpc-status", status)
-    assert int(status) == 3                # INVALID_ARGUMENT
+    call = ClientStream(rcv.host, rcv._port, _PATHS["traces"], 10)
+    with call.sock:
+        call.send(h2.grpc_frame(body) + h2.grpc_frame(body), end=True)
+        assert int(call.finish()["grpc-status"]) == 3   # INVALID_ARGUMENT
 
 
 def test_grpc_pipeline_kinds_end_to_end(spark, tmp_path, rcv):
@@ -845,48 +825,215 @@ def _raw_call_with_encoding(rcv, path, compressed_body, coding,
     helper itself refuses unknown codings, which is also pinned here;
     ``client_refuses=False`` for codings the client DOES support when
     the point is sending a hand-corrupted body)."""
-    from otel_arrow_collector_spark.exporters.grpc_exporter import grpc_call
     if client_refuses:
         with pytest.raises(ValueError, match="unsupported grpc compression"):
             grpc_call(rcv.host, rcv._port, path, b"", compress=coding)
-    # drive the wire directly via a monkeypatched coding: simplest is the
-    # low-level frame send mirroring grpc_call with the coding header
-    import socket as _socket
-    import struct as _struct
-    from otel_arrow_collector_spark.sources import h2
-    from otel_arrow_collector_spark.sources.hpack import (HpackDecoder,
-                                                          HpackEncoder)
-    frame = h2.grpc_frame(compressed_body, compressed=True)
-    with _socket.create_connection((rcv.host, rcv._port), timeout=10) as s:
-        s.sendall(h2.PREFACE + h2.pack_frame(h2.SETTINGS, 0, 0))
-        enc, dec = HpackEncoder(), HpackDecoder()
-        headers = [(":method", "POST"), (":scheme", "http"),
-                   (":path", path),
-                   (":authority", f"{rcv.host}:{rcv._port}"),
-                   ("content-type", "application/grpc"),
-                   ("te", "trailers"), ("grpc-encoding", coding)]
-        out = [h2.pack_frame(h2.HEADERS, h2.FLAG_END_HEADERS, 1,
-                             enc.encode(headers))]
-        out += h2.chunk_data_frames(1, frame, end_stream=True)
-        s.sendall(b"".join(out))
-        resp_headers = {}
-        frag = bytearray()
+    call = ClientStream(rcv.host, rcv._port, path, 10,
+                        extra=[("grpc-encoding", coding)])
+    with call.sock:
+        call.send(h2.grpc_frame(compressed_body, compressed=True), end=True)
+        call.finish()
+        call.raise_for_status()
+
+
+# --- the one HTTP/2 connection reader (h2.ConnectionReader) ----------------
+
+def _split_block(sid, block):
+    """One header block as HEADERS (carrying END_STREAM, not END_HEADERS)
+    plus a CONTINUATION that ends it (RFC 7540 §6.2)."""
+    return (h2.pack_frame(h2.HEADERS, h2.FLAG_END_STREAM, sid, block[:1])
+            + h2.pack_frame(h2.CONTINUATION, h2.FLAG_END_HEADERS, sid,
+                            block[1:]))
+
+
+def _fake_server(reply: bytes):
+    """A one-connection server: it reads the request up to its END_STREAM
+    DATA frame, sends ``reply``, then waits for the client to hang up."""
+    import threading
+    srv = h2.listen("127.0.0.1", 0)
+
+    def serve():
+        with srv, h2.accept(srv) as conn:
+            conn.settimeout(10)
+            assert h2.recv_exact(conn, len(h2.PREFACE)) == h2.PREFACE
+            while True:
+                ftype, flags, _sid, _payload = h2.recv_frame(conn)
+                if ftype == h2.DATA and flags & h2.FLAG_END_STREAM:
+                    break
+            conn.sendall(reply)
+            try:
+                while conn.recv(1 << 16):
+                    pass
+            except OSError:
+                pass
+
+    t = threading.Thread(target=serve, daemon=True)
+    t.start()
+    return srv.getsockname()[1], t
+
+
+def test_grpc_call_reads_trailers_split_across_continuation():
+    """Trailers as HEADERS(END_STREAM) + CONTINUATION(END_HEADERS): the
+    call ends at END_HEADERS, with the trailers decoded."""
+    from otel_arrow_collector_spark.sources.hpack import HpackEncoder
+    enc = HpackEncoder()
+    head = enc.encode([(":status", "200"),
+                       ("content-type", "application/grpc")])
+    trailers = enc.encode([("grpc-status", "0"), ("grpc-message", "")])
+    port, t = _fake_server(
+        h2.pack_frame(h2.HEADERS, h2.FLAG_END_HEADERS, 1, head)
+        + h2.pack_frame(h2.DATA, 0, 1, h2.grpc_frame(b"pong"))
+        + _split_block(1, trailers))
+    assert grpc_call("127.0.0.1", port, "/x.Y/Z", b"ping",
+                     timeout_s=5) == b"pong"
+    t.join(5)
+    assert not t.is_alive()
+
+
+def test_arrow_close_reads_split_trailers():
+    """A trailers-only reply split across CONTINUATION: close() returns
+    the decoded trailers, not an empty dict."""
+    from otel_arrow_collector_spark.sources.hpack import HpackEncoder
+    block = HpackEncoder().encode([(":status", "200"),
+                                   ("content-type", "application/grpc"),
+                                   ("grpc-status", "0")])
+    port, t = _fake_server(_split_block(1, block))
+    c = ArrowStreamClient("127.0.0.1", port, timeout_s=5)
+    assert c.close()["grpc-status"] == "0"
+    t.join(5)
+    assert not t.is_alive()
+
+
+def _raw_conn(rcv, frames: bytes):
+    """A client connection to ``rcv`` that has sent the preface, an empty
+    SETTINGS and ``frames``; -> (socket, reader)."""
+    sock = h2.connect(rcv.host, rcv._port, 5)
+    sock.sendall(h2.PREFACE + h2.pack_frame(h2.SETTINGS, 0, 0) + frames)
+    return sock, h2.ConnectionReader(sock)
+
+
+def _request_block(path):
+    from otel_arrow_collector_spark.sources.hpack import HpackEncoder
+    return HpackEncoder().encode([
+        (":method", "POST"), (":scheme", "http"), (":path", path),
+        (":authority", "t"), ("content-type", "application/grpc"),
+        ("te", "trailers")])
+
+
+def test_receiver_answers_split_headers_with_end_stream(rcv):
+    """ArrowStream request headers as HEADERS(END_STREAM) + CONTINUATION:
+    the receiver sees the half-close and answers with OK trailers."""
+    sock, reader = _raw_conn(
+        rcv, _split_block(1, _request_block(ArrowStreamClient.MIXED_PATH)))
+    with sock:
+        kind, sid, hdrs, end = reader.next_event()
+    assert (kind, sid, end) == (h2.HEADERS, 1, True)
+    assert hdrs["grpc-status"] == "0"
+
+
+def test_receiver_rst_stream_drops_stream_and_keeps_serving(rcv):
+    """RST_STREAM drops a half-sent stream; the next stream on the same
+    connection is answered."""
+    frames = (h2.pack_frame(h2.HEADERS, h2.FLAG_END_HEADERS, 1,
+                            _request_block(_PATHS["traces"]))
+              + h2.pack_frame(h2.DATA, 0, 1, b"\x00\x00\x00")
+              + h2.pack_frame(h2.RST_STREAM, 0, 1, struct.pack(">I", 8))
+              + h2.pack_frame(h2.HEADERS, h2.FLAG_END_HEADERS, 3,
+                              _request_block("/foo.Bar/Baz"))
+              + h2.pack_frame(h2.DATA, h2.FLAG_END_STREAM, 3,
+                              h2.grpc_frame(b"")))
+    sock, reader = _raw_conn(rcv, frames)
+    with sock:
         while True:
-            ftype, flags, sid, payload = h2.recv_frame(s)
-            if ftype == h2.SETTINGS and not flags & h2.FLAG_ACK:
-                s.sendall(h2.pack_frame(h2.SETTINGS, h2.FLAG_ACK, 0))
-            elif ftype in (h2.HEADERS, h2.CONTINUATION):
-                body_ = payload
-                if ftype == h2.HEADERS:
-                    body_ = h2.strip_padding(flags, payload)
-                frag += body_
-                if flags & h2.FLAG_END_HEADERS:
-                    resp_headers.update(dict(dec.decode(bytes(frag))))
-                    frag.clear()
-                if flags & h2.FLAG_END_STREAM:
-                    break
-            elif ftype == h2.DATA:
-                if flags & h2.FLAG_END_STREAM:
-                    break
-    status = int(resp_headers.get("grpc-status", "2"))
-    raise GrpcCallError(status, resp_headers.get("grpc-message", ""))
+            kind, sid, hdrs, end = reader.next_event()
+            assert sid == 3
+            if end:
+                break
+    assert hdrs["grpc-status"] == "12"     # UNIMPLEMENTED, stream 3 only
+    assert "conn_error" not in rcv.counters
+
+
+def test_receiver_goaway_ends_connection(rcv):
+    sock, _ = _raw_conn(rcv, h2.pack_frame(h2.GOAWAY, 0, 0, bytes(8)))
+    with sock, pytest.raises(h2.H2Closed):
+        while True:                        # SETTINGS, its ack, then EOF
+            h2.recv_frame(sock)
+    assert "conn_error" not in rcv.counters
+
+
+def _reader_pair():
+    import socket as _socket
+    a, b = _socket.socketpair()
+    a.settimeout(5)
+    b.settimeout(5)
+    return a, h2.ConnectionReader(b)
+
+
+def test_reader_acks_ping_and_settings():
+    peer, reader = _reader_pair()
+    with peer, reader.sock:
+        peer.sendall(h2.pack_frame(h2.PING, 0, 0, b"12345678")
+                     + h2.pack_frame(h2.SETTINGS, 0, 0, h2.settings_payload(
+                         {h2.SETTINGS_MAX_FRAME_SIZE: 1 << 14}))
+                     + h2.pack_frame(h2.WINDOW_UPDATE, 0, 0,
+                                     struct.pack(">I", 1))
+                     + h2.pack_frame(h2.DATA, h2.FLAG_END_STREAM, 1, b"x"))
+        assert reader.next_event() == (h2.DATA, 1, b"x", True)
+        assert h2.recv_frame(peer) == (h2.PING, h2.FLAG_ACK, 0, b"12345678")
+        assert h2.recv_frame(peer) == (h2.SETTINGS, h2.FLAG_ACK, 0, b"")
+
+
+def test_reader_strips_padding_and_priority():
+    from otel_arrow_collector_spark.sources.hpack import HpackEncoder
+    block = HpackEncoder().encode([(":path", "/a")])
+    prio = struct.pack(">IB", 0, 15)       # stream dependency + weight
+    peer, reader = _reader_pair()
+    with peer, reader.sock:
+        peer.sendall(
+            h2.pack_frame(h2.HEADERS, h2.FLAG_PADDED | h2.FLAG_PRIORITY
+                          | h2.FLAG_END_HEADERS, 5,
+                          b"\x03" + prio + block + b"\x00" * 3)
+            + h2.pack_frame(h2.DATA, h2.FLAG_PADDED | h2.FLAG_END_STREAM, 5,
+                            b"\x02abc\x00\x00"))
+        assert reader.next_event() == (h2.HEADERS, 5, {":path": "/a"},
+                                       False)
+        assert reader.next_event() == (h2.DATA, 5, b"abc", True)
+
+
+def test_reader_rejects_frame_inside_header_block():
+    peer, reader = _reader_pair()
+    with peer, reader.sock:
+        peer.sendall(h2.pack_frame(h2.HEADERS, 0, 1, b"\x82")
+                     + h2.pack_frame(h2.DATA, 0, 1, b"x"))
+        with pytest.raises(h2.H2Error, match="inside a header block"):
+            reader.next_event()
+
+
+def test_receiver_counts_undecodable_header_block(rcv):
+    """An HPACK error ends the connection as a counted connection error
+    (§4.3), not as an exception escaping the serving thread."""
+    sock, _ = _raw_conn(rcv, h2.pack_frame(h2.HEADERS, h2.FLAG_END_HEADERS,
+                                           1, b"\x80"))  # index 0
+    with sock, pytest.raises(h2.H2Closed):
+        while True:
+            h2.recv_frame(sock)
+    assert rcv.counters["conn_error"] == 1   # counted before the close
+
+
+def test_reader_returns_reset_and_goaway():
+    peer, reader = _reader_pair()
+    with peer, reader.sock:
+        peer.sendall(h2.pack_frame(h2.RST_STREAM, 0, 3, struct.pack(">I", 8))
+                     + h2.pack_frame(h2.GOAWAY, 0, 0,
+                                     struct.pack(">II", 3, 0)))
+        assert reader.next_event() == (h2.RST_STREAM, 3, 8, True)
+        assert reader.next_event() == (h2.GOAWAY, 3, 0, True)
+
+
+def test_pop_grpc_message_caps_and_waits_for_whole_message():
+    buf = bytearray(h2.grpc_frame(b"abc") + h2.grpc_frame(b"de")[:4])
+    assert h2.pop_grpc_message(buf) == (False, b"abc")
+    assert h2.pop_grpc_message(buf) is None        # incomplete: kept
+    assert len(buf) == 4
+    with pytest.raises(h2.H2Error, match="size cap"):
+        h2.pop_grpc_message(bytearray(h2.grpc_frame(b"abcd")), cap=3)

@@ -368,6 +368,24 @@ def test_http_all_reference_content_encodings(spark, rcv):
     assert status == 400 and b"unsupported" in resp
 
 
+def test_http_refuses_snappy_that_grpc_accepts(rcv):
+    """One capped decoder map serves both receivers, each admitting its
+    own codings: snappy is gRPC-only, as in the reference's servers."""
+    from otel_arrow_collector_spark.sources.compression import (
+        GRPC_CODINGS, HTTP_CODINGS)
+    from otel_arrow_collector_spark.sources.http_receiver import \
+        _decompress_body
+    from otel_arrow_collector_spark.sources.snappy import frame_compress
+    blob = frame_compress(b"payload")
+    assert _decompress_body("snappy", blob, 1 << 10, GRPC_CODINGS) == \
+        b"payload"
+    with pytest.raises(ValueError, match="unsupported"):
+        _decompress_body("snappy", blob, 1 << 10, HTTP_CODINGS)
+    status, resp = _post(rcv, "/v1/traces", blob, "application/x-protobuf",
+                         headers={"Content-Encoding": "snappy"})
+    assert status == 400 and b"unsupported" in resp
+
+
 def test_http_zstd_bomb_and_sizeless_frames(spark, rcv):
     """The zstd cap is enforced from the FRAME HEADER (RFC 8878
     Frame_Content_Size) before any allocation when the size is present;
