@@ -70,16 +70,14 @@ def _push_stage(df: DataFrame, endpoint: str, signal: str,
     through a :class:`RetrySender`, and yields one audit row."""
     from pyspark.sql.pandas.types import to_arrow_schema
 
-    from ..sources.otlp_pb import _SCHEMAS, _plainify, encode_request
-    fields = _SCHEMAS[signal].fields
+    from ..sources.otlp_pb import _SCHEMAS, batch_to_rows, encode_request
+    names = _SCHEMAS[signal].names
     audit_schema = to_arrow_schema(RESULT_SCHEMA)
 
     def send_partition(batches):
         import pyarrow as pa
         push, attempts = make_push(), 0
-        rows = [{f.name: _plainify(rec.get(f.name), f.dataType)
-                 for f in fields}
-                for batch in batches for rec in batch.to_pylist()]
+        rows = [r for batch in batches for r in batch_to_rows(batch, names)]
 
         def attempt(body: bytes):
             nonlocal attempts

@@ -72,13 +72,20 @@ def plan_checkpoint(df):
     executor-loss stance shared with the CC loop; else
     ``localCheckpoint(eager=True)`` (single-box default, block-manager
     storage)."""
+    if _reliable(df):
+        return df.checkpoint(eager=True)
+    return df.localCheckpoint(eager=True)
+
+
+def _reliable(df) -> bool:
+    """Whether checkpoints of ``df`` are reliable: a checkpoint dir is
+    set on the context, or $SPARK_GRAFT_CHECKPOINT_DIR names one (then
+    set here)."""
     sc = df.sparkSession.sparkContext
     want = os.environ.get(CHECKPOINT_DIR_ENV)
     if want and sc.getCheckpointDir() is None:
         sc.setCheckpointDir(want)
-    if sc.getCheckpointDir() is not None:
-        return df.checkpoint(eager=True)
-    return df.localCheckpoint(eager=True)
+    return sc.getCheckpointDir() is not None
 
 
 def _free_checkpoint(df) -> None:
@@ -109,6 +116,12 @@ def materialized(df):
     pins).  Net plan: InMemoryTableScan -> InMemoryRelation -> Scan
     ExistingRDD, constant-sized, with real cache stats.
 
+    One pass: the local checkpoint is taken lazily and persisted, and
+    one ``toRdd().count()`` job fills the checkpoint blocks and the
+    columnar cache together (an eager checkpoint job followed by a
+    ``count()`` that rescans it costs three more jobs on a one-shuffle
+    aggregate).  A reliable checkpoint is still written eagerly first.
+
     Storage discipline: once the columnar cache on top is built, the
     checkpoint RDD's own blocks are released — otherwise every memo
     holds the data TWICE (localCheckpoint row blocks + InMemoryRelation
@@ -119,8 +132,12 @@ def materialized(df):
     (local mode) — and under $SPARK_GRAFT_CHECKPOINT_DIR a recompute
     reads the reliable checkpoint files anyway.  The input's own cache
     marker (if any) is released too."""
-    ck = plan_checkpoint(df).persist()
-    ck.count()
+    if _reliable(df):
+        ck = plan_checkpoint(df).persist()
+        ck.count()
+    else:
+        ck = df.localCheckpoint(eager=False).persist()
+        ck._jdf.queryExecution().toRdd().count()
     _free_checkpoint(ck)
     try:
         df.unpersist(False)

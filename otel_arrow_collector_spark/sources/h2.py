@@ -6,20 +6,22 @@ services).  This container has no grpcio, so the live gRPC pair is built
 on the standard library: this module speaks the wire format, and the
 repo's RFC 7541 codec (``sources/hpack.py``) compresses the header
 blocks.  Only the server/client feature set gRPC unary + client-streaming
-calls need is implemented; everything else is rejected loudly.
+calls need is implemented; everything else (server push, frames over
+16384 bytes) is rejected loudly, and frame types RFC 7540 does not
+define are ignored, as it requires.
 
 Frame layout (RFC 7540 §4.1): 24-bit length, 8-bit type, 8-bit flags,
 31-bit stream id, payload.
 
 :class:`ConnectionReader` is the one place frames are read and
 dispatched.  It answers the connection-level frames itself (SETTINGS
-and PING acks; WINDOW_UPDATE and PRIORITY ignored), assembles header
-blocks across CONTINUATION frames with one HPACK decoder per
-connection, and hands back stream events only.  The receiver
-(``sources/grpc_receiver.py``) and the client stream that ``grpc_call``
-and ``ArrowStreamClient`` share (``exporters/grpc_exporter.py``) keep
-only their gRPC logic on top of it; :func:`pop_grpc_message` is their
-one gRPC message de-framer.
+and PING acks; WINDOW_UPDATE, PRIORITY and unknown frame types
+ignored), assembles header blocks across CONTINUATION frames with one
+HPACK decoder per connection, and hands back stream events only.  The
+receiver (``sources/grpc_receiver.py``) and the client stream that
+``grpc_call`` and ``ArrowStreamClient`` share
+(``exporters/grpc_exporter.py``) keep only their gRPC logic on top of
+it; :func:`pop_grpc_message` is their one gRPC message de-framer.
 
 Every gRPC socket, client or server side, comes from :func:`connect`,
 :func:`listen` and :func:`accept` here, and every connected one has
@@ -130,9 +132,15 @@ def recv_exact(sock, n: int, at_boundary: bool = False) -> bytes:
 
 
 def recv_frame(sock) -> tuple[int, int, int, bytes]:
-    """-> (type, flags, stream_id, payload)."""
+    """-> (type, flags, stream_id, payload).  A frame longer than
+    :data:`DEFAULT_MAX_FRAME`, the SETTINGS_MAX_FRAME_SIZE every endpoint
+    here advertises, is a FRAME_SIZE_ERROR (§4.2), raised before its
+    payload is read."""
     hdr = recv_exact(sock, 9, at_boundary=True)
     length = int.from_bytes(hdr[:3], "big")
+    if length > DEFAULT_MAX_FRAME:
+        raise H2Error(f"FRAME_SIZE_ERROR: {length}-byte frame exceeds "
+                      f"SETTINGS_MAX_FRAME_SIZE {DEFAULT_MAX_FRAME}")
     ftype, flags = hdr[3], hdr[4]
     stream_id = int.from_bytes(hdr[5:9], "big") & 0x7FFFFFFF
     payload = recv_exact(sock, length) if length else b""
@@ -152,8 +160,8 @@ class ConnectionReader:
     """Reads one connection's frames and returns its stream events.
 
     :meth:`next_event` answers SETTINGS (validated, acked) and PING
-    (acked with its payload), skips WINDOW_UPDATE and PRIORITY, and
-    returns one of
+    (acked with its payload), skips WINDOW_UPDATE, PRIORITY and frame
+    types it does not know (§4.1, §5.5), and returns one of
 
     - ``(HEADERS, sid, headers_dict, end_stream)`` once a header block
       is complete: padding and priority fields stripped, CONTINUATION
@@ -205,8 +213,8 @@ class ConnectionReader:
                 return (GOAWAY, int.from_bytes(payload[:4], "big")
                         & 0x7FFFFFFF, int.from_bytes(payload[4:8], "big"),
                         True)
-            elif ftype not in (WINDOW_UPDATE, PRIORITY):
-                raise H2Error(f"unexpected frame type {ftype}")
+            elif ftype == PUSH_PROMISE:     # push is never enabled
+                raise H2Error("unexpected PUSH_PROMISE")
             if block is not None and flags & FLAG_END_HEADERS:
                 try:
                     headers = dict(self._dec.decode(block))

@@ -12,16 +12,20 @@ Spark integration (the 100 TB stance):
   executors; decode runs inside ``mapInArrow`` — an Arrow-batched stage
   (Python touches data only at file granularity; rows travel back to the
   JVM as Arrow record batches, not pickled Row objects) — and rows land
-  in the engine's flattened row model (model/telemetry.py §1.5).
+  in the engine's flattened row model (model/telemetry.py §1.5).  The
+  decoded row dicts become one Arrow batch per input batch through
+  :func:`rows_to_batch`, column by column.
   ``mapInArrow`` (not ``mapInPandas``) is deliberate: pandas promotes any
   nullable int64 column to float64, silently corrupting uint64-nanosecond
   timestamps and int values beyond 2**53; Arrow record batches keep exact
   Python ints with null distinct from NaN, matching the reference's
   uint64-nanos pdata model (pdata/pcommon/timestamp.go:15).
 - write: rows are grouped per partition inside ``mapInArrow`` (Arrow
-  transfer in, ``RecordBatch.to_pylist`` — exact ints, NaN doubles kept)
-  and serialized to one request file per partition, so
-  encode parallelism tracks data volume; file count = partition count.
+  transfer in, read into the encoder's row dicts by
+  :func:`batch_to_rows` through each column's flat child arrays — exact
+  ints, NaN doubles kept) and serialized to one request file per
+  partition, so encode parallelism tracks data volume; file count =
+  partition count.
   The target directory MUST be on a filesystem shared by executors and
   driver (NFS/fuse/local-mode); the driver verifies every reported file
   is visible after the job and raises ``RuntimeError`` otherwise — no
@@ -39,7 +43,7 @@ import json
 import struct as _struct
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.types import ArrayType, MapType, StructType
+from pyspark.sql.types import StructType
 
 from ..model.telemetry import LOG_SCHEMA, METRIC_POINT_SCHEMA, SPAN_SCHEMA
 
@@ -883,36 +887,93 @@ def _decode_request_inner(payload: bytes, signal: str) -> list[dict]:
 
 
 # ---------------------------------------------------------------------------
+# Arrow <-> row bridge: the one conversion between Spark's Arrow batches
+# and the row dicts the codec reads and writes
+# ---------------------------------------------------------------------------
+
+def batch_to_rows(batch, names) -> list[dict]:
+    """Arrow record batch -> plain row dicts for :func:`encode_request`:
+    one dict per row over ``names`` (a column the batch lacks reads as
+    None), maps as dicts in entry order, lists as lists, structs as
+    dicts, nulls as None and NaN doubles as NaN.
+
+    Column by column: each nested column is read once through its flat
+    child arrays (offsets plus values), and only the final per-row
+    dicts, lists and maps are assembled in Python."""
+    n = batch.num_rows
+    have = set(batch.schema.names)
+    cols = [_py_values(batch.column(nm)) if nm in have else [None] * n
+            for nm in names]
+    return [dict(zip(names, row)) for row in zip(*cols)]
+
+
+def _py_values(arr) -> list:
+    """One Arrow array -> its Python values (see :func:`batch_to_rows`)."""
+    import numpy as np
+    import pyarrow as pa
+    n = len(arr)
+    if arr.null_count == n:
+        # also every zero-length array: Spark ships the zero-length child
+        # of a list column that is null or empty in every row with
+        # offsets that read as garbage, so they must not be read
+        return [None] * n
+    t = arr.type
+    if pa.types.is_map(t) or pa.types.is_list(t):
+        off = arr.offsets.to_numpy()
+        lo, hi = int(off[0]), int(off[-1])
+        off = (off - lo).tolist()
+        spans = zip(off, off[1:])
+        if pa.types.is_map(t):
+            keys = _py_values(arr.keys.slice(lo, hi - lo))
+            items = _py_values(arr.items.slice(lo, hi - lo))
+            out = [dict(zip(keys[a:b], items[a:b])) for a, b in spans]
+        else:
+            vals = _py_values(arr.values.slice(lo, hi - lo))
+            out = [vals[a:b] for a, b in spans]
+    elif pa.types.is_struct(t):
+        names = [f.name for f in t]
+        cols = [_py_values(arr.field(i)) for i in range(t.num_fields)]
+        out = [dict(zip(names, row)) for row in zip(*cols)]
+    elif pa.types.is_integer(t) or pa.types.is_floating(t) \
+            or pa.types.is_boolean(t):
+        # numpy's tolist gives exact Python ints and keeps NaN; nulls are
+        # filled first (an int column with nulls would turn float)
+        zero = pa.scalar(False if pa.types.is_boolean(t) else 0, t)
+        filled = arr.fill_null(zero) if arr.null_count else arr
+        out = filled.to_numpy(zero_copy_only=False).tolist()
+    elif pa.types.is_string(t) or pa.types.is_large_string(t):
+        return arr.to_numpy(zero_copy_only=False).tolist()
+    else:
+        return arr.to_pylist()
+    if arr.null_count:
+        for i in np.flatnonzero(arr.is_null().to_numpy(
+                zero_copy_only=False)).tolist():
+            out[i] = None
+    return out
+
+
+def rows_to_batch(rows: list[dict], schema):
+    """Row dicts -> an Arrow record batch of ``schema`` (a
+    ``pyarrow.Schema``), equal to ``RecordBatch.from_pylist(rows,
+    schema=schema)``: a missing key reads as null, and a value out of
+    its column's range raises as ``pyarrow.array`` does.
+
+    Column by column: each column's values go to pyarrow's converter
+    whole.  Gathering map and list entries into flat child columns in
+    Python first measured no faster than pyarrow's own converter on the
+    nested cells."""
+    import pyarrow as pa
+    return pa.RecordBatch.from_arrays(
+        [pa.array([r.get(nm) for r in rows], t)
+         for nm, t in zip(schema.names, schema.types)], schema=schema)
+
+
+# ---------------------------------------------------------------------------
 # Spark file-level API
 # ---------------------------------------------------------------------------
 
 _SCHEMAS = {"traces": SPAN_SCHEMA, "logs": LOG_SCHEMA,
             "metrics": METRIC_POINT_SCHEMA}
-
-
-def _plainify(val, dt):
-    """Arrow cell (``RecordBatch.to_pylist``) -> the plain-Python shape the
-    wire encoder expects (maps as dicts, structs as dicts).
-
-    pyarrow hands map cells as lists of (k, v) pairs; the encoder must see
-    canonical dicts.  Nulls arrive as None and genuine NaN doubles arrive
-    as NaN — both are preserved as-is (null is distinct from NaN in Arrow,
-    so a NaN histogram sum encodes as a NaN double on the wire instead of
-    being dropped)."""
-    if val is None:
-        return None
-    if isinstance(dt, MapType):
-        items = val.items() if isinstance(val, dict) else val
-        return {k: _plainify(v, dt.valueType) for k, v in items}
-    if isinstance(dt, ArrayType):
-        return [_plainify(x, dt.elementType) for x in val]
-    if isinstance(dt, StructType):
-        d = val if isinstance(val, dict) else val.asDict()
-        return {f.name: _plainify(d.get(f.name), f.dataType)
-                for f in dt.fields}
-    if isinstance(val, bytearray):
-        return bytes(val)
-    return val
 
 
 def read_otlp_pb(spark: SparkSession, path: str,
@@ -950,8 +1011,6 @@ def read_otlp_pb(spark: SparkSession, path: str,
     def decode_batches(batches):
         import re as _re
         from urllib.parse import unquote
-
-        import pyarrow as pa
         pat = _re.compile(
             r"client_addr=([^/]+)/client_principal=([^/]+)/")
         for batch in batches:
@@ -970,7 +1029,7 @@ def read_otlp_pb(spark: SparkSession, path: str,
                         r["client_principal"] = prin
                 rows.extend(decoded)
             if rows:
-                yield pa.RecordBatch.from_pylist(rows, schema=arrow_schema)
+                yield rows_to_batch(rows, arrow_schema)
 
     files = (spark.read.format("binaryFile")
              .option("recursiveFileLookup", "true").load(path))
@@ -998,15 +1057,13 @@ def write_otlp_pb(df: DataFrame, path: str, signal: str) -> int:
     from pyspark.sql.types import StringType, StructField
 
     os.makedirs(path, exist_ok=True)
-    schema = _SCHEMAS[signal]
+    names = _SCHEMAS[signal].names
 
     def write_batches(batches):
         import pyarrow as pa
         rows: list[dict] = []
         for batch in batches:
-            for rec in batch.to_pylist():
-                rows.append({f.name: _plainify(rec.get(f.name), f.dataType)
-                             for f in schema.fields})
+            rows.extend(batch_to_rows(batch, names))
         if rows:
             payload = encode_request(rows, signal)
             pid = TaskContext.get().partitionId()

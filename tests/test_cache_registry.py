@@ -113,3 +113,37 @@ def test_file_stores_are_per_dir_and_deleted_on_release(spark, tmp_path):
     assert len(set(stores)) == 2 and all(map(os.path.isdir, stores))
     cache_registry.clear_caches()
     assert not any(map(os.path.exists, stores))
+
+
+def test_materialized_is_one_pass(spark):
+    """``materialized`` over a one-shuffle aggregate runs two jobs: the
+    shuffle's map stage and one job that fills the local checkpoint and
+    the columnar cache together.  The result is a cached scan of the
+    checkpoint, with the cache's real size statistics."""
+    from pyspark.sql import functions as F
+
+    from otel_arrow_collector_spark import plan_tree
+    from otel_arrow_collector_spark.operators import cache_registry
+    assert spark.sparkContext.getCheckpointDir() is None
+    df = (spark.range(5000).groupBy((F.col("id") % 7).alias("k"))
+          .agg(F.count("*").alias("n")))
+    sc = spark.sparkContext
+    tag = "materialized-one-pass-pin"
+    sc.setJobGroup(tag, tag)
+    try:
+        m = cache_registry.materialized(df)
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    try:
+        assert len(sc._jsc.sc().statusTracker().getJobIdsForGroup(tag)) == 2
+        assert m.storageLevel.useMemory
+        rdd = m._jdf.queryExecution().analyzed().rdd()
+        assert rdd.isCheckpointed()
+        stats = m._jdf.queryExecution().optimizedPlan().stats()
+        assert int(stats.sizeInBytes()) < 1 << 20     # not a bare RDD scan
+        assert plan_tree.read(m).find("InMemoryTableScan")
+        assert sorted(tuple(r) for r in m.collect()) \
+            == [(k, 5000 // 7 + (k < 5000 % 7)) for k in range(7)]
+    finally:
+        m.unpersist(False)

@@ -1037,3 +1037,95 @@ def test_pop_grpc_message_caps_and_waits_for_whole_message():
     assert len(buf) == 4
     with pytest.raises(h2.H2Error, match="size cap"):
         h2.pop_grpc_message(bytearray(h2.grpc_frame(b"abcd")), cap=3)
+
+
+# --- RFC 7540 frame rules: unknown types (§4.1, §5.5), size (§4.2) --------
+
+def test_reader_ignores_unknown_frame_types():
+    peer, reader = _reader_pair()
+    with peer, reader.sock:
+        peer.sendall(h2.pack_frame(0xA, 0, 0, b"\x00\x03abc")
+                     + h2.pack_frame(0xFF, 0xFF, 1, b"x" * 10)
+                     + h2.pack_frame(h2.DATA, h2.FLAG_END_STREAM, 1, b"x"))
+        assert reader.next_event() == (h2.DATA, 1, b"x", True)
+
+
+def test_reader_rejects_unknown_frame_inside_header_block():
+    peer, reader = _reader_pair()
+    with peer, reader.sock:
+        peer.sendall(h2.pack_frame(h2.HEADERS, 0, 1, b"\x82")
+                     + h2.pack_frame(0xA, 0, 1, b""))
+        with pytest.raises(h2.H2Error, match="inside a header block"):
+            reader.next_event()
+
+
+def test_receiver_answers_a_call_after_an_unknown_frame(spark, rcv):
+    """A type-0xA frame after the preface is ignored: the Export on the
+    same connection is answered and no connection error is counted."""
+    body, n = _pb_body(spark, 3)
+    frames = (h2.pack_frame(0xA, 0, 0, b"\x00\x03abc")
+              + h2.pack_frame(h2.HEADERS, h2.FLAG_END_HEADERS, 1,
+                              _request_block(_PATHS["traces"]))
+              + b"".join(h2.chunk_data_frames(1, h2.grpc_frame(body), True)))
+    sock, reader = _raw_conn(rcv, frames)
+    with sock:
+        end = False
+        while not end:
+            kind, sid, val, end = reader.next_event()
+    assert (kind, sid, val["grpc-status"]) == (h2.HEADERS, 1, "0")
+    assert rcv.counters.get("conn_error", 0) == 0
+    assert rcv.read_spool(spark, "traces").count() == n
+
+
+def test_recv_frame_refuses_oversize_frame_before_its_payload():
+    """FRAME_SIZE_ERROR comes from the 9-byte header alone: the payload
+    is never sent here, so reading it would time out instead."""
+    peer, reader = _reader_pair()
+    with peer, reader.sock:
+        reader.sock.settimeout(2)
+        peer.sendall(h2.pack_frame(h2.DATA, 0, 1, b"x" * h2.DEFAULT_MAX_FRAME)
+                     + struct.pack(">I", h2.DEFAULT_MAX_FRAME + 1)[1:]
+                     + bytes((h2.DATA, 0)) + struct.pack(">I", 1))
+        assert len(h2.recv_frame(reader.sock)[3]) == h2.DEFAULT_MAX_FRAME
+        with pytest.raises(h2.H2Error, match="FRAME_SIZE_ERROR"):
+            h2.recv_frame(reader.sock)
+
+
+def test_receiver_refuses_an_oversize_frame(rcv):
+    sock, _ = _raw_conn(rcv, h2.pack_frame(
+        h2.HEADERS, h2.FLAG_END_HEADERS, 1, _request_block("/foo.Bar/Baz"))
+        + h2.pack_frame(h2.DATA, h2.FLAG_END_STREAM, 1,
+                        b"\x00" * (h2.DEFAULT_MAX_FRAME + 1)))
+    with sock, pytest.raises((h2.H2Closed, ConnectionResetError)):
+        while True:                        # SETTINGS, its ack, then EOF
+            h2.recv_frame(sock)
+    assert rcv.counters["conn_error"] == 1
+
+
+def test_no_endpoint_sends_a_frame_over_the_max(spark, rcv, monkeypatch):
+    """Both clients and the receiver split what they send at
+    SETTINGS_MAX_FRAME_SIZE: every frame any reader here reads (the
+    receiver's and both clients') is at most 16384 bytes, and the large
+    bodies fill frames exactly to it."""
+    import pyarrow as pa
+
+    from otel_arrow_collector_spark.sources.arrow_service import \
+        PAYLOAD_SPANS
+    sizes = []
+    real = h2.recv_frame
+
+    def recording(sock):
+        frame = real(sock)
+        sizes.append(len(frame[3]))
+        return frame
+    monkeypatch.setattr(h2, "recv_frame", recording)
+    body, n = _pb_body(spark, 600)
+    assert len(body) > 3 * h2.DEFAULT_MAX_FRAME
+    grpc_call(rcv.host, rcv._port, _PATHS["traces"], body)
+    frag = _ipc_fragments([pa.record_batch(
+        {"trace_id": pa.array(["x" * (3 * h2.DEFAULT_MAX_FRAME)])})])[0]
+    c = ArrowStreamClient(rcv.host, rcv._port)
+    assert c.send_batch(1, [("s0", PAYLOAD_SPANS, frag)])["status_code"] == 0
+    assert c.close()["grpc-status"] == "0"
+    assert max(sizes) == h2.DEFAULT_MAX_FRAME
+    assert sizes.count(h2.DEFAULT_MAX_FRAME) >= 6
