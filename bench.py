@@ -17,6 +17,11 @@ apples-to-apples number; (b) the host shows multi-second noisy-neighbor
 spikes that land on a random query in single-shot mode (observed: the same
 query 23.0s in one sweep, 0.5s in the next).  Min-of-2 removes that
 lottery while still executing every plan end-to-end both times.
+
+Each run is one ``query_run`` record.  Beside the headline, the line
+carries ``total_sec_cold`` (the sum of every query's first run,
+substrate builds included) and ``jobs_warm`` / ``stages_warm`` (the
+Spark jobs and stages of every query's second run).
 """
 
 from __future__ import annotations
@@ -31,36 +36,16 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 
 def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    from otel_arrow_collector_spark import query_run
+    spark, queries, sf_dir = query_run.open_sweep("bench")
     m = re.search(r"sf([\d.]+)", sf_dir)
     sf = float(m.group(1).rstrip(".")) if m else None
 
-    from otel_arrow_collector_spark.operators import collect_registry
-    from otel_arrow_collector_spark.session import get_spark
-
-    # -Xlog:disable: under memory pressure the JVM's unified logging
-    # writes [warning][gc,alloc] lines to STDOUT (not stderr), and this
-    # process's stdout contract is ONE parseable JSON line — a GC-warning
-    # burst interleaving with the final print corrupts the record (seen
-    # once in the r14 stress run).
-    spark = get_spark("bench", extra_conf={
-        "spark.driver.extraJavaOptions": "-Xlog:disable"})
-    spark.sparkContext.setLogLevel("ERROR")
-    queries, _ = collect_registry()
-
-    # Warm up the JVM + parquet footer caches outside the timed region.
-    spark.range(1).count()
-    next(iter(queries.values()))(spark, sf_dir).collect()
-
-    timings: dict[str, float] = {}
-    for name, fn in sorted(queries.items()):
-        best = float("inf")
-        for _ in range(2):
-            t0 = time.perf_counter()
-            fn(spark, sf_dir).collect()
-            best = min(best, time.perf_counter() - t0)
-        timings[name] = round(best, 3)
-
+    records = {name: [query_run.run(spark, name, fn, sf_dir)
+                      for _ in range(2)]
+               for name, fn in sorted(queries.items())}
+    timings = {name: round(min(r.wall_s for r in rs), 3)
+               for name, rs in records.items()}
     total = round(sum(timings.values()), 3)
 
     # Codec throughput vs BASELINE.md's spans/s rows (docs/performance.md:
@@ -137,6 +122,10 @@ def main() -> None:
         "sf": sf,
         "runs_per_query": 2,
         "timing": "min",
+        "total_sec_cold": round(sum(rs[0].wall_s
+                                    for rs in records.values()), 3),
+        "jobs_warm": sum(rs[1].jobs for rs in records.values()),
+        "stages_warm": sum(rs[1].stages for rs in records.values()),
         **headline,
     }))
 

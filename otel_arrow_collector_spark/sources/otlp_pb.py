@@ -792,15 +792,24 @@ def _dec_metric(buf: bytes, envelope: dict) -> list[dict]:
 
 def _group_rows(rows: list[dict]):
     """Group row dicts by (resource_attributes, scope) — the envelope
-    reconstruction both pb and JSON writers share."""
+    reconstruction both pb and JSON writers share.
+
+    The resource part of the key is canonical JSON text (entries sorted,
+    None fields dropped), computed once per distinct resource map: a
+    request holds a handful of resources, and ``repr`` tells apart every
+    pair of maps the JSON text does."""
+    canon: dict[str, str] = {}
     groups: dict = {}
     for r in rows:
-        key = (json.dumps(
-                   sorted((k, tuple(sorted((a, b) for a, b in v.items()
-                                           if b is not None)))
-                          for k, v in (r.get("resource_attributes") or
-                                       {}).items())),
-               r.get("scope_name") or "", r.get("scope_version") or "")
+        res = r.get("resource_attributes") or {}
+        seen = repr(res)
+        text = canon.get(seen)
+        if text is None:
+            text = canon[seen] = json.dumps(
+                sorted((k, tuple(sorted((a, b) for a, b in v.items()
+                                        if b is not None)))
+                       for k, v in res.items()))
+        key = (text, r.get("scope_name") or "", r.get("scope_version") or "")
         groups.setdefault(key, []).append(r)
     return groups
 

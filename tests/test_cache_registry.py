@@ -122,21 +122,16 @@ def test_materialized_is_one_pass(spark):
     checkpoint, with the cache's real size statistics."""
     from pyspark.sql import functions as F
 
-    from otel_arrow_collector_spark import plan_tree
+    from otel_arrow_collector_spark import plan_tree, query_run
     from otel_arrow_collector_spark.operators import cache_registry
     assert spark.sparkContext.getCheckpointDir() is None
     df = (spark.range(5000).groupBy((F.col("id") % 7).alias("k"))
           .agg(F.count("*").alias("n")))
-    sc = spark.sparkContext
     tag = "materialized-one-pass-pin"
-    sc.setJobGroup(tag, tag)
-    try:
+    with query_run.job_group(spark, tag):
         m = cache_registry.materialized(df)
-    finally:
-        sc._jsc.clearJobGroup()
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
     try:
-        assert len(sc._jsc.sc().statusTracker().getJobIdsForGroup(tag)) == 2
+        assert query_run.read_group(spark, tag).jobs == 2
         assert m.storageLevel.useMemory
         rdd = m._jdf.queryExecution().analyzed().rdd()
         assert rdd.isCheckpointed()

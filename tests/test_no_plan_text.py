@@ -3,7 +3,8 @@
 A pin or a tool that matches ``explain`` text passes or fails for the
 wrong reason when an operator is renamed or an attribute reworded, and
 the formatted text prints every node twice.  Only the structural reader
-and the two human-facing dump tools may render a plan as text.
+and the human-facing profiling tool's plan dump may render a plan as
+text.
 """
 
 from __future__ import annotations
@@ -12,8 +13,8 @@ import re
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parent.parent
-ALLOWED = {"otel_arrow_collector_spark/plan_tree.py", "tools/dump_plans.py",
-           "tools/dump_final_plans.py", "tests/test_no_plan_text.py"}
+ALLOWED = {"otel_arrow_collector_spark/plan_tree.py",
+           "tools/query_profile.py", "tests/test_no_plan_text.py"}
 PLAN_TEXT = re.compile(
     r"explainString\("
     r"|treeString"

@@ -160,3 +160,56 @@ def test_pb_unknown_signal_raises(spark, tmp_path):
     df = generate_logs(spark, 1)
     with pytest.raises(NotImplementedError, match="profiles"):
         write_otlp_pb(df, str(tmp_path / "x"), "profiles")
+
+
+def _resource_rows() -> list[dict]:
+    """Spans over three resources: one map spelled in two key orders and
+    with and without None-valued variant slots, one other map, and no
+    map at all (None and empty), interleaved across two scopes."""
+    def var(**kw):
+        return {"s": None, "i": None, "d": None, "b": None, "json": None,
+                **kw}
+    cart = {"service.name": var(s="cart"), "host": var(s="h1"),
+            "pid": var(i=7)}
+    cart_reordered = {"pid": {"i": 7}, "host": {"b": None, "s": "h1"},
+                      "service.name": {"s": "cart"}}
+    pay = {"service.name": var(s="pay"), "ratio": var(d=0.5)}
+    order = [cart, pay, cart_reordered, None, cart_reordered, {}, pay, cart]
+    return [dict(trace_id=f"{i + 1:032x}", span_id=f"{i + 1:016x}",
+                 name=f"op{i}", kind=1, start_time_unix_nano=10 * i,
+                 end_time_unix_nano=10 * i + 5, resource_attributes=res,
+                 scope_name="lib" if i % 3 else None,
+                 scope_version="1" if i % 3 else None)
+            for i, res in enumerate(order)]
+
+
+def test_resource_grouping_ignores_key_order_and_none_slots():
+    """Rows group by the canonical resource map (sorted entries, None
+    slots dropped), keeping row order within a group and ordering groups
+    by the canonical JSON text; the encoded bytes are pinned."""
+    import hashlib
+    import json
+
+    from otel_arrow_collector_spark.sources.otlp_pb import _group_rows
+    rows = _resource_rows()
+    want: dict = {}
+    for r in rows:
+        key = (json.dumps(sorted(
+                   (k, tuple(sorted((a, b) for a, b in v.items()
+                                    if b is not None)))
+                   for k, v in (r["resource_attributes"] or {}).items())),
+               r["scope_name"] or "", r["scope_version"] or "")
+        want.setdefault(key, []).append(r)
+    got = _group_rows(rows)
+    assert list(got) == list(want)
+    assert {k: [id(r) for r in v] for k, v in got.items()} \
+        == {k: [id(r) for r in v] for k, v in want.items()}
+    assert len(got) == 6
+    body = encode_request(rows, "traces")
+    assert hashlib.sha256(body).hexdigest() == RESOURCE_ROWS_SHA256
+
+
+#: sha256 of ``encode_request(_resource_rows(), "traces")``, as encoded
+#: by the per-row JSON key grouping that preceded the per-resource one
+RESOURCE_ROWS_SHA256 = \
+    "a7035d7c70b861b6512e3f75bf7537f550351033f4393a007a499a92d67edd34"

@@ -20,10 +20,9 @@ RE-construction).  This is plan caching, never result caching:
 
 from __future__ import annotations
 
-import time
-
 import pytest
 
+from otel_arrow_collector_spark import query_run
 from otel_arrow_collector_spark.operators import (PLAN_MEMO_EXCLUDED,
                                                   cache_registry,
                                                   clear_plan_memo,
@@ -66,55 +65,16 @@ def test_every_invocation_reexecutes_all_stages(spark):
     clear_plan_memo()
     name = "q13_star_join"
     queries[name](spark, SF_SMALL).collect()    # memo + shuffle files hot
-    sc = spark.sparkContext
-    jt = sc._jsc.sc().statusTracker()
 
-    def run_stages(tag):
-        # each measured run gets its OWN job group: indexing the global
-        # job-id list is wrong once spark.ui.retainedJobs eviction kicks
-        # in mid-suite (the list shrinks between the two reads and the
-        # [n0:] slice misses/misreads jobs — observed as a flaky failure
-        # after ~800 tests); group-scoped ids are the newest jobs and
-        # immune to other jobs' eviction
-        sc.setJobGroup(tag, tag)
-        try:
-            queries[name](spark, SF_SMALL).collect()
-        finally:
-            sc._jsc.clearJobGroup()
-        # The status store is fed by the ASYNC listener bus, and py4j
-        # hands back Scala Options — an EMPTY Option is never Python
-        # None, and .get() on it throws (observed once as a flaky error
-        # under heavy concurrent load).  Drain the bus and poll until
-        # every submitted stage's info is visible; a genuinely SKIPPED
-        # stage (the regression this pin exists for) never submits, so
-        # its info stays absent and the task-count assertion still
-        # catches it after the bounded wait.
-        deadline = time.monotonic() + 10
-        while True:
-            try:
-                sc._jsc.sc().listenerBus().waitUntilEmpty()
-            except Exception:
-                pass
-            tot = tasks = 0
-            complete = True
-            for jid in jt.getJobIdsForGroup(tag):
-                ji = jt.getJobInfo(jid)
-                if ji is None or not ji.isDefined():
-                    complete = False
-                    continue
-                for sid in ji.get().stageIds():
-                    si = jt.getStageInfo(sid)
-                    tot += 1
-                    if si is not None and si.isDefined():
-                        tasks += si.get().numTasks()
-                    else:
-                        complete = False
-            if complete or time.monotonic() > deadline:
-                return tot, tasks
-            time.sleep(0.2)
+    def run_stages():
+        # each measured run is one query_run record: its jobs are read
+        # through their own job group, after the listener bus drains,
+        # with a bounded poll for status-store entries (see query_run)
+        r = query_run.run(spark, name, queries[name], SF_SMALL)
+        return r.stages, r.tasks
 
-    s1, t1 = run_stages("plan-memo-pin-run1")
-    s2, t2 = run_stages("plan-memo-pin-run2")
+    s1, t1 = run_stages()
+    s2, t2 = run_stages()
     assert s1 == s2 and t1 == t2 and s1 >= 2
 
 
@@ -146,36 +106,15 @@ def test_exclusion_list_is_complete_zero_jobs_at_construction(spark):
     finally:
         cache_registry.MAX_ENTRIES = old_cap
     clear_plan_memo()                     # force re-construction below
-    sc = spark.sparkContext
-    tracker = sc._jsc.sc().statusTracker()
-
-    def drain_listener_bus():
-        # The status store is fed by the ASYNC listener bus: a job-start
-        # event from pass 1 (or a neighboring construction) that lands
-        # mid-measurement would be blamed on an innocent query.  Flush
-        # pending events before reading (observed once as a false
-        # 'ann_ivf_probe' offender ~840 tests into the full suite under
-        # concurrent load; the sibling stage-reexecution pin needed the
-        # same hardening for the same reason).
-        try:
-            sc._jsc.sc().listenerBus().waitUntilEmpty()
-        except Exception:
-            pass
-
     offenders = []
-    drain_listener_bus()
     for name in sorted(queries):
         if name in PLAN_MEMO_EXCLUDED:
             continue
         # each construction gets its OWN job group, so only jobs this
         # construction actually launched can flag it
         tag = f"zero-jobs-pin-{name}"
-        sc.setJobGroup(tag, tag)
-        try:
+        with query_run.job_group(spark, tag):
             queries[name](spark, SF_SMALL)
-        finally:
-            sc._jsc.clearJobGroup()
-        drain_listener_bus()
-        if len(tracker.getJobIdsForGroup(tag)) > 0:
+        if query_run.read_group(spark, tag).jobs > 0:
             offenders.append(name)
     assert offenders == []

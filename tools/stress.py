@@ -33,7 +33,6 @@ import json
 import math
 import os
 import sys
-import time
 from collections import Counter
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -360,19 +359,19 @@ class CollectRecorder:
         return False
 
 
-def run_query(spark, fn, sf_dir: str):
-    """One timed end-to-end run: cache-cold build + materialize.
+def run_query(spark, name: str, fn, sf_dir: str):
+    """One timed end-to-end run: cache-cold build + materialize, one
+    ``query_run`` record.
     Returns (seconds, internal_collect_sizes, plan_nodes, n_rows)."""
+    from otel_arrow_collector_spark import query_run
     from otel_arrow_collector_spark.operators.cache_registry import \
         clear_caches
     clear_caches()
+    planned = []
     with CollectRecorder() as rec:
-        t0 = time.perf_counter()
-        df = fn(spark, sf_dir)
-        rows = df.collect()
-        dt = time.perf_counter() - t0
+        r = query_run.run(spark, name, fn, sf_dir, planned=planned.append)
     internal = rec.sizes[:-1]           # last collect is the result
-    return dt, internal, plan_shape(df), len(rows)
+    return r.wall_s, internal, plan_shape(planned[0]), r.rows
 
 
 def fit_exponent(scales: list[int], times: list[float]) -> float:
@@ -399,12 +398,8 @@ def main() -> int:
     scales = [int(s) for s in args.scales.split(",")]
     names = args.queries.split(",")
 
-    from otel_arrow_collector_spark.operators import collect_registry
-    from otel_arrow_collector_spark.session import get_spark
-    spark = get_spark("stress", extra_conf={
-        "spark.driver.extraJavaOptions": "-Xlog:disable"})
-    spark.sparkContext.setLogLevel("ERROR")
-    queries, _ = collect_registry()
+    from otel_arrow_collector_spark import query_run
+    spark, queries, _ = query_run.open_sweep("stress", args.sf_dir)
 
     dirs = {}
     for k in scales:
@@ -413,7 +408,7 @@ def main() -> int:
 
     # JVM/codegen warmup outside every timed region (first-action cost
     # lands on whichever (query, scale) runs first otherwise)
-    run_query(spark, queries[names[0]], dirs[scales[0]])
+    run_query(spark, names[0], queries[names[0]], dirs[scales[0]])
 
     report, failures = {}, []
     for name in names:
@@ -423,7 +418,8 @@ def main() -> int:
         for k in scales:
             best = None
             for _ in range(args.runs):
-                dt, internal, shape, n_rows = run_query(spark, fn, dirs[k])
+                dt, internal, shape, n_rows = run_query(spark, name, fn,
+                                                        dirs[k])
                 if best is None or dt < best[0]:
                     best = (dt, internal, shape, n_rows)
             dt, internal, shape, n_rows = best

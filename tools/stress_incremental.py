@@ -77,12 +77,9 @@ def main() -> int:
     args = ap.parse_args()
     scales = [int(s) for s in args.scales.split(",")]
 
-    from otel_arrow_collector_spark.operators import collect_registry
-    from otel_arrow_collector_spark.session import get_spark
-    spark = get_spark("stress-incremental", extra_conf={
-        "spark.driver.extraJavaOptions": "-Xlog:disable"})
-    spark.sparkContext.setLogLevel("ERROR")
-    queries, _ = collect_registry()
+    from otel_arrow_collector_spark import query_run
+    spark, queries, _ = query_run.open_sweep("stress-incremental",
+                                             args.sf_dir)
 
     report, failures = {}, []
     # curation_ingest_funnel rides the same shard axis (r11 verdict ask
@@ -118,7 +115,7 @@ def main() -> int:
                                        else "shard_b")
             best = None
             for _ in range(args.runs):
-                dt, internal, shape, n_rows = run_query(spark, fn, d)
+                dt, internal, shape, n_rows = run_query(spark, name, fn, d)
                 if best is None or dt < best[0]:
                     best = (dt, internal, shape, n_rows)
             dt, internal, shape, n_rows = best
