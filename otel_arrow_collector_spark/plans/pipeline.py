@@ -413,20 +413,14 @@ class PipelineGraph:
         if kind == "pb":
             from ..sources.otlp_pb import read_otlp_pb
             return read_otlp_pb(spark, cfg["path"], cfg.get("signal", "traces"))
-        if kind in ("http_spool", "grpc_spool"):
-            # the live OTLP front doors' shared spool layout
-            # (sources/http_receiver.py + sources/grpc_receiver.py;
-            # receiver/otlpreceiver/otlp.go serves both protocols)
-            from ..sources.http_receiver import read_spool
-            return read_spool(spark, cfg["path"], cfg.get("signal", "traces"))
-        if kind == "arrow_spool":
-            # the OTel-Arrow bidi stream services' parquet spool
-            # (grpc_receiver._spool_arrow; arrow.go:251-349 stream loop)
-            import os
-            ptype = {"traces": 40, "logs": 30,
-                     "metrics": 10}[cfg.get("signal", "traces")]
-            return spark.read.parquet(
-                os.path.join(cfg["path"], "arrow", f"{ptype:03d}"))
+        if kind in ("http_spool", "grpc_spool", "arrow_spool"):
+            # the live OTLP front doors' shared spool (sources/spool.py;
+            # receiver/otlpreceiver/otlp.go serves both protocols, and
+            # arrow.go:251-349 the OTel-Arrow stream loop)
+            from ..sources import spool
+            read = (spool.read_arrow_spool if kind == "arrow_spool"
+                    else spool.read_spool)
+            return read(spark, cfg["path"], cfg.get("signal", "traces"))
         raise ConfigError(f"receiver {rid!r}: unknown kind {kind!r}")
 
     def _apply_processor(self, df: DataFrame, pid: str, ctx: dict) -> DataFrame:

@@ -9,10 +9,11 @@ of a golang map"), plus the nop client (nop_client.go).
 File-backed implementation (the contrib file_storage shape): each
 (kind, component-id, storage-name) scope owns one file under the
 extension's directory; every mutation rewrites the scope file through
-the spool discipline (temp + fsync + atomic rename), so state survives
-process restarts — the property the persistent-queue semantics lean
-on.  Values are raw bytes; the on-disk format is a length-prefixed
-record stream (no JSON — values are binary).
+the spool's one durable write (``sources/spool.write_durable``: temp +
+fsync + atomic rename), so state survives process restarts — the
+property the persistent-queue semantics lean on.  Values are raw bytes;
+the on-disk format is a length-prefixed record stream (no JSON — values
+are binary).
 """
 
 from __future__ import annotations
@@ -21,8 +22,9 @@ import hashlib
 import os
 import re
 import struct
-import tempfile
 from dataclasses import dataclass
+
+from ..sources.spool import write_durable
 
 
 @dataclass
@@ -133,20 +135,7 @@ class FileStorageClient(StorageClient):
             kb = k.encode("utf-8")
             v = self._data[k]
             out += struct.pack(">II", len(kb), len(v)) + kb + v
-        d = os.path.dirname(self._path) or "."
-        fd, tmp = tempfile.mkstemp(dir=d, prefix=".kv-")
-        try:
-            with os.fdopen(fd, "wb") as f:
-                f.write(bytes(out))
-                f.flush()
-                os.fsync(f.fileno())
-            os.replace(tmp, self._path)      # ack-after-persist
-        except BaseException:
-            try:
-                os.unlink(tmp)
-            except OSError:
-                pass
-            raise
+        write_durable(self._path, out)       # ack-after-persist
 
     def get(self, key: str) -> bytes | None:
         return self._data.get(key)

@@ -5,7 +5,8 @@ Reference parity: receivers/exporters in
 (otlp.go, json.go, pb.go) — re-expressed as Spark read/write paths.
 """
 
-from .http_receiver import OtlpHttpReceiver, read_spool
+from .http_receiver import OtlpHttpReceiver
+from .spool import read_spool
 from .tables import TABLE_NAMES, load_table, load_tables, register_views
 
 __all__ = ["TABLE_NAMES", "load_table", "load_tables", "register_views",

@@ -12,9 +12,10 @@ so this server speaks the gRPC wire protocol directly over sockets:
   ``grpc-encoding`` gzip/zstd/snappy decoded by the HTTP receiver's
   capped decoder map, restricted to ``compression.GRPC_CODINGS``
 - per-message decode-before-ack with the dependency-free pb codec
-  (``sources/otlp_pb.py``), then the fsync+rename spool the HTTP receiver
-  uses — so ``read_spool`` / ``stream_spool`` consume both receivers'
-  output interchangeably.
+  (``sources/otlp_pb.py``), then a write through ``sources/spool.py``,
+  the spool the HTTP receiver also writes — so ``spool.read_spool``
+  consumes both receivers' output interchangeably, and receivers that
+  share one spool directory never replace each other's files.
 - every socket comes from the ``h2`` helpers, and each accepted one has
   ``TCP_NODELAY`` set, matching Go's ``net`` default under grpc-go: an
   ack is small, and Nagle's algorithm holds a small write while an
@@ -31,18 +32,14 @@ ExportXServiceResponse message.
 
 from __future__ import annotations
 
-import itertools
-import os
 import socket
 import struct
 import threading
 
-from . import h2
+from . import h2, spool
 from .compression import GRPC_CODINGS
 from .hpack import HpackEncoder
 from .http_receiver import _decompress_body
-
-_SIGNALS = ("traces", "logs", "metrics")
 
 #: gRPC method path -> signal (the generated service full names)
 ROUTES = {
@@ -122,13 +119,11 @@ class OtlpGrpcReceiver:
         # first-class metadata columns (read_spool(client_info=True)).
         self.record_client_info = record_client_info
         self.counters: dict[str, int] = {}
-        self._seq = itertools.count()
+        self._writer = spool.Writer(spool_dir, ("pb",))
         self._lock = threading.Lock()
         self._srv_sock: socket.socket | None = None
         self._accept_thread: threading.Thread | None = None
         self._closing = False
-        for s in _SIGNALS:
-            os.makedirs(self._dir(s), exist_ok=True)
 
     # -- lifecycle ---------------------------------------------------------
 
@@ -158,16 +153,9 @@ class OtlpGrpcReceiver:
 
     # -- internals ---------------------------------------------------------
 
-    def _dir(self, signal: str) -> str:
-        # same layout as the HTTP receiver's pb spool: read_spool-compatible
-        return os.path.join(self.spool_dir, f"{signal}_pb")
-
     def _count(self, key: str) -> None:
         with self._lock:
             self.counters[key] = self.counters.get(key, 0) + 1
-
-    def _pending(self, signal: str) -> int:
-        return len(os.listdir(self._dir(signal)))
 
     def _accept_loop(self) -> None:
         while not self._closing:
@@ -291,7 +279,7 @@ class OtlpGrpcReceiver:
         if not ctype.startswith("application/grpc"):
             self._count(f"refused_content_type_{signal}")
             return INTERNAL, f"bad content-type {ctype}"
-        if self._pending(signal) >= self.max_pending_files:
+        if self._writer.pending(signal) >= self.max_pending_files:
             self._count(f"refused_backpressure_{signal}")
             return RESOURCE_EXHAUSTED, "spool full"
         try:
@@ -315,7 +303,9 @@ class OtlpGrpcReceiver:
         except Exception as e:
             self._count(f"refused_bad_payload_{signal}")
             return INVALID_ARGUMENT, str(e)[:256]
-        self._spool(body, signal, client=(peer, principal))
+        self._writer.write_request(
+            body, signal, "pb",
+            (peer, principal) if self.record_client_info else None)
         self._count(f"accepted_{signal}")
         return OK, ""
 
@@ -359,7 +349,7 @@ class OtlpGrpcReceiver:
                 over = next((asvc.PAYLOAD_SIGNAL[pt]
                              for _sid, pt, _rec in req["payloads"]
                              if asvc.PAYLOAD_SIGNAL.get(pt) is not None
-                             and self._arrow_pending(pt)
+                             and self._writer.arrow_pending(pt)
                              >= self.max_pending_files), None)
                 if over is not None:
                     self._count(f"refused_backpressure_{over}")
@@ -369,7 +359,7 @@ class OtlpGrpcReceiver:
                         batches = st.arrow.consume(schema_id, record)
                         signal = asvc.PAYLOAD_SIGNAL.get(ptype)
                         for b in batches:
-                            self._spool_arrow(b, ptype)
+                            self._writer.write_arrow(b, ptype)
                             if signal is not None:
                                 self._count(f"accepted_arrow_{signal}")
             except asvc.StreamBudgetExceeded as e:
@@ -401,86 +391,18 @@ class OtlpGrpcReceiver:
             h2.HEADERS, h2.FLAG_END_HEADERS | h2.FLAG_END_STREAM, sid,
             enc.encode([("grpc-status", "0")])))
 
-    def _spool_arrow(self, batch, ptype: int) -> None:
-        """Persist one decoded Arrow record batch as a parquet spool
-        file under its payload-type directory (fsync + atomic rename,
-        same contract as the pb spool).  Aux payload types (attrs,
-        events, links) spool alongside the main tables so Spark can
-        reassemble the OTAP set (sources/otap.py)."""
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-        with self._lock:
-            seq = next(self._seq)
-        d = self._arrow_dir(ptype)
-        os.makedirs(d, exist_ok=True)
-        tmp = os.path.join(d, f".tmp-{seq:08d}")
-        dst = os.path.join(d, f"batch-{seq:08d}.parquet")
-        pq.write_table(pa.Table.from_batches([batch]), tmp)
-        with open(tmp, "rb") as fh:
-            os.fsync(fh.fileno())
-        os.rename(tmp, dst)
-
-    _ARROW_MAIN = {"traces": 40, "logs": 30, "metrics": 10}
-
-    def _arrow_dir(self, ptype: int) -> str:
-        return os.path.join(self.spool_dir, "arrow", f"{ptype:03d}")
-
-    def _arrow_pending(self, ptype: int) -> int:
-        d = self._arrow_dir(ptype)
-        return len(os.listdir(d)) if os.path.isdir(d) else 0
-
-    def read_arrow_spool(self, spark, signal: str):
-        """Spark view over a main signal's Arrow-stream spool."""
-        return spark.read.parquet(
-            self._arrow_dir(self._ARROW_MAIN[signal]))
-
-    def stream_arrow_spool(self, spark, signal: str, schema=None):
-        """CONTINUOUS ingest of a main signal's Arrow-stream spool as a
-        Structured Streaming parquet source — the same new-file-discovery
-        contract as the HTTP spool's ``stream_spool``: the bidi stream's
-        ack-after-spool rule composes with the streaming WAL into
-        end-to-end at-least-once with checkpointed progress.  The parquet
-        streaming source needs a schema up front; by default it is taken
-        from the already-spooled files (pass ``schema`` to start a query
-        before the first batch arrives)."""
-        d = self._arrow_dir(self._ARROW_MAIN[signal])
-        if schema is None:
-            schema = spark.read.parquet(d).schema
-        return spark.readStream.schema(schema).parquet(d)
-
-    def read_arrow_payloads(self, spark) -> dict[int, "object"]:
-        """All spooled payload tables keyed by payload type — the input
-        to ``otap.assemble_spans_df``."""
-        base = os.path.join(self.spool_dir, "arrow")
-        out = {}
-        if os.path.isdir(base):
-            for name in sorted(os.listdir(base)):
-                out[int(name)] = spark.read.parquet(
-                    os.path.join(base, name))
-        return out
-
-    def _spool(self, payload: bytes, signal: str,
-               client: tuple[str, str] | None = None) -> None:
-        with self._lock:
-            seq = next(self._seq)
-        d = self._dir(signal)
-        if self.record_client_info and client is not None:
-            from urllib.parse import quote
-            addr, principal = client
-            d = os.path.join(d, f"client_addr={quote(addr, safe='')}",
-                             f"client_principal={quote(principal, safe='')}")
-            os.makedirs(d, exist_ok=True)
-        tmp = os.path.join(d, f".tmp-{seq:08d}")
-        dst = os.path.join(d, f"req-{seq:08d}.pb")
-        with open(tmp, "wb") as fh:
-            fh.write(payload)
-            fh.flush()
-            os.fsync(fh.fileno())
-        os.rename(tmp, dst)
-
     # -- Spark ingest ------------------------------------------------------
 
     def read_spool(self, spark, signal: str, client_info: bool = False):
-        from .http_receiver import read_spool
-        return read_spool(spark, self.spool_dir, signal,
-                          client_info=client_info)
+        return spool.read_spool(spark, self.spool_dir, signal,
+                                client_info=client_info)
+
+    def read_arrow_spool(self, spark, signal: str):
+        return spool.read_arrow_spool(spark, self.spool_dir, signal)
+
+    def stream_arrow_spool(self, spark, signal: str, schema=None):
+        return spool.stream_arrow_spool(spark, self.spool_dir, signal,
+                                        schema)
+
+    def read_arrow_payloads(self, spark) -> dict[int, object]:
+        return spool.read_arrow_payloads(spark, self.spool_dir)

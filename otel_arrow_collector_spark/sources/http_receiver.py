@@ -25,30 +25,36 @@ Faithful HTTP semantics (otlp.go + config.go):
   receiver/otlpreceiver/internal/arrow/arrow.go:87-216 analogue)
 - backpressure: spool occupancy cap -> 503 + Retry-After (the
   memory-limiter refusal contract: reject, never drop accepted data)
+- body framing: Content-Length only (the reference's net/http also
+  reads chunked bodies); none, chunked included, -> 411, a malformed or
+  negative one -> 400, both before the body is read
 
-Durability: a request is acked ONLY after its spool file is fsync'd and
-atomically renamed into place — the ack-after-persist rule the
-reference's persistent queue follows (persistent_storage.go:278-345).
+Durability: a request is acked ONLY after ``sources/spool.py`` has
+persisted it (fsync + atomic rename under a name no other receiver on
+the spool uses) — the ack-after-persist rule the reference's persistent
+queue follows (persistent_storage.go:278-345).
 """
 
 from __future__ import annotations
 
-import gzip
-import itertools
-import zlib
 import json
-import os
+import sys
 import threading
 import time
+import zlib
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
+from . import spool
 from .compression import HTTP_CODINGS
 from .snappy import frame_decompress
-
-_SIGNALS = ("traces", "logs", "metrics")
+from .spool import read_spool        # callers also import it from here
 
 #: URL path -> signal (otlp.go registers exactly these three).
-_ROUTES = {f"/v1/{s}": s for s in _SIGNALS}
+_ROUTES = {f"/v1/{s}": s for s in spool.SIGNALS}
+
+
+class _HandshakeRefused(Exception):
+    """A TLS client failed the handshake (counted as a refusal)."""
 
 
 def _inflate_capped(data: bytes, cap: int, wbits: int,
@@ -199,22 +205,10 @@ class OtlpHttpReceiver:
         # expose peer + principal columns (read_spool(client_info=True)).
         self.record_client_info = record_client_info
         self.counters: dict[str, int] = {}   # obsreport-style
-        self._seq = itertools.count()
+        self._writer = spool.Writer(spool_dir, ("json", "pb"))
         self._lock = threading.Lock()
         self._server: ThreadingHTTPServer | None = None
         self._thread: threading.Thread | None = None
-        for s in _SIGNALS:
-            os.makedirs(self._dir(s, "json"), exist_ok=True)
-            os.makedirs(self._dir(s, "pb"), exist_ok=True)
-
-    # -- paths -------------------------------------------------------------
-
-    def _dir(self, signal: str, wire: str) -> str:
-        return os.path.join(self.spool_dir, f"{signal}_{wire}")
-
-    def spool_paths(self, signal: str) -> dict[str, str]:
-        """{wire format -> spool directory} for one signal."""
-        return {w: self._dir(signal, w) for w in ("json", "pb")}
 
     # -- lifecycle ---------------------------------------------------------
 
@@ -230,7 +224,10 @@ class OtlpHttpReceiver:
                 # get_request, but a setup() failure routes through
                 # handle_error -> the refusal counter
                 if receiver.tls is not None:
-                    self.request.do_handshake()
+                    try:
+                        self.request.do_handshake()
+                    except OSError as e:
+                        raise _HandshakeRefused from e
                 super().setup()
 
             def log_message(self, *a):          # keep test output quiet
@@ -254,9 +251,12 @@ class OtlpHttpReceiver:
         class Server(ThreadingHTTPServer):
             def handle_error(self, request, client_address):
                 # TLS handshake failures from unauthorized clients are an
-                # expected refusal path, not a server crash — count, don't
-                # spew tracebacks
-                receiver._count("refused_tls_handshake")
+                # expected refusal path, not a server crash; any other
+                # handler error is a connection error, as on the gRPC
+                # receiver.  Count, don't spew tracebacks.
+                refused = isinstance(sys.exc_info()[1], _HandshakeRefused)
+                receiver._count("refused_tls_handshake" if refused
+                                else "conn_error")
 
         self._server = Server((self.host, self._port), Handler)
         self._server.daemon_threads = True
@@ -287,10 +287,6 @@ class OtlpHttpReceiver:
         with self._lock:
             self.counters[key] = self.counters.get(key, 0) + 1
 
-    def _pending(self, signal: str) -> int:
-        return sum(len(os.listdir(self._dir(signal, w)))
-                   for w in ("json", "pb"))
-
     def _handle(self, h: BaseHTTPRequestHandler) -> None:
         signal = _ROUTES.get(h.path)
         if signal is None:
@@ -314,14 +310,23 @@ class OtlpHttpReceiver:
         else:
             self._count(f"refused_content_type_{signal}")
             return self._plain(h, 415, b"unsupported content type")
-        if self._pending(signal) >= self.max_pending_files:
+        if self._writer.pending(signal) >= self.max_pending_files:
             # memory-limiter refusal: backpressure, never accept-and-drop
             self._count(f"refused_backpressure_{signal}")
             h.send_response(503)
             h.send_header("Retry-After", "1")
             h.end_headers()
             return 503
-        n = int(h.headers.get("Content-Length", 0))
+        length = h.headers.get("Content-Length")
+        if length is None or "Transfer-Encoding" in h.headers:
+            # only a Content-Length-delimited body is read (a chunked
+            # one would otherwise spool as an empty request)
+            self._count(f"refused_length_required_{signal}")
+            return self._plain(h, 411, b"Content-Length required")
+        if not (length.isascii() and length.isdigit()):
+            self._count(f"refused_bad_length_{signal}")
+            return self._plain(h, 400, b"malformed Content-Length")
+        n = int(length)
         if n > self.max_body_bytes:
             # the reference caps request size (confighttp max_request_body_
             # size); reject BEFORE reading the body
@@ -329,6 +334,8 @@ class OtlpHttpReceiver:
             return self._plain(h, 413, b"request body too large")
         try:
             body = h.rfile.read(n)
+            if len(body) < n:
+                raise ValueError("body shorter than Content-Length")
             body = _decompress_body(
                 h.headers.get("Content-Encoding", "").lower(),
                 body, self.max_body_bytes, HTTP_CODINGS)
@@ -336,8 +343,9 @@ class OtlpHttpReceiver:
         except Exception as e:                   # malformed -> 400, no spool
             self._count(f"refused_bad_payload_{signal}")
             return self._plain(h, 400, str(e).encode()[:512])
-        self._spool(payload, signal, wire,
-                    client=("%s:%s" % h.client_address[:2], principal))
+        client = ("%s:%s" % h.client_address[:2], principal)
+        self._writer.write_request(
+            payload, signal, wire, client if self.record_client_info else None)
         self._count(f"accepted_{signal}_{wire}")
         # empty partial-success response in the request's content type
         resp = b"{}" if wire == "json" else b""
@@ -387,7 +395,8 @@ class OtlpHttpReceiver:
             counters = dict(self.counters)
         body = json.dumps({
             "counters": counters,
-            "pending_files": {s: self._pending(s) for s in _SIGNALS},
+            "pending_files": {s: self._writer.pending(s)
+                              for s in spool.SIGNALS},
             "max_pending_files": self.max_pending_files,
         }, sort_keys=True).encode()
         h.send_response(200)
@@ -419,31 +428,6 @@ class OtlpHttpReceiver:
         decode_request(body, signal)             # raises on bad wire bytes
         return body
 
-    def _spool(self, payload: bytes, signal: str, wire: str,
-               client: tuple[str, str] | None = None) -> None:
-        """fsync + atomic rename, ack only afterwards (ack-after-persist,
-        persistent_storage.go:278-345).  With ``record_client_info`` the
-        pb spool nests per client (addr, principal) — the JSON spool
-        stays flat (its line-oriented streaming reader has no per-file
-        metadata channel)."""
-        with self._lock:
-            seq = next(self._seq)
-        ext = "json" if wire == "json" else "pb"
-        d = self._dir(signal, wire)
-        if self.record_client_info and client is not None and wire == "pb":
-            from urllib.parse import quote
-            addr, principal = client
-            d = os.path.join(d, f"client_addr={quote(addr, safe='')}",
-                             f"client_principal={quote(principal, safe='')}")
-            os.makedirs(d, exist_ok=True)
-        tmp = os.path.join(d, f".tmp-{seq:08d}")
-        dst = os.path.join(d, f"req-{seq:08d}.{ext}")
-        with open(tmp, "wb") as fh:
-            fh.write(payload + (b"\n" if wire == "json" else b""))
-            fh.flush()
-            os.fsync(fh.fileno())
-        os.rename(tmp, dst)
-
     # -- Spark ingest ------------------------------------------------------
 
     def read_spool(self, spark, signal: str, client_info: bool = False):
@@ -453,59 +437,3 @@ class OtlpHttpReceiver:
         spool, which records no per-file peer metadata)."""
         return read_spool(spark, self.spool_dir, signal,
                           client_info=client_info)
-
-
-def stream_spool(spark, spool_dir: str, signal: str):
-    """CONTINUOUS ingest of the JSON spool as a Structured Streaming file
-    source: new-file discovery is Spark's native streaming contract, so a
-    receiver fleet appending to shared storage feeds one streaming query
-    with checkpointed exactly-once progress (the ack-after-persist rule on
-    the write side + the WAL on the read side compose into the reference's
-    persistent-queue semantics end to end).
-
-    JSON wire only: the line-oriented text source streams naturally; pb
-    spools are batch-ingested via :func:`read_spool` (binaryFile has no
-    streaming reader in this engine's scope)."""
-    from .otlp_json import _READERS
-    if signal not in _READERS:
-        raise NotImplementedError(
-            f"streaming spool ingest for signal {signal!r} "
-            f"(supported: {sorted(_READERS)})")
-    json_dir = os.path.join(spool_dir, f"{signal}_json")
-    raw = (spark.readStream.text(json_dir)
-                .withColumnRenamed("value", "json"))
-    return _READERS[signal](raw)
-
-
-def read_spool(spark, spool_dir: str, signal: str,
-               client_info: bool = False):
-    """Ingest an OTLP/HTTP spool directory (both wire formats) into the
-    row model — the consumer half of :class:`OtlpHttpReceiver`, also
-    reachable as the pipeline compiler's ``kind: http_spool`` receiver.
-    Works on any receiver fleet's shared spool, server running or not."""
-    from .otlp_json import read_otlp_json
-    from .otlp_pb import read_otlp_pb
-    json_dir = os.path.join(spool_dir, f"{signal}_json")
-    pb_dir = os.path.join(spool_dir, f"{signal}_pb")
-    parts = []
-    if os.path.isdir(json_dir) and os.listdir(json_dir):
-        j = read_otlp_json(spark, json_dir, signal)
-        if client_info:
-            from pyspark.sql import functions as F
-            j = (j.withColumn("client_addr", F.lit(None).cast("string"))
-                  .withColumn("client_principal",
-                              F.lit(None).cast("string")))
-        parts.append(j)
-    if os.path.isdir(pb_dir) and os.listdir(pb_dir):
-        parts.append(read_otlp_pb(spark, pb_dir, signal,
-                                  client_info=client_info))
-    if not parts:
-        from ..model.telemetry import (LOG_SCHEMA, METRIC_POINT_SCHEMA,
-                                       SPAN_SCHEMA)
-        empty = {"traces": SPAN_SCHEMA, "logs": LOG_SCHEMA,
-                 "metrics": METRIC_POINT_SCHEMA}[signal]
-        return spark.createDataFrame([], empty)
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out

@@ -1018,10 +1018,7 @@ def read_otlp_pb(spark: SparkSession, path: str,
     arrow_schema = to_arrow_schema(schema)
 
     def decode_batches(batches):
-        import re as _re
-        from urllib.parse import unquote
-        pat = _re.compile(
-            r"client_addr=([^/]+)/client_principal=([^/]+)/")
+        from .spool import client_of
         for batch in batches:
             rows: list[dict] = []
             contents = batch.column(0).to_pylist()
@@ -1030,9 +1027,7 @@ def read_otlp_pb(spark: SparkSession, path: str,
             for content, p in zip(contents, paths):
                 decoded = decode_request(bytes(content), signal)
                 if client_info:
-                    m = pat.search(p or "")
-                    addr = unquote(m.group(1)) if m else None
-                    prin = unquote(m.group(2)) if m else None
+                    addr, prin = client_of(p)
                     for r in decoded:
                         r["client_addr"] = addr
                         r["client_principal"] = prin

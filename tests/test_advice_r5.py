@@ -127,7 +127,7 @@ def test_backpressure_before_consume_makes_retry_exact(spark, tmp_path):
         st = c.send_batch(1, [("s", PAYLOAD_SPANS, frag)])
         assert st["status_code"] == STATUS_UNAVAILABLE
         # nothing spooled, stream state untouched
-        assert r._arrow_pending(PAYLOAD_SPANS) == 0
+        assert r._writer.arrow_pending(PAYLOAD_SPANS) == 0
         r.max_pending_files = 100_000      # spool frees up
         st2 = c.send_batch(2, [("s", PAYLOAD_SPANS, frag)])
         assert st2["status_code"] == 0

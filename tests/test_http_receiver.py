@@ -305,7 +305,7 @@ def test_http_pipeline_exporter_kind(spark, rcv):
 def test_stream_spool_continuous_ingest(spark, rcv, tmp_path):
     """Live POSTs land in the spool; a streaming query (file source +
     checkpoint) ingests them incrementally — only NEW files on resume."""
-    from otel_arrow_collector_spark.sources.http_receiver import stream_spool
+    from otel_arrow_collector_spark.sources.spool import stream_spool
     td = generate_traces(spark, 4)
     _post(rcv, "/v1/traces", _json_body(td, "traces"))
     out = str(tmp_path / "spool_out")
