@@ -188,38 +188,31 @@ def cmd_run(args) -> int:
 
 
 def cmd_validate(args) -> int:
-    """Validates the config without running the collector: resolve ->
-    feature gates -> telemetry -> graph build -> factory-kind checks.
-    Spark-free (DryRun parses and validates; it starts nothing)."""
+    """Validates the config without running the collector, through the
+    same resolve -> feature gates -> telemetry -> extensions -> graph
+    checks as every run (``plans.collector.load_config``).  Spark-free
+    (DryRun parses and validates; it starts nothing)."""
     uris = _gather_config_uris(args)
     _apply_gate_flags(args)
-    from .plans.collector import _pop_extensions, _resolve_with_gates
-    from .plans.extensions import validate_extensions
-    from .plans.pipeline import PipelineGraph
-    from .plans.telemetry import parse_telemetry
-    cfg = _resolve_with_gates(*uris)
-    parse_telemetry(cfg.pop("telemetry", None))
-    validate_extensions(*_pop_extensions(cfg))
-    graph = PipelineGraph(cfg)
-    graph.validate_kinds()
+    from .plans.collector import load_config
+    load_config(*uris)
     return 0
 
 
 def cmd_components(_args) -> int:
     """YAML inventory of every registered factory, keyed like the
-    reference's componentsOutput struct."""
+    reference's componentsOutput struct: the keys of each component
+    class's kind table."""
     import yaml
 
-    from .plans import pipeline as P
+    from .plans.extensions import _EXTENSIONS
+    from .plans.pipeline import _SECTIONS
     out = {
         "buildinfo": {"command": COMMAND,
                       "description": DESCRIPTION,
                       "version": __version__},
-        "receivers": sorted(P.RECEIVER_KINDS),
-        "processors": sorted(P.PROCESSOR_KINDS),
-        "exporters": sorted(P.EXPORTER_KINDS),
-        "connectors": sorted(P.CONNECTOR_KINDS),
-        "extensions": sorted(P.EXTENSION_KINDS),
+        **{key: sorted(table) for key, (_, _, table) in _SECTIONS.items()},
+        "extensions": sorted(_EXTENSIONS),
     }
     sys.stdout.write(yaml.safe_dump(out, sort_keys=False))
     return 0

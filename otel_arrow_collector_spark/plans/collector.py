@@ -23,27 +23,28 @@ from .featuregate import global_registry
 from .pipeline import CompiledPlan, ConfigError, PipelineGraph
 
 
-def _resolve_with_gates(*uris: str) -> dict:
-    """Resolve config, lift the reference's canonical ``service:``
-    layout (service.pipelines/telemetry/extensions -> flat), and apply
-    its ``feature_gates`` section (flag.go syntax: "gate", "+gate",
-    "-gate") against the global registry before graph build — unknown
-    gates / stage violations fail validation."""
-    from .extensions import normalize_service_layout
+def load_config(*uris: str):
+    """Resolve and check a config, building and starting nothing — the
+    one prefix that ``validate``, ``dry_run``, ``start`` and ``reload``
+    share.  Resolve the URIs, lift the reference's canonical
+    ``service:`` layout (service.pipelines/telemetry/extensions ->
+    flat), apply its ``feature_gates`` section (flag.go syntax: "gate",
+    "+gate", "-gate") against the global registry, then check the
+    telemetry section (service/telemetry/config.go Validate runs at
+    resolve time), the extensions (top-level ``extensions:`` declares
+    instances, ``service.extensions`` enables them) and the pipeline
+    graph.  Returns ``(telemetry, (declared, enabled), graph)``."""
+    from .extensions import (_id_list, normalize_service_layout,
+                             validate_extensions)
+    from .telemetry import parse_telemetry
     cfg = normalize_service_layout(resolve(*uris))
     global_registry().apply_flags(cfg.pop("feature_gates", None))
-    return cfg
-
-
-def _pop_extensions(cfg: dict) -> tuple[dict, list[str]]:
-    """Split the extension sections out of the resolved config:
-    top-level ``extensions:`` declares instances, ``service.extensions``
-    (lifted to ``service_extensions``) enables them."""
-    from .extensions import _id_list
-    declared = cfg.pop("extensions", None) or {}
-    enabled = _id_list(cfg.pop("service_extensions", None),
-                       "service.extensions")
-    return declared, enabled
+    telemetry = parse_telemetry(cfg.pop("telemetry", None))
+    extensions = (cfg.pop("extensions", None) or {},
+                  _id_list(cfg.pop("service_extensions", None),
+                           "service.extensions"))
+    validate_extensions(*extensions)
+    return telemetry, extensions, PipelineGraph(cfg)
 
 
 class State(Enum):
@@ -91,12 +92,7 @@ class Collector:
         """Validate config end-to-end without running any exporter
         (collector.go:209-219).  Raises ConfigError/ResolveError on any
         defect; returns the validated graph."""
-        from .extensions import validate_extensions
-        from .telemetry import parse_telemetry
-        cfg = _resolve_with_gates(*config_uris)
-        parse_telemetry(cfg.pop("telemetry", None))   # validate only
-        validate_extensions(*_pop_extensions(cfg))    # validate only
-        graph = PipelineGraph(cfg)
+        graph = load_config(*config_uris)[2]
         graph.compile(spark, sources=sources or {}, sf_dir=sf_dir)
         return graph
 
@@ -114,18 +110,15 @@ class Collector:
 
     def _setup(self) -> CompiledPlan:
         import time as _time
-        from .telemetry import configure_logger, parse_telemetry
-        cfg = _resolve_with_gates(*self.config_uris)
-        # telemetry: popped before graph build, like feature_gates
-        # (service/telemetry/config.go Validate runs at resolve time)
-        self.telemetry = parse_telemetry(cfg.pop("telemetry", None))
-        # extensions build + start before the pipeline graph
+        from .extensions import build_extensions
+        from .telemetry import configure_logger
+        self.telemetry, extensions, graph = load_config(*self.config_uris)
+        # extensions build + start before the pipeline graph compiles
         # (service.go:136-144: Start starts extensions FIRST, then
         # pipelines); a reload rebuilds them from the fresh config
-        from .extensions import build_extensions
         if self.extensions is not None:
             self.extensions.shutdown()
-        self.extensions = build_extensions(*_pop_extensions(cfg))
+        self.extensions = build_extensions(*extensions)
         self.logger = configure_logger(self.telemetry.logs)
         # the collector's own counter surface at the configured
         # metrics level; components built around this collector pass
@@ -158,7 +151,6 @@ class Collector:
             self.span_recorder = None
         t0 = _time.perf_counter()
         try:
-            graph = PipelineGraph(cfg)
             self.graph = graph
             plan = graph.compile(self.spark, sources=self.sources,
                                  sf_dir=self.sf_dir)

@@ -7,8 +7,9 @@ lists which of them run — referencing an undeclared id is a config
 error (extensions.go New's "extension factory not available" path).
 
 Extension ids follow component-ID syntax ``type[/name]``; the type
-selects the factory.  Factories here cover the surface the engine
-implements:
+selects the factory, a config check and a builder in ``_EXTENSIONS``,
+which ``validate_extensions`` and ``build_extensions`` both read.
+Factories here cover the surface the engine implements:
 
 - ``file_storage``  -> :class:`plans.storage.FileStorageExtension`
   (``directory:`` config key, contrib file_storage shape),
@@ -25,7 +26,7 @@ from __future__ import annotations
 import tempfile
 from dataclasses import dataclass, field
 
-from .pipeline import ConfigError
+from .pipeline import ConfigError, _any
 
 
 @dataclass
@@ -58,10 +59,6 @@ def _ext_type(ext_id: str) -> str:
     """Component-ID syntax: the factory type is everything before the
     first '/' (component/identifiable.go)."""
     return ext_id.split("/", 1)[0]
-
-
-KNOWN_EXTENSION_TYPES = ("file_storage", "bearer_token_auth", "zpages",
-                         "nop")
 
 
 def _id_list(val, what: str) -> list[str]:
@@ -108,15 +105,16 @@ def validate_extensions(declared, enabled) -> None:
     # validate every declared id, not just the enabled subset
     for ext_id in declared:
         t = _ext_type(ext_id)
-        if t not in KNOWN_EXTENSION_TYPES:
+        if t not in _EXTENSIONS:
             raise ConfigError(f"extension {ext_id!r}: unknown type {t!r}")
         cfg = declared.get(ext_id) or {}
         if not isinstance(cfg, dict):
             raise ConfigError(f"extension {ext_id!r}: config must be a "
                               f"mapping, got {type(cfg).__name__}")
-        if t == "bearer_token_auth" and not cfg.get("token"):
-            raise ConfigError(f"extension {ext_id!r}: bearer_token_auth "
-                              f"needs a `token:`")
+        try:
+            _EXTENSIONS[t][0](t, cfg)
+        except ConfigError as e:
+            raise ConfigError(f"extension {ext_id!r}: {e}") from None
 
 
 def build_extensions(declared, enabled) -> BuiltExtensions:
@@ -130,42 +128,52 @@ def build_extensions(declared, enabled) -> BuiltExtensions:
     enabled = _id_list(enabled, "service.extensions")
     built = BuiltExtensions()
     try:
-        _build_into(built, declared, enabled)
+        for ext_id in enabled:
+            build = _EXTENSIONS[_ext_type(ext_id)][1]
+            inst = built.instances[ext_id] = build(
+                ext_id, declared.get(ext_id) or {}, built)
+            start = getattr(inst, "start", None)
+            if callable(start):
+                start()
     except BaseException:
         built.shutdown()
         raise
     return built
 
 
-def _build_into(built: BuiltExtensions, declared: dict,
-                enabled: list[str]) -> None:
-    for ext_id in enabled:
-        cfg = declared.get(ext_id) or {}
-        t = _ext_type(ext_id)
-        if t == "file_storage":
-            from .storage import FileStorageExtension
-            directory = cfg.get("directory") or tempfile.mkdtemp(
-                prefix="oacs-storage-")
-            built.instances[ext_id] = FileStorageExtension(directory)
-        elif t == "bearer_token_auth":
-            from ..sources.auth import (BearerTokenAuthenticator,
-                                        BearerTokenClientAuthenticator,
-                                        register_authenticator)
-            pair = (BearerTokenAuthenticator(cfg["token"]),
-                    BearerTokenClientAuthenticator(cfg["token"]))
-            # server half registered under the id: receivers say
-            # `authenticator: <id>`; the client half under `<id>/client`
-            register_authenticator(ext_id, pair[0])
-            register_authenticator(f"{ext_id}/client", pair[1])
-            built._auth_names += [ext_id, f"{ext_id}/client"]
-            built.instances[ext_id] = pair[0]
-        elif t == "zpages":
-            built.instances[ext_id] = "zpages-enabled"
-        else:                                    # nop
-            built.instances[ext_id] = None
-        start = getattr(built.instances[ext_id], "start", None)
-        if callable(start):
-            start()
+def _needs_token(kind: str, cfg: dict) -> None:
+    if not cfg.get("token"):
+        raise ConfigError(f"{kind} needs a `token:`")
+
+
+def _file_storage(ext_id: str, cfg: dict, built: BuiltExtensions):
+    from .storage import FileStorageExtension
+    return FileStorageExtension(
+        cfg.get("directory") or tempfile.mkdtemp(prefix="oacs-storage-"))
+
+
+def _bearer_token_auth(ext_id: str, cfg: dict, built: BuiltExtensions):
+    from ..sources.auth import (BearerTokenAuthenticator,
+                                BearerTokenClientAuthenticator,
+                                register_authenticator)
+    server = BearerTokenAuthenticator(cfg["token"])
+    # server half registered under the id: receivers say
+    # `authenticator: <id>`; the client half under `<id>/client`
+    register_authenticator(ext_id, server)
+    register_authenticator(f"{ext_id}/client",
+                           BearerTokenClientAuthenticator(cfg["token"]))
+    built._auth_names += [ext_id, f"{ext_id}/client"]
+    return server
+
+
+# extension type -> (config check(type, cfg), builder(id, cfg, built) ->
+# instance); the `components` subcommand prints the keys
+_EXTENSIONS = {
+    "file_storage": (_any, _file_storage),
+    "bearer_token_auth": (_needs_token, _bearer_token_auth),
+    "zpages": (_any, lambda ext_id, cfg, built: "zpages-enabled"),
+    "nop": (_any, lambda ext_id, cfg, built: None),
+}
 
 
 def normalize_service_layout(cfg: dict) -> dict:

@@ -16,6 +16,16 @@ Reference parity (/root/reference/service/internal/graph/graph.go):
   (internal/fanoutconsumer/logs.go:24-75) — a no-op here: DataFrames are
   immutable, so the capabilities analysis (nodes.go:348-370) is vacuous
 
+Component kinds: each component class has one table below
+(``_RECEIVERS``, ``_PROCESSORS``, ``_EXPORTERS``, ``_CONNECTORS``) that
+maps a kind to its config check and its builder, like the reference's
+one factory per type serving ``components``, ``validate`` and a run
+(otelcol/command_components.go:16-57, collector.go:209-219 DryRun).
+``PipelineGraph(cfg)`` runs every declared component's check, Spark-free,
+so ``validate``, ``Collector.dry_run``, ``start`` and ``reload`` reject
+the same configs before anything is built; the builders then read keys
+that are known to be present.
+
 Spark mapping: each pipeline compiles to ONE DataFrame (receiver fan-in =
 unionAll, processors = chained transforms); exporters materialize it.  A
 shared receiver is the same DataFrame object reused — Catalyst reuses the
@@ -44,10 +54,10 @@ Batch-mode processor semantics:
 from __future__ import annotations
 
 from dataclasses import dataclass, field
+from importlib import import_module
 from typing import Any, Callable
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 
 class ConfigError(ValueError):
@@ -100,32 +110,274 @@ class CompiledPlan:
         return results
 
 
-# Factory inventory — every component type the graph compiler can build
-# (the `components` CLI subcommand dumps this, like the reference's
-# componentsOutput of otelcol/command_components.go:16-57; keep these in
-# lock-step with the dispatch in _build_receiver/_apply_processor/
-# _sink_thunk/_connector_out below).
-RECEIVER_KINDS = ("memory", "table", "parquet", "json", "pb",
-                  "http_spool", "grpc_spool", "arrow_spool")
-PROCESSOR_KINDS = ("filter", "project", "transform", "batch",
-                   "memory_limiter")
-EXPORTER_KINDS = ("console", "parquet", "pb", "http", "grpc", "memory",
-                  "null", "arrow_stream")
-CONNECTOR_KINDS = ("forward", "router", "spanmetrics")
-EXTENSION_KINDS = ("file_storage", "zpages", "bearer_token_auth", "nop")
+# -- config checks -------------------------------------------------------------
+# A check is ``check(kind, cfg)``: it raises ConfigError with the message
+# that follows the component's ``<class> '<id>': `` prefix, and returns
+# the config its builder reads.
 
 
-def _compress_cfg(cfg: dict, eid: str):
-    """Exporter ``compress:`` config: bool (gzip sugar) or a named
-    configcompression coding string — NEVER bool()-coerced, which would
-    silently turn ``compress: zstd`` into gzip."""
+def _any(kind: str, cfg: dict) -> dict:
+    return cfg
+
+
+def _needs(**messages: str) -> Callable[[str, dict], dict]:
+    """Check that each key is present; ``messages`` maps a key to the
+    text that follows the kind when it is missing."""
+    def check(kind: str, cfg: dict) -> dict:
+        for key, text in messages.items():
+            if key not in cfg:
+                raise ConfigError(f"{kind} {text}")
+        return cfg
+    return check
+
+
+_PATH = _needs(path="kind needs a `path:`")
+_ENDPOINT = _needs(endpoint="kind needs an `endpoint:`")
+
+
+def _check_statements(kind: str, cfg: dict) -> dict:
+    """Transform statement TEXT parses Spark-free: a syntax error is a
+    config error, not a compile-time surprise."""
+    stmts = cfg.get("statements")
+    if stmts:
+        from ..functions.ottl_parser import OttlSyntaxError, parse_statement
+        if not isinstance(stmts, (list, tuple)):
+            raise ConfigError("statements must be a list")
+        for st in stmts:
+            try:
+                parse_statement(str(st))
+            except OttlSyntaxError as e:
+                raise ConfigError(
+                    f"bad OTTL statement {st!r}: {e}") from None
+    return cfg
+
+
+def _check_limiter(kind: str, cfg: dict):
+    """The full reference config surface (limit_mib / spike / percentage
+    / check_interval) resolves at config time, like
+    memorylimiterprocessor's construction errors; the builder gets the
+    parsed spec."""
+    from .memlimit import MemLimitConfigError, parse_memlimiter
+    try:
+        return parse_memlimiter(cfg)
+    except MemLimitConfigError as e:
+        raise ConfigError(str(e)) from None
+
+
+def _check_push(kind: str, cfg: dict) -> dict:
+    """Live OTLP push: an endpoint, and ``compress:`` as a bool (gzip
+    sugar) or a named configcompression coding string — NEVER
+    bool()-coerced, which would silently turn ``compress: zstd`` into
+    gzip."""
+    _ENDPOINT(kind, cfg)
     v = cfg.get("compress", False)
-    if isinstance(v, bool):
-        return v
-    if isinstance(v, str):
-        return v
-    raise ConfigError(f"exporter {eid!r}: compress must be a bool or a "
-                      f"coding name, got {type(v).__name__}")
+    if not isinstance(v, (bool, str)):
+        raise ConfigError(f"compress must be a bool or a coding name, "
+                          f"got {type(v).__name__}")
+    return cfg
+
+
+def _check_routes(kind: str, cfg: dict) -> dict:
+    routes = cfg.get("routes", [])
+    if not isinstance(routes, (list, tuple)):
+        raise ConfigError("routes must be a list")
+    for i, r in enumerate(routes):
+        if not isinstance(r, dict) or "where" not in r:
+            raise ConfigError(f"routes[{i}] needs a mapping with a `where:`")
+    return cfg
+
+
+# -- receivers: build(spark, rid, cfg, sources, sf_dir) -> DataFrame ----------
+
+def _memory_receiver(spark, rid, cfg, sources, sf_dir) -> DataFrame:
+    if rid not in sources:
+        raise ConfigError(f"memory receiver {rid!r} needs a sources[{rid!r}] DataFrame")
+    return sources[rid]
+
+
+def _table_receiver(spark, rid, cfg, sources, sf_dir) -> DataFrame:
+    from ..sources.tables import load_table
+    base = cfg.get("sf_dir") or sf_dir
+    if base is None:
+        raise ConfigError(f"table receiver {rid!r} needs sf_dir")
+    return load_table(spark, base, cfg["table"])
+
+
+def _reader(module: str, fn: str, signal: str = "traces"):
+    """Receiver over the files at ``path:``, read by
+    ``sources.<module>.<fn>(spark, path, signal)``."""
+    def build(spark, rid, cfg, sources, sf_dir) -> DataFrame:
+        read = getattr(import_module(f"..sources.{module}", __package__), fn)
+        return read(spark, cfg["path"], cfg.get("signal", signal))
+    return build
+
+
+# the http/grpc/arrow spool kinds read the live OTLP front doors' shared
+# spool (sources/spool.py; receiver/otlpreceiver/otlp.go serves both
+# protocols, and arrow.go:251-349 the OTel-Arrow stream loop)
+_RECEIVERS = {
+    "memory": (_any, _memory_receiver),
+    "table": (_needs(table="kind needs a `table:` name"), _table_receiver),
+    "parquet": (_PATH, lambda spark, rid, cfg, *_: spark.read.parquet(cfg["path"])),
+    "json": (_PATH, _reader("otlp_json", "read_otlp_json", "logs")),
+    "pb": (_PATH, _reader("otlp_pb", "read_otlp_pb")),
+    "http_spool": (_PATH, _reader("spool", "read_spool")),
+    "grpc_spool": (_PATH, _reader("spool", "read_spool")),
+    "arrow_spool": (_PATH, _reader("spool", "read_arrow_spool")),
+}
+
+
+# -- processors: build(df, pid, cfg, ctx) -> DataFrame ------------------------
+
+def _transform(df, pid, cfg, ctx) -> DataFrame:
+    from ..functions.ottl import apply_ottl
+    # `statements:` carries OTTL statement TEXT (the transform
+    # processor's native config surface, docs/processing.md:147+);
+    # the dict keys remain the declarative shorthand
+    if cfg.get("statements"):
+        from ..functions.ottl_parser import apply_statements
+        df = apply_statements(df, list(cfg["statements"]))
+    return apply_ottl(df, cfg)
+
+
+def _batch(df, pid, cfg, ctx) -> DataFrame:
+    # No count(), no extra job: AQE rebalances partitions from runtime
+    # shuffle stats; the hard per-request row cap lands at the sink
+    # boundary via maxRecordsPerFile (ctx["batch_size"]), which is where
+    # splitTraces caps export requests.
+    ctx["batch_size"] = int(cfg.get("send_batch_size", 8192))
+    return df.hint("rebalance")
+
+
+def _memory_limiter(df, pid, spec, ctx) -> DataFrame:
+    # Deferred: recorded here, checked at run() against the chain
+    # position the limiter occupies (not the final sink plan).
+    ctx["gates"].append((pid, spec, df))
+    return df
+
+
+_PROCESSORS = {
+    "filter": (_needs(where="needs `where:`"),
+               lambda df, pid, cfg, ctx: df.filter(cfg["where"])),
+    "project": (_needs(exprs="needs `exprs:`"),
+                lambda df, pid, cfg, ctx: df.selectExpr(*cfg["exprs"])),
+    "transform": (_check_statements, _transform),
+    "batch": (_any, _batch),
+    "memory_limiter": (_check_limiter, _memory_limiter),
+}
+
+
+# -- exporters: build(df, eid, cfg, ctx) -> thunk ------------------------------
+
+def _console(df, eid, cfg, ctx):
+    n = int(cfg.get("rows", 20))
+    # logging exporter (logging_exporter.go:20-90): textual dump
+    return lambda: df._jdf.showString(n, 40, False)
+
+
+def _parquet_sink(df, eid, cfg, ctx):
+    path, mode, cap = cfg["path"], cfg.get("mode", "overwrite"), ctx["batch_size"]
+
+    def write() -> str:
+        w = df.write.mode(mode)
+        if cap:   # batch processor's hard per-file row cap
+            w = w.option("maxRecordsPerFile", cap)
+        w.parquet(path)
+        return path
+    return write
+
+
+def _pb_sink(df, eid, cfg, ctx):
+    from ..sources.otlp_pb import write_otlp_pb
+    return lambda: write_otlp_pb(df, cfg["path"], cfg["signal"])
+
+
+def _pusher(module: str, fn: str):
+    """Live OTLP push by ``exporters.<module>.<fn>``: executor-side
+    requests; the thunk returns the audit totals dict."""
+    def build(df, eid, cfg, ctx):
+        push = getattr(import_module(f"..exporters.{module}", __package__), fn)
+        return lambda: push(
+            df, cfg["endpoint"], cfg.get("signal", "traces"),
+            token=cfg.get("token"), compress=cfg.get("compress", False),
+            max_rows_per_request=int(cfg.get("max_rows_per_request", 8192)))
+    return build
+
+
+def _arrow_stream(df, eid, cfg, ctx):
+    # live OTel-Arrow bidi stream push (export_arrow_stream): one
+    # executor-side stream per partition, per-batch acks
+    from ..exporters.grpc_exporter import export_arrow_stream
+
+    def push() -> dict:
+        rows = export_arrow_stream(
+            df, cfg["endpoint"],
+            payload_type=int(cfg.get("payload_type", 40)),
+            token=cfg.get("token")).collect()
+        return {"rows_sent": sum(r.rows_sent for r in rows),
+                "n_batches": sum(r.n_batches for r in rows),
+                "all_acked": all(r.all_acked for r in rows)}
+    return push
+
+
+_EXPORTERS = {
+    "console": (_any, _console),
+    "parquet": (_PATH, _parquet_sink),
+    "pb": (_needs(path="kind needs a `path:`", signal="kind needs a `signal:`"),
+           _pb_sink),
+    # OTLP/HTTP POSTs (exporters/http_exporter.py) and unary gRPC Exports
+    # over stdlib HTTP/2 (exporters/grpc_exporter.py)
+    "http": (_check_push, _pusher("http_exporter", "export_http_now")),
+    "grpc": (_check_push, _pusher("grpc_exporter", "export_grpc_now")),
+    # consumertest.Sink analogue (consumer/consumertest/sink.go:28-56)
+    "memory": (_any, lambda df, eid, cfg, ctx: df.collect),
+    "null": (_any, lambda df, eid, cfg, ctx: df.count),
+    "arrow_stream": (_ENDPOINT, _arrow_stream),
+}
+
+
+# -- connectors: build(cid, cfg, pipeline, dfs) -> [DataFrame] -----------------
+
+def _route(cid, cfg, pipeline, dfs) -> list[DataFrame]:
+    # route rows by predicate to named downstream pipelines
+    routes = cfg.get("routes", [])
+    preds = [r["where"] for r in routes
+             if pipeline in _ids(r.get("pipelines"), "router.pipelines")]
+    if preds:
+        return [df.filter(" OR ".join(f"({p})" for p in preds)) for df in dfs]
+    if pipeline in _ids(cfg.get("default"), "router.default"):
+        neg = " AND ".join(f"NOT ({r['where']})" for r in routes)
+        return [df.filter(neg) if neg else df for df in dfs]
+    raise ConfigError(
+        f"router {cid!r}: pipeline {pipeline!r} matches no route and "
+        f"is not in default")
+
+
+def _spanmetrics(cid, cfg, pipeline, dfs) -> list[DataFrame]:
+    # traces -> RED duration histograms (the traces->metrics connector;
+    # operators/spans.py span_red_metrics).  Output is
+    # METRIC_POINT_SCHEMA, so the receiving metrics pipeline can apply
+    # the full §2.7 machinery unchanged.
+    from ..operators.spans import span_red_metrics
+    return [span_red_metrics(df, cfg.get("latency_bounds_ms")) for df in dfs]
+
+
+_CONNECTORS = {
+    "forward": (_any, lambda cid, cfg, pipeline, dfs: dfs),
+    "router": (_check_routes, _route),
+    "spanmetrics": (_any, _spanmetrics),
+}
+
+
+# config section -> (component class, default kind, kind table); the
+# `components` subcommand prints the table keys, like the reference's
+# componentsOutput (otelcol/command_components.go:16-57)
+_SECTIONS = {
+    "receivers": ("receiver", "table", _RECEIVERS),
+    "processors": ("processor", None, _PROCESSORS),
+    "exporters": ("exporter", "memory", _EXPORTERS),
+    "connectors": ("connector", "forward", _CONNECTORS),
+}
 
 
 class PipelineGraph:
@@ -174,6 +426,20 @@ class PipelineGraph:
                 exporters=_ids(p.get("exporters"), f"pipelines.{name}.exporters"),
             )
         self._validate()
+        # (section, id) -> (builder, checked config): every declared
+        # component is checked here, before anything is built
+        self._parts: dict[tuple[str, str], tuple[Callable, Any]] = {}
+        for key, (what, default, table) in _SECTIONS.items():
+            for cid, ccfg in getattr(self, key).items():
+                kind = ccfg.get("kind", default)
+                entry = table.get(kind) if isinstance(kind, str) else None
+                if entry is None:
+                    raise ConfigError(f"{what} {cid!r}: unknown kind {kind!r}")
+                check, build = entry
+                try:
+                    self._parts[key, cid] = (build, check(kind, ccfg))
+                except ConfigError as e:
+                    raise ConfigError(f"{what} {cid!r}: {e}") from None
 
     @classmethod
     def from_yaml(cls, text: str) -> "PipelineGraph":
@@ -262,88 +528,6 @@ class PipelineGraph:
                     + " -> ".join(f"pipeline {p!r}" for p in cyc))
             path.append(node)
 
-    def validate_kinds(self) -> None:
-        """Config-time component validation without a SparkSession — the
-        `validate` subcommand's depth (command_validate.go DryRun parses
-        and validates, it never starts components): every declared
-        component's kind must be a registered factory, per-kind required
-        keys must be present, and the memory_limiter budget must resolve
-        (its construction errors are config errors in the reference)."""
-        for rid, cfg in self.receivers.items():
-            kind = (cfg or {}).get("kind", "table")
-            if kind not in RECEIVER_KINDS:
-                raise ConfigError(f"receiver {rid!r}: unknown kind {kind!r}")
-            if kind == "table" and "table" not in cfg:
-                raise ConfigError(f"receiver {rid!r}: table kind needs "
-                                  f"a `table:` name")
-            if kind in ("parquet", "json", "pb", "http_spool",
-                        "grpc_spool", "arrow_spool") and "path" not in cfg:
-                raise ConfigError(f"receiver {rid!r}: {kind} kind needs "
-                                  f"a `path:`")
-        for pid, cfg in self.processors.items():
-            kind = (cfg or {}).get("kind")
-            if kind not in PROCESSOR_KINDS:
-                raise ConfigError(f"processor {pid!r}: unknown kind {kind!r}")
-            if kind == "filter" and "where" not in cfg:
-                raise ConfigError(f"processor {pid!r}: filter needs `where:`")
-            if kind == "project" and "exprs" not in cfg:
-                raise ConfigError(f"processor {pid!r}: project needs `exprs:`")
-            if kind == "transform" and cfg.get("statements"):
-                # statement TEXT parses Spark-free: a syntax error must
-                # be the validate contract, not a compile-time surprise
-                from ..functions.ottl_parser import (OttlSyntaxError,
-                                                     parse_statement)
-                stmts = cfg["statements"]
-                if not isinstance(stmts, (list, tuple)):
-                    raise ConfigError(f"processor {pid!r}: statements "
-                                      f"must be a list")
-                for st in stmts:
-                    try:
-                        parse_statement(str(st))
-                    except OttlSyntaxError as e:
-                        raise ConfigError(
-                            f"processor {pid!r}: bad OTTL statement "
-                            f"{st!r}: {e}") from None
-            if kind == "memory_limiter":
-                from .memlimit import MemLimitConfigError, parse_memlimiter
-                try:
-                    parse_memlimiter(cfg)
-                except MemLimitConfigError as e:
-                    raise ConfigError(f"processor {pid!r}: {e}") from None
-        for eid, cfg in self.exporters.items():
-            kind = (cfg or {}).get("kind", "memory")
-            if kind not in EXPORTER_KINDS:
-                raise ConfigError(f"exporter {eid!r}: unknown kind {kind!r}")
-            if kind in ("parquet", "pb") and "path" not in cfg:
-                raise ConfigError(f"exporter {eid!r}: {kind} kind needs "
-                                  f"a `path:`")
-            if kind == "pb" and "signal" not in cfg:
-                # the sink thunk defers cfg["signal"] into its lambda,
-                # so without this check `validate` would pass a config
-                # that dies with a raw KeyError at export time
-                raise ConfigError(f"exporter {eid!r}: pb kind needs "
-                                  f"a `signal:`")
-            if kind in ("http", "grpc", "arrow_stream") \
-                    and "endpoint" not in cfg:
-                raise ConfigError(f"exporter {eid!r}: {kind} kind needs "
-                                  f"an `endpoint:`")
-        for cid, cfg in self.connectors.items():
-            kind = (cfg or {}).get("kind", "forward")
-            if kind not in CONNECTOR_KINDS:
-                raise ConfigError(f"connector {cid!r}: unknown kind {kind!r}")
-            if kind == "router":
-                routes = cfg.get("routes", [])
-                if not isinstance(routes, (list, tuple)):
-                    raise ConfigError(f"connector {cid!r}: routes must "
-                                      f"be a list")
-                for i, r in enumerate(routes):
-                    if not isinstance(r, dict) or "where" not in r:
-                        # compile reads r["where"] — a malformed route
-                        # must fail validate, not KeyError at compile
-                        raise ConfigError(
-                            f"connector {cid!r}: routes[{i}] needs a "
-                            f"mapping with a `where:`")
-
     # ------------------------- compilation -------------------------------
 
     def compile(self, spark: SparkSession,
@@ -356,7 +540,7 @@ class PipelineGraph:
         """
         sources = sources or {}
         receiver_df: dict[str, DataFrame] = {}   # shared instances
-        connector_inputs: dict[str, list[tuple[str, DataFrame]]] = {}
+        connector_inputs: dict[str, list[DataFrame]] = {}
         plan = CompiledPlan(spark=spark, pipeline_dfs={})
 
         for name in self._topo_order():
@@ -364,11 +548,17 @@ class PipelineGraph:
             inputs: list[DataFrame] = []
             for r in p.receivers:
                 if r in self.connectors:
-                    inputs.extend(self._connector_out(r, name, connector_inputs))
+                    dfs = connector_inputs.get(r)
+                    if not dfs:
+                        raise ConfigError(
+                            f"connector {r!r} feeding pipeline {name!r} has "
+                            f"no upstream output (check pipeline ordering)")
+                    build, cfg = self._parts["connectors", r]
+                    inputs.extend(build(r, cfg, name, dfs))
                 else:
                     if r not in receiver_df:
-                        receiver_df[r] = self._build_receiver(
-                            spark, r, sources, sf_dir)
+                        build, cfg = self._parts["receivers", r]
+                        receiver_df[r] = build(spark, r, cfg, sources, sf_dir)
                     inputs.append(receiver_df[r])
             if not inputs:
                 raise ConfigError(f"pipeline {name!r} has no live inputs")
@@ -379,87 +569,18 @@ class PipelineGraph:
             # boundary + deferred memory-limiter gates (run-time admission)
             ctx = {"batch_size": None, "gates": []}
             for pr in p.processors:    # per-pipeline processor instances
-                df = self._apply_processor(df, pr, ctx)
+                build, cfg = self._parts["processors", pr]
+                df = build(df, pr, cfg, ctx)
             plan.pipeline_dfs[name] = df
             for e in p.exporters:      # fan-out (fanoutconsumer; clone-free)
                 if e in self.connectors:
-                    connector_inputs.setdefault(e, []).append((name, df))
+                    connector_inputs.setdefault(e, []).append(df)
                 else:
+                    build, cfg = self._parts["exporters", e]
                     plan._sinks.append(
                         (name, e,
-                         self._build_sink(df, self.exporters[e], e, ctx)))
+                         self._gated(build(df, e, cfg, ctx), ctx["gates"])))
         return plan
-
-    # -- component builders ------------------------------------------------
-
-    def _build_receiver(self, spark, rid: str, sources, sf_dir) -> DataFrame:
-        cfg = self.receivers[rid]
-        kind = cfg.get("kind", "table")
-        if kind == "memory":
-            if rid not in sources:
-                raise ConfigError(f"memory receiver {rid!r} needs a sources[{rid!r}] DataFrame")
-            return sources[rid]
-        if kind == "table":
-            from ..sources.tables import load_table
-            base = cfg.get("sf_dir") or sf_dir
-            if base is None:
-                raise ConfigError(f"table receiver {rid!r} needs sf_dir")
-            return load_table(spark, base, cfg["table"])
-        if kind == "parquet":
-            return spark.read.parquet(cfg["path"])
-        if kind == "json":
-            from ..sources.otlp_json import read_otlp_json
-            return read_otlp_json(spark, cfg["path"], cfg.get("signal", "logs"))
-        if kind == "pb":
-            from ..sources.otlp_pb import read_otlp_pb
-            return read_otlp_pb(spark, cfg["path"], cfg.get("signal", "traces"))
-        if kind in ("http_spool", "grpc_spool", "arrow_spool"):
-            # the live OTLP front doors' shared spool (sources/spool.py;
-            # receiver/otlpreceiver/otlp.go serves both protocols, and
-            # arrow.go:251-349 the OTel-Arrow stream loop)
-            from ..sources import spool
-            read = (spool.read_arrow_spool if kind == "arrow_spool"
-                    else spool.read_spool)
-            return read(spark, cfg["path"], cfg.get("signal", "traces"))
-        raise ConfigError(f"receiver {rid!r}: unknown kind {kind!r}")
-
-    def _apply_processor(self, df: DataFrame, pid: str, ctx: dict) -> DataFrame:
-        cfg = self.processors[pid]
-        kind = cfg.get("kind")
-        if kind == "filter":
-            return df.filter(cfg["where"])
-        if kind == "project":
-            return df.selectExpr(*cfg["exprs"])
-        if kind == "transform":
-            from ..functions.ottl import apply_ottl
-            # `statements:` carries OTTL statement TEXT (the transform
-            # processor's native config surface, docs/processing.md:147+);
-            # the dict keys remain the declarative shorthand
-            if cfg.get("statements"):
-                from ..functions.ottl_parser import apply_statements
-                df = apply_statements(df, list(cfg["statements"]))
-            return apply_ottl(df, cfg)
-        if kind == "batch":
-            # No count(), no extra job: AQE rebalances partitions from
-            # runtime shuffle stats; the hard per-request row cap lands at
-            # the sink boundary via maxRecordsPerFile (ctx["batch_size"]),
-            # which is where splitTraces caps export requests.
-            ctx["batch_size"] = int(cfg.get("send_batch_size", 8192))
-            return df.hint("rebalance")
-        if kind == "memory_limiter":
-            # Deferred: recorded here, checked at run() against the chain
-            # position the limiter occupies (not the final sink plan).
-            # The full reference config surface (limit_mib / spike /
-            # percentage / check_interval) is validated HERE, at config
-            # time, like memorylimiterprocessor's construction errors.
-            from .memlimit import MemLimitConfigError, parse_memlimiter
-            try:
-                spec = parse_memlimiter(cfg)
-            except MemLimitConfigError as e:
-                raise ConfigError(f"processor {pid!r}: {e}") from None
-            ctx["gates"].append((pid, spec, df))
-            return df
-        raise ConfigError(f"processor {pid!r}: unknown kind {kind!r}")
 
     @staticmethod
     def _gated(thunk, gates):
@@ -508,113 +629,3 @@ class PipelineGraph:
                 for _, _, gdf in gates:
                     gdf.unpersist()
         return run
-
-    def _build_sink(self, df: DataFrame, cfg: dict, eid: str,
-                    ctx: dict | None = None):
-        ctx = ctx or {"batch_size": None, "gates": []}
-        thunk = self._sink_thunk(df, cfg, eid, ctx)
-        return self._gated(thunk, ctx["gates"])
-
-    def _sink_thunk(self, df: DataFrame, cfg: dict, eid: str, ctx: dict):
-        kind = cfg.get("kind", "memory")
-        if kind == "console":
-            n = int(cfg.get("rows", 20))
-
-            def console() -> str:
-                # logging exporter (logging_exporter.go:20-90): textual dump
-                return df._jdf.showString(n, 40, False)
-            return console
-        if kind == "parquet":
-            path = cfg["path"]
-            mode = cfg.get("mode", "overwrite")
-            cap = ctx.get("batch_size")
-
-            def write() -> str:
-                w = df.write.mode(mode)
-                if cap:   # batch processor's hard per-file row cap
-                    w = w.option("maxRecordsPerFile", cap)
-                w.parquet(path)
-                return path
-            return write
-        if kind == "pb":
-            from ..sources.otlp_pb import write_otlp_pb
-            return lambda: write_otlp_pb(df, cfg["path"], cfg["signal"])
-        if kind == "http":
-            # live OTLP/HTTP push (exporters/http_exporter.py): executor-
-            # side POSTs; returns the audit totals dict
-            from ..exporters.http_exporter import export_http_now
-            return lambda: export_http_now(
-                df, cfg["endpoint"], cfg.get("signal", "traces"),
-                token=cfg.get("token"),
-                # configcompression: bool OR a named coding (zstd/zlib/
-                # deflate) — bool() would silently degrade every named
-                # coding to gzip
-                compress=_compress_cfg(cfg, eid),
-                max_rows_per_request=int(
-                    cfg.get("max_rows_per_request", 8192)))
-        if kind == "grpc":
-            # live OTLP/gRPC push (exporters/grpc_exporter.py): executor-
-            # side unary Exports over stdlib HTTP/2
-            from ..exporters.grpc_exporter import export_grpc_now
-            return lambda: export_grpc_now(
-                df, cfg["endpoint"], cfg.get("signal", "traces"),
-                token=cfg.get("token"),
-                compress=_compress_cfg(cfg, eid),
-                max_rows_per_request=int(
-                    cfg.get("max_rows_per_request", 8192)))
-        if kind == "memory":
-            # consumertest.Sink analogue (consumer/consumertest/sink.go:28-56)
-            return lambda: df.collect()
-        if kind == "null":
-            return lambda: df.count()
-        if kind == "arrow_stream":
-            # live OTel-Arrow bidi stream push (export_arrow_stream):
-            # one executor-side stream per partition, per-batch acks
-            from ..exporters.grpc_exporter import export_arrow_stream
-
-            def push() -> dict:
-                rows = export_arrow_stream(
-                    df, cfg["endpoint"],
-                    payload_type=int(cfg.get("payload_type", 40)),
-                    token=cfg.get("token")).collect()
-                return {"rows_sent": sum(r.rows_sent for r in rows),
-                        "n_batches": sum(r.n_batches for r in rows),
-                        "all_acked": all(r.all_acked for r in rows)}
-            return push
-        raise ConfigError(f"exporter {eid!r}: unknown kind {kind!r}")
-
-    def _connector_out(self, cid: str, pipeline: str,
-                       connector_inputs) -> list[DataFrame]:
-        cfg = self.connectors[cid]
-        kind = cfg.get("kind", "forward")
-        inputs = connector_inputs.get(cid, [])
-        if not inputs:
-            raise ConfigError(
-                f"connector {cid!r} feeding pipeline {pipeline!r} has no "
-                f"upstream output (check pipeline ordering)")
-        if kind == "forward":
-            return [df for _, df in inputs]
-        if kind == "router":
-            # route rows by predicate to named downstream pipelines
-            routes = cfg.get("routes", [])
-            preds = [r["where"] for r in routes
-                     if pipeline in _ids(r.get("pipelines"), "router.pipelines")]
-            if preds:
-                return [df.filter(" OR ".join(f"({p})" for p in preds))
-                        for _, df in inputs]
-            default = _ids(cfg.get("default"), "router.default")
-            if pipeline in default:
-                neg = " AND ".join(f"NOT ({r['where']})" for r in routes)
-                return [df.filter(neg) if neg else df for _, df in inputs]
-            raise ConfigError(
-                f"router {cid!r}: pipeline {pipeline!r} matches no route and "
-                f"is not in default")
-        if kind == "spanmetrics":
-            # traces -> RED duration histograms (the traces->metrics
-            # connector; operators/spans.py span_red_metrics).  Output is
-            # METRIC_POINT_SCHEMA, so the receiving metrics pipeline can
-            # apply the full §2.7 machinery unchanged.
-            from ..operators.spans import span_red_metrics
-            bounds = cfg.get("latency_bounds_ms")
-            return [span_red_metrics(df, bounds) for _, df in inputs]
-        raise ConfigError(f"connector {cid!r}: unknown kind {kind!r}")

@@ -164,21 +164,25 @@ def read_spool(spark, spool_dir: str, signal: str,
     parts = []
     if count_files(json_dir):
         j = read_otlp_json(spark, json_dir, signal)
-        if client_info:
-            from pyspark.sql import functions as F
-            j = (j.withColumn("client_addr", F.lit(None).cast("string"))
-                  .withColumn("client_principal",
-                              F.lit(None).cast("string")))
-        parts.append(j)
+        parts.append(_null_client(j) if client_info else j)
     if count_files(pb_dir):
         parts.append(read_otlp_pb(spark, pb_dir, signal,
                                   client_info=client_info))
     if not parts:
-        return spark.createDataFrame([], _SCHEMAS[signal])
+        empty = spark.createDataFrame([], _SCHEMAS[signal])
+        return _null_client(empty) if client_info else empty
     out = parts[0]
     for p in parts[1:]:
         out = out.unionByName(p)
     return out
+
+
+def _null_client(df):
+    """NULL ``client_addr``/``client_principal`` columns, for rows read
+    without per-file peer metadata."""
+    from pyspark.sql import functions as F
+    return (df.withColumn("client_addr", F.lit(None).cast("string"))
+              .withColumn("client_principal", F.lit(None).cast("string")))
 
 
 def stream_spool(spark, spool_dir: str, signal: str):
@@ -204,8 +208,14 @@ def stream_spool(spark, spool_dir: str, signal: str):
 
 def read_arrow_spool(spark, spool_dir: str, signal: str):
     """Spark view over a main signal's Arrow-stream spool — also the
-    pipeline compiler's ``kind: arrow_spool`` receiver."""
-    return spark.read.parquet(arrow_dir(spool_dir, ARROW_MAIN[signal]))
+    pipeline compiler's ``kind: arrow_spool`` receiver.  Before the
+    first batch is spooled it is empty, in the signal's row-model
+    schema, so a relay's union with the OTLP spool still resolves."""
+    d = arrow_dir(spool_dir, ARROW_MAIN[signal])
+    if not count_files(d):
+        from .otlp_pb import _SCHEMAS
+        return spark.createDataFrame([], _SCHEMAS[signal])
+    return spark.read.parquet(d)
 
 
 def stream_arrow_spool(spark, spool_dir: str, signal: str, schema=None):

@@ -458,14 +458,14 @@ def test_http_pipeline_exporter_named_compression(spark, rcv):
     })
     stats = g.compile(spark, sources={"mem": td}).run()["traces/push"]
     assert stats["rows_sent"] == 4
-    # a non-bool non-string compress value is a ConfigError at run
+    # a non-bool non-string compress value is a ConfigError, raised
+    # when the graph is built
     import pytest as _pt
-    g2 = PipelineGraph({
-        "receivers": {"mem": {"kind": "memory"}},
-        "exporters": {"push": {"kind": "http", "endpoint": rcv.endpoint,
-                               "signal": "traces", "compress": 3}},
-        "pipelines": {"traces": {"receivers": ["mem"],
-                                 "exporters": ["push"]}},
-    })
     with _pt.raises(ConfigError, match="compress"):
-        g2.compile(spark, sources={"mem": td}).run()
+        PipelineGraph({
+            "receivers": {"mem": {"kind": "memory"}},
+            "exporters": {"push": {"kind": "http", "endpoint": rcv.endpoint,
+                                   "signal": "traces", "compress": 3}},
+            "pipelines": {"traces": {"receivers": ["mem"],
+                                     "exporters": ["push"]}},
+        }).compile(spark, sources={"mem": td}).run()

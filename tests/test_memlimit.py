@@ -127,7 +127,10 @@ pipelines:
 
 
 def test_invalid_limiter_config_fails_at_graph_compile(spark):
-    g = PipelineGraph.from_yaml("""
+    """The limiter's config is checked when the graph is built, before
+    compile, so no entry point can reach a builder with it."""
+    with pytest.raises(ConfigError, match="smaller than"):
+        PipelineGraph.from_yaml("""
 receivers:
   mem/src: {kind: memory}
 processors:
@@ -136,9 +139,7 @@ exporters:
   sink/mem: {kind: memory}
 pipelines:
   p: {receivers: [mem/src], processors: [limiter], exporters: [sink/mem]}
-""")
-    with pytest.raises(ConfigError, match="smaller than"):
-        g.compile(spark, sources={"mem/src": spark.range(1)})
+""").compile(spark, sources={"mem/src": spark.range(1)})
 
 
 def test_estimate_row_bytes_scales_with_payload(spark):

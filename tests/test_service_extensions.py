@@ -197,13 +197,23 @@ def test_extension_config_type_fences():
     assert cfg["service_extensions"] == ["zpages"]
 
 
-def test_extension_kinds_inventory_in_lock_step():
-    """The components CLI dumps pipeline.EXTENSION_KINDS; it must agree
-    with the factory types validate/build accept."""
-    from otel_arrow_collector_spark.plans.extensions import \
-        KNOWN_EXTENSION_TYPES
-    from otel_arrow_collector_spark.plans.pipeline import EXTENSION_KINDS
-    assert set(EXTENSION_KINDS) == set(KNOWN_EXTENSION_TYPES)
+def test_extension_kinds_inventory_in_lock_step(capsys, tmp_path):
+    """The components CLI lists exactly the extension factory types, and
+    each type it lists validates and builds."""
+    import yaml
+
+    from otel_arrow_collector_spark.__main__ import main
+    from otel_arrow_collector_spark.plans.extensions import _EXTENSIONS
+    assert main(["components"]) == 0
+    listed = yaml.safe_load(capsys.readouterr().out)["extensions"]
+    assert listed == sorted(_EXTENSIONS)
+    declared = {t: {"token": "sekrit", "directory": str(tmp_path)}
+                for t in listed}
+    built = build_extensions(declared, listed)
+    try:
+        assert list(built.instances) == listed
+    finally:
+        built.shutdown()
 
 
 def test_storage_legacy_filename_migrates(tmp_path):

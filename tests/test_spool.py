@@ -243,6 +243,46 @@ def test_write_durable_removes_temp_on_failure(tmp_path):
     assert os.listdir(tmp_path) == []
 
 
+# -- an empty spool reads as empty, in the shape a full one has ---------------
+
+def test_relay_runs_before_the_first_arrow_batch(spark, one_span, tmp_path):
+    """A relay over both spools (the OTLP/pb and the OTel-Arrow one,
+    unioned) compiles and runs while only pb requests have arrived."""
+    from otel_arrow_collector_spark.plans.pipeline import PipelineGraph
+    d = str(tmp_path)
+    spool.Writer(d, ("pb",)).write_request(one_span, "traces", "pb")
+    plan = PipelineGraph({
+        "receivers": {
+            "otlp/pb": {"kind": "grpc_spool", "path": d, "signal": "traces"},
+            "otlp/arrow": {"kind": "arrow_spool", "path": d,
+                           "signal": "traces"}},
+        "processors": {
+            "transform/tag": {"kind": "transform", "statements": [
+                'set(attributes["relay"], "test")']},
+            "batch": {"kind": "batch", "send_batch_size": 512}},
+        "exporters": {"sink": {"kind": "memory"}},
+        "pipelines": {"traces": {
+            "receivers": ["otlp/pb", "otlp/arrow"],
+            "processors": ["transform/tag", "batch"],
+            "exporters": ["sink"]}},
+    }).compile(spark)
+    rows = plan.run()["traces/sink"]
+    assert [r.span_id for r in rows] == [
+        r["span_id"] for r in decode_request(one_span, "traces")]
+
+
+def test_empty_client_info_spool_keeps_its_columns(spark, one_span,
+                                                    tmp_path):
+    full = str(tmp_path / "full")
+    spool.Writer(full, ("pb",)).write_request(
+        one_span, "traces", "pb", client=("10.0.0.1:5", "alice"))
+    want = spool.read_spool(spark, full, "traces", client_info=True)
+    empty = spool.read_spool(spark, str(tmp_path / "empty"), "traces",
+                             client_info=True)
+    assert empty.schema.simpleString() == want.schema.simpleString()
+    assert empty.count() == 0
+
+
 # -- HTTP body framing and the error counter ----------------------------------
 
 @pytest.fixture()
