@@ -1135,10 +1135,13 @@ GROUP BY grp, q.q ORDER BY grp, q
 # estimation"; the Apache DataSketches theta family).  Keep the K
 # smallest 48-bit hashes per set; theta = the K-th smallest; the
 # intersection estimate counts common retained hashes below the SMALLER
-# theta.  State is K rows per set — mergeable, shuffle-bounded, the
-# 100 TB property.  All arithmetic is integer (hash values are 48-bit
-# md5 prefixes; estimates are (K-1)*2^48 // h_k), so DuckDB re-derives
-# every value exactly.
+# theta.  State is one row per set holding its sorted bottom-K hash
+# array — mergeable, shuffle-bounded, the 100 TB property — and every
+# set expression is array algebra (intersect / except / union) on a
+# pair of those rows, so a query is one |types|² cross join of them.
+# All arithmetic is integer (hash values are 48-bit md5 prefixes;
+# estimates are (K-1)*2^48 // h_k), so DuckDB re-derives every value
+# exactly.
 
 #: retained minimum hashes per set
 THETA_K = 32
@@ -1175,21 +1178,14 @@ def _dist_type_user(spark, sf_dir):
 
 
 def _theta_exact(spark, sf_dir):
-    """Memoized exact-audit relations shared across the theta family
-    (4 consumers of the pairwise intersection, 3 of the set sizes —
-    each previously re-ran the distinct self-join / size aggregate per
-    query per invocation; AQE never stage-reuses subtrees over cached
-    relations, the r16 finding).  The intersection is kept in ORDERED
-    (type_a != type_b) form — unordered consumers filter type_a <
-    type_b, which halves it to the same rows they derived before."""
+    """Memoized exact intersection sizes shared by the theta family's
+    audits (each previously re-ran the distinct self-join per query per
+    invocation; AQE never stage-reuses subtrees over cached relations,
+    the r16 finding).  Kept in ORDERED (type_a != type_b) form, so one
+    relation serves the unordered pairs and the ordered AnotB pairs."""
     from .cache_registry import cached, materialized
     dist = _dist_type_user(spark, sf_dir)
-    sizes = cached(
-        "sketches.theta_sizes", spark, sf_dir,
-        lambda: materialized(
-            dist.groupBy("event_type")
-            .agg(F.count(F.lit(1)).alias("n_set"))))
-    inter = cached(
+    return cached(
         "sketches.theta_exact_inter", spark, sf_dir,
         lambda: materialized(
             dist.alias("x").join(dist.alias("y"), "user_id")
@@ -1197,28 +1193,25 @@ def _theta_exact(spark, sf_dir):
             .groupBy(F.col("x.event_type").alias("type_a"),
                      F.col("y.event_type").alias("type_b"))
             .agg(F.count(F.lit(1)).alias("n_inter"))))
-    return sizes, inter
 
 
-def _theta_base(spark, sf_dir):
-    """The scaffold shared by the three theta queries: ``dist`` (the
-    corpus-distinct (event_type, user_id) relation the exact audits
-    re-derive from) and ``kept`` (the bottom-THETA_K 48-bit hashes per
-    set, with rank ``rk`` and set size ``n``).  Both are memoized
-    through the shared cache registry so union/intersection/difference
-    see ONE sketch state per (session, dir) — the ER-trio
-    desynchronization discipline."""
-    dist = _dist_type_user(spark, sf_dir)
+def _theta_sketches(spark, sf_dir):
+    """Memoized sketch rows, one per set: ``(event_type, n, th, hvs)``.
+    Every theta query reads this one state per (session, dir), so
+    union, intersection, AnotB and Jaccard cannot desynchronize."""
     from .cache_registry import cached, materialized
-    return dist, cached(
-        "sketches.theta_kept", spark, sf_dir,
-        lambda: materialized(_build_theta_kept(dist)))
+    return cached(
+        "sketches.theta_sketches", spark, sf_dir,
+        lambda: materialized(
+            _build_theta_sketches(_dist_type_user(spark, sf_dir))))
 
 
 def _build_theta_kept(dist):
-    """Raw (pre-materialization) plan of the per-set bottom-K sketch —
+    """Raw (pre-materialization) plan of the per-set bottom-K hashes —
     split out so plan-quality tests can pin the set-keyed rank window
-    the truncated memoized relation no longer exposes."""
+    the truncated memoized relation no longer exposes.  The rank is
+    dense, so a hash held twice takes one of the K slots (set
+    semantics, as in the streaming twin); ``n`` counts the set's rows."""
     from pyspark.sql import Window
     h = dist.select(
         "event_type",
@@ -1227,27 +1220,54 @@ def _build_theta_kept(dist):
     w = Window.partitionBy("event_type").orderBy("hv")
     rk = h.select(
         "event_type", "hv",
-        F.row_number().over(w).alias("rk"),
+        F.dense_rank().over(w).alias("rk"),
         F.count(F.lit(1)).over(
             Window.partitionBy("event_type")).alias("n"))
     return rk.filter(F.col("rk") <= THETA_K)
 
 
-def _theta_stats(kept):
-    """Per set: size ``n`` and the K-th smallest hash ``hk`` (null when
-    the set holds fewer than K values) — the raw material each theta
-    query projects its threshold/estimate from."""
-    return (kept.groupBy("event_type")
+def _build_theta_sketches(dist):
+    """One row per set: exact size ``n``, the sorted bottom-THETA_K
+    distinct hashes ``hvs`` and the threshold ``th``.  The groupBy
+    keys on the rank window's partition key, so it adds no exchange."""
+    return (_build_theta_kept(dist).groupBy("event_type")
             .agg(F.max("n").alias("n"),
-                 F.max(F.when(F.col("rk") == THETA_K, F.col("hv")))
-                  .alias("hk")))
+                 F.array_sort(F.collect_set("hv")).alias("hvs"))
+            .select("event_type", "n", _theta_th().alias("th"), "hvs"))
 
 
 def _theta_th():
-    """Threshold column: hk for saturated sets, else the full hash
-    range (built lazily — Columns need an active SparkContext)."""
-    return (F.when(F.col("n") >= THETA_K, F.col("hk"))
+    """Threshold column: the K-th smallest hash of a saturated sketch,
+    else the full hash range (built lazily — Columns need an active
+    SparkContext)."""
+    return (F.when(F.size("hvs") >= THETA_K, F.element_at("hvs", THETA_K))
             .otherwise(F.lit(THETA_RANGE)))
+
+
+def _theta_pairs(spark, sf_dir, keep):
+    """The sketch rows paired with themselves where ``keep`` holds:
+    ``type``/``n``/``th``/``hvs`` suffixed ``_a`` and ``_b``, the
+    combined threshold ``th = least(th_a, th_b)`` and the exact
+    intersection size ``n_inter``.  |types|² rows at most, so the self
+    cross join is a broadcast nested loop and the audit join a
+    broadcast hash join; nothing here grows with the fact table."""
+    sk = _theta_sketches(spark, sf_dir)
+
+    def side(s):
+        return sk.select(F.col("event_type").alias(f"type_{s}"),
+                         *(F.col(c).alias(f"{c}_{s}")
+                           for c in ("n", "th", "hvs")))
+    return (side("a").crossJoin(side("b"))
+            .filter(keep(F.col("type_a"), F.col("type_b")))
+            .withColumn("th", F.least("th_a", "th_b"))
+            .join(_theta_exact(spark, sf_dir), ["type_a", "type_b"], "left")
+            .withColumn("n_inter", F.coalesce("n_inter", F.lit(0))))
+
+
+def _below_th(hashes):
+    """The hashes of an array column below the pair threshold ``th``:
+    both sketches are uniform samples of their sets there."""
+    return F.filter(hashes, lambda x: x < F.col("th"))
 
 
 def sketch_theta_intersection(spark, sf_dir):
@@ -1255,57 +1275,25 @@ def sketch_theta_intersection(spark, sf_dir):
     and of their intersection, next to the exact intersection size.
 
     Scale shape: one distinct pass (hash-agg on (event_type, user_id)),
-    a per-set window rank capped at THETA_K rows retained per set,
-    then all joins run on the tiny K-row-per-set retained relation;
-    the exact audit is a self-join of the distinct pass on user_id.
-    Nothing driver-side, no Python.
+    a per-set rank window capped at THETA_K hashes into one sketch row
+    per set, then one self cross join of the |types| sketch rows whose
+    counts are array expressions (``array_intersect``); the exact audit
+    is a self-join of the distinct pass on user_id.  Nothing
+    driver-side, no Python.
     """
-    dist, kept = _theta_base(spark, sf_dir)
-    theta = (_theta_stats(kept)
-             .select(
-                 "event_type",
-                 _theta_th().alias("th"),
-                 F.when(F.col("n") >= THETA_K,
-                        F.expr(f"{(THETA_K - 1) * THETA_RANGE} div hk"))
-                  .otherwise(F.col("n")).cast("long").alias("est")))
-    ka = kept.select(F.col("event_type").alias("type_a"),
-                     F.col("hv").alias("hv"))
-    kb = kept.select(F.col("event_type").alias("type_b"),
-                     F.col("hv").alias("hv"))
-    ta = theta.select(F.col("event_type").alias("type_a"),
-                      F.col("th").alias("th_a"),
-                      F.col("est").alias("est_a"))
-    tb = theta.select(F.col("event_type").alias("type_b"),
-                      F.col("th").alias("th_b"),
-                      F.col("est").alias("est_b"))
-    common = (ka.join(kb, "hv")
-              .filter(F.col("type_a") < F.col("type_b"))
-              .join(F.broadcast(ta), "type_a")
-              .join(F.broadcast(tb), "type_b")
-              .filter(F.col("hv") < F.least("th_a", "th_b"))
-              .groupBy("type_a", "type_b", "th_a", "th_b",
-                       "est_a", "est_b")
-              .agg(F.count(F.lit(1)).alias("n_common")))
-    pairs = (ta.crossJoin(tb)
-             .filter(F.col("type_a") < F.col("type_b"))
-             .join(common.select("type_a", "type_b", "n_common"),
-                   ["type_a", "type_b"], "left")
-             .withColumn("n_common",
-                         F.coalesce("n_common", F.lit(0))))
-    _, _xinter = _theta_exact(spark, sf_dir)
-    exact = (_xinter.filter(F.col("type_a") < F.col("type_b"))
-             .select("type_a", "type_b",
-                     F.col("n_inter").alias("exact_intersection")))
-    return (pairs.join(exact, ["type_a", "type_b"], "left")
+    def est(s):
+        return (F.when(F.size(f"hvs_{s}") >= THETA_K,
+                       F.expr(f"{(THETA_K - 1) * THETA_RANGE} div th_{s}"))
+                .otherwise(F.col(f"n_{s}")).cast("long").alias(f"est_{s}"))
+    return (_theta_pairs(spark, sf_dir, lambda a, b: a < b)
+            .withColumn("n_common", F.size(_below_th(
+                F.array_intersect("hvs_a", "hvs_b"))))
             .select(
-                "type_a", "type_b",
-                F.col("est_a").cast("long").alias("est_a"),
-                F.col("est_b").cast("long").alias("est_b"),
+                "type_a", "type_b", est("a"), est("b"),
                 F.col("n_common").cast("long").alias("n_common"),
-                F.expr(f"n_common * {THETA_RANGE} div least(th_a, th_b)")
+                F.expr(f"n_common * {THETA_RANGE} div th")
                  .cast("long").alias("est_intersection"),
-                F.coalesce("exact_intersection", F.lit(0)).cast("long")
-                 .alias("exact_intersection"))
+                F.col("n_inter").cast("long").alias("exact_intersection"))
             .orderBy("type_a", "type_b"))
 
 
@@ -1377,52 +1365,20 @@ def sketch_theta_difference(spark, sf_dir):
     form |A| - |A intersect B| — no second anti-join pass.
 
     Scale shape: same as the intersection sketch — one distinct pass,
-    per-set top-K window (<= THETA_K rows per set retained), then all
-    pair arithmetic on the tiny K-row-per-set relation with the
-    per-set theta/count relation broadcast.
+    one sketch row per set (<= THETA_K hashes), then one self cross
+    join of the sketch rows counting ``array_except`` survivors.
     """
-    dist, kept = _theta_base(spark, sf_dir)
-    theta = (_theta_stats(kept)
-             .select(
-                 "event_type", F.col("n").alias("n_exact_kept"),
-                 _theta_th().alias("th")))
-    ka = kept.select(F.col("event_type").alias("type_a"), "hv")
-    kb = kept.select(F.col("event_type").alias("type_b"), "hv")
-    ta = theta.select(F.col("event_type").alias("type_a"),
-                      F.col("th").alias("th_a"),
-                      F.col("n_exact_kept").alias("n_a"))
-    tb = theta.select(F.col("event_type").alias("type_b"),
-                      F.col("th").alias("th_b"),
-                      F.col("n_exact_kept").alias("n_b"))
-    th_pairs = (ta.crossJoin(tb)
-                .filter(F.col("type_a") != F.col("type_b"))
-                .withColumn("th", F.least("th_a", "th_b")))
-    in_b = kb.select("type_b", F.col("hv").alias("hv"))
-    n_diff = (ka.join(F.broadcast(th_pairs.select("type_a", "type_b",
-                                                  "th")),
-                      "type_a")
-              .filter(F.col("hv") < F.col("th"))
-              .join(in_b, ["type_b", "hv"], "left_anti")
-              .groupBy("type_a", "type_b")
-              .agg(F.count(F.lit(1)).alias("n_diff")))
-    # exact |A \ B| = |A| - |A n B| (one equality self-join)
-    sizes, inter = _theta_exact(spark, sf_dir)
-    return (th_pairs
-            .join(n_diff, ["type_a", "type_b"], "left")
-            .join(F.broadcast(sizes.select(
-                F.col("event_type").alias("type_a"),
-                F.col("n_set").alias("size_a"))), "type_a")
-            .join(inter, ["type_a", "type_b"], "left")
+    return (_theta_pairs(spark, sf_dir, lambda a, b: a != b)
+            .withColumn("n_diff", F.size(_below_th(
+                F.array_except("hvs_a", "hvs_b"))))
             .select(
                 "type_a", "type_b",
-                F.coalesce("n_diff", F.lit(0)).cast("long")
-                 .alias("n_diff"),
-                F.expr(f"coalesce(n_diff, 0) * {THETA_RANGE} div th")
+                F.col("n_diff").cast("long").alias("n_diff"),
+                F.expr(f"n_diff * {THETA_RANGE} div th")
                  .cast("long").alias("est_difference"),
-                (F.col("size_a") - F.coalesce("n_inter", F.lit(0)))
-                 .cast("long").alias("exact_difference"))
+                (F.col("n_a") - F.col("n_inter")).cast("long")
+                 .alias("exact_difference"))
             .orderBy("type_a", "type_b"))
-
 
 QUERIES["sketch_theta_difference"] = sketch_theta_difference
 ORACLES["sketch_theta_difference"] = f"""
@@ -1491,71 +1447,26 @@ def sketch_theta_union(spark, sf_dir):
     inputs were exact, since theta is then the full range).
 
     Scale shape: identical to the intersection sketch — one distinct
-    pass, per-set top-K window, then every pair computation on the
-    <= 2K-rows-per-pair retained relation with the per-set theta
-    relation broadcast.  The exact audit reuses the one equality
-    self-join (|A| + |B| - |A n B|), no extra corpus pass.
+    pass, one sketch row per set, then one self cross join of the
+    sketch rows; the pair union is one sorted array of <= 2K hashes,
+    whose K-th element is read only when it has K.  The exact audit
+    reuses the one equality self-join (|A| + |B| - |A n B|), no extra
+    corpus pass.
     """
-    dist, kept = _theta_base(spark, sf_dir)
-    from pyspark.sql import Window
-    theta = (_theta_stats(kept)
-             .select("event_type", _theta_th().alias("th")))
-    ta = theta.select(F.col("event_type").alias("type_a"),
-                      F.col("th").alias("th_a"))
-    tb = theta.select(F.col("event_type").alias("type_b"),
-                      F.col("th").alias("th_b"))
-    pairs = (ta.crossJoin(tb)
-             .filter(F.col("type_a") < F.col("type_b"))
-             .select("type_a", "type_b",
-                     F.least("th_a", "th_b").alias("th")))
-    ka = kept.select(F.col("event_type").alias("type_a"), "hv")
-    kb = kept.select(F.col("event_type").alias("type_b"), "hv")
-    ua = ka.join(F.broadcast(pairs), "type_a") \
-           .select("type_a", "type_b", "th", "hv")
-    ub = kb.join(F.broadcast(pairs), "type_b") \
-           .select("type_a", "type_b", "th", "hv")
-    u = (ua.unionByName(ub)
-         .filter(F.col("hv") < F.col("th"))
-         .select("type_a", "type_b", "th", "hv").distinct())
-    wp = Window.partitionBy("type_a", "type_b").orderBy("hv")
-    ur = u.select(
-        "type_a", "type_b", "th", "hv",
-        F.row_number().over(wp).alias("urk"),
-        F.count(F.lit(1)).over(
-            Window.partitionBy("type_a", "type_b")).alias("n_u"))
-    # th intentionally NOT in the grouping: the final select must read
-    # pairs.th (as the oracle does), which survives even when a pair has
-    # zero retained union hashes and stats has no row (r10 ADVICE —
-    # stats.th would be NULL through the left join in that case).
-    stats = (ur.groupBy("type_a", "type_b")
-             .agg(F.max("n_u").alias("n_u"),
-                  F.max(F.when(F.col("urk") == THETA_K, F.col("hv")))
-                   .alias("kth")))
-    sizes, _xinter = _theta_exact(spark, sf_dir)
-    inter = _xinter.filter(F.col("type_a") < F.col("type_b"))
-    return (pairs
-            .join(stats, ["type_a", "type_b"], "left")
-            .join(F.broadcast(sizes.select(
-                F.col("event_type").alias("type_a"),
-                F.col("n_set").alias("size_a"))), "type_a")
-            .join(F.broadcast(sizes.select(
-                F.col("event_type").alias("type_b"),
-                F.col("n_set").alias("size_b"))), "type_b")
-            .join(inter, ["type_a", "type_b"], "left")
+    return (_theta_pairs(spark, sf_dir, lambda a, b: a < b)
+            .withColumn("u", F.array_sort(_below_th(
+                F.array_union("hvs_a", "hvs_b"))))
             .select(
                 "type_a", "type_b",
-                F.coalesce("n_u", F.lit(0)).cast("long")
-                 .alias("n_union_kept"),
-                F.when(F.col("n_u") >= THETA_K,
-                       F.expr(f"{(THETA_K - 1) * THETA_RANGE} div kth"))
-                 .otherwise(F.expr(
-                     f"coalesce(n_u, 0) * {THETA_RANGE} div th"))
+                F.size("u").cast("long").alias("n_union_kept"),
+                F.expr(f"CASE WHEN size(u) >= {THETA_K} THEN "
+                       f"{(THETA_K - 1) * THETA_RANGE} div "
+                       f"element_at(u, {THETA_K}) "
+                       f"ELSE size(u) * {THETA_RANGE} div th END")
                  .cast("long").alias("est_union"),
-                (F.col("size_a") + F.col("size_b")
-                 - F.coalesce("n_inter", F.lit(0))).cast("long")
-                 .alias("exact_union"))
+                (F.col("n_a") + F.col("n_b") - F.col("n_inter"))
+                 .cast("long").alias("exact_union"))
             .orderBy("type_a", "type_b"))
-
 
 QUERIES["sketch_theta_union"] = sketch_theta_union
 ORACLES["sketch_theta_union"] = f"""
@@ -1634,64 +1545,26 @@ def sketch_theta_jaccard(spark, sf_dir):
     1000 * counts <= 1000 * corpus rows ~ 1e15 << 2^63; no products of
     aggregates).
 
-    Scale shape: everything after the memoized bottom-K scaffold
-    (_theta_base) runs on K rows per set; the exact audit is the same
-    distinct self-join the other theta queries carry.
+    Scale shape: one self cross join of the memoized sketch rows
+    (``_theta_sketches``, <= THETA_K hashes per set) counting
+    ``array_intersect`` and ``array_union``; the exact audit is the
+    same distinct self-join the other theta queries carry.
     """
-    dist, kept = _theta_base(spark, sf_dir)
-    theta = (_theta_stats(kept)
-             .select("event_type", _theta_th().alias("th")))
-    ta = theta.select(F.col("event_type").alias("type_a"),
-                      F.col("th").alias("th_a"))
-    tb = theta.select(F.col("event_type").alias("type_b"),
-                      F.col("th").alias("th_b"))
-    pairs = (ta.crossJoin(tb)
-             .filter(F.col("type_a") < F.col("type_b"))
-             .select("type_a", "type_b",
-                     F.least("th_a", "th_b").alias("th")))
-    ka = kept.select(F.col("event_type").alias("type_a"), "hv")
-    kb = kept.select(F.col("event_type").alias("type_b"), "hv")
-    u = (ka.join(F.broadcast(pairs), "type_a")
-         .select("type_a", "type_b", "th", "hv")
-         .unionByName(kb.join(F.broadcast(pairs), "type_b")
-                      .select("type_a", "type_b", "th", "hv"))
-         .filter(F.col("hv") < F.col("th")))
-    nu = (u.select("type_a", "type_b", "hv").distinct()
-          .groupBy("type_a", "type_b")
-          .agg(F.count(F.lit(1)).alias("n_union_kept")))
-    ni = (ka.join(kb, "hv")
-          .filter(F.col("type_a") < F.col("type_b"))
-          .join(F.broadcast(pairs), ["type_a", "type_b"])
-          .filter(F.col("hv") < F.col("th"))
-          .groupBy("type_a", "type_b")
-          .agg(F.count(F.lit(1)).alias("n_inter_kept")))
-    sizes, _xinter = _theta_exact(spark, sf_dir)
-    inter = _xinter.filter(F.col("type_a") < F.col("type_b"))
-    return (pairs
-            .join(nu, ["type_a", "type_b"], "left")
-            .join(ni, ["type_a", "type_b"], "left")
-            .join(F.broadcast(sizes.select(
-                F.col("event_type").alias("type_a"),
-                F.col("n_set").alias("size_a"))), "type_a")
-            .join(F.broadcast(sizes.select(
-                F.col("event_type").alias("type_b"),
-                F.col("n_set").alias("size_b"))), "type_b")
-            .join(inter, ["type_a", "type_b"], "left")
+    return (_theta_pairs(spark, sf_dir, lambda a, b: a < b)
             .select(
-                "type_a", "type_b",
-                F.coalesce("n_inter_kept", F.lit(0)).cast("long")
-                 .alias("n_inter_kept"),
-                F.coalesce("n_union_kept", F.lit(0)).cast("long")
-                 .alias("n_union_kept"),
-                F.expr("CASE WHEN coalesce(n_union_kept, 0) > 0 THEN "
-                       "1000 * coalesce(n_inter_kept, 0) "
-                       "div n_union_kept ELSE 0 END")
+                "type_a", "type_b", "n_a", "n_b", "n_inter",
+                F.size(_below_th(F.array_intersect("hvs_a", "hvs_b")))
+                 .cast("long").alias("n_inter_kept"),
+                F.size(_below_th(F.array_union("hvs_a", "hvs_b")))
+                 .cast("long").alias("n_union_kept"))
+            .select(
+                "type_a", "type_b", "n_inter_kept", "n_union_kept",
+                F.expr("CASE WHEN n_union_kept > 0 THEN "
+                       "1000 * n_inter_kept div n_union_kept ELSE 0 END")
                  .cast("long").alias("est_jaccard_permille"),
-                F.expr("1000 * coalesce(n_inter, 0) div "
-                       "(size_a + size_b - coalesce(n_inter, 0))")
+                F.expr("1000 * n_inter div (n_a + n_b - n_inter)")
                  .cast("long").alias("exact_jaccard_permille"))
             .orderBy("type_a", "type_b"))
-
 
 QUERIES["sketch_theta_jaccard"] = sketch_theta_jaccard
 ORACLES["sketch_theta_jaccard"] = f"""

@@ -178,13 +178,19 @@ def _check_push(kind: str, cfg: dict) -> dict:
 
 
 def _check_routes(kind: str, cfg: dict) -> dict:
+    """Every route a mapping with a `where:`; each route's `pipelines:`
+    and the `default:` lists of pipeline ids (returned as lists)."""
     routes = cfg.get("routes", [])
     if not isinstance(routes, (list, tuple)):
         raise ConfigError("routes must be a list")
+    checked = []
     for i, r in enumerate(routes):
         if not isinstance(r, dict) or "where" not in r:
             raise ConfigError(f"routes[{i}] needs a mapping with a `where:`")
-    return cfg
+        checked.append({**r, "pipelines": _ids(r.get("pipelines"),
+                                               f"routes[{i}].pipelines")})
+    return {**cfg, "routes": checked,
+            "default": _ids(cfg.get("default"), "default")}
 
 
 # -- receivers: build(spark, rid, cfg, sources, sf_dir) -> DataFrame ----------
@@ -340,12 +346,11 @@ _EXPORTERS = {
 
 def _route(cid, cfg, pipeline, dfs) -> list[DataFrame]:
     # route rows by predicate to named downstream pipelines
-    routes = cfg.get("routes", [])
-    preds = [r["where"] for r in routes
-             if pipeline in _ids(r.get("pipelines"), "router.pipelines")]
+    routes = cfg["routes"]
+    preds = [r["where"] for r in routes if pipeline in r["pipelines"]]
     if preds:
         return [df.filter(" OR ".join(f"({p})" for p in preds)) for df in dfs]
-    if pipeline in _ids(cfg.get("default"), "router.default"):
+    if pipeline in cfg["default"]:
         neg = " AND ".join(f"NOT ({r['where']})" for r in routes)
         return [df.filter(neg) if neg else df for df in dfs]
     raise ConfigError(

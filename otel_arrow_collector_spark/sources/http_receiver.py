@@ -52,6 +52,20 @@ from .spool import read_spool        # callers also import it from here
 #: URL path -> signal (otlp.go registers exactly these three).
 _ROUTES = {f"/v1/{s}": s for s in spool.SIGNALS}
 
+#: what a handler answers: status code, headers (Content-Length
+#: aside), body
+Reply = tuple[int, list[tuple[str, str]], bytes]
+
+
+def _send(h: BaseHTTPRequestHandler, reply: Reply) -> None:
+    code, headers, body = reply
+    h.send_response(code)
+    for name, value in headers:
+        h.send_header(name, value)
+    h.send_header("Content-Length", str(len(body)))
+    h.end_headers()
+    h.wfile.write(body)
+
 
 class _HandshakeRefused(Exception):
     """A TLS client failed the handshake (counted as a refusal)."""
@@ -235,18 +249,21 @@ class OtlpHttpReceiver:
 
             def do_POST(self):                  # noqa: N802 (stdlib name)
                 t0 = time.perf_counter()
-                code = receiver._handle(self)
+                reply = receiver._handle(self)
                 rec = getattr(receiver.zpages, "tracez_recorder", None)
                 if rec is not None:
                     # operation-boundary span for /debug/tracez
-                    # (zpagesextension.go:45-52 span processor)
+                    # (zpagesextension.go:45-52 span processor),
+                    # recorded before the reply, so a client that has
+                    # read the reply finds the span
+                    code = reply[0]
                     rec.record(f"receiver{self.path.split('?', 1)[0]}",
                                int((time.perf_counter() - t0) * 1e6),
-                               error=(code or 200) >= 400,
-                               detail=f"HTTP {code or 200}")
+                               error=code >= 400, detail=f"HTTP {code}")
+                _send(self, reply)
 
             def do_GET(self):                   # noqa: N802 (stdlib name)
-                receiver._handle_status(self)
+                _send(self, receiver._handle_status(self))
 
         class Server(ThreadingHTTPServer):
             def handle_error(self, request, client_address):
@@ -287,11 +304,11 @@ class OtlpHttpReceiver:
         with self._lock:
             self.counters[key] = self.counters.get(key, 0) + 1
 
-    def _handle(self, h: BaseHTTPRequestHandler) -> None:
+    def _handle(self, h: BaseHTTPRequestHandler) -> Reply:
         signal = _ROUTES.get(h.path)
         if signal is None:
             self._count("refused_not_found")
-            return self._plain(h, 404, b"unknown signal path")
+            return self._plain(404, b"unknown signal path")
         principal = "anonymous"
         if self.authenticator is not None:
             try:
@@ -301,7 +318,7 @@ class OtlpHttpReceiver:
                 # any authenticator error is a non-retryable refusal
                 # (auth/server.go:21-22)
                 self._count(f"refused_unauth_{signal}")
-                return self._plain(h, 401, b"unauthorized")
+                return self._plain(401, b"unauthorized")
         ctype = (h.headers.get("Content-Type") or "").split(";")[0].strip()
         if ctype == "application/json":
             wire = "json"
@@ -309,29 +326,26 @@ class OtlpHttpReceiver:
             wire = "pb"
         else:
             self._count(f"refused_content_type_{signal}")
-            return self._plain(h, 415, b"unsupported content type")
+            return self._plain(415, b"unsupported content type")
         if self._writer.pending(signal) >= self.max_pending_files:
             # memory-limiter refusal: backpressure, never accept-and-drop
             self._count(f"refused_backpressure_{signal}")
-            h.send_response(503)
-            h.send_header("Retry-After", "1")
-            h.end_headers()
-            return 503
+            return 503, [("Retry-After", "1")], b""
         length = h.headers.get("Content-Length")
         if length is None or "Transfer-Encoding" in h.headers:
             # only a Content-Length-delimited body is read (a chunked
             # one would otherwise spool as an empty request)
             self._count(f"refused_length_required_{signal}")
-            return self._plain(h, 411, b"Content-Length required")
+            return self._plain(411, b"Content-Length required")
         if not (length.isascii() and length.isdigit()):
             self._count(f"refused_bad_length_{signal}")
-            return self._plain(h, 400, b"malformed Content-Length")
+            return self._plain(400, b"malformed Content-Length")
         n = int(length)
         if n > self.max_body_bytes:
             # the reference caps request size (confighttp max_request_body_
             # size); reject BEFORE reading the body
             self._count(f"refused_too_large_{signal}")
-            return self._plain(h, 413, b"request body too large")
+            return self._plain(413, b"request body too large")
         try:
             body = h.rfile.read(n)
             if len(body) < n:
@@ -342,21 +356,16 @@ class OtlpHttpReceiver:
             payload = self._validate(body, signal, wire)
         except Exception as e:                   # malformed -> 400, no spool
             self._count(f"refused_bad_payload_{signal}")
-            return self._plain(h, 400, str(e).encode()[:512])
+            return self._plain(400, str(e).encode()[:512])
         client = ("%s:%s" % h.client_address[:2], principal)
         self._writer.write_request(
             payload, signal, wire, client if self.record_client_info else None)
         self._count(f"accepted_{signal}_{wire}")
         # empty partial-success response in the request's content type
         resp = b"{}" if wire == "json" else b""
-        h.send_response(200)
-        h.send_header("Content-Type", ctype)
-        h.send_header("Content-Length", str(len(resp)))
-        h.end_headers()
-        h.wfile.write(resp)
-        return 200
+        return 200, [("Content-Type", ctype)], resp
 
-    def _handle_status(self, h: BaseHTTPRequestHandler) -> None:
+    def _handle_status(self, h: BaseHTTPRequestHandler) -> Reply:
         """GET /status — the zpages-style diagnostics surface
         (extension/zpagesextension analogue): request counters + spool
         occupancy as JSON.  With a ``zpages`` object attached, also
@@ -367,30 +376,21 @@ class OtlpHttpReceiver:
             from .compression import encode_response
             coding, body = encode_response(
                 h.headers.get("Accept-Encoding"), self.exposition.render())
-            h.send_response(200)
-            h.send_header("Content-Type",
-                          "text/plain; version=0.0.4; charset=utf-8")
+            headers = [("Content-Type",
+                        "text/plain; version=0.0.4; charset=utf-8")]
             if coding is not None:
-                h.send_header("Content-Encoding", coding)
-            h.send_header("Content-Length", str(len(body)))
-            h.end_headers()
-            h.wfile.write(body)
-            return None
+                headers.append(("Content-Encoding", coding))
+            return 200, headers, body
         if self.zpages is not None and h.path.startswith("/debug/"):
             from urllib.parse import parse_qsl, urlsplit
             parts = urlsplit(h.path)
             page = self.zpages.handle(parts.path, dict(parse_qsl(parts.query)))
             if page is None:
-                return self._plain(h, 404, b"not found")
+                return self._plain(404, b"not found")
             code, body = page
-            h.send_response(code)
-            h.send_header("Content-Type", "text/html; charset=utf-8")
-            h.send_header("Content-Length", str(len(body)))
-            h.end_headers()
-            h.wfile.write(body)
-            return None
+            return code, [("Content-Type", "text/html; charset=utf-8")], body
         if h.path != "/status":
-            return self._plain(h, 404, b"not found")
+            return self._plain(404, b"not found")
         with self._lock:
             counters = dict(self.counters)
         body = json.dumps({
@@ -399,20 +399,11 @@ class OtlpHttpReceiver:
                               for s in spool.SIGNALS},
             "max_pending_files": self.max_pending_files,
         }, sort_keys=True).encode()
-        h.send_response(200)
-        h.send_header("Content-Type", "application/json")
-        h.send_header("Content-Length", str(len(body)))
-        h.end_headers()
-        h.wfile.write(body)
+        return 200, [("Content-Type", "application/json")], body
 
     @staticmethod
-    def _plain(h: BaseHTTPRequestHandler, code: int, msg: bytes) -> int:
-        h.send_response(code)
-        h.send_header("Content-Type", "text/plain")
-        h.send_header("Content-Length", str(len(msg)))
-        h.end_headers()
-        h.wfile.write(msg)
-        return code
+    def _plain(code: int, msg: bytes) -> Reply:
+        return code, [("Content-Type", "text/plain")], msg
 
     def _validate(self, body: bytes, signal: str, wire: str) -> bytes:
         """Decode-before-ack (otlp.go does a full unmarshal): returns the

@@ -18,7 +18,7 @@ import pytest
 
 from pyspark.sql import functions as F
 
-from otel_arrow_collector_spark import plan_tree
+from otel_arrow_collector_spark import plan_tree, query_run
 from otel_arrow_collector_spark.operators import cache_registry as cr
 from otel_arrow_collector_spark.operators import collect_registry
 from otel_arrow_collector_spark.operators import dedup as dd
@@ -800,16 +800,37 @@ def test_adc_topk_is_map_plus_take_ordered(spark):
     assert not p.find("SortMergeJoin")
 
 
-def test_theta_sketch_retains_k_rows_per_set(spark):
-    """sketch_theta_intersection: per-set rank window (bounded at
-    THETA_K retained), all downstream joins on the retained relation,
-    thetas broadcast; no cartesian."""
+def _theta_pairs_sketch_rows(p) -> None:
+    """The bounded shape every theta query shares: ONE self cross join
+    (a broadcast nested loop, |types|² rows at most) whose two sides
+    each scan the memoized sketch rows (event_type, n, th, hvs); no
+    cartesian, no sort-merge join, and no consumer-side window (the
+    set-keyed rank window runs once, inside the sketch build)."""
+    [pair] = p.find("BroadcastNestedLoopJoin")
+    for side in pair.children:
+        [scan] = side.find("InMemoryTableScan")
+        assert scan.children[0].exprs == ("event_type", "n", "th", "hvs")
+    assert not p.find("CartesianProduct", "SortMergeJoin")
+    assert not p.windows()
+
+
+def test_theta_intersection_pairs_sketch_rows(spark):
+    """sketch_theta_intersection: the pair side reads the sketch rows
+    and counts common hashes with array_intersect.  The sketch rows are
+    one plan: the set-keyed rank window (bounded at THETA_K hashes per
+    set) then one groupBy on its partition key, so no exchange in
+    between."""
     p = _tree(spark, "sketch_theta_intersection")
-    assert not p.find("CartesianProduct")
+    _theta_pairs_sketch_rows(p)
+    assert any("array_intersect(" in e for e in _exprs(p))
     dist = (load_table(spark, SF_SMALL, "events")
             .select("event_type", "user_id").distinct())
     assert "event_type" in _window_keys(
         plan_tree.read(sk._build_theta_kept(dist)))
+    build = plan_tree.read(sk._build_theta_sketches(dist))
+    assert {a.keys for a in build.find("ObjectHashAggregate")} == {
+        ("event_type",)}
+    assert [e.keys for e in build.exchanges()].count(("event_type",)) == 1
 
 
 def test_dedup_spans_joins_on_span_hash(spark):
@@ -987,18 +1008,14 @@ def test_calibration_single_scan_single_agg(spark):
     assert not p.python_nodes()
 
 
-def test_theta_difference_plan_mirrors_intersection(spark):
-    """sketch_theta_difference: same bounded shape as the intersection
-    sketch — per-set rank window, K-row retained relation, broadcast
-    theta pairs, anti-join for the AnotB survivors; no cartesian over
-    anything data-sized."""
+def test_theta_difference_pairs_sketch_rows(spark):
+    """sketch_theta_difference: the same bounded shape as the
+    intersection sketch over ordered pairs; the AnotB survivors are an
+    array_except of the two sketch rows, not an anti join."""
     p = _tree(spark, "sketch_theta_difference")
-    # per-set rank window pinned on the shared builder
-    # (test_theta_sketch_retains_k_rows_per_set); here: the AnotB shape
-    assert _typed_joins(p, "LEFT ANTI")
-    # the |types| x |types| theta-pair frame plans as a broadcast
-    # nested loop, never a CartesianProduct
-    assert not p.find("CartesianProduct")
+    _theta_pairs_sketch_rows(p)
+    assert any("array_except(" in e for e in _exprs(p))
+    assert not _typed_joins(p, "LEFT ANTI")
 
 
 def test_ivf_pq_prunes_cells_and_stays_codegen(spark):
@@ -1176,16 +1193,27 @@ def test_ewma_hop_explosion_not_range_join(spark):
     assert not p.find("BroadcastNestedLoopJoin", "CartesianProduct")
 
 
-def test_theta_union_stays_k_row_bounded(spark):
-    """sketch_theta_union: same bounded shape as intersection/AnotB —
-    per-set rank window, the pair-union window partitions by the pair
-    key (<= 2K rows per pair), one |types| x |types| theta-pair frame
-    as the only cross product."""
+def test_theta_union_pairs_sketch_rows(spark):
+    """sketch_theta_union: the same bounded shape as intersection/AnotB;
+    the pair union is one sorted array (<= 2K hashes) per pair, not a
+    union/distinct chain under a pair-keyed window."""
     p = _tree(spark, "sketch_theta_union")
-    # set-keyed rank window pinned on the shared builder; the pair-key
-    # union window is consumer-side and stays visible
-    assert "type_a" in _window_keys(p)
-    assert not p.find("CartesianProduct")
+    _theta_pairs_sketch_rows(p)
+    assert any("array_sort(" in e and "array_union(" in e
+               for e in _exprs(p))
+    assert not p.find("Union")
+
+
+@pytest.mark.parametrize("name", ["sketch_theta_intersection",
+                                  "sketch_theta_difference",
+                                  "sketch_theta_union",
+                                  "sketch_theta_jaccard"])
+def test_theta_warm_query_runs_at_most_5_jobs(spark, name):
+    """With the sketch rows and the exact audit memoized, a theta query
+    is one pair join over them: at most 5 jobs (from 14-28 when the
+    algebra was joins and windows over K rows per set)."""
+    QUERIES[name](spark, SF_SMALL).collect()        # substrates built
+    assert query_run.run(spark, name, QUERIES[name], SF_SMALL).jobs <= 5
 
 
 def test_bootstrap_is_explode_plus_one_agg(spark):

@@ -46,6 +46,20 @@ PROBES = {
              pipelines={"a": {"receivers": ["in"], "exporters": ["r"]},
                         "b": {"receivers": ["r"], "exporters": ["out"]}}),
         "connector 'r': routes[0] needs a mapping with a `where:`"),
+    "router_route_pipelines_not_a_list": (
+        _cfg(connectors={"r": {"kind": "router",
+                               "routes": [{"where": "true",
+                                           "pipelines": "b"}]}},
+             pipelines={"a": {"receivers": ["in"], "exporters": ["r"]},
+                        "b": {"receivers": ["r"], "exporters": ["out"]}}),
+        "connector 'r': routes[0].pipelines must be a list, got str"),
+    "router_default_not_a_list": (
+        _cfg(connectors={"r": {"kind": "router", "default": "b",
+                               "routes": [{"where": "true",
+                                           "pipelines": ["b"]}]}},
+             pipelines={"a": {"receivers": ["in"], "exporters": ["r"]},
+                        "b": {"receivers": ["r"], "exporters": ["out"]}}),
+        "connector 'r': default must be a list, got str"),
     "pb_exporter_without_signal": (
         _cfg(exporters={"e": {"kind": "pb", "path": "/nonexistent/pb"}}),
         "exporter 'e': pb kind needs a `signal:`"),

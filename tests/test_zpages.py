@@ -172,3 +172,38 @@ def test_tracez_served_by_live_receiver(tmp_path):
             assert "HTTP 404" in page
     finally:
         rcv.stop()
+
+
+def test_tracez_span_recorded_before_the_reply(tmp_path):
+    """A client that has read a POST's reply finds its span on the very
+    next /debug/tracez fetch: 20 rounds, no client-side sleep, a fresh
+    span name each round.  The recorder is slowed down so that a span
+    recorded after the reply is written would lose the race every
+    time, not once in a while."""
+    import time
+    import urllib.error
+    from otel_arrow_collector_spark.plans.zpages import SpanRecorder
+
+    class SlowRecorder(SpanRecorder):
+        def record(self, *args, **kwargs):
+            time.sleep(0.02)
+            super().record(*args, **kwargs)
+    zp = _zp()
+    zp.tracez_recorder = SlowRecorder()
+    rcv = OtlpHttpReceiver(str(tmp_path / "spool"), zpages=zp)
+    host, port = rcv.start()
+    try:
+        base = f"http://{host}:{port}"
+        for i in range(20):
+            try:
+                urllib.request.urlopen(urllib.request.Request(
+                    f"{base}/v1/round{i:02d}", data=b"x",
+                    headers={"Content-Type": "application/json"}))
+                raise AssertionError("expected 404")
+            except urllib.error.HTTPError as exc:
+                assert exc.code == 404
+                exc.read()
+            with urllib.request.urlopen(f"{base}/debug/tracez") as r:
+                assert f"receiver/v1/round{i:02d}" in r.read().decode()
+    finally:
+        rcv.stop()

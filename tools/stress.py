@@ -80,8 +80,8 @@ DEFAULT_QUERIES = ["bloom_screen", "ann_pq_codes", "q83_intransit_peak",
                    # deliberate exact-scan audit, span-level explode ->
                    # hash join dedup, the bounded Arrow-batched EXIF
                    # slice; plus the new IVF-PQ composition (pruned-cell
-                   # ADC), the theta AnotB K-row pair algebra, and the
-                   # nation-window Gini.  graph_k_core is EXCLUDED for
+                   # ADC), the theta AnotB array algebra on one
+                   # sketch row per set, and the nation-window Gini.  graph_k_core is EXCLUDED for
                    # the same reason as dedup_er_clusters: its driver
                    # fast path collects the edge list below
                    # KCORE_DRIVER_EDGE_CAP by design, so the internal
@@ -98,7 +98,7 @@ DEFAULT_QUERIES = ["bloom_screen", "ann_pq_codes", "q83_intransit_peak",
                    # cohort-windowed conversion-latency percentiles
                    "sample_bootstrap", "q102_time_to_convert",
                    # round-11 additions (r10 verdict ask #6): the theta
-                   # K-row union algebra and the modularity evaluation
+                   # union array algebra and the modularity evaluation
                    # of the memoized LPA labels; plus the new brand
                    # market-basket self-join (order-keyed, bounded
                    # baskets) and the containment verify over LSH
@@ -108,7 +108,8 @@ DEFAULT_QUERIES = ["bloom_screen", "ann_pq_codes", "q83_intransit_peak",
                    # round-12 additions (r11 verdict ask #5): the wedge
                    # join behind the clustering coefficient, the
                    # two-degree-join assortativity aggregate, and the
-                   # theta-sketch Jaccard algebra
+                   # theta-sketch Jaccard array algebra (every theta
+                   # query: one |types|² cross join of the sketch rows)
                    "graph_clustering_coefficient", "graph_assortativity",
                    "sketch_theta_jaccard",
                    # round-12 new heavies: the two-hop wedge expansion,
