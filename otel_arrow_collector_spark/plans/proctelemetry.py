@@ -233,34 +233,21 @@ class _PromServer:
 
     def __init__(self, exposition: PrometheusExposition,
                  host: str, port: int):
-        from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
+        from ..sources import http_receiver
 
         expo = exposition
 
-        class Handler(BaseHTTPRequestHandler):
-            def log_message(self, *a):
-                pass
-
+        class ScrapeHandler(http_receiver.KeepAliveHandler):
             def do_GET(self):                   # noqa: N802 (stdlib name)
                 if self.path.split("?", 1)[0] != "/metrics":
-                    body = b"not found"
-                    self.send_response(404)
+                    reply = 404, [], b"not found"
                 else:
-                    from ..sources.compression import encode_response
-                    coding, body = encode_response(
-                        self.headers.get("Accept-Encoding"), expo.render())
-                    self.send_response(200)
-                    self.send_header(
-                        "Content-Type",
-                        "text/plain; version=0.0.4; charset=utf-8")
-                    if coding is not None:
-                        self.send_header("Content-Encoding", coding)
-                self.send_header("Content-Length", str(len(body)))
-                self.end_headers()
-                self.wfile.write(body)
+                    reply = http_receiver.metrics_reply(
+                        expo, self.headers.get("Accept-Encoding"))
+                http_receiver._send(self, reply)
 
-        self._server = ThreadingHTTPServer((host, port), Handler)
-        self._server.daemon_threads = True
+        self._server = http_receiver.KeepAliveServer((host, port),
+                                                     ScrapeHandler)
         self._thread = threading.Thread(target=self._server.serve_forever,
                                         name="prom-metrics", daemon=True)
         self._thread.start()
@@ -271,8 +258,7 @@ class _PromServer:
         return f"http://{self.host}:{self.port}/metrics"
 
     def close(self) -> None:
-        self._server.shutdown()
-        self._server.server_close()
+        self._server.close()
 
 
 def serve_prometheus(exposition: PrometheusExposition,

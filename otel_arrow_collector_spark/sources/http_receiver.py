@@ -28,6 +28,10 @@ Faithful HTTP semantics (otlp.go + config.go):
 - body framing: Content-Length only (the reference's net/http also
   reads chunked bodies); none, chunked included, -> 411, a malformed or
   negative one -> 400, both before the body is read
+- connections: HTTP/1.1 keep-alive with ``TCP_NODELAY``, as Go's
+  net/http serves them; a refusal answered before the body is read
+  closes the connection; ``stop()`` ends every connection, as
+  ``Server.Shutdown`` does
 
 Durability: a request is acked ONLY after ``sources/spool.py`` has
 persisted it (fsync + atomic rename under a name no other receiver on
@@ -38,6 +42,7 @@ queue follows (persistent_storage.go:278-345).
 from __future__ import annotations
 
 import json
+import socket
 import sys
 import threading
 import time
@@ -57,14 +62,138 @@ _ROUTES = {f"/v1/{s}": s for s in spool.SIGNALS}
 Reply = tuple[int, list[tuple[str, str]], bytes]
 
 
+#: seconds ``KeepAliveServer.close`` lets a request in flight finish
+_DRAIN_S = 5.0
+
+#: a refusal sent before the body is read also closes the connection,
+#: so the unread body is never parsed as the next request
+_CLOSE = ("Connection", "close")
+
+
 def _send(h: BaseHTTPRequestHandler, reply: Reply) -> None:
+    """Write ``reply``; a ``Connection: close`` header in it ends the
+    keep-alive connection after this reply, as it does on a stopping
+    server."""
     code, headers, body = reply
+    if h.server.stopping and _CLOSE not in headers:
+        headers = [*headers, _CLOSE]
     h.send_response(code)
     for name, value in headers:
         h.send_header(name, value)
     h.send_header("Content-Length", str(len(body)))
     h.end_headers()
     h.wfile.write(body)
+
+
+def metrics_reply(exposition, accept_encoding: str | None) -> Reply:
+    """``GET /metrics``: the Prometheus text exposition, compressed as
+    the client accepts (the receiver's shared listener and the
+    standalone scrape server answer through this)."""
+    from .compression import encode_response
+    coding, body = encode_response(accept_encoding, exposition.render())
+    headers = [("Content-Type", "text/plain; version=0.0.4; charset=utf-8")]
+    if coding is not None:
+        headers.append(("Content-Encoding", coding))
+    return 200, headers, body
+
+
+class KeepAliveHandler(BaseHTTPRequestHandler):
+    """The stdlib handler both servers derive from: HTTP/1.1 keep-alive
+    and ``TCP_NODELAY`` (as on every gRPC socket here and every Go
+    ``net`` connection), so a reply's header and body writes are not
+    held back by Nagle's algorithm on a live connection.  It reports its
+    connection and each request to its :class:`KeepAliveServer`."""
+    protocol_version = "HTTP/1.1"
+    disable_nagle_algorithm = True
+    #: socket timeout (s): an idle keep-alive connection, or a client
+    #: stalled mid-request, releases its handler thread after this
+    timeout = 60
+
+    def log_message(self, *a):                  # keep test output quiet
+        pass
+
+    def setup(self):
+        super().setup()
+        self.server.track(self.request)
+
+    def finish(self):
+        try:
+            super().finish()
+        finally:
+            self.server.untrack(self.request)
+
+    def parse_request(self):
+        # a request line has arrived: busy until its reply is written
+        if not self.server.busy(self.request, True):
+            self.close_connection = True
+            return False
+        return super().parse_request()
+
+    def handle_one_request(self):
+        try:
+            super().handle_one_request()
+        finally:
+            if not self.server.busy(self.request, False):
+                self.close_connection = True
+
+
+class KeepAliveServer(ThreadingHTTPServer):
+    """The stdlib server both listeners run.  It keeps its live
+    connections, so :meth:`close` ends them as Go's ``Server.Shutdown``
+    does: ``shutdown()`` alone only stops the accept loop, and a
+    kept-alive client would go on being served."""
+    daemon_threads = True
+
+    def __init__(self, *args, **kwargs):
+        self.stopping = False
+        self._conns: dict = {}          # socket -> a request in flight
+        self._cv = threading.Condition()
+        super().__init__(*args, **kwargs)
+
+    def track(self, sock) -> None:
+        with self._cv:
+            self._conns[sock] = False
+            if self.stopping:
+                _hang_up(sock)
+
+    def untrack(self, sock) -> None:
+        with self._cv:
+            self._conns.pop(sock, None)
+            self._cv.notify_all()
+
+    def busy(self, sock, flag: bool) -> bool:
+        """Mark a request on ``sock`` begun or done; False once the
+        server stops: no request starts, and a finished one closes its
+        connection."""
+        with self._cv:
+            if sock in self._conns:
+                self._conns[sock] = flag
+            return not self.stopping
+
+    def close(self) -> None:
+        """Stop accepting, hang up idle connections, let a request in
+        flight finish (its reply carries ``Connection: close``), and cut
+        what is left after ``_DRAIN_S``."""
+        self.shutdown()
+        with self._cv:
+            self.stopping = True
+            for sock, in_flight in self._conns.items():
+                if not in_flight:
+                    _hang_up(sock)
+            self._cv.wait_for(lambda: not self._conns, _DRAIN_S)
+            for sock in self._conns:
+                _hang_up(sock)
+        self.server_close()
+
+
+def _hang_up(sock) -> None:
+    """End both directions of ``sock``: its handler's read sees end of
+    file.  The plain socket's ``shutdown``, also under TLS, so the TLS
+    object stays with the handler thread that reads it."""
+    try:
+        socket.socket.shutdown(sock, socket.SHUT_RDWR)
+    except OSError:
+        pass                                    # the peer already left
 
 
 class _HandshakeRefused(Exception):
@@ -221,7 +350,7 @@ class OtlpHttpReceiver:
         self.counters: dict[str, int] = {}   # obsreport-style
         self._writer = spool.Writer(spool_dir, ("json", "pb"))
         self._lock = threading.Lock()
-        self._server: ThreadingHTTPServer | None = None
+        self._server: KeepAliveServer | None = None
         self._thread: threading.Thread | None = None
 
     # -- lifecycle ---------------------------------------------------------
@@ -229,9 +358,7 @@ class OtlpHttpReceiver:
     def start(self) -> tuple[str, int]:
         receiver = self
 
-        class Handler(BaseHTTPRequestHandler):
-            daemon_threads = True
-
+        class ReceiverHandler(KeepAliveHandler):
             def setup(self):
                 # TLS handshake runs HERE (handler thread), not in the
                 # accept loop: socketserver silently swallows OSErrors in
@@ -243,9 +370,6 @@ class OtlpHttpReceiver:
                     except OSError as e:
                         raise _HandshakeRefused from e
                 super().setup()
-
-            def log_message(self, *a):          # keep test output quiet
-                pass
 
             def do_POST(self):                  # noqa: N802 (stdlib name)
                 t0 = time.perf_counter()
@@ -265,7 +389,7 @@ class OtlpHttpReceiver:
             def do_GET(self):                   # noqa: N802 (stdlib name)
                 _send(self, receiver._handle_status(self))
 
-        class Server(ThreadingHTTPServer):
+        class Server(KeepAliveServer):
             def handle_error(self, request, client_address):
                 # TLS handshake failures from unauthorized clients are an
                 # expected refusal path, not a server crash; any other
@@ -275,8 +399,7 @@ class OtlpHttpReceiver:
                 receiver._count("refused_tls_handshake" if refused
                                 else "conn_error")
 
-        self._server = Server((self.host, self._port), Handler)
-        self._server.daemon_threads = True
+        self._server = Server((self.host, self._port), ReceiverHandler)
         if self.tls is not None:
             self._server.socket = self.tls.server_context().wrap_socket(
                 self._server.socket, server_side=True,
@@ -289,8 +412,7 @@ class OtlpHttpReceiver:
 
     def stop(self) -> None:
         if self._server is not None:
-            self._server.shutdown()
-            self._server.server_close()
+            self._server.close()
             self._server = None
 
     @property
@@ -308,7 +430,7 @@ class OtlpHttpReceiver:
         signal = _ROUTES.get(h.path)
         if signal is None:
             self._count("refused_not_found")
-            return self._plain(404, b"unknown signal path")
+            return self._refuse(404, b"unknown signal path")
         principal = "anonymous"
         if self.authenticator is not None:
             try:
@@ -318,7 +440,7 @@ class OtlpHttpReceiver:
                 # any authenticator error is a non-retryable refusal
                 # (auth/server.go:21-22)
                 self._count(f"refused_unauth_{signal}")
-                return self._plain(401, b"unauthorized")
+                return self._refuse(401, b"unauthorized")
         ctype = (h.headers.get("Content-Type") or "").split(";")[0].strip()
         if ctype == "application/json":
             wire = "json"
@@ -326,30 +448,35 @@ class OtlpHttpReceiver:
             wire = "pb"
         else:
             self._count(f"refused_content_type_{signal}")
-            return self._plain(415, b"unsupported content type")
+            return self._refuse(415, b"unsupported content type")
         if self._writer.pending(signal) >= self.max_pending_files:
             # memory-limiter refusal: backpressure, never accept-and-drop
             self._count(f"refused_backpressure_{signal}")
-            return 503, [("Retry-After", "1")], b""
+            return 503, [("Retry-After", "1"), _CLOSE], b""
         length = h.headers.get("Content-Length")
         if length is None or "Transfer-Encoding" in h.headers:
             # only a Content-Length-delimited body is read (a chunked
             # one would otherwise spool as an empty request)
             self._count(f"refused_length_required_{signal}")
-            return self._plain(411, b"Content-Length required")
+            return self._refuse(411, b"Content-Length required")
         if not (length.isascii() and length.isdigit()):
             self._count(f"refused_bad_length_{signal}")
-            return self._plain(400, b"malformed Content-Length")
+            return self._refuse(400, b"malformed Content-Length")
         n = int(length)
         if n > self.max_body_bytes:
             # the reference caps request size (confighttp max_request_body_
             # size); reject BEFORE reading the body
             self._count(f"refused_too_large_{signal}")
-            return self._plain(413, b"request body too large")
+            return self._refuse(413, b"request body too large")
         try:
             body = h.rfile.read(n)
-            if len(body) < n:
-                raise ValueError("body shorter than Content-Length")
+        except TimeoutError:                    # the client stalled
+            body = b""
+        if len(body) < n:
+            # the rest of the body may still arrive: end the connection
+            self._count(f"refused_bad_payload_{signal}")
+            return self._refuse(400, b"body shorter than Content-Length")
+        try:
             body = _decompress_body(
                 h.headers.get("Content-Encoding", "").lower(),
                 body, self.max_body_bytes, HTTP_CODINGS)
@@ -373,14 +500,8 @@ class OtlpHttpReceiver:
         featurez} HTML pages (service/zpages.go:17-23)."""
         if (self.exposition is not None
                 and h.path.split("?", 1)[0] == "/metrics"):
-            from .compression import encode_response
-            coding, body = encode_response(
-                h.headers.get("Accept-Encoding"), self.exposition.render())
-            headers = [("Content-Type",
-                        "text/plain; version=0.0.4; charset=utf-8")]
-            if coding is not None:
-                headers.append(("Content-Encoding", coding))
-            return 200, headers, body
+            return metrics_reply(self.exposition,
+                                 h.headers.get("Accept-Encoding"))
         if self.zpages is not None and h.path.startswith("/debug/"):
             from urllib.parse import parse_qsl, urlsplit
             parts = urlsplit(h.path)
@@ -404,6 +525,11 @@ class OtlpHttpReceiver:
     @staticmethod
     def _plain(code: int, msg: bytes) -> Reply:
         return code, [("Content-Type", "text/plain")], msg
+
+    @staticmethod
+    def _refuse(code: int, msg: bytes) -> Reply:
+        """A refusal answered before the whole body is read."""
+        return code, [("Content-Type", "text/plain"), _CLOSE], msg
 
     def _validate(self, body: bytes, signal: str, wire: str) -> bytes:
         """Decode-before-ack (otlp.go does a full unmarshal): returns the

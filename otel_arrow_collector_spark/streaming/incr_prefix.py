@@ -33,11 +33,14 @@ contract as the LSH twin and the reference's redelivery path
 Scale shape: per-batch cost is bounded by the batch (shard-sized
 ranking window, prefix-to-prefix candidate join under the
 dedup_prefix_cost_model df^2 bound, candidate-bounded verify); the
-store grows by append only.  In-session the appended relations are
-persisted DataFrames re-materialized per append (plan depth grows one
-``unionByName`` per batch — fine for micro-batch counts; production
-appends parquet partitions instead, the cold-start path
-test_signature_store_parquet_roundtrip pins for the LSH store).
+store grows by append only.  In-session each store relation is
+checkpoint-materialized (``cache_registry.plan_checkpoint``) per
+append, so its plan stays one ``unionByName`` deep whatever the batch
+count: a persisted relation would keep its whole lineage, and each
+batch's docs relation holds the previous one twice (the union and the
+anti-join), so its plan doubled per batch.  Production appends parquet
+partitions instead, the cold-start path
+test_signature_store_parquet_roundtrip pins for the LSH store.
 """
 
 from __future__ import annotations
@@ -45,6 +48,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators import cache_registry
+from ..operators.cache_registry import _free_checkpoint
 from ..operators.dedup import (JACCARD_THRESHOLD, _spark_shingles,
                                build_prefix_store,
                                prefix_incremental_pairs)
@@ -52,19 +57,17 @@ from ..operators.dedup import (JACCARD_THRESHOLD, _spark_shingles,
 
 class FrozenPrefixStore:
     """Mutable in-session exact-dedup store: the four
-    ``build_prefix_store`` relations over the corpus, persisted, plus
+    ``build_prefix_store`` relations over the corpus, checkpointed, plus
     the doc texts (needed by the candidate-bounded verify); appended
     per micro-batch under the corpus-frozen token order."""
 
     def __init__(self, spark: SparkSession, corpus_docs: DataFrame):
         self.spark = spark
-        self.docs = corpus_docs.select("doc_id", "text").persist()
-        self.docs.count()
+        self.docs = cache_registry.plan_checkpoint(
+            corpus_docs.select("doc_id", "text"))
         rels = build_prefix_store(self.docs)
         self.shd, self.sizes, self.dfr, self.pref = \
-            (r.persist() for r in rels)
-        for r in (self.shd, self.sizes, self.dfr, self.pref):
-            r.count()
+            (cache_registry.plan_checkpoint(r) for r in rels)
 
     def known_ids(self) -> DataFrame:
         return self.docs.select("doc_id")
@@ -114,17 +117,19 @@ class FrozenPrefixStore:
                   .join(f_sizes, "doc_id")
                   .filter(F.col("rn") <= F.expr("n_sh div 2 + 1"))
                   .select("doc_id", "sh"))
-        for attr, extra in (("docs", fresh), ("shd", f_shd),
-                            ("sizes", f_sizes), ("pref", f_pref)):
-            old = getattr(self, attr)
-            new = old.unionByName(extra).persist()
-            new.count()                  # materialize BEFORE freeing old
-            old.unpersist(False)
-            setattr(self, attr, new)
+        # every new relation is materialized BEFORE any old one is
+        # freed: each extra reads the old docs through ``fresh``
+        new = {attr: cache_registry.plan_checkpoint(
+                   getattr(self, attr).unionByName(extra))
+               for attr, extra in (("docs", fresh), ("shd", f_shd),
+                                   ("sizes", f_sizes), ("pref", f_pref))}
+        for attr, rel in new.items():
+            _free_checkpoint(getattr(self, attr))
+            setattr(self, attr, rel)
 
     def release(self) -> None:
         for r in (self.docs, self.shd, self.sizes, self.dfr, self.pref):
-            r.unpersist(False)
+            _free_checkpoint(r)
 
 
 def run_prefix_dedup_stream(spark: SparkSession, stream_docs: DataFrame,

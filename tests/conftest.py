@@ -8,6 +8,8 @@ import pytest
 
 REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))
+# the streaming-twin harness asserts outside test modules: show its diffs
+pytest.register_assert_rewrite("tests.stream_twins")
 
 SF_SMALL = "/root/testdata/sf0.001"
 SF_GATE = "/root/testdata/sf0.01"

@@ -1,20 +1,19 @@
-"""Misra-Gries heavy hitters: sketch guarantees, exact recount, and the
-streaming twin's cross-batch state continuity."""
+"""Misra-Gries heavy hitters: sketch guarantees and the exact recount.
+The streaming sketch and the funnel twin run through the harness
+(``tests/stream_twins.py``)."""
 
 from __future__ import annotations
 
-import shutil
-import tempfile
 from collections import Counter
 
 import pytest
 
 from pyspark.sql import functions as F
-from pyspark.sql.types import (LongType, StringType, StructField, StructType)
+from pyspark.sql.types import StringType, StructField, StructType
 
 from otel_arrow_collector_spark.operators.sketches import (
     heavy_hitters, mg_update, misra_gries_partial)
-from tests.conftest import SF_SMALL
+from tests import stream_twins as st
 
 
 def test_mg_update_guarantees():
@@ -72,102 +71,8 @@ def test_heavy_hitters_exact_recount(spark):
         heavy_hitters(df, "u", phi_denom=100, capacity=64)
 
 
-@pytest.mark.slow
-def test_streaming_mg_matches_batch_sketch(spark, tmp_path):
-    """The streaming sketch over 3 micro-batches ends in EXACTLY the
-    state the batch mg_update reaches on the concatenated stream (same
-    per-shard arrival order), and its candidates cover the true heavy
-    keys."""
-    from otel_arrow_collector_spark.streaming.heavy_hitters import \
-        misra_gries_stream
-
-    schema = StructType([StructField("seq", LongType()),
-                         StructField("k", StringType())])
-    rows = [(i, f"hh{i % 4}" if i % 3 else f"one{i}")
-            for i in range(600)]
-    df = spark.createDataFrame(rows, schema)
-    d = tempfile.mkdtemp(prefix="mg_stream_")
-    try:
-        for b in range(3):
-            (df.filter((F.col("seq") >= b * 200)
-                       & (F.col("seq") < (b + 1) * 200))
-               .orderBy("seq").coalesce(1)
-               .write.mode("append").parquet(d))
-        stream = (spark.readStream.schema(schema)
-                  .option("maxFilesPerTrigger", 1).parquet(d))
-        q = (misra_gries_stream(stream, "k", capacity=8)
-             .writeStream.format("memory").queryName("mg_stream")
-             .outputMode("update")
-             .option("checkpointLocation", str(tmp_path / "ckpt_mg"))
-             .trigger(availableNow=True).start())
-        q.awaitTermination(180)
-        out = spark.table("mg_stream")
-        # final snapshot per shard = rows at that shard's max n_seen
-        rows = out.collect()
-        final_n = {}
-        for r in rows:
-            final_n[r.shard] = max(final_n.get(r.shard, 0), r.n_seen)
-        last = {}
-        for r in rows:
-            if r.n_seen == final_n[r.shard]:
-                last.setdefault(r.shard, {})[r.key] = r.lower_bound
-        # streaming candidates cover every true heavy key
-        for i in range(4):
-            assert any(f"hh{i}" in s for s in last.values()), i
-        # state bounded by capacity per shard
-        assert all(len(s) <= 8 for s in last.values())
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
-
-
-def test_streaming_funnel_matches_batch_firsts(spark, tmp_path):
-    """q71's streaming twin: per-user min-per-stage state across
-    micro-batches equals the batch conditional aggregation EXACTLY for
-    any arrival order (MIN commutes), and the funnel flags agree."""
-    from otel_arrow_collector_spark.sources.tables import load_table
-    from otel_arrow_collector_spark.streaming.funnel import (funnel_flags,
-                                                             funnel_stream)
-
-    ev = (load_table(spark, SF_SMALL, "events")
-          .select("user_id", "event_type", F.col("ts").cast("long")
-                  .alias("ts_ns")))
-    d = tempfile.mkdtemp(prefix="funnel_stream_")
-    try:
-        # 3 batches split by event_id hash -> arrival order != time order
-        full = load_table(spark, SF_SMALL, "events")
-        for b in range(3):
-            (full.filter(F.pmod(F.col("event_id"), 3) == b).coalesce(1)
-                 .write.mode("append").parquet(d))
-        stream = (spark.readStream.schema(full.schema)
-                  .option("maxFilesPerTrigger", 1).parquet(d))
-        q = (funnel_stream(stream)
-             .writeStream.format("memory").queryName("funnel_stream")
-             .outputMode("update")
-             .option("checkpointLocation", str(tmp_path / "ckpt_funnel"))
-             .trigger(availableNow=True).start())
-        q.awaitTermination(180)
-        out = spark.table("funnel_stream")
-        # final snapshot per user: mins only ever decrease, so take min
-        final = (out.groupBy("user_id")
-                    .agg(*[F.min(f"t_{s}").alias(f"t_{s}")
-                           for s in ("signup", "view", "purchase")]))
-        want = ev.groupBy("user_id").agg(
-            F.min(F.when(F.col("event_type") == "signup", F.col("ts_ns")))
-             .alias("t_signup"),
-            F.min(F.when(F.col("event_type") == "view", F.col("ts_ns")))
-             .alias("t_view"),
-            F.min(F.when(F.col("event_type") == "purchase", F.col("ts_ns")))
-             .alias("t_purchase"))
-        got_rows = {r.user_id: (r.t_signup, r.t_view, r.t_purchase)
-                    for r in final.collect()}
-        want_rows = {r.user_id: (r.t_signup, r.t_view, r.t_purchase)
-                     for r in want.collect()}
-        assert got_rows == want_rows
-        flags = {r.user_id: (r.did_signup, r.did_view_after,
-                             r.did_full_funnel)
-                 for r in funnel_flags(final).collect()}
-        wf = {r.user_id: (r.did_signup, r.did_view_after, r.did_full_funnel)
-              for r in funnel_flags(want).collect()}
-        assert flags == wf and any(v[0] for v in flags.values())
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
+def test_streaming_funnel_matches_batch_firsts(spark):
+    """q71's streaming twin: per-user first time per stage equals the
+    batch conditional aggregation for any arrival order (MIN commutes),
+    and the funnel flags agree."""
+    st.assert_twin(spark, "funnel", "split0", "split1", "check")

@@ -1,13 +1,13 @@
 """HyperLogLog and count-min sketches: cross-check against pure-Python
 reference implementations, plus the sketch laws (one-sided CMS error,
-mergeability of both states)."""
+mergeability of both states).  The streaming twins run through the
+harness (``tests/stream_twins.py``)."""
 
 from __future__ import annotations
 
 import hashlib
 from collections import Counter
 
-import pytest
 from pyspark.sql import functions as F
 
 from otel_arrow_collector_spark.operators.sketches import (
@@ -84,84 +84,6 @@ def test_cms_one_sided_and_mergeable(spark):
         for k, v in part.items():
             summed[k] += v
     assert dict(summed) == counters
-
-
-@pytest.mark.slow
-def test_streaming_hll_matches_batch(spark, tmp_path):
-    """The streaming HLL over 3 micro-batches converges to EXACTLY the
-    batch operator's registers on the full data (merge rule is MAX, so
-    the final snapshot is the max over emitted rows per bucket)."""
-    import tempfile
-
-    from pyspark.sql.types import LongType, StructField, StructType
-
-    from otel_arrow_collector_spark.streaming.hll import (
-        hll_estimate_from_registers, hll_stream)
-
-    schema = StructType([StructField("seq", LongType()),
-                         StructField("uid", LongType())])
-    rows = [(i, (i * 7919) % 500) for i in range(900)]
-    df = spark.createDataFrame(rows, schema)
-    want = {r["bucket"]: r["max_rho"]
-            for r in hll_registers(df, "uid").collect()}
-
-    d = tempfile.mkdtemp(prefix="hll_stream_")
-    for b in range(3):
-        (df.filter((F.col("seq") >= b * 300) & (F.col("seq") < (b + 1) * 300))
-           .coalesce(1).write.mode("append").parquet(d))
-    stream = (spark.readStream.schema(schema)
-              .option("maxFilesPerTrigger", 1).parquet(d))
-    q = (hll_stream(stream, "uid")
-         .writeStream.format("memory").queryName("hll_stream")
-         .outputMode("update")
-         .option("checkpointLocation", str(tmp_path / "ckpt_hll"))
-         .trigger(availableNow=True).start())
-    q.awaitTermination(180)
-    got: dict[int, int] = {}
-    for r in spark.table("hll_stream").collect():
-        got[r.bucket] = max(got.get(r.bucket, 0), r.max_rho)
-    assert got == want
-
-    # driver-side estimate from the streamed registers is sane
-    est = hll_estimate_from_registers(got)
-    assert 250 <= est <= 1000   # true distinct = 500, raw HLL ~6.5% err
-
-
-@pytest.mark.slow
-def test_streaming_cms_matches_batch(spark, tmp_path):
-    """The streaming CMS over 3 micro-batches converges to EXACTLY the
-    batch counters on the full data (counters are linear, so the final
-    snapshot per cell is the last emitted value = max over snapshots)."""
-    import tempfile
-
-    from pyspark.sql.types import LongType, StructField, StructType
-
-    from otel_arrow_collector_spark.streaming.cms import cms_stream
-
-    schema = StructType([StructField("seq", LongType()),
-                         StructField("uid", LongType())])
-    rows = [(i, (i * 104729) % 300) for i in range(600)]
-    df = spark.createDataFrame(rows, schema)
-    want = {(r["row_id"], r["col"]): r["cnt"]
-            for r in cms_counters(df, "uid").collect()}
-
-    d = tempfile.mkdtemp(prefix="cms_stream_")
-    for b in range(3):
-        (df.filter((F.col("seq") >= b * 200) & (F.col("seq") < (b + 1) * 200))
-           .coalesce(1).write.mode("append").parquet(d))
-    stream = (spark.readStream.schema(schema)
-              .option("maxFilesPerTrigger", 1).parquet(d))
-    q = (cms_stream(stream, "uid")
-         .writeStream.format("memory").queryName("cms_stream")
-         .outputMode("update")
-         .option("checkpointLocation", str(tmp_path / "ckpt_cms"))
-         .trigger(availableNow=True).start())
-    q.awaitTermination(180)
-    got: dict[tuple, int] = {}
-    for r in spark.table("cms_stream").collect():
-        k = (r.row_id, r.col)
-        got[k] = max(got.get(k, 0), r.cnt)   # counters only grow
-    assert got == want
 
 
 def test_hll_union_merge_property(spark):

@@ -469,3 +469,123 @@ def test_http_pipeline_exporter_named_compression(spark, rcv):
             "pipelines": {"traces": {"receivers": ["mem"],
                                      "exporters": ["push"]}},
         }).compile(spark, sources={"mem": td}).run()
+
+
+def test_http_keep_alive_reuses_one_socket(tmp_path):
+    """Two POSTs and a ``GET /metrics`` travel on one HTTP/1.1
+    connection."""
+    from otel_arrow_collector_spark.plans.proctelemetry import (
+        PrometheusExposition)
+    rcv = OtlpHttpReceiver(str(tmp_path / "ka_spool"),
+                           exposition=PrometheusExposition())
+    rcv.start()
+    conn = http.client.HTTPConnection(rcv.host, rcv._port, timeout=10)
+    try:
+        socks = []
+        for method, path, body in (("POST", "/v1/traces", b"{}"),
+                                   ("POST", "/v1/logs", b"{}"),
+                                   ("GET", "/metrics", None)):
+            conn.request(method, path, body,
+                         {"Content-Type": "application/json"})
+            resp = conn.getresponse()
+            resp.read()
+            assert resp.status == 200 and resp.version == 11
+            assert not resp.will_close
+            socks.append(conn.sock)
+        assert socks[0] is not None and socks.count(socks[0]) == 3
+        assert rcv.counters["accepted_traces_json"] == 1
+    finally:
+        conn.close()
+        rcv.stop()
+
+
+def test_http_idle_keep_alive_connection_is_closed(tmp_path, monkeypatch):
+    """An idle keep-alive connection releases its handler thread after
+    the handler's socket timeout."""
+    from otel_arrow_collector_spark.sources import http_receiver
+    monkeypatch.setattr(http_receiver.KeepAliveHandler, "timeout", 0.3)
+    rcv = OtlpHttpReceiver(str(tmp_path / "idle_spool"))
+    rcv.start()
+    conn = http.client.HTTPConnection(rcv.host, rcv._port, timeout=10)
+    try:
+        conn.request("POST", "/v1/traces", b"{}",
+                     {"Content-Type": "application/json"})
+        assert conn.getresponse().read() == b"{}"
+        assert conn.sock.recv(1) == b""         # the server hung up
+    finally:
+        conn.close()
+        rcv.stop()
+
+
+def test_http_stop_ends_keep_alive_connections(tmp_path):
+    """``stop()`` hangs up a kept-alive connection: its next request
+    meets a closed socket, is neither spooled nor acked, and ``stop()``
+    does not wait out the handler's socket timeout."""
+    import time
+    rcv = OtlpHttpReceiver(str(tmp_path / "stop_spool"))
+    rcv.start()
+    conn = http.client.HTTPConnection(rcv.host, rcv._port, timeout=10)
+    try:
+        conn.request("POST", "/v1/traces", b"{}",
+                     {"Content-Type": "application/json"})
+        resp = conn.getresponse()
+        assert resp.read() == b"{}" and not resp.will_close
+        t0 = time.monotonic()
+        rcv.stop()
+        assert time.monotonic() - t0 < 2
+        with pytest.raises(ConnectionError):
+            conn.request("POST", "/v1/traces", b"{}",
+                         {"Content-Type": "application/json"})
+            conn.getresponse()
+        assert rcv.counters == {"accepted_traces_json": 1}
+    finally:
+        conn.close()
+        rcv.stop()
+
+
+def test_http_stalled_body_is_refused_once(tmp_path, monkeypatch):
+    """A client that stalls mid-body gets one 400 that closes the
+    connection, counted once as a bad payload."""
+    import socket
+
+    from otel_arrow_collector_spark.sources import http_receiver
+    monkeypatch.setattr(http_receiver.KeepAliveHandler, "timeout", 0.3)
+    rcv = OtlpHttpReceiver(str(tmp_path / "stall_spool"))
+    rcv.start()
+    try:
+        with socket.create_connection((rcv.host, rcv._port), timeout=10) as s:
+            s.sendall(b"POST /v1/traces HTTP/1.1\r\nHost: x\r\n"
+                      b"Content-Type: application/json\r\n"
+                      b"Content-Length: 100\r\n\r\n{\"resource")
+            reply = b""
+            while chunk := s.recv(65536):       # b"": the server closed
+                reply += chunk
+        assert reply.startswith(b"HTTP/1.1 400 ")
+        assert b"\r\nConnection: close\r\n" in reply
+        assert rcv.counters == {"refused_bad_payload_traces": 1}
+    finally:
+        rcv.stop()
+
+
+def test_http_refusal_before_body_closes_the_connection(tmp_path):
+    """A 413 leaves its body unread, so the server closes the socket
+    (the body is never parsed as a next request); a new connection is
+    served."""
+    import socket
+    rcv = OtlpHttpReceiver(str(tmp_path / "close_spool"), max_body_bytes=100)
+    rcv.start()
+    try:
+        body = b'{"resourceSpans":[]}' + b" " * 500
+        with socket.create_connection((rcv.host, rcv._port), timeout=10) as s:
+            s.sendall(b"POST /v1/traces HTTP/1.1\r\nHost: x\r\n"
+                      b"Content-Type: application/json\r\n"
+                      b"Content-Length: %d\r\n\r\n" % len(body) + body)
+            reply = b""
+            while chunk := s.recv(65536):       # b"": the server closed
+                reply += chunk
+        assert reply.startswith(b"HTTP/1.1 413 ")
+        assert b"\r\nConnection: close\r\n" in reply
+        assert reply.count(b"HTTP/1.1 ") == 1
+        assert _post(rcv, "/v1/traces", b'{"resourceSpans":[]}')[0] == 200
+    finally:
+        rcv.stop()

@@ -1,91 +1,19 @@
-"""Streaming incremental-dedup twin: the union of per-batch candidate
-emissions equals the batch LSH candidate pair set, under batch splits,
-shuffled arrival, duplication, and restart-from-checkpoint."""
+"""Incremental dedup: the store-based batch operator, the signature
+store, the ingest funnel, and the streaming twin's band-state cap.  The
+twin's candidate emission (splits, shuffled arrival, re-delivery,
+restart) runs through the harness (``tests/stream_twins.py``)."""
 
 from __future__ import annotations
 
-import random
-import tempfile
+from dataclasses import replace
 
 import pytest
-from pyspark.sql.types import LongType, StringType, StructField, StructType
+from pyspark.errors.exceptions.captured import StreamingQueryException
 
 from otel_arrow_collector_spark.operators import dedup
 from otel_arrow_collector_spark.streaming.incr_dedup import incr_dedup_stream
+from tests import stream_twins as st
 from tests.conftest import SF_SMALL
-
-SCHEMA = StructType([StructField("doc_id", LongType()),
-                     StructField("text", StringType())])
-
-
-def _docs(spark):
-    return [(r.doc_id, r.text) for r in
-            dedup.load_table(spark, SF_SMALL, "documents")
-            .select("doc_id", "text").collect()]
-
-
-def _batch_pairs(spark):
-    return {(r.d1, r.d2) for r in
-            dedup._lsh_candidate_pairs(spark, SF_SMALL).collect()}
-
-
-def _run_foreach(spark, d, ckpt):
-    """foreachBatch capture (memory sink cannot recover a checkpoint)."""
-    got: set = set()
-
-    def grab(batch_df, _bid):
-        got.update((r.d1, r.d2) for r in batch_df.collect())
-
-    stream = (spark.readStream.schema(SCHEMA)
-              .option("maxFilesPerTrigger", 1).parquet(d))
-    q = (incr_dedup_stream(stream)
-         .writeStream.foreachBatch(grab)
-         .outputMode("update")
-         .option("checkpointLocation", ckpt)
-         .trigger(availableNow=True).start())
-    q.awaitTermination(180)
-    return got
-
-
-@pytest.mark.slow
-def test_streaming_candidates_equal_batch_lsh(spark, tmp_path):
-    """5 shuffled micro-batches with ~30% of docs re-delivered: emitted
-    pairs (across batches) == the batch operator's candidate set —
-    every pair is caught exactly when its later endpoint arrives, and
-    re-delivery is a no-op (set-semantics state)."""
-    rows = _docs(spark)
-    rng = random.Random(11)
-    rows = rows + rng.sample(rows, k=len(rows) // 3)   # duplicates
-    rng.shuffle(rows)
-    d = tempfile.mkdtemp(prefix="incr_dedup_stream_")
-    per = (len(rows) + 4) // 5
-    for b in range(5):
-        batch = rows[b * per:(b + 1) * per]
-        if batch:
-            (spark.createDataFrame(batch, SCHEMA)
-             .coalesce(1).write.mode("append").parquet(d))
-    got = _run_foreach(spark, d, str(tmp_path / "ckpt"))
-    assert got == _batch_pairs(spark)
-
-
-@pytest.mark.slow
-def test_restart_from_checkpoint_resumes_store(spark, tmp_path):
-    """The band-keyed signature store survives a restart: first half of
-    the corpus in run 1, second half in run 2 on the same checkpoint —
-    cross-half pairs are emitted in run 2 only if the run-1 state is
-    intact, and the union equals the batch candidate set."""
-    rows = _docs(spark)
-    random.Random(7).shuffle(rows)
-    half = len(rows) // 2
-    d = tempfile.mkdtemp(prefix="incr_dedup_restart_")
-    ckpt = str(tmp_path / "ckpt")
-    (spark.createDataFrame(rows[:half], SCHEMA)
-     .coalesce(1).write.mode("append").parquet(d))
-    got = _run_foreach(spark, d, ckpt)
-    (spark.createDataFrame(rows[half:], SCHEMA)
-     .coalesce(1).write.mode("append").parquet(d))
-    got |= _run_foreach(spark, d, ckpt)
-    assert got == _batch_pairs(spark)
 
 
 @pytest.mark.slow
@@ -161,23 +89,12 @@ def test_ingest_funnel_reconciles(spark):
 
 
 @pytest.mark.slow
-def test_streaming_ingest_composition_end_to_end(spark, tmp_path):
+def test_streaming_ingest_composition_end_to_end(spark):
     """The full streaming ingest shape the twin's docstring promises:
     candidates emitted by the band-keyed state op, verified by the
     shared exact-Jaccard stage (verify_candidate_pairs) — the union
     over batches equals the batch operator's full verified relation."""
-    import tempfile
-
-    rows = _docs(spark)
-    random.Random(3).shuffle(rows)
-    d = tempfile.mkdtemp(prefix="incr_ingest_e2e_")
-    per = (len(rows) + 2) // 3
-    for b in range(3):
-        batch = rows[b * per:(b + 1) * per]
-        if batch:
-            (spark.createDataFrame(batch, SCHEMA)
-             .coalesce(1).write.mode("append").parquet(d))
-    cand = _run_foreach(spark, d, str(tmp_path / "ckpt"))
+    cand = st.split(spark, st.TWINS["incr_dedup"], 1).final
     cand_df = spark.createDataFrame(sorted(cand), ["d1", "d2"])
     docs = dedup.load_table(spark, SF_SMALL, "documents")
     got = {(r.d1, r.d2, r.n_common, round(r.j, 9)) for r in
@@ -187,55 +104,27 @@ def test_streaming_ingest_composition_end_to_end(spark, tmp_path):
     assert got == want and got
 
 
-def test_band_state_cap_refuses_degenerate_stream(spark, tmp_path):
+_SAME = "the same twelve words repeated in every single degenerate document here"
+
+
+def test_band_state_cap_refuses_degenerate_stream(spark):
     """A degenerate all-identical-docs stream (every doc hashes to the
     same 4 band buckets) must FAIL LOUDLY at the per-band state cap —
     memlimit semantics — instead of growing one bucket's state and
-    pair emission quadratically (verdict r11 ask #6)."""
-    import tempfile
-
-    import pytest
-    from pyspark.errors.exceptions.captured import StreamingQueryException
-
-    from otel_arrow_collector_spark.streaming.incr_dedup import \
-        incr_dedup_stream
-
-    text = "the same twelve words repeated in every single degenerate document here"
-    rows = [(i, text) for i in range(40)]
-    d = tempfile.mkdtemp(prefix="incr_dedup_degen_")
-    spark.createDataFrame(rows, SCHEMA).coalesce(1).write.mode("overwrite").parquet(d)
-    stream = spark.readStream.schema(SCHEMA).parquet(d)
-    q = (incr_dedup_stream(stream, max_band_docs=25)
-         .writeStream.format("noop")
-         .outputMode("update")
-         .option("checkpointLocation", str(tmp_path / "ckpt"))
-         .trigger(availableNow=True).start())
-    with pytest.raises(StreamingQueryException, match="BandStateOverflow|LSH bucket"):
-        q.awaitTermination(180)
+    pair emission quadratically."""
+    with pytest.raises(StreamingQueryException,
+                       match="BandStateOverflow|LSH bucket"):
+        st.drain(spark, _capped(), [[(i, _SAME) for i in range(40)]])
 
 
-def test_band_state_cap_allows_bounded_buckets(spark, tmp_path):
+def test_band_state_cap_allows_bounded_buckets(spark):
     """The same stream UNDER the cap still completes and emits the full
     quadratic pair set (the cap is a guard, not a behavior change)."""
-    import tempfile
+    got = st.drain(spark, _capped(), [[(i, _SAME) for i in range(10)]])
+    assert set(got.final) == {(i, j) for i in range(10)
+                              for j in range(i + 1, 10)}
 
-    from otel_arrow_collector_spark.streaming.incr_dedup import \
-        incr_dedup_stream
 
-    text = "the same twelve words repeated in every single degenerate document here"
-    rows = [(i, text) for i in range(10)]
-    d = tempfile.mkdtemp(prefix="incr_dedup_small_")
-    spark.createDataFrame(rows, SCHEMA).coalesce(1).write.mode("overwrite").parquet(d)
-    got: set = set()
-
-    def grab(batch_df, _bid):
-        got.update((r.d1, r.d2) for r in batch_df.collect())
-
-    stream = spark.readStream.schema(SCHEMA).parquet(d)
-    q = (incr_dedup_stream(stream, max_band_docs=25)
-         .writeStream.foreachBatch(grab)
-         .outputMode("update")
-         .option("checkpointLocation", str(tmp_path / "ckpt"))
-         .trigger(availableNow=True).start())
-    q.awaitTermination(180)
-    assert got == {(i, j) for i in range(10) for j in range(i + 1, 10)}
+def _capped():
+    return replace(st.TWINS["incr_dedup"], build=lambda s: incr_dedup_stream(
+        s, max_band_docs=25))

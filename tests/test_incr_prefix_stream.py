@@ -1,23 +1,16 @@
-"""Exact-path incremental dedup (verdict r14: the dedup_allpairs_prefix
-batch/stream closure): the store-based incremental operator and the
-foreachBatch streaming twin must both reproduce the from-scratch exact
-all-pairs result restricted to pairs touching the arriving docs —
-across batch splits, shuffled arrival, and re-delivery."""
+"""Exact-path incremental dedup (the dedup_allpairs_prefix batch/stream
+closure): the store-based incremental operator reproduces the
+from-scratch exact all-pairs result restricted to pairs touching the
+arriving docs.  The ``run_prefix_dedup_stream`` twin (splits, shuffled
+arrival, re-delivery, restart) runs through the harness
+(``tests/stream_twins.py``)."""
 
 from __future__ import annotations
 
-import random
-import tempfile
-
 import pytest
-from pyspark.sql import functions as F
-from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from otel_arrow_collector_spark.operators import dedup
 from tests.conftest import SF_SMALL
-
-SCHEMA = StructType([StructField("doc_id", LongType()),
-                     StructField("text", StringType())])
 
 
 def _allpairs(spark):
@@ -41,52 +34,6 @@ def test_incremental_prefix_equals_batch_restricted(spark):
     expected = {t for t in _allpairs(spark)
                 if t[0] % m == rem or t[1] % m == rem}
     assert incr == expected and incr
-
-
-@pytest.mark.slow
-def test_streaming_prefix_twin_equals_batch(spark, tmp_path):
-    """The foreachBatch streaming twin over the shard split in 4
-    shuffled micro-batches with ~30% re-delivered docs: the union of
-    per-batch verified emissions equals the batch restriction — every
-    qualifying pair is caught exactly when its later endpoint arrives,
-    re-delivery appends nothing and re-emits only already-true pairs."""
-    from otel_arrow_collector_spark.streaming.incr_prefix import (
-        FrozenPrefixStore, run_prefix_dedup_stream)
-
-    m, rem = dedup.INCR_SHARD_MOD, dedup.INCR_SHARD_REM
-    d = dedup.load_table(spark, SF_SMALL, "documents")
-    corpus = d.filter(~F.expr(dedup._SPARK_SHARD))
-    shard_rows = [(r.doc_id, r.text) for r in
-                  d.filter(F.expr(dedup._SPARK_SHARD))
-                  .select("doc_id", "text").collect()]
-    rng = random.Random(23)
-    rows = shard_rows + rng.sample(shard_rows, k=len(shard_rows) // 3)
-    rng.shuffle(rows)
-    src = tempfile.mkdtemp(prefix="incr_prefix_stream_")
-    per = (len(rows) + 3) // 4
-    for b in range(4):
-        batch = rows[b * per:(b + 1) * per]
-        if batch:
-            (spark.createDataFrame(batch, SCHEMA)
-             .coalesce(1).write.mode("append").parquet(src))
-
-    store = FrozenPrefixStore(spark, corpus)
-    got: set = set()
-
-    def grab(pairs_df, _bid):
-        got.update((r.d1, r.d2, r.n_common, round(r.j, 4))
-                   for r in pairs_df.collect())
-
-    stream = (spark.readStream.schema(SCHEMA)
-              .option("maxFilesPerTrigger", 1).parquet(src))
-    q = run_prefix_dedup_stream(spark, stream, store, grab,
-                                checkpoint=str(tmp_path / "ckpt"))
-    q.awaitTermination(300)
-    store.release()
-
-    expected = {t for t in _allpairs(spark)
-                if t[0] % m == rem or t[1] % m == rem}
-    assert got == expected and got
 
 
 @pytest.mark.slow

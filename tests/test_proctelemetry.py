@@ -133,6 +133,26 @@ def test_standalone_scrape_server_matches_counters():
         srv.close()
 
 
+def test_scrape_server_keeps_the_connection_alive():
+    """Two scrapes travel on one HTTP/1.1 connection."""
+    import http.client
+    srv = serve_prometheus(PrometheusExposition(process=ProcessMetrics()),
+                           "127.0.0.1:0")
+    conn = http.client.HTTPConnection(srv.host, srv.port, timeout=10)
+    try:
+        socks = []
+        for _ in range(2):
+            conn.request("GET", "/metrics")
+            resp = conn.getresponse()
+            assert resp.status == 200 and b"process_uptime" in resp.read()
+            assert resp.version == 11 and not resp.will_close
+            socks.append(conn.sock)
+        assert socks[0] is not None and socks[0] is socks[1]
+    finally:
+        conn.close()
+        srv.close()
+
+
 def test_bad_address_rejected():
     with pytest.raises(ValueError, match="host:port"):
         serve_prometheus(PrometheusExposition(), "nonsense")
@@ -189,6 +209,30 @@ def test_collector_serves_prometheus_at_configured_address(spark):
     finally:
         col.shutdown()
     assert col._prom_server is None
+
+
+def test_collector_reload_ends_kept_alive_scrapes(spark):
+    """A scraper's kept-alive connection ends with the reload that
+    replaces the scrape server, so it never reads the old, frozen
+    exposition."""
+    import http.client
+    from otel_arrow_collector_spark.plans.collector import Collector
+    col = Collector(spark, _CFG, sources={"ev": spark.range(0, 4)})
+    col.start()
+    try:
+        old = col._prom_server
+        conn = http.client.HTTPConnection(old.host, old.port, timeout=10)
+        conn.request("GET", "/metrics")
+        resp = conn.getresponse()
+        assert resp.status == 200 and resp.read() and not resp.will_close
+        col.reload()
+        assert col._prom_server is not old
+        with pytest.raises(ConnectionError):
+            conn.request("GET", "/metrics")
+            conn.getresponse()
+        conn.close()
+    finally:
+        col.shutdown()
 
 
 def test_collector_level_none_starts_no_server(spark):
