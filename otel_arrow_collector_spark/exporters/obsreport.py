@@ -17,6 +17,8 @@ from collections import defaultdict
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..session import local_frame
+
 METRICS = ("accepted", "refused", "sent", "send_failed", "dropped",
            "enqueued", "dequeued",
            # scraper surface (obsreport/obsreport_scraper.go)
@@ -66,8 +68,8 @@ class ObsReport:
 
     def as_dataframe(self, spark: SparkSession) -> DataFrame:
         rows = [(c, s, m, n) for (c, s, m), n in self.snapshot().items()]
-        return spark.createDataFrame(
-            rows or [("", "", "", 0)][:0],
+        return local_frame(
+            spark, rows,
             "component string, signal string, metric string, value long")
 
 

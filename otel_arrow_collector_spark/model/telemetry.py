@@ -32,6 +32,8 @@ from pyspark.sql.types import (ArrayType, BooleanType, DoubleType,
                                IntegerType, LongType, MapType, StringType,
                                StructField, StructType)
 
+from ..session import local_frame
+
 
 def _ns(y, mo, d, h, mi, s, nanos) -> int:
     return calendar.timegm((y, mo, d, h, mi, s)) * 1_000_000_000 + nanos
@@ -221,7 +223,7 @@ def generate_traces(spark: SparkSession, span_count: int) -> DataFrame:
                 ],
                 dropped_links_count=3, status_code=0, status_message="",
                 **_envelope()))
-    return spark.createDataFrame(rows, SPAN_SCHEMA)
+    return local_frame(spark, rows, SPAN_SCHEMA)
 
 
 # ------------------------------ logs ---------------------------------------
@@ -248,7 +250,7 @@ def generate_logs(spark: SparkSession, count: int) -> DataFrame:
                 body={"s": "This is a log message"},
                 attributes={"app": attr("server"), "instance_num": attr(1)},
                 dropped_attributes_count=1, **_envelope()))
-    return spark.createDataFrame(rows, LOG_SCHEMA)
+    return local_frame(spark, rows, LOG_SCHEMA)
 
 
 # ----------------------------- metrics -------------------------------------
@@ -324,7 +326,7 @@ def generate_metrics(spark: SparkSession, metric_count: int) -> DataFrame:
     rows = []
     for i in range(metric_count):
         rows.extend(_metric_dps(i % 7))
-    return spark.createDataFrame(rows, METRIC_POINT_SCHEMA)
+    return local_frame(spark, rows, METRIC_POINT_SCHEMA)
 
 
 # ----------------------------- counts --------------------------------------

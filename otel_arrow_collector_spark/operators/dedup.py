@@ -40,6 +40,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from ..session import local_frame
 from ..sources.tables import load_table, parallel_table
 from .cache_registry import (_free_checkpoint, cached, materialized,
                              plan_checkpoint)
@@ -596,8 +597,7 @@ def connected_components(edges, src: str = "d1", dst: str = "d2",
                     lo, hi = min(ra, rb), max(ra, rb)
                     parent[hi] = lo
             rows = sorted((x, find(x)) for x in seen)
-            return spark.createDataFrame(
-                rows, "node long, cluster_id long")
+            return local_frame(spark, rows, "node long, cluster_id long")
 
     bidir = (e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
              .distinct().persist())

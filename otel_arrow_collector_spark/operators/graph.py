@@ -34,6 +34,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..session import local_frame
 from ..sources.tables import load_table
 
 QUERIES: dict = {}
@@ -271,8 +272,7 @@ def graph_pagerank(spark, sf_dir):
     rows = [(r["src"], r["dst"], int(r["w"]))
             for r in transition_edges(events).collect()]
     rank = pagerank_fixed_point_local(rows)
-    out = spark.createDataFrame(sorted(rank.items()),
-                                "node string, rank long")
+    out = local_frame(spark, sorted(rank.items()), "node string, rank long")
     return out.orderBy(F.col("rank").desc(), "node")
 
 
@@ -493,8 +493,7 @@ def graph_k_core(spark, sf_dir):
             rows = sorted(
                 (v, d) for v in alive
                 if (d := sum(w in alive for w in adj[v])) > 0)
-            return spark.createDataFrame(
-                rows or [], "node long, deg long").persist()
+            return local_frame(spark, rows, "node long, deg long").persist()
         alive = None
         for _ in range(KCORE_PEELS):
             nxt = (induced_deg(alive)

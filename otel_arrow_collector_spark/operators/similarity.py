@@ -19,8 +19,10 @@ Scale stance (100 TB / billions of vectors):
   per-partition heaps via window rank — no shuffle of the corpus itself.
 - LSH: one narrow map -> groupBy bucket; bucket ids are near-uniform.
 - IVF: k-means trains on a fixed-modulus sample (at 100 TB you train on a
-  sample, never the corpus); the centroid set is broadcast; assignment is
-  one map over the corpus; the assigned corpus is materialized
+  sample, never the corpus); only the 8x64 model reaches the driver;
+  assignment is one map over the corpus, with the model carried in the
+  projection as a constant array (no join, no shuffle); the assigned
+  corpus is materialized
   hive-partitioned by cell id so the probe scan partition-prunes to the
   probed cells (PartitionFilters, no full-corpus I/O).
 """
@@ -30,6 +32,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from ..session import local_frame
 from ..sources.tables import load_table
 from .cache_registry import _StoreDir, cached, materialized
 
@@ -172,40 +175,58 @@ SELECT bucket, COUNT(*) AS n FROM t GROUP BY bucket ORDER BY bucket
 
 def _assignments(spark, sf_dir):
     """(vec_id, embedding, v_nrm, cid): nearest-centroid assignment by
-    cosine, tie-break on centroid id.  Centroid set is broadcast.
+    cosine, tie-break on centroid id, one projection over the corpus.
     Persisted per (session, dir): the assign histogram and the probe both
     consume it (probe references it twice)."""
     return cached("sim.assign", spark, sf_dir,
                   lambda: materialized(_build_assignments(spark, sf_dir)))
 
 
-def _nearest_centroid(vecs, cents):
+def _dlit(x: float) -> str:
+    """A double as an exact SQL literal: ``repr`` round-trips and the
+    ``D`` suffix parses with Java's correctly rounded ``parseDouble``
+    (``-0.0`` keeps its sign)."""
+    return f"{x!r}D"
+
+
+def _model_lit(model) -> str:
+    """The centroid model as ONE constant array<struct<cid, c_emb,
+    c_nrm>> SQL expression — 8x64 doubles, constant-folded by Catalyst
+    to a single literal that every task of the projection carries."""
+    return "array(" + ", ".join(
+        f"named_struct('cid', {cid}L, 'c_emb', array("
+        + ", ".join(_dlit(x) for x in emb)
+        + f"), 'c_nrm', {_dlit(nrm)})"
+        for cid, emb, nrm in model) + ")"
+
+
+def _nearest_centroid(vecs, model):
     """Assign each vector to its max-cosine centroid (tie-break on cid).
-    ``vecs``: (vec_id, embedding, nrm[, ...]); ``cents``: (cid, c_emb,
-    c_nrm) — centroid set is broadcast (ivf_flat assignment shape).  Norms
-    are hoisted but computed by the SAME fold as the oracle's inline
-    sqrt(dot(x,x)), so the quotient is bit-identical."""
-    cos = (F.expr(_s_dot("embedding", "c_emb"))
-           / (F.col("nrm") * F.col("c_nrm")))
-    # argmax as a hash-agg max(struct(cos, -cid)): identical to the
-    # oracle's ROW_NUMBER ... ORDER BY c_cos DESC, cid (highest cosine,
-    # lowest cid on ties) without the window's sort shuffle
-    best = F.max(F.struct(F.col("c_cos").alias("c"),
-                          (-F.col("cid")).alias("neg"))).alias("b")
-    return (vecs.crossJoin(F.broadcast(cents))
-                .withColumn("c_cos", cos)
-                .groupBy("vec_id")
-                .agg(F.first("embedding").alias("embedding"),
-                     F.first("nrm").alias("nrm"), best)
-                .select("vec_id", "embedding", "nrm",
-                        (-F.col("b.neg")).alias("cid")))
+    ``vecs``: (vec_id, embedding, nrm[, ...]); ``model``: the
+    (cid, c_emb, c_nrm) rows of :func:`_kmeans_model`.
+
+    One narrow projection: the model rides in the expression as a
+    constant array and ``array_max`` over ``struct(cos, -cid)`` picks
+    the highest cosine, lowest cid on ties — the oracle's ROW_NUMBER
+    ... ORDER BY c_cos DESC, cid — with no join, no shuffle and no job
+    to read the model.  Norms are hoisted but computed by the SAME fold
+    as the oracle's inline sqrt(dot(x,x)), so the quotient is
+    bit-identical."""
+    best = F.expr(
+        f"array_max(transform({_model_lit(model)}, c -> struct("
+        f"{_s_dot('embedding', 'c.c_emb')} / (nrm * c.c_nrm) AS c_cos, "
+        f"-c.cid AS neg)))")
+    return vecs.select("vec_id", "embedding", "nrm",
+                       (-best["neg"]).alias("cid"))
 
 
-def _cents_df(spark, rows):
-    """(cid, c_emb) literal rows -> broadcastable centroid DataFrame with
-    the fold-computed norm attached."""
-    df = spark.createDataFrame(rows, "cid long, c_emb array<double>")
-    return df.withColumn("c_nrm", F.sqrt(F.expr(_s_dot("c_emb", "c_emb"))))
+def _own_centroid_cos(model) -> F.Column:
+    """Cosine of each assigned vector (embedding, v_nrm, cid) to its OWN
+    centroid, the model looked up by cid inside the projection (no
+    join: reading the model runs no job)."""
+    return F.expr(
+        f"get(transform(filter({_model_lit(model)}, c -> c.cid = cid), "
+        f"c -> {_s_dot('embedding', 'c.c_emb')} / (v_nrm * c.c_nrm)), 0)")
 
 
 #: per-cell centroid as 64 sequential double folds over the cell's
@@ -216,8 +237,11 @@ _S_CELL_MEAN = """transform(sequence(0, 63), d ->
   aggregate(vs, CAST(0 AS DOUBLE),
             (a, p) -> a + CAST(p.embedding[d] AS DOUBLE)) / CAST(n AS DOUBLE))"""
 
+#: the centroid norm, by the same fold as every vector norm
+_S_C_NRM = f"sqrt({_s_dot('c_emb', 'c_emb')})"
 
-def _kmeans_centroids(spark, sf_dir):
+
+def _kmeans_model(spark, sf_dir) -> tuple:
     """Deterministic Lloyd's k-means over the training sample: fixed init
     (first K vectors), KMEANS_ITERS iterations, order-pinned exact means.
 
@@ -225,41 +249,52 @@ def _kmeans_centroids(spark, sf_dir):
     (MLlib-style iterative training: per-dim mean AGGREGATION stays
     distributed over the sample, only the model parameters round-trip).
     Doubles pass through the driver bit-exactly, so parity with the
-    oracle's unrolled CTE chain is preserved.  Returns the literal
-    (cid, c_emb, c_nrm) centroid DataFrame.
+    oracle's unrolled CTE chain is preserved.  Returns the model as
+    cid-ordered (cid, c_emb, c_nrm) tuples; c_nrm is computed in Spark
+    by the same fold as every vector norm.
 
     The trained model is memoized per (application, dir) — it is a
     model artifact, like the cell store; consumers (assignment build,
-    multi-probe cell ranking) must not re-run the training loop."""
+    multi-probe cell ranking, the PQ codebook) must not re-run the
+    training loop."""
+    def rows(df) -> tuple:
+        return tuple(sorted((r.cid, tuple(r.c_emb), r.c_nrm)
+                            for r in df.select(
+                                "cid", "c_emb",
+                                F.expr(_S_C_NRM).alias("c_nrm")).collect()))
+
     def build():
         be = bucketed_embeddings(spark, sf_dir)
-        init = (be.filter(F.col("vec_id") < N_CENTROIDS)
-                  .select("vec_id",
-                          F.expr("transform(embedding, x -> CAST(x AS DOUBLE))")
-                           .alias("c_emb")).collect())
-        cents = _cents_df(spark, [(r.vec_id, list(r.c_emb)) for r in init])
+        model = rows(be.filter(F.col("vec_id") < N_CENTROIDS)
+                       .select(F.col("vec_id").alias("cid"), F.expr(
+                           "transform(embedding, x -> CAST(x AS DOUBLE))")
+                           .alias("c_emb")))
         sample = (be.filter(F.col("vec_id") % KMEANS_SAMPLE_MOD == 0)
                     .select("vec_id", "embedding", "nrm"))
         for _ in range(KMEANS_ITERS):
-            assign = _nearest_centroid(sample, cents)
-            new = (assign
-                   .groupBy("cid")
-                   .agg(F.expr(
-                        "array_sort(collect_list(struct(vec_id, embedding)))")
-                         .alias("vs"),
-                        F.count(F.lit(1)).alias("n"))
-                   .select("cid", F.expr(_S_CELL_MEAN).alias("c_emb"))
-                   .collect())
-            cents = _cents_df(spark, [(r.cid, list(r.c_emb)) for r in new])
-        return cents
+            model = rows(
+                _nearest_centroid(sample, model)
+                .groupBy("cid")
+                .agg(F.expr(
+                     "array_sort(collect_list(struct(vec_id, embedding)))")
+                      .alias("vs"),
+                     F.count(F.lit(1)).alias("n"))
+                .select("cid", F.expr(_S_CELL_MEAN).alias("c_emb")))
+        return model
     return cached("sim.centroids", spark, sf_dir, build)
+
+
+def _kmeans_centroids(spark, sf_dir):
+    """The trained model as a (cid, c_emb, c_nrm) LocalRelation, for the
+    operators that cross it with a query relation."""
+    return local_frame(spark, _kmeans_model(spark, sf_dir),
+                       "cid long, c_emb array<double>, c_nrm double")
 
 
 def _build_assignments(spark, sf_dir):
     be = bucketed_embeddings(spark, sf_dir)
-    cents = _kmeans_centroids(spark, sf_dir)
     vecs = be.select("vec_id", "embedding", "nrm")
-    return (_nearest_centroid(vecs, cents)
+    return (_nearest_centroid(vecs, _kmeans_model(spark, sf_dir))
             .select("vec_id", "embedding", F.col("nrm").alias("v_nrm"),
                     "cid"))
 
@@ -744,17 +779,15 @@ def embedding_outliers(spark, sf_dir):
     / out-of-distribution screen a curation pass runs after clustering
     (the inverse of SemDeDup's near-duplicate pruning).
 
-    Reuses the persisted assignments and the broadcast centroid set:
-    one narrow projection computes each vector's cosine to its OWN
-    centroid (no cross-cell comparisons), then a global bottom-k by
-    (cos asc, vec_id) — TakeOrdered, not a full sort.  Cosines round to
+    Reuses the persisted assignments and the centroid model carried in
+    the projection: one narrow projection computes each vector's cosine
+    to its OWN centroid (no join, no cross-cell comparisons), then a
+    global bottom-k by (cos asc, vec_id) — TakeOrdered, not a full
+    sort.  Cosines round to
     6dp with the same deterministic fold as the probe operators.
     """
-    a = _assignments(spark, sf_dir)
-    cents = _kmeans_centroids(spark, sf_dir)
-    cos = (F.expr(_s_dot("embedding", "c_emb"))
-           / (F.col("v_nrm") * F.col("c_nrm")))
-    return (a.join(F.broadcast(cents), "cid")
+    cos = _own_centroid_cos(_kmeans_model(spark, sf_dir))
+    return (_assignments(spark, sf_dir)
              .select("vec_id", "cid", F.round(cos, 6).alias("cos"))
              .orderBy("cos", "vec_id").limit(20))
 
@@ -866,13 +899,9 @@ def _pq_codebook(spark, sf_dir) -> list[list[list[float]]]:
     """C[s][cid][d]: the trained centroid model sliced per subspace —
     a tiny (8 x 8 x 8 doubles) driver-side artifact, inlined as literal
     expressions so encoding is a pure map (the model-broadcast shape)."""
-    cents = _kmeans_centroids(spark, sf_dir).orderBy("cid").collect()
-    return [[list(r.c_emb[s * PQ_DSUB:(s + 1) * PQ_DSUB]) for r in cents]
+    model = _kmeans_model(spark, sf_dir)
+    return [[list(emb[s * PQ_DSUB:(s + 1) * PQ_DSUB]) for _, emb, _ in model]
             for s in range(PQ_M)]
-
-
-def _dlit(x: float) -> str:
-    return f"CAST({x!r} AS DOUBLE)"
 
 
 def _pq_clit(C, s: int) -> str:
@@ -1023,15 +1052,16 @@ def _pq_grid(spark, sf_dir):
     inlined-literal codebook per candidate row: the literal-heavy fold
     cost ~1.9 s of Catalyst planning per invocation (guide-§1 probe:
     fresh-plan collect 2.0 s vs 0.07 s re-collect of the same
-    DataFrame object), while the LUT is a LocalRelation + broadcast
-    hash join whose plan is constant-sized.  Values are the same
+    DataFrame object), while the codebook is a sized LocalRelation
+    (``local_frame``) that the cross join broadcasts by its size, with
+    a constant-sized plan and no job to read it.  Values are the same
     Python doubles the literal path inlined, so every distance double
     is bit-identical."""
     def build():
         C = _pq_codebook(spark, sf_dir)
-        return spark.createDataFrame(
-            [(s, k, list(C[s][k])) for s in range(PQ_M)
-             for k in range(len(C[s]))],
+        return local_frame(
+            spark, [(s, k, C[s][k]) for s in range(PQ_M)
+                    for k in range(len(C[s]))],
             "s int, code int, ce array<double>")
     return cached("sim.pq_grid", spark, sf_dir, build)
 
@@ -1082,7 +1112,7 @@ def ann_pq_adc_topk(spark, sf_dir):
     # re-aggregation of the 8 per-subspace terms (the exploded
     # join+groupBy form shipped 8x the store rows through a hash agg
     # and measured ~0.5 s slower steady-state)
-    dt = (qv.crossJoin(F.broadcast(_pq_grid(spark, sf_dir)))
+    dt = (qv.crossJoin(_pq_grid(spark, sf_dir))
             .select("s", "code", F.expr(_DT_D).alias("d")))
     lut = dt.groupBy().agg(F.expr(
         f"transform(array_sort(collect_list("
@@ -1361,16 +1391,14 @@ def ann_ivf_cell_quality(spark, sf_dir):
     fit the corpus.
 
     Scale shape: one pass over the persisted assignments with the
-    <=8-row centroid relation broadcast; everything aggregates per cid
+    <=8-centroid model carried in the projection (no join, no job to
+    read it); everything aggregates per cid
     (map-side combinable; |cells| rows out).  The micro-unit floor
     keeps the cohesion sum order-free and exact at any scale (the
     embedding_drift discipline); only min_cos is a float, rounded.
     """
-    a = _assignments(spark, sf_dir)
-    cents = _kmeans_centroids(spark, sf_dir)
-    cos = (F.expr(_s_dot("embedding", "c_emb"))
-           / (F.col("v_nrm") * F.col("c_nrm")))
-    per = (a.join(F.broadcast(cents), "cid")
+    cos = _own_centroid_cos(_kmeans_model(spark, sf_dir))
+    per = (_assignments(spark, sf_dir)
            .select("cid",
                    F.floor(cos * 1_000_000).cast("long").alias("cos_u"),
                    cos.alias("cos_raw")))
@@ -1552,7 +1580,7 @@ def ann_ivf_pq(spark, sf_dir):
     dt = (q.select("q_id",
                    F.expr("transform(q_emb, x -> CAST(x AS DOUBLE))")
                     .alias("qe"))
-           .crossJoin(F.broadcast(_pq_grid(spark, sf_dir)))
+           .crossJoin(_pq_grid(spark, sf_dir))
            .select("q_id", "s", "code", F.expr(_DT_D).alias("d")))
     lut = dt.groupBy("q_id").agg(F.expr(
         f"transform(array_sort(collect_list("
@@ -1706,9 +1734,10 @@ def curation_diversity_sample(spark, sf_dir):
     clustering; embedding_outliers is its inverse — this keeps the
     prototypes, that flags the strays).
 
-    Scale shape: reuses the persisted assignments and the broadcast
-    centroid set; each vector scores ONE cosine against its own
-    centroid (map-side), then a window top-M partitioned by cell id.
+    Scale shape: reuses the persisted assignments and the centroid
+    model carried in the projection; each vector scores ONE cosine
+    against its own centroid (map-side, no join), then a window top-M
+    partitioned by cell id.
     With the test-scale N_CENTROIDS=8 that is 8 sort partitions — fine
     here, a skew hazard at 100 TB; production IVF sizing puts k ~
     sqrt(corpus) cells (the standard nlist rule), which keeps each
@@ -1717,13 +1746,10 @@ def curation_diversity_sample(spark, sf_dir):
     Magnitude: cosines only, 6dp-rounded by the same deterministic
     fold as every probe operator.
     """
-    a = _assignments(spark, sf_dir)
-    cents = _kmeans_centroids(spark, sf_dir)
-    cos = (F.expr(_s_dot("embedding", "c_emb"))
-           / (F.col("v_nrm") * F.col("c_nrm")))
+    cos = _own_centroid_cos(_kmeans_model(spark, sf_dir))
     w = Window.partitionBy("cid").orderBy(F.col("cos_raw").desc(),
                                           "vec_id")
-    return (a.join(F.broadcast(cents), "cid")
+    return (_assignments(spark, sf_dir)
              .select("cid", "vec_id", cos.alias("cos_raw"))
              .withColumn("rk", F.row_number().over(w))
              .filter(F.col("rk") <= DIVERSITY_M)

@@ -37,6 +37,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (LongType, StringType, StructField, StructType)
 
+from ..session import local_frame
 from ..sources.tables import load_table
 
 QUERIES: dict = {}
@@ -807,8 +808,8 @@ def _rank_values_at(df: DataFrame, positions: list[int],
             if offs[k] < p <= offs[k] + c:
                 want[k] = offs[k]
                 break
-    offs_df = F.broadcast(df.sparkSession.createDataFrame(
-        [(k, o) for k, o in sorted(want.items())], "__bkt long, __off long"))
+    offs_df = local_frame(df.sparkSession, sorted(want.items()),
+                          "__bkt long, __off long")
     w = Window.partitionBy("__bkt").orderBy("v", "l_orderkey",
                                             "l_linenumber")
     ranked = (b.filter(F.col("__bkt").isin(list(want)))
@@ -912,9 +913,9 @@ def sketch_quantile_sampled(spark, sf_dir):
                 if hit:
                     want[k] = offs[k]
                     break
-        offs_df = F.broadcast(spark.createDataFrame(
-            [(k, o, os_) for k, (o, os_) in sorted(want.items())],
-            "__bkt long, __off long, __offs long"))
+        offs_df = local_frame(
+            spark, [(k, o, os_) for k, (o, os_) in sorted(want.items())],
+            "__bkt long, __off long, __offs long")
         w = Window.partitionBy("__bkt").orderBy(*order)
         ranked = (b.filter(F.col("__bkt").isin(list(want)))
                   .join(offs_df, "__bkt")
@@ -939,8 +940,8 @@ def sketch_quantile_sampled(spark, sf_dir):
                               F.row_number().over(w).cast("long"))
                   .withColumn("rk_sample", F.sum("s").over(w)))
 
-    pos_df = F.broadcast(spark.createDataFrame(
-        pos_rows, "src string, q long, pos long, n long"))
+    pos_df = local_frame(spark, pos_rows,
+                         "src string, q long, pos long, n long")
     exact_pos = [p for s_, _, p, _ in pos_rows if s_ == "exact"]
     sample_pos = [p for s_, _, p, _ in pos_rows if s_ == "sample"]
     hits = ranked.filter(

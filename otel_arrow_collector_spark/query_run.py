@@ -18,7 +18,9 @@ status store (``tests/test_no_job_group_calls.py``).
 
 from __future__ import annotations
 
+import functools
 import itertools
+import json
 import os
 import time
 from contextlib import contextmanager
@@ -120,9 +122,9 @@ def read_group(spark, tag: str) -> Group:
 
     The store is fed by the asynchronous listener bus, so the bus is
     drained first.  Under heavy load an entry can still be missing right
-    after the drain (py4j then raises on the empty lookup), so the read
-    is retried for up to :data:`POLL_S`; after that, what is visible is
-    returned.  A skipped stage never ran, so it is not counted."""
+    after the drain, so the read is retried for up to :data:`POLL_S`;
+    after that, what is visible is returned.  A skipped stage never ran,
+    so it is not counted."""
     jsc = spark.sparkContext._jsc.sc()
     deadline = time.monotonic() + POLL_S
     while True:
@@ -130,33 +132,75 @@ def read_group(spark, tag: str) -> Group:
             jsc.listenerBus().waitUntilEmpty()
         except Py4JError:
             pass
-        group, complete = _read_group(jsc, tag)
+        group, complete = _read_group(spark._jvm, jsc, tag)
         if complete or time.monotonic() > deadline:
             return group
         time.sleep(0.2)
 
 
-def _read_group(jsc, tag: str) -> tuple[Group, bool]:
-    store = jsc.statusStore()
+@functools.lru_cache(maxsize=1)
+def _json_writer(jvm):
+    """(write, classes): ``write(java_iterable)`` is the iterable as one
+    JSON array, written in the JVM by a Jackson mapper that knows Scala
+    case classes (dates as epoch milliseconds); ``classes`` are the
+    status store's job and stage record types."""
+    scala = getattr(jvm.com.fasterxml.jackson.module.scala,
+                    "DefaultScalaModule$")
+    mapper = jvm.com.fasterxml.jackson.databind.ObjectMapper() \
+        .registerModule(getattr(scala, "MODULE$"))
+    as_scala = jvm.scala.jdk.javaapi.CollectionConverters.asScala
+
+    def write(it) -> str:
+        return mapper.writeValueAsString(as_scala(it))
+    classes = {name: jvm.java.lang.Class.forName(
+        f"org.apache.spark.status.{name}")
+        for name in ("JobDataWrapper", "StageDataWrapper")}
+    return write, classes
+
+
+def _records(jvm, jsc, wrapper: str, index: str | None, lo: int,
+             hi: int) -> list[dict]:
+    """The records of one status-store type whose ``index`` (the natural
+    key when None) lies in [lo, hi], read as JSON in one JVM-side write
+    instead of a py4j round trip per field."""
+    write, classes = _json_writer(jvm)
+    view = jsc.statusStore().store().view(classes[wrapper])
+    if index is not None:
+        view = view.index(index)
+    return [w["info"] for w in json.loads(write(view.first(lo).last(hi)))]
+
+
+def _read_group(jvm, jsc, tag: str) -> tuple[Group, bool]:
+    """One read of the group's jobs and stages: the job ids, then the
+    job records and the stage records each in one JVM-side JSON write."""
     jobs = sorted(jsc.statusTracker().getJobIdsForGroup(tag))
+    if not jobs:
+        return Group(0, ()), True
+    job_info = {j["jobId"]: j for j in
+                _records(jvm, jsc, "JobDataWrapper", None, jobs[0], jobs[-1])}
+    sids = sorted({sid for jid in jobs if jid in job_info
+                   for sid in job_info[jid]["stageIds"]})
+    attempts: dict[int, dict] = {}      # stage id -> its last attempt
+    for sd in (_records(jvm, jsc, "StageDataWrapper", "stageId",
+                        sids[0], sids[-1]) if sids else ()):
+        last = attempts.get(sd["stageId"])
+        if last is None or sd["attemptId"] > last["attemptId"]:
+            attempts[sd["stageId"]] = sd
     stages: list[Stage] = []
     seen: set[int] = set()
     complete = True
     for jid in jobs:
-        try:
-            job = store.job(jid)
-        except Py4JError:
+        job = job_info.get(jid)
+        if job is None:
             complete = False
             continue
-        running = job.status().toString() == "RUNNING"
+        running = job["status"] == "RUNNING"
         complete &= not running
-        ids = job.stageIds().mkString(",")
-        for sid in sorted(int(s) for s in ids.split(",") if s):
+        for sid in sorted(job["stageIds"]):
             if sid in seen:
                 continue
-            try:
-                sd = store.lastStageAttempt(sid)
-            except Py4JError:
+            sd = attempts.get(sid)
+            if sd is None:
                 if running:
                     complete = False
                 else:
@@ -165,19 +209,18 @@ def _read_group(jsc, tag: str) -> tuple[Group, bool]:
                     # it drops skipped stages first
                     seen.add(sid)
                 continue
-            status = sd.status().toString()
-            if status in ("PENDING", "ACTIVE"):
+            if sd["status"] in ("PENDING", "ACTIVE"):
                 complete = False
                 continue
             seen.add(sid)
-            if status == "SKIPPED":
+            if sd["status"] == "SKIPPED":
                 continue
-            sub, end = sd.submissionTime(), sd.completionTime()
-            sec = ((end.get().getTime() - sub.get().getTime()) / 1e3
-                   if sub.isDefined() and end.isDefined() else 0.0)
+            sub, end = sd["submissionTime"], sd["completionTime"]
+            sec = (end - sub) / 1e3 if sub is not None and end is not None \
+                else 0.0
             stages.append(Stage(
-                jid, sid, sec, sd.numTasks(), sd.executorRunTime() / 1e3,
-                sd.shuffleReadBytes(), sd.shuffleWriteBytes(), sd.name()))
+                jid, sid, sec, sd["numTasks"], sd["executorRunTime"] / 1e3,
+                sd["shuffleReadBytes"], sd["shuffleWriteBytes"], sd["name"]))
     return Group(len(jobs), tuple(stages)), complete
 
 

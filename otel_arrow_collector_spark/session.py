@@ -16,7 +16,8 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 #: Configs that must be set before the JVM starts (cannot be set on an
 #: existing session).
@@ -31,10 +32,12 @@ _STARTUP_CONFS: dict[str, str] = {
     # Arrow for any pandas-UDF exchange (the engine's slow-path escape hatch).
     "spark.sql.execution.arrow.pyspark.enabled": "true",
     # Join strategy: this threshold and AQE's runtime statistics choose
-    # broadcast vs shuffle for every join.  Operators hint a broadcast
-    # only on relations bounded by construction (k centroids, query
-    # sets, per-type/per-nation aggregates, constant offset frames) whose
-    # static estimate would otherwise grow with the input.
+    # broadcast vs shuffle for every join.  Small driver-built relations
+    # come from local_frame (below), whose LocalRelation carries its real
+    # size, so they need no hint.  Operators hint a broadcast only on
+    # relations bounded by construction (query sets, per-type/per-nation
+    # aggregates) whose static estimate would otherwise grow with the
+    # input: 20 F.broadcast hints in the engine.
     "spark.sql.autoBroadcastJoinThreshold": "64m",
     "spark.sql.shuffle.partitions": "32",
     # ANSI off matches DuckDB's permissive casts for the declared queries.
@@ -65,3 +68,32 @@ def get_spark(app_name: str = "otel-arrow-collector-spark",
     # If an existing session was reused, re-assert the runtime-settable keys.
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     return spark
+
+
+def local_frame(spark: SparkSession, rows, schema) -> DataFrame:
+    """A small driver-built relation (``rows``: tuples in ``schema``
+    order, or dicts by field name; ``schema``: DDL string or StructType)
+    as a sized ``LocalRelation``, built through Arrow.
+
+    ``createDataFrame`` of a Python list goes through a ``PythonRDD``:
+    every action that reads the frame starts Python workers, and its
+    ``LogicalRDD`` reports ``sizeInBytes = 9.2e18``, so no join can be
+    sized from it.  The Arrow table becomes a ``LocalRelation`` with its
+    real size: reading it runs no Python worker, the join policy above
+    broadcasts it without a hint, and doubles pass bit-exactly.  Every
+    small driver-side relation of the engine is built here
+    (``tests/test_no_python_row_relations.py``)."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    arrow = to_arrow_schema(schema)
+    rows = list(rows)
+    if rows and isinstance(rows[0], dict):
+        table = pa.Table.from_pylist(rows, schema=arrow)
+    else:
+        cols = list(zip(*rows)) if rows else [()] * len(arrow)
+        table = pa.Table.from_arrays(
+            [pa.array(c, type=f.type) for c, f in zip(cols, arrow)],
+            schema=arrow)
+    return spark.createDataFrame(table, schema)

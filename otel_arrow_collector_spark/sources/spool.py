@@ -34,6 +34,7 @@ import re
 import secrets
 from urllib.parse import quote, unquote
 
+from ..session import local_frame
 from .arrow_service import PAYLOAD_SIGNAL
 
 SIGNALS = ("traces", "logs", "metrics")
@@ -169,7 +170,7 @@ def read_spool(spark, spool_dir: str, signal: str,
         parts.append(read_otlp_pb(spark, pb_dir, signal,
                                   client_info=client_info))
     if not parts:
-        empty = spark.createDataFrame([], _SCHEMAS[signal])
+        empty = local_frame(spark, [], _SCHEMAS[signal])
         return _null_client(empty) if client_info else empty
     out = parts[0]
     for p in parts[1:]:
@@ -214,7 +215,7 @@ def read_arrow_spool(spark, spool_dir: str, signal: str):
     d = arrow_dir(spool_dir, ARROW_MAIN[signal])
     if not count_files(d):
         from .otlp_pb import _SCHEMAS
-        return spark.createDataFrame([], _SCHEMAS[signal])
+        return local_frame(spark, [], _SCHEMAS[signal])
     return spark.read.parquet(d)
 
 

@@ -46,6 +46,7 @@ from pyspark.sql import functions as F
 from ..operators import cache_registry
 from ..operators.cache_registry import _free_checkpoint
 from ..operators.dedup import connected_components
+from ..session import local_frame
 
 
 def free_labels(df: DataFrame) -> None:
@@ -63,7 +64,7 @@ class IncrementalCCStore:
                  src: str = "d1", dst: str = "d2"):
         self.spark = spark
         if edges is None:
-            base = spark.createDataFrame([], "node long, lbl long")
+            base = local_frame(spark, [], "node long, lbl long")
         else:
             base = (connected_components(edges, src=src, dst=dst)
                     .withColumnRenamed("cluster_id", "lbl"))

@@ -35,6 +35,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import local_frame
+
 #: MV grid keys and the monoid fields (q89's exact state shape)
 MV_KEYS = ["l_returnflag", "l_linestatus"]
 _VIEW_SCHEMA = ("l_returnflag string, l_linestatus string, cnt long, "
@@ -99,7 +101,7 @@ class MVMaintainer:
         """The latest committed view (empty grid if nothing committed)."""
         ids = self.committed_ids()
         if not ids:
-            return self._spark.createDataFrame([], _VIEW_SCHEMA)
+            return local_frame(self._spark, [], _VIEW_SCHEMA)
         return self.view_at(ids[-1])
 
     # -- the sink ----------------------------------------------------------

@@ -31,6 +31,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructField, StructType
 
+from ..session import local_frame
 from .keyed_merge import keyed_merge_stream
 
 OUT_SCHEMA = StructType([
@@ -118,8 +119,7 @@ def bin_quantiles_batch(events: DataFrame, lo: int, hi: int,
     cum = (counts
            .withColumn("cum", F.sum("c").over(w))
            .withColumn("n", F.sum("c").over(Window.partitionBy("grp"))))
-    qdf = F.broadcast(events.sparkSession.createDataFrame(
-        [(int(q),) for q in qs], "q long"))
+    qdf = local_frame(events.sparkSession, [(int(q),) for q in qs], "q long")
     hits = (cum.crossJoin(qdf)
             .filter(F.col("cum") >= F.expr("(q * n + 99) div 100"))
             .groupBy("grp", "q")

@@ -14,7 +14,6 @@ QUERIES, ORACLES = collect_registry()
 
 #: queries whose parity check measured >5 s (run with --runslow)
 SLOW = frozenset((
-    "ann_ivf_pq",
     "curation_ingest_funnel",
     "dedup_band_sensitivity",
     "dedup_incremental_epoch2",
@@ -26,11 +25,9 @@ SLOW = frozenset((
     "embedding_drift",
     "graph_assortativity",
     "graph_clustering_coefficient",
-    "graph_k_core",
     "graph_label_propagation",
     "graph_link_prediction",
     "graph_modularity",
-    "graph_pagerank",
     "heavy_hitter_events",
     "q113_autocorrelation",
 ))

@@ -774,9 +774,10 @@ def test_keywords_windows_per_document(spark):
 
 def test_cell_quality_is_one_aggregation_pass(spark):
     """ann_ivf_cell_quality: one pass over the persisted assignments
-    with broadcast centroids; per-cid hash aggregates; no window."""
+    with the centroid model carried in the projection (no join);
+    per-cid hash aggregates."""
     p = _tree(spark, "ann_ivf_cell_quality")
-    assert not p.find("CartesianProduct")
+    assert not p.joins()
     # r16: the global (total, cells) frame is a window over the
     # |cells|-row stats relation — the agg + crossJoin form re-ran the
     # whole cosine pass (cached subtrees never stage-reuse); the window
@@ -1641,3 +1642,93 @@ def test_pca_covariance_is_single_scan_single_agg(spark):
     assert not p.windows()
     assert not p.python_nodes()
     assert len(p.exchanges()) <= 2
+
+
+# --- small driver-built relations (session.local_frame) ---------------------
+
+def _local(n) -> bool:
+    """``n`` reads a local relation with no join in between."""
+    return n.name in ("LocalTableScan", "LocalRelation") or (
+        not n.is_join and any(_local(c) for c in n.children))
+
+
+def _local_joins(p) -> list[plan_tree.Node]:
+    """Joins with a side that reads a local relation."""
+    return [j for j in p.joins() if any(_local(c) for c in j.children)]
+
+
+def _hinted_local(df) -> list[plan_tree.Node]:
+    """Broadcast hints on a local relation in the analyzed plan."""
+    logical = plan_tree.read(df._jdf.queryExecution().analyzed())
+    return [h for h in logical.find("ResolvedHint") if _local(h)]
+
+
+@pytest.mark.parametrize("name", [
+    "ann_pq_adc_topk",                  # _pq_grid x the query row
+    "ann_ivf_pq",                       # _pq_grid, centroids x queries
+    "sketch_quantile_sampled",          # bucket offsets, rank positions
+    "sketch_quantile_binned",           # the quantile list
+])
+def test_local_relations_broadcast_without_a_hint(spark, name):
+    """Every join against a local_frame relation is a broadcast join
+    chosen by its size statistics: no hint sits on the relation."""
+    df = QUERIES[name](spark, SF_SMALL)
+    assert not _hinted_local(df)
+    joins = _local_joins(plan_tree.read(df))
+    assert joins and all(
+        j.name in ("BroadcastHashJoin", "BroadcastNestedLoopJoin")
+        for j in joins)
+
+
+def test_rank_values_at_offsets_broadcast_without_a_hint(spark):
+    li = load_table(spark, SF_SMALL, "lineitem").select(
+        F.floor(F.col("l_extendedprice") * 100).cast("long").alias("v"),
+        "l_orderkey", "l_linenumber")
+    df = sk._rank_values_at(li, [1, 50, 100], n_buckets=8)
+    assert not _hinted_local(df)
+    [j] = _local_joins(plan_tree.read(df))
+    assert j.name == "BroadcastHashJoin"
+
+
+def test_ivf_assignment_is_one_projection(spark):
+    """Nearest-centroid assignment is one narrow map over the corpus:
+    the model rides in the projection, so no join, no exchange and no
+    aggregate (it was a crossJoin with the broadcast centroids plus a
+    groupBy(vec_id) hash aggregate: one shuffle per use)."""
+    p = plan_tree.read(sim._build_assignments(spark, SF_SMALL))
+    assert not p.joins()
+    assert not p.exchanges()
+    assert not _aggs(p)
+    assert not p.find("LocalTableScan")
+
+
+@pytest.mark.parametrize("name", ["ann_ivf_cell_quality",
+                                  "embedding_outliers",
+                                  "curation_diversity_sample"])
+def test_own_centroid_cosine_reads_the_model_in_the_projection(spark, name):
+    """The cosine to a vector's own centroid looks the centroid up in
+    the model carried by the projection: no join, no centroid
+    relation to read."""
+    p = _tree(spark, name)
+    assert not p.joins()
+    assert not p.find("LocalTableScan", "BroadcastExchange")
+
+
+def test_cold_ivf_probe_runs_at_most_15_jobs(spark):
+    """From an empty registry, ann_ivf_probe builds the bucketed corpus,
+    trains the model, assigns and writes the cell store, then probes:
+    at most 15 jobs (21 when each k-means iteration and the assignment
+    read a Python-row centroid relation through a broadcast and then
+    shuffled the corpus to take the argmax)."""
+    cr.clear_caches()
+    name = "ann_ivf_probe"
+    assert query_run.run(spark, name, QUERIES[name], SF_SMALL).jobs <= 15
+
+
+def test_warm_cell_quality_runs_no_centroid_job(spark):
+    """A warm ann_ivf_cell_quality reads the persisted assignments and
+    aggregates them: 3 jobs, none of them evaluating the centroid
+    model (a 4th job broadcast the centroid relation each run)."""
+    name = "ann_ivf_cell_quality"
+    QUERIES[name](spark, SF_SMALL).collect()        # substrates built
+    assert query_run.run(spark, name, QUERIES[name], SF_SMALL).jobs <= 3

@@ -1,5 +1,6 @@
 """The query-run record (``otel_arrow_collector_spark.query_run``): its
-counts agree with a hand count through Spark's status tracker, memoized
+counts agree with a hand count through Spark's status tracker, its
+one-write JSON read of a group equals a field-by-field read, memoized
 substrates show as zero builder jobs, the caller's job group survives a
 run, and ``bench.py`` still prints its old keys through it."""
 
@@ -8,6 +9,7 @@ from __future__ import annotations
 import json
 
 import pytest
+from py4j.protocol import Py4JError
 from pyspark.sql import functions as F
 
 from otel_arrow_collector_spark import query_run
@@ -45,6 +47,49 @@ def test_record_matches_a_hand_count(spark):
     assert r.tasks == sum(s.tasks for s in r.stage_table)
     assert r.shuffle_read_bytes == r.shuffle_write_bytes > 0
     assert r.wall_s == r.builder_s + r.plan_s + r.exec_s > 0
+
+
+def _read_group_per_field(jsc, tag: str) -> query_run.Group:
+    """The group read one py4j call per job and stage field: the
+    reference the JSON read must equal."""
+    store = jsc.statusStore()
+    jobs = sorted(jsc.statusTracker().getJobIdsForGroup(tag))
+    stages, seen = [], set()
+    for jid in jobs:
+        job = store.job(jid)
+        for sid in sorted(int(s) for s in
+                          job.stageIds().mkString(",").split(",") if s):
+            if sid in seen:
+                continue
+            seen.add(sid)
+            try:
+                sd = store.lastStageAttempt(sid)
+            except Py4JError:
+                continue                    # skipped and trimmed
+            if sd.status().toString() == "SKIPPED":
+                continue
+            sub, end = sd.submissionTime(), sd.completionTime()
+            stages.append(query_run.Stage(
+                jid, sid, (end.get().getTime() - sub.get().getTime()) / 1e3,
+                sd.numTasks(), sd.executorRunTime() / 1e3,
+                sd.shuffleReadBytes(), sd.shuffleWriteBytes(), sd.name()))
+    return query_run.Group(len(jobs), tuple(stages))
+
+
+def test_json_group_read_equals_a_field_by_field_read(spark):
+    """Two collects of one shuffled DataFrame in one group: 3 jobs (the
+    map job, then one result job per collect), and each result job
+    lists the map stage again as a skipped stage, which is not
+    counted."""
+    df = _one_shuffle(spark)
+    with query_run.job_group(spark, "query-run-json-read") as tag:
+        df.collect()
+        df.collect()
+    got = query_run.read_group(spark, tag)
+    want = _read_group_per_field(spark.sparkContext._jsc.sc(), tag)
+    assert got == want
+    assert got.jobs == 3
+    assert [s.tasks for s in got.stages] == [4, 1, 1]
 
 
 def test_memoized_query_builds_nothing_on_its_second_run(spark):
